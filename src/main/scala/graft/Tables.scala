@@ -8,20 +8,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** Footer schema per (parquet path, nanos-flag), read once per JVM.
-    * A bare-path `spark.read.parquet` re-infers the schema with a
-    * one-task Spark job on EVERY call — ~50-100 ms of pure fixed floor
-    * charged to every query builder (a catalog/metastore table carries
-    * its schema and never pays this; the snapshot files are immutable,
-    * so the memo is metadata, not data). Keyed on the nanosAsLong flag
-    * because it changes what the events footer infers to.
+  /** Footer schema per (parquet path, length, mtime, nanos-flag), read
+    * once per file version per JVM. A bare-path `spark.read.parquet`
+    * re-infers the schema with a one-task Spark job on EVERY call —
+    * ~50-100 ms of pure fixed floor charged to every query builder (a
+    * catalog/metastore table carries its schema and never pays this).
+    * One stat per load keys the memo on the file's length and mtime,
+    * so a file rewritten at the same path is re-inferred instead of
+    * read with a stale schema. Keyed on the nanosAsLong flag because it
+    * changes what the events footer infers to.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long, String), org.apache.spark.sql.types.StructType]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = (path, spark.conf.getOption(NanosFlag).getOrElse(""))
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = (path, st.getLen, st.getModificationTime,
+      spark.conf.getOption(NanosFlag).getOrElse(""))
     val schema = schemaCache.computeIfAbsent(key,
       _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
@@ -147,6 +152,11 @@ object Tables {
     if (want >= 2 * splits && want >= 4) df.repartition(want, key) else df
   }
 
+  /** Row bound of [[localize]]: a few tens of MB of driver heap for the
+    * narrow tally rows its callers pass, and still a plan-sized literal.
+    */
+  private[graft] val MaxLocalRows: Int = 1 << 20
+
   /** Collect a BOUNDED frame into a driver-local relation. For a frame
     * that a larger plan references several times (distinct-score
     * tallies, bucket totals), r21 used localCheckpoint to stop each
@@ -158,11 +168,23 @@ object Tables {
     * no barrier, and downstream joins against it broadcast for free.
     * Callers must only pass frames bounded BY CONSTRUCTION (one row per
     * 6-dp distinct score / fixed bucket count — a few MB at any corpus
-    * size, the GridSearch.bestParams collect discipline).
+    * size, the GridSearch.bestParams collect discipline). The bound is
+    * enforced: each partition ships at most [[MaxLocalRows]] + 1 rows (a
+    * per-partition limit, so still one job with no incremental take),
+    * and a larger frame fails naming `caller` and its row count instead
+    * of filling the driver heap.
     */
-  private[graft] def localize(df: DataFrame): DataFrame = {
-    val rows = java.util.Arrays.asList(df.collect(): _*)
-    df.sparkSession.createDataFrame(rows, df.schema)
+  private[graft] def localize(df: DataFrame, caller: String): DataFrame = {
+    val capped = org.apache.spark.sql.GraftBridge.ofRows(df.sparkSession,
+      org.apache.spark.sql.catalyst.plans.logical.LocalLimit(
+        org.apache.spark.sql.catalyst.expressions.Literal(MaxLocalRows + 1),
+        df.queryExecution.analyzed))
+    val rows = capped.collect()
+    if (rows.length > MaxLocalRows)
+      throw new IllegalStateException(
+        s"$caller: Tables.localize is bounded to $MaxLocalRows rows but the " +
+          s"frame has ${df.count()} — keep it distributed (localCheckpoint)")
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")

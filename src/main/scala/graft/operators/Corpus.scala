@@ -40,14 +40,13 @@ object Corpus {
     while (!converged && round < 20) {
       val msgs = labels.join(edges, $"doc_id" === $"src")
         .select($"dst".as("doc_id"), $"cluster_id")
-      // lazy checkpoint: the convergence count below materializes it, so
+      // lazy checkpoint: the convergence probe below materializes it, so
       // each round is one job, not two, while still truncating lineage
       val next = labels.unionByName(msgs)
         .groupBy($"doc_id").agg(min($"cluster_id").as("cluster_id"))
         .localCheckpoint(false)
-      val changed = next.join(labels.withColumnRenamed("cluster_id", "prev"), "doc_id")
-        .where($"cluster_id" =!= $"prev").limit(1).count()
-      converged = changed == 0
+      converged = next.join(labels.withColumnRenamed("cluster_id", "prev"), "doc_id")
+        .where($"cluster_id" =!= $"prev").isEmpty
       labels = next
       round += 1
     }
@@ -130,11 +129,14 @@ object Corpus {
       // under both operators). Both sides are distinct edge sets, so set
       // equality is ONE full-outer-join pass probing for a one-sided row
       // — r22: the previous two exceptAll counts cost two jobs per round
-      // on every contraction (batch, incremental, and per micro-batch)
+      // on every contraction (batch, incremental, and per micro-batch).
+      // isEmpty, not limit(1).count(): a limit inside a generated stage
+      // inlines a JVM-unique counter name, so every round's probe was a
+      // fresh class to compile; isEmpty plans the limit as a take
       converged = ss.select($"l", $"h", lit(1).as("in_ss"))
         .join(e.select($"l", $"h", lit(1).as("in_e")), Seq("l", "h"), "full_outer")
         .where($"in_ss".isNull || $"in_e".isNull)
-        .limit(1).count() == 0
+        .isEmpty
       e = ss
       round += 1
     }

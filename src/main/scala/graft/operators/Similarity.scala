@@ -188,7 +188,10 @@ object Similarity {
       v.select($"blk".as("ba"), $"vec_id".as("id_x"), $"v".as("vx"), $"nrm".as("nx")), "ba")
     val b = blockPairs.join(
       v.select($"blk".as("bb"), $"vec_id".as("id_y"), $"v".as("vy"), $"nrm".as("ny")), "bb")
-    a.join(b, Seq("ba", "bb"))
+    // hash the b side of each block pair: left to AQE, the build side
+    // of the runtime broadcast conversion follows whichever shuffle
+    // finished first, so the join's generated code changed between runs
+    a.join(b.hint("shuffle_hash"), Seq("ba", "bb"))
       .where($"ba" =!= $"bb" || $"id_x" < $"id_y")
       .select(least($"id_x", $"id_y").as("id_a"),
         greatest($"id_x", $"id_y").as("id_b"),

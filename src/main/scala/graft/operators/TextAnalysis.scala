@@ -670,7 +670,7 @@ object TextAnalysis {
     // job. The LM pass still runs once for the ranking side and once
     // for the per-doc join-back, as designed.
     val sc0 = Tables.localize(
-      lp.groupBy($"avg_logprob").agg(count(lit(1)).as("c")))
+      lp.groupBy($"avg_logprob").agg(count(lit(1)).as("c")), "q_perplexity_buckets")
     val tallies = sc0.collect()
     val n = tallies.map(_.getLong(1)).sum
     val (mn, mx) =
@@ -1013,7 +1013,8 @@ object TextAnalysis {
     // Tables.localize keeps the r21 plan collapse without the
     // checkpoint's job barrier, and bounds read off the collected rows
     val sc0 = Tables.localize(
-      scored.groupBy($"avg_kn_logprob").agg(count(lit(1)).as("c")))
+      scored.groupBy($"avg_kn_logprob").agg(count(lit(1)).as("c")),
+      "q_kn_perplexity_buckets")
     val tallies = sc0.collect()
     val n = tallies.map(_.getLong(1)).sum
     val (mn, mx) =
@@ -1385,7 +1386,7 @@ object TextAnalysis {
       .select(expr("CAST(least(((doc_id - lo) * 64) div (hi - lo + 1), 63) AS INT)")
         .as("bkt"), $"n_toks", $"new_types")
       .groupBy($"bkt")
-      .agg(sum($"n_toks").as("bt"), sum($"new_types").as("bv")))
+      .agg(sum($"n_toks").as("bt"), sum($"new_types").as("bv")), "q_heaps_fit")
     val cum = totals.as("a")
       .join(broadcast(totals.as("b")), col("b.bkt") <= col("a.bkt"))
       .groupBy(col("a.bkt").as("bkt"))

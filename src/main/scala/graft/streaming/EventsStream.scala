@@ -28,19 +28,31 @@ object EventsStream {
     * production deployment keeps its checkpoint on durable storage and
     * sets SPARK_GRAFT_STREAM_CKPT (or simply does not run this
     * harness); falls back to java.io.tmpdir when /dev/shm is absent.
-    * Callers delete the directory via [[dropCheckpoint]] after stop().
+    * Drives take it through [[withCheckpoint]], which deletes it on
+    * every exit path.
     */
-  private[graft] def ramCheckpoint(tag: String): java.io.File = {
-    val root = sys.env.getOrElse("SPARK_GRAFT_STREAM_CKPT",
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir"))
-    val dir = new java.io.File(root,
+  private def ramCheckpoint(tag: String): java.io.File = {
+    val dir = new java.io.File(checkpointRoot,
       s"graft_ckpt_${ProcessHandle.current().pid()}_${tag}_${System.nanoTime()}")
     dir.mkdirs()
     dir
   }
 
-  private[graft] def dropCheckpoint(dir: java.io.File): Unit = {
+  private[graft] def checkpointRoot: String =
+    sys.env.getOrElse("SPARK_GRAFT_STREAM_CKPT",
+      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
+      else System.getProperty("java.io.tmpdir"))
+
+  /** Run one stream drive against a fresh [[ramCheckpoint]] and drop it
+    * however the drive ends — a `start()` that throws (bad plan, name
+    * clash) or a failing `stop()` must not leak the directory.
+    */
+  private[graft] def withCheckpoint[T](tag: String)(drive: java.io.File => T): T = {
+    val dir = ramCheckpoint(tag)
+    try drive(dir) finally dropCheckpoint(dir)
+  }
+
+  private def dropCheckpoint(dir: java.io.File): Unit = {
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).toSeq.flatten.foreach(rm)
       f.delete(); ()

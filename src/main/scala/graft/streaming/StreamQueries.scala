@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** REGISTERED streaming queries (SURVEY §2.H promoted into the oracle
   * gate): each drives the REAL Structured Streaming operator from
@@ -74,35 +74,37 @@ object StreamQueries {
     * partition — what makes first-arrival stateful dedup deterministic
     * in the feed order), memory sink, stop, return the sink table.
     */
-  private def runStream[A: Encoder](s: SparkSession, chunks: Seq[Seq[A]],
+  private[graft] def runStream[A: Encoder](s: SparkSession, chunks: Seq[Seq[A]],
       build: Dataset[A] => DataFrame, sink: String,
       mode: OutputMode = OutputMode.Append): DataFrame = withStreamParts(s) {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val mem = MemoryStream[A]
     // RAM-backed checkpoint (EventsStream.ramCheckpoint): the per-batch
     // state-store/offset-log commits are small-file IO the MemoryStream
-    // harness cannot replay anyway; deleted after stop()
-    val ckpt = EventsStream.ramCheckpoint(sink)
-    val q = build(mem.toDS()).writeStream.format("memory")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .queryName(sink).outputMode(mode).start()
-    try chunks.foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-    finally {
-      // state-store evidence for the scale bench (r19 ask #5): the max
-      // keyed-state row count / bytes any micro-batch held — the number
-      // that must stay WATERMARK-bounded (cluster-sized), not
-      // corpus-sized, as volume grows. Read from the query's progress
-      // ring before stop() (recentProgress keeps far more entries than
-      // the 3-5 batches a drive runs).
-      val stateOps = q.recentProgress.flatMap(p =>
-        Option(p.stateOperators).toSeq.flatten)
-      lastDriveStats.set(DriveStats(sink, q.recentProgress.length,
-        if (stateOps.isEmpty) 0L else stateOps.map(_.numRowsTotal).max,
-        if (stateOps.isEmpty) 0L else stateOps.map(_.memoryUsedBytes).max))
-      q.stop()
-      EventsStream.dropCheckpoint(ckpt)
+    // harness cannot replay anyway; deleted however the drive ends
+    EventsStream.withCheckpoint(sink) { ckpt =>
+      val q = build(mem.toDS()).writeStream.format("memory")
+        .option("checkpointLocation", ckpt.getAbsolutePath)
+        .queryName(sink).outputMode(mode).start()
+      try chunks.foreach { c => mem.addData(c: _*); q.processAllAvailable() }
+      finally { recordDrive(sink, q); q.stop() }
     }
     s.table(sink)
+  }
+
+  /** State-store evidence for the scale bench (r19 ask #5): the max
+    * keyed-state row count / bytes any micro-batch held — the number
+    * that must stay WATERMARK-bounded (cluster-sized), not corpus-sized,
+    * as volume grows. Read from the query's progress ring before stop()
+    * (recentProgress keeps far more entries than the 3-5 batches a
+    * drive runs).
+    */
+  private def recordDrive(sink: String, q: StreamingQuery): Unit = {
+    val stateOps = q.recentProgress.flatMap(p =>
+      Option(p.stateOperators).toSeq.flatten)
+    lastDriveStats.set(DriveStats(sink, q.recentProgress.length,
+      if (stateOps.isEmpty) 0L else stateOps.map(_.numRowsTotal).max,
+      if (stateOps.isEmpty) 0L else stateOps.map(_.memoryUsedBytes).max))
   }
 
   /** Snapshot of the most recent [[runStream]] drive's state-store
@@ -287,13 +289,14 @@ object StreamQueries {
     val half = evs.length / 2
     withStreamParts(s) {
       val mem = MemoryStream[(Long, java.sql.Timestamp)]
-      val ckpt = EventsStream.ramCheckpoint(tbl)
-      val q = EventsStream.sketchStoreStream(s, mem.toDF().toDF("user_id", "ts"),
-        tbl, Some(ckpt.getAbsolutePath))
-      try {
-        mem.addData(evs.take(half).toIndexedSeq: _*); q.processAllAvailable()
-        mem.addData(evs.drop(half).toIndexedSeq: _*); q.processAllAvailable()
-      } finally { q.stop(); EventsStream.dropCheckpoint(ckpt) }
+      EventsStream.withCheckpoint(tbl) { ckpt =>
+        val q = EventsStream.sketchStoreStream(s, mem.toDF().toDF("user_id", "ts"),
+          tbl, Some(ckpt.getAbsolutePath))
+        try {
+          mem.addData(evs.take(half).toIndexedSeq: _*); q.processAllAvailable()
+          mem.addData(evs.drop(half).toIndexedSeq: _*); q.processAllAvailable()
+        } finally q.stop()
+      }
     }
     val streamed = Corpus.rollingEstFromSketches(s.table(tbl))
       .select($"day", $"est_users".as("streamed_est"))
@@ -652,28 +655,18 @@ object StreamQueries {
     withStreamParts(s) {
       val clicks = MemoryStream[Event]
       val purchases = MemoryStream[Event]
-      val ckpt = EventsStream.ramCheckpoint("graft_stream_click_attrib")
-      val q = EventsStream.clickPurchaseJoin(
-          clicks.toDF().where($"event_type" === "click"),
-          purchases.toDF().where($"event_type" === "purchase"))
-        .writeStream.format("memory").queryName("graft_stream_click_attrib")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode(OutputMode.Append).start()
-      try chunks.foreach { c =>
-        clicks.addData(c: _*)
-        purchases.addData(c: _*)
-        q.processAllAvailable()
-      } finally {
-        // same state-store snapshot as runStream (this drive owns its
-        // two-source harness, so it records its own)
-        val stateOps = q.recentProgress.flatMap(p =>
-          Option(p.stateOperators).toSeq.flatten)
-        lastDriveStats.set(DriveStats("graft_stream_click_attrib",
-          q.recentProgress.length,
-          if (stateOps.isEmpty) 0L else stateOps.map(_.numRowsTotal).max,
-          if (stateOps.isEmpty) 0L else stateOps.map(_.memoryUsedBytes).max))
-        q.stop()
-        EventsStream.dropCheckpoint(ckpt)
+      EventsStream.withCheckpoint("graft_stream_click_attrib") { ckpt =>
+        val q = EventsStream.clickPurchaseJoin(
+            clicks.toDF().where($"event_type" === "click"),
+            purchases.toDF().where($"event_type" === "purchase"))
+          .writeStream.format("memory").queryName("graft_stream_click_attrib")
+          .option("checkpointLocation", ckpt.getAbsolutePath)
+          .outputMode(OutputMode.Append).start()
+        try chunks.foreach { c =>
+          clicks.addData(c: _*)
+          purchases.addData(c: _*)
+          q.processAllAvailable()
+        } finally { recordDrive("graft_stream_click_attrib", q); q.stop() }
       }
     }
     s.table("graft_stream_click_attrib")
@@ -730,24 +723,14 @@ object StreamQueries {
     val half = delta.length / 2
     withStreamParts(s) {
       val mem = MemoryStream[(Long, String)]
-      val ckpt = EventsStream.ramCheckpoint(labT)
-      val q = EventsStream.clusterMaintainStream(s,
-        mem.toDF().toDF("doc_id", "text"), sigT, labT,
-        checkpointDir = Some(ckpt.getAbsolutePath))
-      try {
-        mem.addData(delta.take(half).toIndexedSeq: _*); q.processAllAvailable()
-        mem.addData(delta.drop(half).toIndexedSeq: _*); q.processAllAvailable()
-      } finally {
-        // same progress-ring capture as runStream — this drive loop is
-        // bespoke (foreachBatch store maintenance), but StreamScaleBench
-        // reads the identical DriveStats posture for its 10× rung
-        val stateOps = q.recentProgress.flatMap(p =>
-          Option(p.stateOperators).toSeq.flatten)
-        lastDriveStats.set(DriveStats(labT, q.recentProgress.length,
-          if (stateOps.isEmpty) 0L else stateOps.map(_.numRowsTotal).max,
-          if (stateOps.isEmpty) 0L else stateOps.map(_.memoryUsedBytes).max))
-        q.stop()
-        EventsStream.dropCheckpoint(ckpt)
+      EventsStream.withCheckpoint(labT) { ckpt =>
+        val q = EventsStream.clusterMaintainStream(s,
+          mem.toDF().toDF("doc_id", "text"), sigT, labT,
+          checkpointDir = Some(ckpt.getAbsolutePath))
+        try {
+          mem.addData(delta.take(half).toIndexedSeq: _*); q.processAllAvailable()
+          mem.addData(delta.drop(half).toIndexedSeq: _*); q.processAllAvailable()
+        } finally { recordDrive(labT, q); q.stop() }
       }
     }
     s.table(labT).select($"doc_id", $"cluster_id").orderBy($"doc_id")

@@ -3,7 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to the `private[sql]` Column ↔ Expression converters, so graft's
-  * custom Catalyst expressions can be exposed as plain `Column`s.
+  * custom Catalyst expressions can be exposed as plain `Column`s, and to
+  * the `private[spark]` codegen counter.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -11,4 +12,10 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** JVM-wide count of classes Janino has compiled: one per codegen
+    * cache miss, so a warm query that reuses its generated code adds 0.
+    */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

@@ -1,0 +1,43 @@
+package graft
+
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Generated code must survive from one query to the next. The ops
+  * below are the notebook flow's text steps plus TF-IDF and ROC; one
+  * pass over them needs more distinct generated classes than Spark's
+  * default codegen cache holds (100 entries in 4 segments), so at that
+  * size the repeat pass evicts and recompiles most of them. With the
+  * cache sized by [[GraftSession]] and every generated source stable
+  * across executions, the repeat compiles nothing.
+  */
+class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  val dir = "/root/testdata/sf0.001"
+
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  private val ops = Seq("q_merge_entries", "q_clean_artefacts", "q_simple_clean",
+    "q_stem_dutch", "q_stopword_filter", "q_typo_correct", "q_tfidf",
+    "q_chi2_features", "q_word_match", "q_roc_curve", "q_f1_sweep")
+
+  /** Classes compiled by one pass over `ops`, each materialized into the
+    * noop sink after the cold reset every bench pass starts with.
+    */
+  private def pass(): Long = {
+    BenchIntegrity.coldReset(spark)
+    val before = GraftBridge.codegenCompiles
+    ops.foreach(q =>
+      SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save())
+    GraftBridge.codegenCompiles - before
+  }
+
+  test("a warm repeat of the text, TF-IDF and ROC ops compiles no new classes") {
+    pass()
+    val again = pass()
+    assert(again == 0, s"the repeat pass recompiled $again generated classes")
+  }
+}

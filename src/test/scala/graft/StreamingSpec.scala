@@ -399,4 +399,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sessions.exists(s =>
       s.user_id == 1 && s.n_events == 1 && s.sum_value == 4.0))
   }
+
+  test("a stream drive whose start() fails leaves no checkpoint directory behind") {
+    import spark.implicits._
+    val sink = "graft_spec_failed_start"
+    val prefix = s"graft_ckpt_${ProcessHandle.current().pid()}_${sink}_"
+    def leftovers = Option(new java.io.File(EventsStream.checkpointRoot).list())
+      .toSeq.flatten.filter(_.startsWith(prefix))
+    assert(leftovers.isEmpty)
+    // an unwatermarked streaming aggregation is rejected in Append mode
+    // by start() itself, after the drive has made its checkpoint
+    intercept[org.apache.spark.sql.AnalysisException] {
+      graft.streaming.StreamQueries.runStream[Long](spark, Seq(Seq(1L, 2L)),
+        ds => ds.groupBy($"value").count(), sink)
+    }
+    assert(leftovers.isEmpty, s"checkpoint leaked: $leftovers")
+  }
 }

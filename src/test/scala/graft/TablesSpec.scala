@@ -144,11 +144,53 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val src = Tables.documents(spark, dir)
       .groupBy($"source").count().orderBy($"source")
-    val loc = Tables.localize(src)
+    val loc = Tables.localize(src, "spec")
     assert(loc.schema == src.schema)
     assert(loc.orderBy($"source").collect().toSeq == src.collect().toSeq)
     assert(loc.queryExecution.optimizedPlan.collectLeaves().forall(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
       "localize must plan as a LocalRelation leaf")
+  }
+
+  test("localize fails loudly, naming the caller and row count, above its bound") {
+    val cap = Tables.MaxLocalRows.toLong
+    // spread: no partition reaches the per-partition cut, the total does
+    val spread = intercept[IllegalStateException] {
+      Tables.localize(spark.range(0, cap + 1, 1, 4).toDF(), "spec_spread")
+    }
+    assert(spread.getMessage.contains("spec_spread") &&
+      spread.getMessage.contains(s"${cap + 1}"), spread.getMessage)
+    // skewed: one partition holds every row and is cut at the bound
+    val skewed = intercept[IllegalStateException] {
+      Tables.localize(spark.range(0, 2 * cap, 1, 1).toDF(), "spec_skewed")
+    }
+    assert(skewed.getMessage.contains("spec_skewed") &&
+      skewed.getMessage.contains(s"${2 * cap}"), skewed.getMessage)
+  }
+
+  test("load re-infers the schema of a parquet file rewritten at the same path") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tables_spec").toFile
+    // one plain parquet file at <tmp>/documents.parquet, as the snapshots ship
+    def writeDocs(df: org.apache.spark.sql.DataFrame): Unit = {
+      val staging = new java.io.File(tmp, "staging")
+      df.coalesce(1).write.mode("overwrite").parquet(staging.getPath)
+      val part = staging.listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, new java.io.File(tmp, "documents.parquet").toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    try {
+      writeDocs(Seq((1L, "a")).toDF("doc_id", "text"))
+      assert(Tables.documents(spark, tmp.getPath).columns.toSeq == Seq("doc_id", "text"))
+      writeDocs(Seq((2L, 2.5, "nl")).toDF("doc_id", "score", "lang"))
+      val reread = Tables.documents(spark, tmp.getPath)
+      assert(reread.columns.toSeq == Seq("doc_id", "score", "lang"))
+      assert(reread.as[(Long, Double, String)].collect().toSeq == Seq((2L, 2.5, "nl")))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
+      }
+      rm(tmp)
+    }
   }
 }
