@@ -34,26 +34,10 @@ object Tables {
 
   /** Target input bytes per task for [[fanOut]] — how finely a
     * below-core-count scan is spread before heavy row-local work
-    * (tokenize/shingle/decode/vector kernels). Env-tunable
-    * (SPARK_GRAFT_FANOUT_BYTES) so a deployment with fatter rows can
-    * re-grain; the default suits compressed text at ~100 B/row.
+    * (tokenize/shingle/decode/vector kernels); suits compressed text at
+    * ~100 B/row.
     */
-  private val FanOutBytes: Long = {
-    val default = 64L * 1024
-    sys.env.get("SPARK_GRAFT_FANOUT_BYTES") match {
-      case None => default
-      case Some(raw) =>
-        // a malformed value must not throw inside this object's static
-        // init (it would surface as NoClassDefFoundError on every later
-        // Tables call with the root cause hidden — ADVICE r21)
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ > 0).getOrElse {
-          System.err.println(
-            s"[graft] ignoring unparseable SPARK_GRAFT_FANOUT_BYTES='$raw'" +
-              s" — using default $default")
-          default
-        }
-    }
-  }
+  private val FanOutBytes: Long = 64L * 1024
 
   /** Scale-adaptive fan-out of a narrow scan feeding expensive
     * row-local work (guide §2: make partitioning derive from input

@@ -781,10 +781,9 @@ object Similarity {
     * fixed-centroid precedent, which keeps the whole operator
     * SQL-expressible; a production deployment fits per-subspace k-means
     * and composes with the IVF lists to prune the ADC scan). Encoding
-    * is a broadcast join + struct-min aggregation (no window, partial
-    * aggregation applies); the ADC sum folds the 8 per-subspace terms
-    * in fixed subspace order (FloatFold) so both engines accumulate
-    * identically.
+    * is the row-local [[nearest]] assignment (no shuffle); the ADC sum
+    * folds the 8 per-subspace terms in fixed subspace order (FloatFold)
+    * so both engines accumulate identically.
     */
   val PqM = 8 // subspaces
   val PqD = 8 // dims per subspace
@@ -815,14 +814,10 @@ object Similarity {
       .select($"vec_id", $"ms.m".as("m"), $"ms.sv".as("sv"))
     val cb = subs.where($"vec_id" < PqK)
       .select($"m", $"vec_id".cast("int").as("j"), $"sv".as("c"))
-    // encode: argmin-L2 codeword per (vector, subspace) — struct-min
-    // aggregation, never a window (clusterKeepBest precedent)
-    val enc = subs.join(broadcast(cb), "m")
-      .withColumn("diff", zip_with($"sv", $"c", (x, y) => x - y))
-      .withColumn("d2", round(dot($"diff", $"diff"), 6))
-      .groupBy($"vec_id", $"m")
-      .agg(min(struct($"d2", $"j")).as("best"))
-      .select($"vec_id", $"m", $"best.j".as("code"))
+    // encode: the [[nearest]] codeword per (vector, subspace)
+    val enc = nearest(s, subs.select($"m".as("key"), $"vec_id", $"sv".as("v")),
+        cb.as[(Int, Int, Seq[Double])].collect().toSeq)
+      .select($"vec_id", $"key".as("m"), $"j".as("code"))
     // ADC lookup table: query × subspace × codeword dots (tiny: nq·M·K)
     val lut = vn.where(qPred)
       .select($"vec_id".as("q_id"), subspaces($"vn").as("ms"))
@@ -876,13 +871,7 @@ object Similarity {
        |  SELECT m, CAST(vec_id AS INT) AS j, sv AS c
        |  FROM subs WHERE vec_id < ${PqK}),
        |enc AS (
-       |  SELECT vec_id, m, j AS code FROM (
-       |    SELECT s.vec_id, s.m, c.j,
-       |      CAST(row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |        round(${dotE("(s.sv[i] - c.c[i]) * (s.sv[i] - c.c[i]) for i in generate_series(1, " + PqD + ")")}, 6)
-       |        ASC, c.j ASC) AS INT) AS rk
-       |    FROM subs s JOIN cb c USING (m)) z
-       |  WHERE rk = 1),
+       |  SELECT vec_id, m, j AS code FROM (${nearestSql("subs", "cb", Seq("m"), v = "sv")})),
        |lut AS (
        |  SELECT s.vec_id AS q_id, s.m, c.j,
        |    ${dotE("s.sv[i] * c.c[i] for i in generate_series(1, " + PqD + ")")} AS pdot
@@ -911,84 +900,6 @@ object Similarity {
     s"""WITH $pqCtesSql
        |SELECT CAST(count(*) AS BIGINT) AS n FROM adc""".stripMargin
 
-  /** TRAINED per-subspace PQ codebooks — the swap-in the deterministic
-    * [[pqTopK]] codebook documents: Lloyd's k-means over each subspace's
-    * subvectors, run as a DRIVER-BOUNDED DataFrame loop that trains all
-    * [[PqM]] subspaces SIMULTANEOUSLY (one assign + one re-mean job per
-    * iteration covers every subspace — at 100 TB that is `iters` bounded
-    * shuffle rounds total, vs. M independent single-subspace fits each
-    * paying its own passes). FULLY DETERMINISTIC since round 15 — not
-    * just seedless but partitioning-independent and SQL-reproducible
-    * (the [[trainCoarse]] discipline): init is the subvectors of the
-    * [[PqK]] lowest vec_ids, assignment is argmin of the 6-dp-rounded
-    * L2² with (d2, j) tiebreaks, and re-means are exact micro-unit
-    * integer sums in decimal(38,0) divided and 6-dp-rounded as Spark
-    * expressions — the same doubles on any partitioning AND in DuckDB's
-    * unrolled re-derivation ([[residualCodebookCtesSql]]). Empty
-    * clusters keep their previous codeword; per-iteration driver state
-    * is the codebook itself (M·K·D doubles — KBs at any corpus size).
-    *
-    * Input `subs`: (vec_id, m, sv) subvector rows. Returns the codebook
-    * as (m, j, c) rows ready to broadcast, plus the final total
-    * quantization error (sum of per-row argmin L2²) so callers/specs can
-    * verify training actually tightened the fit.
-    */
-  private[graft] def trainPqCodebooks(s: SparkSession, subs: DataFrame,
-      iters: Int): (DataFrame, Double) = {
-    import s.implicits._
-    val d2 = (sv: Column, c: Column) => {
-      val diff = zip_with(sv, c, (x, y) => x - y)
-      round(dot(diff, diff), 6)
-    }
-    // persist the subvector frame for the loop's lifetime (the
-    // trainCoarse discipline): init + every Lloyd round re-derived the
-    // subspace explode otherwise — iters+2 passes become one
-    val sc0 = subs.persist()
-    try {
-    // deterministic init: subvectors of the PqK lowest vec_ids per subspace
-    val initIds = sc0.select($"vec_id").distinct()
-      .orderBy($"vec_id").limit(PqK)
-      .collect().map(_.getLong(0)).zipWithIndex.toMap
-    var codebook: Seq[(Int, Int, Seq[Double])] = sc0
-      .where($"vec_id".isin(initIds.keys.toSeq: _*))
-      .select($"vec_id", $"m", $"sv").as[(Long, Int, Seq[Double])]
-      .collect().map { case (id, m, sv) => (m, initIds(id), sv) }.toSeq
-    var err = Double.NaN
-    for (_ <- 0 until iters) {
-      val cb = broadcast(codebook.toDF("m", "j", "c"))
-      // assign: argmin-L2 codeword per (vector, subspace) — struct-min
-      // agg (partial aggregation applies; never a window)
-      val assign = sc0.join(cb, "m")
-        .select($"vec_id", $"m", $"sv", $"j", d2($"sv", $"c").as("d2"))
-        .groupBy($"vec_id", $"m")
-        .agg(min(struct($"d2", $"j", $"sv")).as("best"))
-        .select($"m", $"best.j".as("j"), $"best.d2".as("d2"),
-          $"best.sv".as("sv"))
-      // re-mean: ORDER-INDEPENDENT exact micro-unit integer sums per
-      // (subspace, codeword, dimension) + the total quantization error,
-      // in ONE pass (PqD fixed sum columns — no per-element explode);
-      // the division + 6-dp round run as Spark expressions so the
-      // rounding semantics are the engine's own
-      val aggCols = sum($"d2").as("qerr") +: count(lit(1)).as("n") +:
-        (0 until PqD).map(i =>
-          sum(round($"sv"(i) * 1e6).cast("long").cast("decimal(38,0)")).as(s"s$i"))
-      val stats = assign.groupBy($"m", $"j")
-        .agg(aggCols.head, aggCols.tail: _*)
-        .select(($"m" +: $"j" +: $"qerr" +: (0 until PqD).map(i =>
-          round(col(s"s$i").cast("double") / 1e6 / $"n", 6).as(s"c$i"))): _*)
-        .collect()
-      err = stats.map(_.getDouble(2)).sum
-      val moved = stats.map { r =>
-        (r.getInt(0), r.getInt(1),
-          (0 until PqD).map(i => r.getDouble(3 + i)): Seq[Double])
-      }.map { case (m, j, c) => (m, j) -> c }.toMap
-      // empty clusters keep their previous codeword
-      codebook = codebook.map { case (m, j, c) => (m, j, moved.getOrElse((m, j), c)) }
-    }
-    (broadcast(codebook.toDF("m", "j", "c")), err)
-    } finally sc0.unpersist(blocking = false)
-  }
-
   /** IVF-PQ — the composed 100 TB ANN architecture the PQ scaladoc
     * declares: the seeded k-means coarse quantizer ([[annIvfKmeans]]
     * precedent) PRUNES the scan to nprobe inverted lists, and TRAINED
@@ -1004,7 +915,7 @@ object Similarity {
     * ~nprobe/nlist of the corpus reading bytes, and full floats are
     * fetched only for shortlist rows (an nq·shortlist-sized broadcast
     * equi-join). Everything corpus-sized moves through broadcast
-    * equi-joins and struct-min aggs only.
+    * equi-joins and the row-local [[nearest]] assignment only.
     */
   val IvfPqNList = 16
   val IvfPqNProbe = 2
@@ -1034,22 +945,16 @@ object Similarity {
     // coarse quantizer: the DETERMINISTIC Lloyd trainer on the unit
     // sphere (min-L2 on unit vectors ⇔ max cosine) — SQL-reproducible
     // like every other stage of this index since round 15
-    val cents = broadcast(coarseCentFrame(s,
-        trainCoarse(s, vn.select($"vec_id", $"vn".as("v")), IvfPqNList))
-      .select($"cent_id", $"cv"))
+    val coarse = trainCoarse(s, vn.select($"vec_id", $"vn".as("v")), IvfPqNList)
+    val cents = broadcast(coarseCentFrame(s, coarse).select($"cent_id", $"cv"))
     // assign each vector to its nearest list; carry the RESIDUAL
     // localCheckpoint (eager) truncates the lineage: the Lloyd loop,
     // the encode pass, and the init collect all re-read the assignment
     // instead of re-deriving the quantizer DAG per job; the
     // materialized partitions are reclaimed by the ContextCleaner when
     // this frame goes out of scope
-    val assign = vn.crossJoin(cents)
-      .select($"vec_id", $"vn", $"cent_id",
-        round(dot(zip_with($"vn", $"cv", (x, y) => x - y),
-          zip_with($"vn", $"cv", (x, y) => x - y)), 6).as("d2"))
-      .groupBy($"vec_id")
-      .agg(min(struct($"d2", $"cent_id", $"vn")).as("best"))
-      .select($"vec_id", $"best.cent_id".as("cent_id"), $"best.vn".as("vn"))
+    val assign = nearest(s, oneKey(vn.select($"vec_id", $"vn".as("v"))), coarse)
+      .select($"vec_id", $"j".as("cent_id"), $"v".as("vn"))
       .join(cents, "cent_id")
       .select($"vec_id", $"cent_id",
         zip_with($"vn", $"cv", (x, y) => x - y).as("r"))
@@ -1057,22 +962,19 @@ object Similarity {
     def subspaces(vecCol: Column): Column = explode(array((0 until PqM).map { m =>
       struct(lit(m).as("m"), slice(vecCol, m * PqD + 1, PqD).as("sv"))
     }: _*))
-    // train shared residual codebooks on a DETERMINISTIC ¼ sample
-    // (codebook quality needs a bounded training set, not the corpus —
-    // the standard points-per-centroid cap practice; at 100 TB the
-    // sampling predicate is what keeps index-build cost flat), then
-    // encode EVERY vector's residual to M one-byte codes (struct-min
-    // agg, pqTopK precedent)
+    // train shared residual codebooks, one Lloyd key per subspace, on a
+    // DETERMINISTIC ¼ sample (codebook quality needs a bounded training
+    // set, not the corpus — the standard points-per-centroid cap
+    // practice; at 100 TB the sampling predicate is what keeps
+    // index-build cost flat), then encode EVERY vector's residual to M
+    // one-byte codes
     val rsubs = assign.select($"vec_id", subspaces($"r").as("ms"))
-      .select($"vec_id", $"ms.m".as("m"), $"ms.sv".as("sv"))
-    val (cb, _) = trainPqCodebooks(s,
-      rsubs.where(pmod($"vec_id", lit(4)) === 0), IvfPqIters)
-    val enc = rsubs.join(cb, "m")
-      .withColumn("diff", zip_with($"sv", $"c", (x, y) => x - y))
-      .withColumn("d2", round(dot($"diff", $"diff"), 6))
-      .groupBy($"vec_id", $"m")
-      .agg(min(struct($"d2", $"j")).as("best"))
-      .select($"vec_id", $"m", $"best.j".as("code"))
+      .select($"ms.m".as("key"), $"vec_id", $"ms.sv".as("v"))
+    val (codebook, _) = lloyd(s, rsubs.where(pmod($"vec_id", lit(4)) === 0),
+      (0 until PqM).map(_ -> PqK).toMap, IvfPqIters)
+    val cb = broadcast(codebook.toDF("m", "j", "c"))
+    val enc = nearest(s, rsubs, codebook)
+      .select($"vec_id", $"key".as("m"), $"j".as("code"))
       .join(assign.select($"vec_id", $"cent_id"), "vec_id")
     // probes: each query's nprobe nearest lists, with the q·c base term
     val wProbe = Window.partitionBy($"q_id").orderBy($"qc".desc, $"cent_id".asc)
@@ -1140,48 +1042,6 @@ object Similarity {
   private[graft] def annIvfPqUncached(s: SparkSession, dir: String): DataFrame =
     ivfPqTopK(s, unitVecs(s, dir), col("vec_id") < 10)
 
-  /** DuckDB re-derivation of the RESIDUAL codebook training
-    * ([[trainPqCodebooks]] at [[IvfPqIters]] unrolled): pcb0 init from
-    * the 16 lowest sample vec_ids' residual subvectors, then per
-    * iteration an assignment CTE, the exact-integer per-dimension
-    * re-mean, and the coalesced codebook. Assumes rsubs(vec_id, m, sv)
-    * and samp (its ¼-sample) are defined by the enclosing WITH; ends in
-    * pcb[[IvfPqIters]](m, j, c).
-    */
-  private def residualCodebookCtesSql: String = {
-    // MATERIALIZED throughout — the coarseCtesSql inlining-blowup note,
-    // squared: pcb_{t-1} is referenced twice per iteration on top of an
-    // already-chained coarse quantizer
-    val iters = (1 to IvfPqIters).map { t =>
-      s"""pa$t AS MATERIALIZED (
-         |  SELECT m, vec_id, sv, j FROM (
-         |    SELECT s.m, s.vec_id, s.sv, c.j,
-         |      row_number() OVER (PARTITION BY s.vec_id, s.m
-         |        ORDER BY ${l2RoundSql("s.sv", "c.c")} ASC, c.j ASC) AS rk
-         |    FROM samp s JOIN pcb${t - 1} c USING (m)) z
-         |  WHERE rk = 1),
-         |pm$t AS MATERIALIZED (
-         |  SELECT m, j, d.i AS dim,
-         |    round(CAST(sum(CAST(round(sv[d.i] * 1000000) AS BIGINT)) AS DOUBLE)
-         |      / 1000000.0 / count(*), 6) AS cd
-         |  FROM pa$t, (SELECT unnest(generate_series(1, $PqD)) AS i) d
-         |  GROUP BY m, j, d.i),
-         |pcb$t AS MATERIALIZED (
-         |  SELECT p.m, p.j, coalesce(mm.c, p.c) AS c
-         |  FROM pcb${t - 1} p LEFT JOIN (
-         |    SELECT m, j, list(cd ORDER BY dim) AS c FROM pm$t GROUP BY m, j) mm
-         |    USING (m, j))""".stripMargin
-    }.mkString(",\n")
-    s"""sampids AS MATERIALIZED (
-       |  SELECT vec_id, j FROM (
-       |    SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS j
-       |    FROM (SELECT DISTINCT vec_id FROM samp) ids) z
-       |  WHERE j < $PqK),
-       |pcb0 AS MATERIALIZED (
-       |  SELECT s.m, si.j, s.sv AS c FROM samp s JOIN sampids si USING (vec_id)),
-       |$iters""".stripMargin
-  }
-
   /** ORACLE for the composed IVF-PQ index — since round 15 EVERY stage
     * is deterministic, so DuckDB re-derives the whole architecture:
     * the unrolled coarse Lloyd chain on the unit sphere, min-L2 list
@@ -1203,12 +1063,7 @@ object Similarity {
        |  FROM vr),
        |${coarseCtesSql(s"SELECT $IvfPqNList AS k")},
        |asg AS MATERIALIZED (
-       |  SELECT vec_id, v, cent_id FROM (
-       |    SELECT t.vec_id, t.v, c.cent_id,
-       |      row_number() OVER (PARTITION BY t.vec_id
-       |        ORDER BY ${l2RoundSql("t.v", "c.cv")} ASC, c.cent_id ASC) AS rk
-       |    FROM vn t CROSS JOIN cents c) z
-       |  WHERE rk = 1),
+       |  SELECT vec_id, v, cent_id FROM (${nearestSql("vn", "cents", c = "cv", j = "cent_id")})),
        |res AS MATERIALIZED (
        |  SELECT a.vec_id, a.cent_id,
        |    [a.v[i] - c.cv[i] for i in generate_series(1, len(a.v))] AS r
@@ -1217,15 +1072,12 @@ object Similarity {
        |rsubs AS MATERIALIZED (
        |  SELECT vec_id, m, [r[m * $PqD + i] for i in generate_series(1, $PqD)] AS sv
        |  FROM res, ms),
-       |samp AS MATERIALIZED (SELECT * FROM rsubs WHERE vec_id % 4 = 0),
-       |$residualCodebookCtesSql,
+       |samp AS MATERIALIZED (SELECT m, vec_id, sv AS v FROM rsubs WHERE vec_id % 4 = 0),
+       |pc0 AS MATERIALIZED (${lowestSql("samp", Seq("m"), PqK.toString)}),
+       |${lloydCtesSql("p", Seq("m"), "samp", "pc0", PqD, IvfPqIters)},
        |enc AS MATERIALIZED (
-       |  SELECT vec_id, m, j AS code FROM (
-       |    SELECT s.vec_id, s.m, c.j,
-       |      row_number() OVER (PARTITION BY s.vec_id, s.m
-       |        ORDER BY ${l2RoundSql("s.sv", "c.c")} ASC, c.j ASC) AS rk
-       |    FROM rsubs s JOIN pcb$IvfPqIters c USING (m)) z
-       |  WHERE rk = 1),
+       |  SELECT vec_id, m, j AS code
+       |  FROM (${nearestSql("rsubs", s"pc$IvfPqIters", Seq("m"), v = "sv")})),
        |encc AS (
        |  SELECT e.vec_id, e.m, e.code, a.cent_id
        |  FROM enc e JOIN asg a USING (vec_id)),
@@ -1243,7 +1095,7 @@ object Similarity {
        |  FROM qs, ms),
        |lut AS (
        |  SELECT s.q_id, s.m, c.j, ${dotESql("s.sv", "c.c")} AS pdot
-       |  FROM qsubs s JOIN pcb$IvfPqIters c USING (m)),
+       |  FROM qsubs s JOIN pc$IvfPqIters c USING (m)),
        |adc AS (
        |  SELECT p.q_id, e.vec_id AS neighbor_id,
        |    round(max(p.qc) +
@@ -1396,7 +1248,7 @@ object Similarity {
   /** 256-bit sign signatures packed into [[SignWords]] longs (plane p →
     * bit p%64 of word p/64), computed per row in a mapPartitions
     * primitive loop against the broadcast plane matrix (the
-    * [[assignIds]] precedent): the equivalent higher-order-function
+    * [[nearest]] precedent): the equivalent higher-order-function
     * expression — nested zip_with/aggregate lambdas — is
     * CodegenFallback, so it interpreted planes×dims expression nodes
     * PER ROW and dominated the route's sf1 wall time. The float
@@ -1846,30 +1698,7 @@ object Similarity {
   private[graft] def withNorms(df: DataFrame): DataFrame =
     df.withColumn("nrm", sqrt(arrayDot(col("v"), col("v"))))
 
-  /** DETERMINISTIC coarse-quantizer training — Lloyd's k-means made
-    * hash-checkable, the discipline that let the PQ codebooks into the
-    * oracle gate applied to the full-vector coarse quantizer. Init is
-    * the k lowest vec_ids' vectors; each of [[CoarseIters]] rounds
-    *
-    *  1. assigns every vector ROW-LOCALLY against the packed centroid
-    *     array (argmin of the 6-dp-rounded L2², ties to the lower
-    *     cent_id) — zero shuffle, the corpus never moves;
-    *  2. re-means each cluster with ORDER-INDEPENDENT exact integer
-    *     sums (coordinates in micro-units summed as decimal(38,0) —
-    *     the embedNormOutliers idiom), so the updated centroid is the
-    *     same double on any partitioning AND in DuckDB's unrolled
-    *     re-derivation ([[coarseCtesSql]]); new coordinates round to
-    *     6 dp (cross-engine round parity), empty clusters keep their
-    *     previous centroid.
-    *
-    * Driver state per round is the k×d codebook (KBs at any corpus
-    * size; the trainPqCodebooks bounded-driver-work contract); cluster
-    * shuffle per round is one k-group aggregate with map-side partial
-    * aggregation. MLlib's seeded KMeans remains beside this as the
-    * quality cross-check twin ([[fitCentroids]], SimilaritySpec) — the
-    * deterministic fit exists so the k-means consumers can be CHECKED,
-    * not because MLlib's is wrong.
-    */
+  /** Lloyd rounds of the coarse and two-level quantizers ([[lloyd]]). */
   val CoarseIters = 4
 
   /** 64 = [[PqM]]·[[PqD]] — the embedding store's dimension, pinned by
@@ -1877,11 +1706,6 @@ object Similarity {
     */
   val EmbedDim: Int = PqM * PqD
 
-  /** Row-local argmin-L2² assignment of `vcol` against a driver-side
-    * codebook: fold each centroid's distance inside one projection —
-    * no join, no shuffle, the packed-centroid twin of ivfSearch's
-    * broadcast assignment.
-    */
   /** Spark's own Round(double, 6) semantics, replicated exactly —
     * java.math.BigDecimal.valueOf (the canonical Double.toString path)
     * + HALF_UP, the same function the SQL expression compiles to, so a
@@ -1901,27 +1725,37 @@ object Similarity {
     java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** Row-local argmin-L2² assignment against a broadcast codebook,
-    * through the declared mapPartitions codec boundary (the BPE
-    * encodeWord precedent): per row one primitive-loop scan of the k
-    * centroids — zero shuffle, the corpus never moves, and ~100×
-    * faster than the equivalent higher-order-function expression
-    * (nested lambdas are CodegenFallback, so the fold interpreted
-    * k×dim expression nodes PER ROW — measured as the planner's wall
-    * time at k=128). The arithmetic is the oracle's, step for step:
-    * left-to-right (x−y)² accumulation from 0.0, [[round6]] = the
-    * engine round, ties to the lower cent_id.
+  /** A keyed codebook: (key, j, centroid) rows, each key's centroids
+    * indexed by j.
     */
-  private def assignIds(s: SparkSession, v: DataFrame,
-      cents: Seq[(Int, Seq[Double])]): DataFrame = {
+  private[graft] type Codebook = Seq[(Int, Int, Seq[Double])]
+
+  /** THE argmin-L2² assignment of every quantizer: each (key, vec_id, v)
+    * row against its own key's centroids in a broadcast [[Codebook]],
+    * through the declared mapPartitions codec boundary (the BPE
+    * encodeWord precedent). Per row one primitive-loop scan of the key's
+    * centroids — zero shuffle, the corpus never moves, and ~100× faster
+    * than the equivalent higher-order-function expression (nested
+    * lambdas are CodegenFallback, so the fold interpreted k×dim
+    * expression nodes PER ROW — measured as the planner's wall time at
+    * k=128). The arithmetic is ArrayDot's over zip_with differences and
+    * the oracle's ([[nearestSql]]), step for step: left-to-right (x−y)²
+    * accumulation from 0.0, [[round6]] = the engine round, strict < so
+    * ties keep the lower j. Returns (key, vec_id, j, v, d2).
+    */
+  private[graft] def nearest(s: SparkSession, rows: DataFrame, codebook: Codebook): DataFrame = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(cents.sortBy(_._1).map(_._2.toArray).toArray)
-    v.select($"vec_id", $"v").as[(Long, Seq[Double])]
+    val bc = s.sparkContext.broadcast(codebook.groupBy(_._1).map { case (key, cs) =>
+      val sorted = cs.sortBy(_._2)
+      key -> (sorted.map(_._2).toArray, sorted.map(_._3.toArray).toArray)
+    })
+    rows.select($"key", $"vec_id", $"v").as[(Int, Long, Seq[Double])]
       .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, vec) =>
+        val byKey = bc.value
+        it.map { case (key, id, vec) =>
+          val (js, cs) = byKey(key)
           val a = vec.toArray
-          var bestJ = 0
+          var best = 0
           var bestD = Double.MaxValue
           var j = 0
           while (j < cs.length) {
@@ -1930,64 +1764,101 @@ object Similarity {
             var i = 0
             while (i < a.length) { val d = a(i) - c(i); acc += d * d; i += 1 }
             val d2 = round6(acc)
-            if (d2 < bestD) { bestD = d2; bestJ = j } // strict <: ties keep lower j
+            if (d2 < bestD) { bestD = d2; best = j } // strict <: ties keep lower j
             j += 1
           }
-          (id, bestJ, vec)
+          (key, id, js(best), vec, bestD)
         }
-      }.toDF("vec_id", "j", "v")
+      }.toDF("key", "vec_id", "j", "v", "d2")
   }
 
-  private[graft] def trainCoarse(s: SparkSession, v: DataFrame, k: Int): Seq[(Int, Seq[Double])] = {
+  /** THE Lloyd trainer — deterministic k-means made hash-checkable, and
+    * the one fit behind every quantizer of this family: each key of
+    * `rows` (key, vec_id, v) trains its own codebook of kPerKey(key)
+    * centroids, every key in the same jobs (one key for the coarse
+    * quantizer, the branch for level 2 of [[hierAssignKeyed]], the
+    * subspace for PQ, the candidate k for the SemDeDup planner). Init is
+    * each key's k lowest vec_ids; each of `iters` rounds
+    *
+    *  1. assigns every row ROW-LOCALLY against its key's centroids
+    *     ([[nearest]]) — zero shuffle, the corpus never moves;
+    *  2. re-means each (key, j) cluster with ORDER-INDEPENDENT exact
+    *     integer sums (coordinates in micro-units summed as
+    *     decimal(38,0) — the embedNormOutliers idiom), so the updated
+    *     centroid is the same double on any partitioning AND in DuckDB's
+    *     unrolled re-derivation ([[lloydCtesSql]]); new coordinates
+    *     round to 6 dp (cross-engine round parity), empty clusters keep
+    *     their previous centroid.
+    *
+    * A key's codebook depends only on its own rows, so training keys
+    * together gives each the codebook it gets alone (SimilaritySpec).
+    * Driver state per round is the codebook (KBs at any corpus size);
+    * a round is one job whose shuffle is one (key, j, dim) aggregate
+    * with map-side partial aggregation. Returns the codebook and the
+    * total quantization error (Σ d2 of the last round's assignment) so
+    * callers can verify training tightened the fit. MLlib's seeded
+    * KMeans remains beside this as the quality cross-check twin
+    * ([[fitCentroids]], SimilaritySpec).
+    */
+  private[graft] def lloyd(s: SparkSession, rows: DataFrame, kPerKey: Map[Int, Int],
+      iters: Int): (Codebook, Double) = {
     import s.implicits._
-    // the Lloyd loop re-reads `v` once per round plus the init — persist
-    // it for the loop's lifetime so the scan+normalize lineage runs once
-    // instead of CoarseIters+1 times (VERDICT r21 #5: the embeddings
-    // frame rebuilt dozens of times per query is WHY fan-out was toxic
-    // here; a persist removes the recompute without adding an exchange).
-    // Entirely inside this eager driver loop: persisted before the first
-    // job, released in the finally — nothing leaks across queries/runs.
-    val vc = v.persist()
+    import org.apache.spark.sql.expressions.Window
+    val dec = "decimal(38,0)"
+    // the loop re-reads its input once per round plus the init — persist
+    // it for the loop's lifetime so the input lineage runs once (the
+    // embeddings frame rebuilt dozens of times per query is WHY fan-out
+    // was toxic here; a persist removes the recompute without adding an
+    // exchange), released in the finally
+    val in = rows.select($"key", $"vec_id", $"v").persist()
     try {
-    var cents: Seq[(Int, Seq[Double])] = vc.select($"vec_id", $"v")
-      .orderBy($"vec_id").limit(k)
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-      .zipWithIndex.map { case ((_, c), j) => (j, c) }.toSeq
-    val dim = cents.head._2.size
-    for (_ <- 0 until CoarseIters) {
-      val assigned = assignIds(s, vc, cents)
-      // re-mean in the EXPLODED (j, dim, micro-int) shape — one generic
-      // 3-column aggregate instead of 64 wide decimal-sum columns whose
-      // generated code dominated the planner's wall time (measured 29 s
-      // → the codegen, not the arithmetic; the shuffle still collapses
-      // map-side to k×dim rows per task, so the shape is scale-neutral).
-      // The division + final round run as Spark expressions so the
-      // rounding semantics are BY CONSTRUCTION the engine's own.
-      val moved = assigned
-        .select($"j", posexplode(transform($"v", x =>
-          round(x * 1e6).cast("long"))).as(Seq("dim", "mi")))
-        .groupBy($"j", $"dim")
-        .agg(count(lit(1)).as("n"), sum($"mi".cast("decimal(38,0)")).as("s"))
-        .select($"j", $"dim",
-          round($"s".cast("double") / 1e6 / $"n", 6).as("cd"))
-        .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-      cents = cents.map { case (j, c) =>
-        if (moved.contains((j, 0)))
-          (j, (0 until dim).map(i => moved((j, i))): Seq[Double])
-        else (j, c)
+      var codebook: Codebook = in
+        .withColumn("j", row_number().over(Window.partitionBy($"key").orderBy($"vec_id")) - 1)
+        .where($"j" < kPerKey.values.max)
+        .select($"key", $"j", $"v").as[(Int, Int, Seq[Double])].collect()
+        .filter { case (key, j, _) => j < kPerKey(key) }
+        .sortBy { case (key, j, _) => (key, j) }.toSeq
+      var err = Double.NaN
+      for (_ <- 0 until iters) {
+        // re-mean in the EXPLODED (key, j, dim, micro-int) shape — one
+        // generic aggregate instead of dim-wide decimal-sum columns whose
+        // generated code dominated the planner's wall time (measured
+        // 29 s); the division + final round run as Spark expressions so
+        // the rounding semantics are BY CONSTRUCTION the engine's own
+        val stats = nearest(s, in, codebook)
+          .select($"key", $"j", $"d2", posexplode(transform($"v", x =>
+            round(x * 1e6).cast("long"))).as(Seq("dim", "mi")))
+          .groupBy($"key", $"j", $"dim")
+          .agg(count(lit(1)).as("n"), sum($"mi".cast(dec)).as("s"),
+            sum(when($"dim" === 0, round($"d2" * 1e6).cast(dec))).as("e"))
+          .select($"key", $"j", $"dim", round($"s".cast("double") / 1e6 / $"n", 6), $"e")
+          .collect()
+        err = stats.flatMap(r => Option(r.getDecimal(4))).map(BigDecimal(_)).sum.toDouble / 1e6
+        val moved = stats.map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
+        codebook = codebook.map { case (key, j, c) =>
+          if (moved.contains((key, j, 0))) (key, j, c.indices.map(i => moved((key, j, i))))
+          else (key, j, c)
+        }
       }
-    }
-    cents
-    } finally vc.unpersist(blocking = false)
+      (codebook, err)
+    } finally in.unpersist(blocking = false)
   }
+
+  /** `v`'s (vec_id, v) rows as the one key 0 of a [[lloyd]] / [[nearest]] input. */
+  private def oneKey(v: DataFrame): DataFrame =
+    v.select(lit(0).as("key"), col("vec_id"), col("v"))
+
+  /** The single-key coarse quantizer: [[CoarseIters]] [[lloyd]] rounds at k. */
+  private[graft] def trainCoarse(s: SparkSession, v: DataFrame, k: Int): Codebook =
+    lloyd(s, oneKey(v), Map(0 -> k), CoarseIters)._1
 
   /** The trained codebook as the (cent_id, cv, cnrm) frame the IVF /
     * SemDeDup consumers take — a driver-local relation, broadcast by
     * every consumer join.
     */
-  private[graft] def coarseCentFrame(s: SparkSession, cents: Seq[(Int, Seq[Double])]): DataFrame = {
+  private[graft] def coarseCentFrame(s: SparkSession, cents: Codebook): DataFrame = {
     import s.implicits._
-    s.createDataFrame(cents).toDF("cent_id", "cv")
+    cents.map { case (_, j, c) => (j, c) }.toDF("cent_id", "cv")
       .withColumn("cnrm", sqrt(arrayDot(col("cv"), col("cv"))))
   }
 
@@ -2004,110 +1875,103 @@ object Similarity {
     s"round(list_reduce([($x[i] - $y[i]) * ($x[i] - $y[i]) " +
       s"for i in generate_series(1, len($x))], (a, b) -> a + b), 6)"
 
-  /** DuckDB re-derivation of [[trainCoarse]]: kk defines k, c0 the
-    * lowest-vec_id init, then per round r an assignment CTE (a_r), the
-    * exact-integer per-dimension re-mean (m_r), and the coalesced
-    * codebook (c_r, empty clusters inheriting c_{r-1}); ends in
-    * cents(cent_id, cv, cnrm). Assumes vn(vec_id, v, nrm) is defined
-    * by the enclosing WITH.
+  /** THE argmin-L2² CTE body, [[nearest]]'s oracle mirror: each row of
+    * `rows` (alias t: keys…, vec_id, `v`) against the centroids of
+    * `cents` (alias c: keys…, `j`, `c`) under the same keys, keeping t's
+    * columns plus the winning c.`j` — least 6-dp-rounded L2², ties to
+    * the lower j.
     */
-  private def coarseCtesSql(kSql: String): String = {
-    // every chained CTE is MATERIALIZED: c_{r-1} is referenced twice per
-    // round (assignment + the empty-cluster coalesce), so DuckDB's
-    // default CTE inlining would grow the expression tree 2^rounds —
-    // measured as a hung oracle once the residual-PQ chain stacked on
-    // top of this one
-    val rounds = (1 to CoarseIters).map { r =>
-      s"""a$r AS MATERIALIZED (
-         |  SELECT vec_id, v, j FROM (
-         |    SELECT t.vec_id, t.v, c.j,
-         |      row_number() OVER (PARTITION BY t.vec_id
-         |        ORDER BY ${l2RoundSql("t.v", "c.c")} ASC, c.j ASC) AS rk
-         |    FROM vn t CROSS JOIN c${r - 1} c) z
-         |  WHERE rk = 1),
-         |m$r AS MATERIALIZED (
-         |  SELECT j, d.i AS dim,
-         |    round(CAST(sum(CAST(round(v[d.i] * 1000000) AS BIGINT)) AS DOUBLE)
-         |      / 1000000.0 / count(*), 6) AS cd
-         |  FROM a$r, (SELECT unnest(generate_series(1, $EmbedDim)) AS i) d
-         |  GROUP BY j, d.i),
-         |c$r AS MATERIALIZED (
-         |  SELECT p.j, coalesce(mm.c, p.c) AS c
-         |  FROM c${r - 1} p LEFT JOIN (
-         |    SELECT j, list(cd ORDER BY dim) AS c FROM m$r GROUP BY j) mm
-         |    USING (j))""".stripMargin
-    }.mkString(",\n")
-    s"""kk AS MATERIALIZED ($kSql),
-       |c0 AS MATERIALIZED (
-       |  SELECT CAST(z.rn - 1 AS INT) AS j, z.v AS c
-       |  FROM (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn
-       |        FROM vn) z CROSS JOIN kk
-       |  WHERE z.rn <= kk.k),
-       |$rounds,
-       |cents AS MATERIALIZED (
-       |  SELECT j AS cent_id, c AS cv,
-       |    sqrt(list_reduce([c[i] * c[i] for i in generate_series(1, len(c))],
-       |      (a, b) -> a + b)) AS cnrm
-       |  FROM c$CoarseIters)""".stripMargin
+  private def nearestSql(rows: String, cents: String, keys: Seq[String] = Nil,
+      v: String = "v", c: String = "c", j: String = "j"): String = {
+    val from = if (keys.isEmpty) s"$rows t CROSS JOIN $cents c"
+      else s"$rows t JOIN $cents c ON " + keys.map(k => s"t.$k = c.$k").mkString(" AND ")
+    s"""SELECT * EXCLUDE (rk) FROM (
+       |  SELECT t.*, c.$j, row_number() OVER (
+       |    PARTITION BY ${(keys :+ "vec_id").map("t." + _).mkString(", ")}
+       |    ORDER BY ${l2RoundSql(s"t.$v", s"c.$c")} ASC, c.$j ASC) AS rk
+       |  FROM $from) z
+       |WHERE rk = 1""".stripMargin
   }
 
-  /** DuckDB re-derivation of [[trainCoarseHier]] + [[hierAssignOn]]:
-    * kk0 pins the grounded k, the level-1 chain is [[coarseCtesSql]]
-    * verbatim at k1 = ⌈√k⌉ (ending in `cents`), basg branch-partitions
-    * every vector by the trainer's own argmin-L2, d0 inits each
-    * branch's k2 lowest vec_ids, each round r re-derives the
-    * branch-local assignment (e_r), the exact-integer re-mean keyed
-    * (b, j) (n_r), and the coalesced sub-codebook (d_r); cents2 flattens
-    * to cent_id = b·k2 + j and hasg is the two-level CONSUMER
-    * assignment (argmax cosine within the branch, the winning ccos
-    * kept). Every chained CTE MATERIALIZED (the coarseCtesSql
-    * inlining-blowup note). Assumes vn(vec_id, v, nrm) is defined by
-    * the enclosing WITH; `kSql` must select the grounded k FROM vn.
+  /** [[lloyd]]'s init as SQL: each key's `k` (a SQL scalar) lowest
+    * vec_ids of `input` (keys…, vec_id, v) as (keys…, j, c).
     */
-  private def hierCtesSql(kSql: String): String = {
-    val rounds = (1 to CoarseIters).map { r =>
-      s"""e$r AS MATERIALIZED (
-         |  SELECT vec_id, v, b, j FROM (
-         |    SELECT t.vec_id, t.v, t.b, d.j,
-         |      row_number() OVER (PARTITION BY t.vec_id
-         |        ORDER BY ${l2RoundSql("t.v", "d.c")} ASC, d.j ASC) AS rk
-         |    FROM basg t JOIN d${r - 1} d ON t.b = d.b) z
-         |  WHERE rk = 1),
-         |n$r AS MATERIALIZED (
-         |  SELECT b, j, dd.i AS dim,
-         |    round(CAST(sum(CAST(round(v[dd.i] * 1000000) AS BIGINT)) AS DOUBLE)
+  private def lowestSql(input: String, keys: Seq[String], k: String): String = {
+    val ks = keys.map(_ + ", ").mkString
+    val part = if (keys.isEmpty) "" else keys.mkString("PARTITION BY ", ", ", " ")
+    s"""SELECT ${ks}CAST(rn - 1 AS INT) AS j, v AS c FROM (
+       |  SELECT ${ks}v, row_number() OVER (${part}ORDER BY vec_id) AS rn FROM $input) z
+       |WHERE rn <= ($k)""".stripMargin
+  }
+
+  /** THE unrolled [[lloyd]] in DuckDB, the one generator behind every
+    * trained quantizer's oracle: `input` (keys…, vec_id, v) and `init`
+    * (keys…, j, c) are relations of the enclosing WITH; round r adds the
+    * assignment `<p>a<r>` ([[nearestSql]]), the exact micro-unit re-mean
+    * `<p>m<r>` and the codebook `<p>c<r>` (empty clusters keep their
+    * centroid), ending in `<p>c<iters>`. Every CTE is MATERIALIZED: the
+    * previous codebook is read twice per round, so DuckDB's default CTE
+    * inlining would grow the expression tree 2^rounds — measured as a
+    * hung oracle once the residual-PQ chain stacked on the coarse one.
+    */
+  private def lloydCtesSql(p: String, keys: Seq[String], input: String, init: String,
+      dim: Int, iters: Int): String = {
+    val kj = (keys :+ "j").mkString(", ")
+    (1 to iters).map { r =>
+      val prev = if (r == 1) init else s"${p}c${r - 1}"
+      s"""${p}a$r AS MATERIALIZED (${nearestSql(input, prev, keys)}),
+         |${p}m$r AS MATERIALIZED (
+         |  SELECT $kj, d.i AS dim,
+         |    round(CAST(sum(CAST(round(v[d.i] * 1000000) AS BIGINT)) AS DOUBLE)
          |      / 1000000.0 / count(*), 6) AS cd
-         |  FROM e$r, (SELECT unnest(generate_series(1, $EmbedDim)) AS i) dd
-         |  GROUP BY b, j, dd.i),
-         |d$r AS MATERIALIZED (
-         |  SELECT p.b, p.j, coalesce(mm.c, p.c) AS c
-         |  FROM d${r - 1} p LEFT JOIN (
-         |    SELECT b, j, list(cd ORDER BY dim) AS c FROM n$r GROUP BY b, j) mm
-         |    USING (b, j))""".stripMargin
+         |  FROM ${p}a$r, (SELECT unnest(generate_series(1, $dim)) AS i) d
+         |  GROUP BY $kj, d.i),
+         |${p}c$r AS MATERIALIZED (
+         |  SELECT ${keys.map(k => s"o.$k, ").mkString}o.j, coalesce(mm.c, o.c) AS c
+         |  FROM $prev o LEFT JOIN (
+         |    SELECT $kj, list(cd ORDER BY dim) AS c FROM ${p}m$r GROUP BY $kj) mm
+         |    USING ($kj))""".stripMargin
     }.mkString(",\n")
+  }
+
+  /** DuckDB re-derivation of [[trainCoarse]]: kk defines k, c0 the
+    * lowest-vec_id init, the [[lloydCtesSql]] rounds, and
+    * cents(cent_id, cv, cnrm). Assumes vn(vec_id, v, nrm) is defined by
+    * the enclosing WITH.
+    */
+  private def coarseCtesSql(kSql: String): String =
+    s"""kk AS MATERIALIZED ($kSql),
+       |c0 AS MATERIALIZED (${lowestSql("vn", Nil, "SELECT k FROM kk")}),
+       |${lloydCtesSql("", Nil, "vn", "c0", EmbedDim, CoarseIters)},
+       |cents AS MATERIALIZED (
+       |  SELECT j AS cent_id, c AS cv, sqrt(${dotESql("c", "c")}) AS cnrm
+       |  FROM c$CoarseIters)""".stripMargin
+
+  /** DuckDB re-derivation of [[hierAssignKeyed]] at one k: kk0 pins the
+    * grounded k, the level-1 chain is [[coarseCtesSql]] at k1 = ⌈√k⌉
+    * (ending in `cents`), basg branch-partitions every vector by the
+    * same argmin-L2, d0 inits each branch's k2 lowest vec_ids, the
+    * branch-keyed [[lloydCtesSql]] rounds end in hc<rounds>; cents2
+    * flattens to cent_id = b·k2 + j and hasg is the two-level CONSUMER
+    * assignment (argmax cosine within the branch, the winning ccos
+    * kept). Assumes vn(vec_id, v, nrm) is defined by the enclosing WITH;
+    * `kSql` must select the grounded k FROM vn.
+    */
+  private def hierCtesSql(kSql: String): String =
     s"""kk0 AS MATERIALIZED ($kSql),
        |${coarseCtesSql("SELECT greatest(2, CAST(ceil(sqrt(k)) AS INT)) AS k FROM kk0")},
        |kk2 AS MATERIALIZED (
        |  SELECT greatest(1, CAST(ceil(CAST(kk0.k AS DOUBLE) / kk.k) AS INT)) AS k2
        |  FROM kk0, kk),
        |basg AS MATERIALIZED (
-       |  SELECT vec_id, v, nrm, b FROM (
-       |    SELECT t.vec_id, t.v, t.nrm, c.cent_id AS b,
-       |      row_number() OVER (PARTITION BY t.vec_id
-       |        ORDER BY ${l2RoundSql("t.v", "c.cv")} ASC, c.cent_id ASC) AS rk
-       |    FROM vn t CROSS JOIN cents c) z
-       |  WHERE rk = 1),
-       |d0 AS MATERIALIZED (
-       |  SELECT z.b, CAST(z.rn - 1 AS INT) AS j, z.v AS c FROM (
-       |    SELECT b, v, row_number() OVER (PARTITION BY b ORDER BY vec_id) AS rn
-       |    FROM basg) z CROSS JOIN kk2
-       |  WHERE z.rn <= kk2.k2),
-       |$rounds,
+       |  SELECT vec_id, v, nrm, cent_id AS b
+       |  FROM (${nearestSql("vn", "cents", c = "cv", j = "cent_id")})),
+       |d0 AS MATERIALIZED (${lowestSql("basg", Seq("b"), "SELECT k2 FROM kk2")}),
+       |${lloydCtesSql("h", Seq("b"), "basg", "d0", EmbedDim, CoarseIters)},
        |cents2 AS MATERIALIZED (
        |  SELECT d.b, CAST(d.b * kk2.k2 + d.j AS INT) AS cent_id, d.c AS cv,
-       |    sqrt(list_reduce([d.c[i] * d.c[i] for i in generate_series(1, len(d.c))],
-       |      (a, b) -> a + b)) AS cnrm
-       |  FROM d$CoarseIters d CROSS JOIN kk2),
+       |    sqrt(${dotESql("d.c", "d.c")}) AS cnrm
+       |  FROM hc$CoarseIters d CROSS JOIN kk2),
        |hasg AS MATERIALIZED (
        |  SELECT vec_id, v, nrm, cent_id, ccos FROM (
        |    SELECT t.vec_id, t.v, t.nrm, c.cent_id,
@@ -2117,7 +1981,6 @@ object Similarity {
        |          c.cent_id ASC) AS rk
        |    FROM basg t JOIN cents2 c ON t.b = c.b) z
        |  WHERE rk = 1)""".stripMargin
-  }
 
   /** The corpus-grounded k as a SQL scalar — [[semDedupK]]'s
     * max(2, ceil(n/target)) re-stated over vn. A `def`: it reads vals
@@ -2220,118 +2083,55 @@ object Similarity {
     (k1, math.max(1, math.ceil(k.toDouble / k1).toInt))
   }
 
-  /** Branch-local argmin-L2² assignment against a per-branch broadcast
-    * sub-codebook (the [[assignIds]] primitive-loop discipline, keyed
-    * by the row's branch): round6 distances, strict < keeps the lower
-    * j on ties — the oracle's row_number ordering exactly.
-    */
-  private def assignSubIds(s: SparkSession, vb: DataFrame,
-      subs: Seq[(Int, Int, Seq[Double])]): DataFrame = {
-    import s.implicits._
-    val byBranch: Map[Int, Array[Array[Double]]] = subs.groupBy(_._1)
-      .map { case (b, cs) => b -> cs.sortBy(_._2).map(_._3.toArray).toArray }
-    val bc = s.sparkContext.broadcast(byBranch)
-    vb.select($"vec_id", $"b", $"v").as[(Long, Int, Seq[Double])]
-      .mapPartitions { it =>
-        val m = bc.value
-        it.map { case (id, b, vec) =>
-          val a = vec.toArray
-          val cs = m(b)
-          var bestJ = 0
-          var bestD = Double.MaxValue
-          var j = 0
-          while (j < cs.length) {
-            val c = cs(j)
-            var acc = 0.0
-            var i = 0
-            while (i < a.length) { val d = a(i) - c(i); acc += d * d; i += 1 }
-            val d2 = round6(acc)
-            if (d2 < bestD) { bestD = d2; bestJ = j }
-            j += 1
-          }
-          (id, b, bestJ, vec)
-        }
-      }.toDF("vec_id", "b", "j", "v")
-  }
-
-  /** The two-level fit: [[trainCoarse]] at k1, branch-partition by its
-    * own argmin assignment, then [[CoarseIters]] branch-local Lloyd
-    * rounds at k2 per branch — init the k2 lowest vec_ids WITHIN the
-    * branch, re-means as exact micro-unit integer sums keyed (b, j),
-    * empty sub-clusters keep their previous centroid (the
-    * [[trainCoarse]] discipline verbatim, so the DuckDB unroll mirrors
-    * round for round). Driver state per round is the ≈k×d codebook.
-    */
-  private[graft] def trainCoarseHier(s: SparkSession, v: DataFrame, k: Int)
-      : (Seq[(Int, Seq[Double])], Seq[(Int, Int, Seq[Double])]) = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val (k1, k2) = hierDims(k)
-    val cents1 = trainCoarse(s, v, k1)
-    // branch frame persisted for the level-2 loop's lifetime (the
-    // trainCoarse discipline): init + every branch-local Lloyd round
-    // re-derived the level-1 assignment otherwise
-    val vb = assignIds(s, v, cents1).select($"vec_id", $"j".as("b"), $"v")
-      .persist()
-    try {
-    val dim = cents1.head._2.size
-    var subs: Seq[(Int, Int, Seq[Double])] = vb
-      .withColumn("rn", row_number().over(Window.partitionBy($"b").orderBy($"vec_id")))
-      .where($"rn" <= k2)
-      .select($"b", ($"rn" - 1).cast("int").as("j"), $"v")
-      .as[(Int, Int, Seq[Double])].collect().sortBy(t => (t._1, t._2)).toSeq
-    for (_ <- 0 until CoarseIters) {
-      val moved = assignSubIds(s, vb, subs)
-        .select($"b", $"j", posexplode(transform($"v", x =>
-          round(x * 1e6).cast("long"))).as(Seq("dim", "mi")))
-        .groupBy($"b", $"j", $"dim")
-        .agg(count(lit(1)).as("n"), sum($"mi".cast("decimal(38,0)")).as("s"))
-        .select($"b", $"j", $"dim",
-          round($"s".cast("double") / 1e6 / $"n", 6).as("cd"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
-      subs = subs.map { case (b, j, c) =>
-        if (moved.contains((b, j, 0)))
-          (b, j, (0 until dim).map(i => moved((b, j, i))): Seq[Double])
-        else (b, j, c)
-      }
-    }
-    (cents1, subs)
-    } finally vb.unpersist(blocking = false)
-  }
-
-  /** Session-memoized two-level CONSUMER assignment at the grounded k:
-    * (vec_id, v, nrm, cent_id, ccos) with cent_id = b·k2 + j and ccos
-    * the winning level-2 cosine. Level 1 re-runs the trainer's own
-    * argmin-L2 branch pick (zero shuffle, broadcast codebook); level 2
-    * is one broadcast equi-join ON THE BRANCH KEY — n·k2 rows, not
-    * n·k — then the argmax-cosine window. Shared by q_semdedup and
-    * q_embed_clusters, so a session pays fit + assignment once.
+  /** Session-memoized two-level CONSUMER assignment at the grounded k
+    * ([[hierAssignKeyed]] on one key): (vec_id, v, nrm, cent_id, ccos).
+    * Shared by q_semdedup and q_embed_clusters, so a session pays fit +
+    * assignment once.
     */
   private def cachedHierAssign(s: SparkSession, dir: String, k: Int): DataFrame =
     SessionCache.getOrCompute(s, s"sim.hierAssign:$dir:$k") {
       hierAssignOn(s, vecs(s, dir), k)
     }
 
-  private[graft] def hierAssignOn(s: SparkSession, v: DataFrame, k: Int): DataFrame = {
+  private[graft] def hierAssignOn(s: SparkSession, v: DataFrame, k: Int): DataFrame =
+    hierAssignKeyed(s, oneKey(v), Map(0 -> k)).drop("key")
+
+  /** The two-level fit and its consumer assignment for every key of
+    * `rows` (key, vec_id, v) at that key's own k, all keys in the same
+    * jobs: [[lloyd]] at k1 per key, branch-partition by the same
+    * [[nearest]] assignment, then [[lloyd]] at k2 keyed by (key, branch)
+    * — init the k2 lowest vec_ids WITHIN the branch. Consumers assign
+    * level 1 by the trainer's own argmin-L2 (so the consumed partition IS
+    * the trained one) and level 2 by the argmax-cosine convention within
+    * the branch — one broadcast equi-join ON THE BRANCH KEY, n·k2 rows,
+    * not n·k — ties to the lower id at both levels; flat cluster id =
+    * b·k2 + j. Returns (key, vec_id, v, nrm, cent_id, ccos), ccos the
+    * winning level-2 cosine. DuckDB mirror: [[hierCtesSql]].
+    */
+  private def hierAssignKeyed(s: SparkSession, rows: DataFrame, kOf: Map[Int, Int]): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val (_, k2) = hierDims(k)
-    val (cents1, subs) = trainCoarseHier(s, v, k)
-    val cents2 = s.createDataFrame(
-        subs.map { case (b, j, c) => (b, b * k2 + j, c) })
-      .toDF("b", "cent_id", "cv")
-      .withColumn("cnrm", sqrt(arrayDot(col("cv"), col("cv"))))
-    val vb = assignIds(s, v, cents1)
-      .select($"vec_id", $"j".as("b"), $"v",
-        sqrt(arrayDot($"v", $"v")).as("nrm"))
-    val w = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)
-    vb.join(broadcast(cents2), "b")
-      .select($"vec_id", $"v", $"nrm", $"cent_id",
+    val dims = kOf.map { case (key, k) => key -> hierDims(k) }
+    val (cents1, _) = lloyd(s, rows, dims.map { case (key, (k1, _)) => key -> k1 }, CoarseIters)
+    // the level-2 Lloyd key of branch b under key is key·stride + b
+    val stride = dims.values.map(_._1).max
+    val branched = nearest(s, rows, cents1)
+      .select($"key".as("key1"), ($"key" * stride + $"j").as("key"), $"vec_id", $"v")
+    val (subs, _) = lloyd(s, branched,
+      for ((key, (k1, k2)) <- dims; b <- 0 until k1) yield (key * stride + b) -> k2,
+      CoarseIters)
+    val cents2 = subs.map { case (key, j, c) =>
+        (key, (key % stride) * dims(key / stride)._2 + j, c) }
+      .toDF("key", "cent_id", "cv")
+      .withColumn("cnrm", sqrt(arrayDot($"cv", $"cv")))
+    val w = Window.partitionBy($"key", $"vec_id").orderBy($"ccos".desc, $"cent_id".asc)
+    branched.withColumn("nrm", sqrt(arrayDot($"v", $"v")))
+      .join(broadcast(cents2), "key")
+      .select($"key1".as("key"), $"vec_id", $"v", $"nrm", $"cent_id",
         round(dot($"v", $"cv") / ($"nrm" * $"cnrm"), 6).as("ccos"))
       .withColumn("crk", row_number().over(w))
       .where($"crk" === 1)
-      .select($"vec_id", $"v", $"nrm", $"cent_id", $"ccos")
+      .select($"key", $"vec_id", $"v", $"nrm", $"cent_id", $"ccos")
   }
 
   /** Embedding-space CORPUS MAP — the cluster-level cartography report
@@ -2478,70 +2278,48 @@ object Similarity {
 
   /** The SemDeDup k planner — the q_lsh_plan template applied to
     * cluster-then-prune: for candidate k around the grounded choice
-    * (a quarter of it up to four times it), the MEASURED quadratic exposure next to the linear
-    * assignment cost. `candidate_pairs` = Σ n_c·(n_c−1)/2 over the
-    * actual seeded-k-means cluster sizes — the exact number of cosine
-    * evaluations the prune stage will pay; `assign_dots` = n·k, the
-    * price of buying smaller clusters. The `chosen` row marks
-    * [[semDedupK]]'s pick. Driver-side work is one bounded row per
-    * candidate; each two-level fit is O(n·√k). HASH-CHECKED since the
-    * quantizer went deterministic; SimilaritySpec asserts the
-    * candidate-pair bound shrinks as k grows.
+    * (a quarter of it up to four times it), the MEASURED quadratic
+    * exposure next to the linear assignment cost. `candidate_pairs` =
+    * Σ n_c·(n_c−1)/2 over the actual cluster sizes — the exact number of
+    * cosine evaluations the prune stage will pay; `assign_dots` =
+    * n·(k1+k2), the two-level assignment's price of buying smaller
+    * clusters. The `chosen` row marks [[semDedupK]]'s pick. Each
+    * candidate is the same deterministic two-level fit the production
+    * queries use (the planner must measure the quantizer actually
+    * deployed), and the candidates train TOGETHER as Lloyd keys
+    * ([[hierAssignKeyed]]): each gets the codebook it gets alone, and a
+    * round is one job for all of them. HASH-CHECKED since the quantizer
+    * went deterministic; SimilaritySpec asserts the candidate-pair bound
+    * shrinks as k grows.
     */
   def semDedupPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val v = vecs(s, dir).persist()
-    val n = v.count()
-    val kStar = semDedupK(n)
-    val candidates =
-      Seq(kStar / 4, kStar / 2, kStar, kStar * 2, kStar * 4)
+    try {
+      val n = v.count()
+      val kStar = semDedupK(n)
+      val candidates = Seq(kStar / 4, kStar / 2, kStar, kStar * 2, kStar * 4)
         .map(math.max(2, _)).distinct
-    // each exploratory fit is the same deterministic two-level trainer
-    // the production queries use (the planner must measure the
-    // quantizer actually deployed, and the fits stay the bounded
-    // 2×4-round budget); cluster sizes come from the same two-level
-    // consumer assignment per k. The five fits are INDEPENDENT chains
-    // of small driver-coordinated Lloyd rounds (~80 tiny jobs run
-    // back-to-back), so they submit from concurrent driver threads —
-    // Spark schedules jobs from multiple threads freely, each fit's
-    // own rounds stay sequential, and determinism is untouched
-    // (measured 12.0 → ~4 s on the sf0.1 board)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.DurationInt
-    // a DEDICATED fixed pool, not the shared global EC: the fit bodies
-    // block on Spark collects, which on the global pool could starve
-    // unrelated users; and the Await is finite so a hung fit surfaces
-    // as a timeout naming this planner instead of blocking forever
-    // (ADVICE r18)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(candidates.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val perK =
-      try {
-        candidates.map { k =>
-          Future {
-            val (k1, k2) = hierDims(k)
-            hierAssignOn(s, v, k).select($"cent_id")
-              .groupBy($"cent_id").agg(count(lit(1)).as("c"))
-              .agg(
-                lit(k).as("k"),
-                count(lit(1)).cast("int").as("clusters_used"),
-                max($"c").as("max_cluster"),
-                sum(($"c" * ($"c" - 1)) / 2).cast("long").as("candidate_pairs"),
-                lit(k1 + k2).as("dots_per_vec"))
-          }
-        }.map(Await.result(_, 30.minutes)).reduce(_.unionByName(_))
-      } finally pool.shutdown()
-    // assign_dots = n·(k1+k2), the two-level assignment's price of
-    // buying smaller clusters — O(n·√k), no longer the single-level n·k
-    val out = perK.select($"k", lit(n).as("n_vecs"), $"clusters_used",
-        $"max_cluster", $"candidate_pairs",
-        round($"candidate_pairs".cast("double") / n, 2).as("pairs_per_vec"),
-        (lit(n) * $"dots_per_vec").as("assign_dots"),
-        ($"k" === kStar).as("chosen"))
-      .orderBy($"k")
-    v.unpersist(blocking = false)
-    out
+      val perKey = candidates.zipWithIndex.map { case (k, key) =>
+        val (k1, k2) = hierDims(k)
+        (key, k, k1 + k2)
+      }.toDF("key", "k", "dots_per_vec")
+      hierAssignKeyed(s,
+          v.select(explode(array(candidates.indices.map(lit): _*)).as("key"), $"vec_id", $"v"),
+          candidates.zipWithIndex.map { case (k, key) => key -> k }.toMap)
+        .groupBy($"key", $"cent_id").agg(count(lit(1)).as("c"))
+        .groupBy($"key").agg(
+          count(lit(1)).cast("int").as("clusters_used"),
+          max($"c").as("max_cluster"),
+          sum(($"c" * ($"c" - 1)) / 2).cast("long").as("candidate_pairs"))
+        .join(perKey, "key")
+        .select($"k", lit(n).as("n_vecs"), $"clusters_used",
+          $"max_cluster", $"candidate_pairs",
+          round($"candidate_pairs".cast("double") / n, 2).as("pairs_per_vec"),
+          (lit(n) * $"dots_per_vec").as("assign_dots"),
+          ($"k" === kStar).as("chosen"))
+        .orderBy($"k")
+    } finally v.unpersist(blocking = false)
   }
 
   /** ORACLE for the k planner — five instantiations of the unrolled

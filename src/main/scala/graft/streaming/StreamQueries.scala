@@ -36,25 +36,14 @@ object StreamQueries {
     * CLUSTER a production stream runs on, not of the corpus — the
     * batch engine keeps its 32; only the stream drives narrow. Hash
     * partitioning by key means the override cannot change results,
-    * only where state lives. Default 4, picked by the round-18
+    * only where state lives. 4, picked by the round-18
     * measured sweep over {4, 8, 32} (SURVEY §8j): q_stream_click_attrib
     * 25.7 → 5.6 s (two sources ⇒ two state stores per partition per
     * micro-batch, so it pays the per-partition fixed cost twice),
     * q_stream_dedup_exact 6.5 → 2.7 s, q_stream_neardup 3.7 → 2.2 s,
-    * with no drive slower at 4 than at 8. Env-tunable
-    * (SPARK_GRAFT_STREAM_PARTS) to re-run the sweep.
+    * with no drive slower at 4 than at 8.
     */
-  private lazy val StreamShuffleParts: String = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
-    // validate at latch time: an unparseable or non-positive value fed
-    // straight to spark.sql.shuffle.partitions only fails later inside
-    // query execution with an error naming neither the value nor the
-    // variable (ADVICE r18)
-    require(raw.nonEmpty && raw.length <= 9 && raw.forall(_.isDigit) &&
-      raw.toInt > 0,
-      s"SPARK_GRAFT_STREAM_PARTS must be a positive integer, got '$raw'")
-    raw
-  }
+  private val StreamShuffleParts = "4"
 
   /** Pin `spark.sql.shuffle.partitions` to [[StreamShuffleParts]] for
     * the duration of one stream drive (the value is latched when the

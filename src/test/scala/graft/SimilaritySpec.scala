@@ -186,10 +186,35 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     // 1 iteration = assignment error of the raw init codebook (the
     // re-mean happens after measuring); more Lloyd rounds must not
     // loosen the fit, and on real data they strictly tighten it
-    val (_, errInit) = Similarity.trainPqCodebooks(spark, subs, 1)
-    val (_, errTrained) = Similarity.trainPqCodebooks(spark, subs, Similarity.IvfPqIters)
+    val rows = subs.select($"m".as("key"), $"vec_id", $"sv".as("v"))
+    val ks = (0 until Similarity.PqM).map(_ -> Similarity.PqK).toMap
+    val (_, errInit) = Similarity.lloyd(spark, rows, ks, 1)
+    val (_, errTrained) = Similarity.lloyd(spark, rows, ks, Similarity.IvfPqIters)
     assert(errTrained < errInit,
       s"training should tighten quantization: init $errInit vs trained $errTrained")
+  }
+
+  test("Lloyd kernel: codebook independent of partitioning and of the keys trained beside it") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val v = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select($"vec_id", transform($"embedding", _.cast("double")).as("v"))
+    val one = v.select(lit(0).as("key"), $"vec_id", $"v")
+    def train(rows: org.apache.spark.sql.DataFrame, ks: Map[Int, Int]) =
+      Similarity.lloyd(spark, rows, ks, Similarity.CoarseIters)
+    // exact micro-unit re-means: the same codebook and error on any layout
+    val (a, errA) = train(one.repartition(1), Map(0 -> 16))
+    val (b, errB) = train(one.repartition(7), Map(0 -> 16))
+    assert(a.length == 16 && a == b && errA == errB)
+    // keys trained together each get the codebook they get alone
+    val ks = Map(0 -> 4, 1 -> 8, 2 -> 16)
+    val (together, _) = train(
+      v.select(explode(array(ks.keys.toSeq.sorted.map(lit): _*)).as("key"), $"vec_id", $"v"), ks)
+    ks.foreach { case (key, k) =>
+      val (alone, _) = train(one, Map(0 -> k))
+      assert(together.filter(_._1 == key).map(t => (t._2, t._3)) == alone.map(t => (t._2, t._3)),
+        s"key $key (k = $k) trained together differs from its solo codebook")
+    }
   }
 
   test("IVF-PQ plan has no BNLJ/cartesian outside broadcast shapes") {

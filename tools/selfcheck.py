@@ -4,6 +4,8 @@ then execute each oracle SQL in DuckDB over the same parquet tables and
 compare row sets (columns sorted by name, rows sorted, values hashed).
 
 Usage: python3 tools/selfcheck.py [sfdir] [outdir] [--no-run] [names...]
+
+Named queries restrict both the Verify dump and the comparison.
 """
 import json, subprocess, sys, math
 import duckdb
@@ -16,7 +18,7 @@ only = [a for a in rest if not a.startswith("--")]
 
 if run:
     r = subprocess.run(
-        ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
+        ["sbt", "-batch", " ".join(["runMain graft.Verify", sfdir, outdir] + only)],
         capture_output=True, text=True)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-30:])
     if r.returncode != 0:
