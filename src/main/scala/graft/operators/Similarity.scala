@@ -612,7 +612,7 @@ object Similarity {
     * TRAINED k=16 quantizer partitions the corpus and its centroids
     * feed the same inverted-list search as [[annIvf]]. The fit is the
     * DETERMINISTIC Lloyd loop ([[trainCoarse]]: lowest-vec_id init,
-    * row-local 6-dp argmin assignment, exact-integer re-means), so the
+    * row-local micro-unit argmin assignment, exact-integer re-means), so the
     * whole query is hash-checked — DuckDB re-derives the training
     * round by round ([[annIvfKmeansSql]]); the MLlib seeded fit stays
     * beside it as the quality cross-check twin (SimilaritySpec).
@@ -1706,25 +1706,6 @@ object Similarity {
     */
   val EmbedDim: Int = PqM * PqD
 
-  /** Spark's own Round(double, 6) semantics, replicated exactly —
-    * java.math.BigDecimal.valueOf (the canonical Double.toString path)
-    * + HALF_UP, the same function the SQL expression compiles to, so a
-    * driver/executor-side Scala loop computes bit-identical values to
-    * the declarative round(). DuckDB's round agrees on every value
-    * observed in the gate, with one KNOWN midpoint caveat: DuckDB
-    * rounds the BINARY double half-away-from-zero, while this decimal-
-    * string path rounds the shortest DECIMAL rendering — on a double
-    * whose decimal rendering is an exact 6-dp midpoint the two can
-    * differ by one ulp of the 6th place. The L2² sums feeding argmin
-    * assignment would hit this only if a distance lands exactly on
-    * such a midpoint AND the two candidate centroids are that close;
-    * the hash gate would surface it as a one-row assignment diff, and
-    * the fix would be comparing scaled-integer distances instead.
-    */
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** A keyed codebook: (key, j, centroid) rows, each key's centroids
     * indexed by j.
     */
@@ -1738,10 +1719,14 @@ object Similarity {
     * than the equivalent higher-order-function expression (nested
     * lambdas are CodegenFallback, so the fold interpreted k×dim
     * expression nodes PER ROW — measured as the planner's wall time at
-    * k=128). The arithmetic is ArrayDot's over zip_with differences and
-    * the oracle's ([[nearestSql]]), step for step: left-to-right (x−y)²
-    * accumulation from 0.0, [[round6]] = the engine round, strict < so
-    * ties keep the lower j. Returns (key, vec_id, j, v, d2).
+    * k=128). The arithmetic is the oracle's ([[nearestSql]]) step for
+    * step: left-to-right (x−y)² accumulation from 0.0, then the distance
+    * as a SCALED INTEGER — round(L2²·10⁶) half away from zero, which is
+    * DuckDB's round() and `Math.round` alike on a non-negative double —
+    * compared with strict < so ties keep the lower j. (A 6-dp round of
+    * the double is not engine-neutral: Spark rounds the shortest decimal
+    * rendering, DuckDB the binary value, and the two part at a 6-dp
+    * midpoint.) Returns (key, vec_id, j, v, d2), d2 in micro-units.
     */
   private[graft] def nearest(s: SparkSession, rows: DataFrame, codebook: Codebook): DataFrame = {
     import s.implicits._
@@ -1756,14 +1741,14 @@ object Similarity {
           val (js, cs) = byKey(key)
           val a = vec.toArray
           var best = 0
-          var bestD = Double.MaxValue
+          var bestD = Long.MaxValue
           var j = 0
           while (j < cs.length) {
             val c = cs(j)
             var acc = 0.0
             var i = 0
             while (i < a.length) { val d = a(i) - c(i); acc += d * d; i += 1 }
-            val d2 = round6(acc)
+            val d2 = math.round(acc * 1e6)
             if (d2 < bestD) { bestD = d2; best = j } // strict <: ties keep lower j
             j += 1
           }
@@ -1784,11 +1769,14 @@ object Similarity {
     *     ([[nearest]]) — zero shuffle, the corpus never moves;
     *  2. re-means each (key, j) cluster with ORDER-INDEPENDENT exact
     *     integer sums (coordinates in micro-units summed as
-    *     decimal(38,0) — the embedNormOutliers idiom), so the updated
-    *     centroid is the same double on any partitioning AND in DuckDB's
-    *     unrolled re-derivation ([[lloydCtesSql]]); new coordinates
-    *     round to 6 dp (cross-engine round parity), empty clusters keep
-    *     their previous centroid.
+    *     decimal(38,0) — the embedNormOutliers idiom) and an exact
+    *     integer mean (sum/count rounded half away from zero), so the
+    *     updated centroid is the same micro-unit double on any
+    *     partitioning AND in DuckDB's unrolled re-derivation
+    *     ([[lloydCtesSql]]); empty clusters keep their previous
+    *     centroid. (A 6-dp round of the double mean broke that: the mean
+    *     of an even-sized cluster often lands on a 6-dp midpoint, where
+    *     Spark's and DuckDB's round() part by 10⁻⁶.)
     *
     * A key's codebook depends only on its own rows, so training keys
     * together gives each the codebook it gets alone (SimilaritySpec).
@@ -1805,6 +1793,7 @@ object Similarity {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
+    val half = expr("(abs(s) * 2 + n) div (n * 2)") // |s|/n, half away from 0
     // the loop re-reads its input once per round plus the init — persist
     // it for the loop's lifetime so the input lineage runs once (the
     // embeddings frame rebuilt dozens of times per query is WHY fan-out
@@ -1822,16 +1811,14 @@ object Similarity {
       for (_ <- 0 until iters) {
         // re-mean in the EXPLODED (key, j, dim, micro-int) shape — one
         // generic aggregate instead of dim-wide decimal-sum columns whose
-        // generated code dominated the planner's wall time (measured
-        // 29 s); the division + final round run as Spark expressions so
-        // the rounding semantics are BY CONSTRUCTION the engine's own
+        // generated code dominated the planner's wall time (measured 29 s)
         val stats = nearest(s, in, codebook)
           .select($"key", $"j", $"d2", posexplode(transform($"v", x =>
             round(x * 1e6).cast("long"))).as(Seq("dim", "mi")))
           .groupBy($"key", $"j", $"dim")
-          .agg(count(lit(1)).as("n"), sum($"mi".cast(dec)).as("s"),
-            sum(when($"dim" === 0, round($"d2" * 1e6).cast(dec))).as("e"))
-          .select($"key", $"j", $"dim", round($"s".cast("double") / 1e6 / $"n", 6), $"e")
+          .agg(count(lit(1)).as("n"), sum($"mi".cast(dec)).cast("long").as("s"),
+            sum(when($"dim" === 0, $"d2".cast(dec))).as("e"))
+          .select($"key", $"j", $"dim", when($"s" < 0, -half).otherwise(half) / 1e6, $"e")
           .collect()
         err = stats.flatMap(r => Option(r.getDecimal(4))).map(BigDecimal(_)).sum.toDouble / 1e6
         val moved = stats.map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
@@ -1871,15 +1858,16 @@ object Similarity {
       coarseCentFrame(s, trainCoarse(s, vecs(s, dir), k))
     }
 
-  private def l2RoundSql(x: String, y: String): String =
+  /** The L2² of two lists as [[nearest]]'s scaled integer (micro-units). */
+  private def l2MicroSql(x: String, y: String): String =
     s"round(list_reduce([($x[i] - $y[i]) * ($x[i] - $y[i]) " +
-      s"for i in generate_series(1, len($x))], (a, b) -> a + b), 6)"
+      s"for i in generate_series(1, len($x))], (a, b) -> a + b) * 1000000)"
 
   /** THE argmin-L2² CTE body, [[nearest]]'s oracle mirror: each row of
     * `rows` (alias t: keys…, vec_id, `v`) against the centroids of
     * `cents` (alias c: keys…, `j`, `c`) under the same keys, keeping t's
-    * columns plus the winning c.`j` — least 6-dp-rounded L2², ties to
-    * the lower j.
+    * columns plus the winning c.`j` — least micro-unit L2², ties to the
+    * lower j.
     */
   private def nearestSql(rows: String, cents: String, keys: Seq[String] = Nil,
       v: String = "v", c: String = "c", j: String = "j"): String = {
@@ -1888,7 +1876,7 @@ object Similarity {
     s"""SELECT * EXCLUDE (rk) FROM (
        |  SELECT t.*, c.$j, row_number() OVER (
        |    PARTITION BY ${(keys :+ "vec_id").map("t." + _).mkString(", ")}
-       |    ORDER BY ${l2RoundSql(s"t.$v", s"c.$c")} ASC, c.$j ASC) AS rk
+       |    ORDER BY ${l2MicroSql(s"t.$v", s"c.$c")} ASC, c.$j ASC) AS rk
        |  FROM $from) z
        |WHERE rk = 1""".stripMargin
   }
@@ -1921,11 +1909,13 @@ object Similarity {
       val prev = if (r == 1) init else s"${p}c${r - 1}"
       s"""${p}a$r AS MATERIALIZED (${nearestSql(input, prev, keys)}),
          |${p}m$r AS MATERIALIZED (
-         |  SELECT $kj, d.i AS dim,
-         |    round(CAST(sum(CAST(round(v[d.i] * 1000000) AS BIGINT)) AS DOUBLE)
-         |      / 1000000.0 / count(*), 6) AS cd
-         |  FROM ${p}a$r, (SELECT unnest(generate_series(1, $dim)) AS i) d
-         |  GROUP BY $kj, d.i),
+         |  SELECT $kj, dim, CAST(sign(s) * ((abs(s) * 2 + n) // (n * 2)) AS DOUBLE)
+         |    / 1000000.0 AS cd
+         |  FROM (
+         |    SELECT $kj, d.i AS dim, count(*) AS n,
+         |      sum(CAST(round(v[d.i] * 1000000) AS BIGINT)) AS s
+         |    FROM ${p}a$r, (SELECT unnest(generate_series(1, $dim)) AS i) d
+         |    GROUP BY $kj, d.i) z),
          |${p}c$r AS MATERIALIZED (
          |  SELECT ${keys.map(k => s"o.$k, ").mkString}o.j, coalesce(mm.c, o.c) AS c
          |  FROM $prev o LEFT JOIN (

@@ -217,6 +217,18 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("Lloyd re-means are exact micro-unit means, midpoints rounded half away from zero") {
+    import spark.implicits._
+    // six members summing to -1799451 micro-units: the mean -0.2999085
+    // is a 6-dp midpoint, which a 6-dp round of the double quotient
+    // (-0.29990849999999997) misses, and which DuckDB's round can miss
+    // on other midpoints — so the re-mean must be integer arithmetic
+    val rows = (Seq.fill(5)(-0.299908) :+ -0.299911).zipWithIndex
+      .map { case (x, i) => (0, i.toLong, Seq(x)) }.toDF("key", "vec_id", "v")
+    val (cb, _) = Similarity.lloyd(spark, rows, Map(0 -> 1), 1)
+    assert(cb == Seq((0, 0, Seq(-0.299909))), s"got $cb")
+  }
+
   test("IVF-PQ plan has no BNLJ/cartesian outside broadcast shapes") {
     import org.apache.spark.sql.execution.joins.CartesianProductExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

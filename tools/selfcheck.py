@@ -7,7 +7,7 @@ Usage: python3 tools/selfcheck.py [sfdir] [outdir] [--no-run] [names...]
 
 Named queries restrict both the Verify dump and the comparison.
 """
-import json, subprocess, sys, math
+import json, os, subprocess, sys, math
 import duckdb
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -31,7 +31,12 @@ if run:
 con = duckdb.connect()
 tables = "region nation customer supplier part orders lineitem events documents embeddings".split()
 for t in tables:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+    # a workload snapshot carries only the tables it reads, some sharded
+    path = f"{sfdir}/{t}.parquet"
+    if os.path.isdir(path):
+        path += "/*.parquet"
+    if os.path.exists(f"{sfdir}/{t}.parquet"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 
