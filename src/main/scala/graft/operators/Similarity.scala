@@ -2294,9 +2294,13 @@ object Similarity {
         val (k1, k2) = hierDims(k)
         (key, k, k1 + k2)
       }.toDF("key", "k", "dots_per_vec")
-      hierAssignKeyed(s,
-          v.select(explode(array(candidates.indices.map(lit): _*)).as("key"), $"vec_id", $"v"),
-          candidates.zipWithIndex.map { case (k, key) => key -> k }.toMap)
+      // one row per (candidate, vector), spread over the cores: the
+      // candidates used to train as concurrent jobs, and a one-split
+      // corpus would otherwise run every key's round in a single task
+      val rows = v.select(explode(array(candidates.indices.map(lit): _*)).as("key"),
+          $"vec_id", $"v")
+        .repartition(s.sparkContext.defaultParallelism, $"key", $"vec_id")
+      hierAssignKeyed(s, rows, candidates.zipWithIndex.map { case (k, key) => key -> k }.toMap)
         .groupBy($"key", $"cent_id").agg(count(lit(1)).as("c"))
         .groupBy($"key").agg(
           count(lit(1)).cast("int").as("clusters_used"),
