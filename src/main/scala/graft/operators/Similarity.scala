@@ -1801,10 +1801,12 @@ object Similarity {
     // exchange), released in the finally
     val in = rows.select($"key", $"vec_id", $"v").persist()
     try {
+      // the filter reads row_number itself so the planner takes each
+      // partition's top rows before the shuffle (a window group limit)
       var codebook: Codebook = in
-        .withColumn("j", row_number().over(Window.partitionBy($"key").orderBy($"vec_id")) - 1)
-        .where($"j" < kPerKey.values.max)
-        .select($"key", $"j", $"v").as[(Int, Int, Seq[Double])].collect()
+        .withColumn("rn", row_number().over(Window.partitionBy($"key").orderBy($"vec_id")))
+        .where($"rn" <= kPerKey.values.max)
+        .select($"key", ($"rn" - 1).as("j"), $"v").as[(Int, Int, Seq[Double])].collect()
         .filter { case (key, j, _) => j < kPerKey(key) }
         .sortBy { case (key, j, _) => (key, j) }.toSeq
       var err = Double.NaN
