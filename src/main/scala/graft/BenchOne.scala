@@ -5,6 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Time a subset of registered queries repeatedly — the isolation tool
   * for separating plan regressions from machine noise (each rep prints
   * its own wall time; variance across reps on identical plans = noise).
+  * Every rep starts from [[BenchIntegrity.coldReset]], so a rep after
+  * the first times the query, not its `SessionCache` memos.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -20,6 +22,7 @@ object BenchOne {
       s"unknown queries: ${(wanted -- known).mkString(", ")}")
     SparkEntry.all.filter(q => wanted(q.name)).foreach { q =>
       (1 to reps).foreach { r =>
+        BenchIntegrity.coldReset(spark)
         val t0 = System.nanoTime()
         q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         println(f"TIMING ${q.name} rep$r ${(System.nanoTime() - t0) / 1e9}%.2f s")

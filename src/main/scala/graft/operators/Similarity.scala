@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.{GraftQuery, SessionCache, Tables}
 import graft.functions.GraftExpressions.arrayDot
+import graft.functions.FloatFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Embedding-similarity operators (SURVEY §2.F): brute-force cosine as
@@ -112,14 +114,70 @@ object Similarity {
     */
   private def dot(a: Column, b: Column): Column = arrayDot(a, b)
 
-  private val dotSql =
-    "list_reduce([a.v[i] * b.v[i] for i in generate_series(1, len(a.v))], (x, y) -> x + y)"
-  private val normSql = (t: String) =>
-    s"sqrt(list_reduce([$t.v[i] * $t.v[i] for i in generate_series(1, len($t.v))], (x, y) -> x + y))"
-  private val cosineSql = s"$dotSql / (${normSql("a")} * ${normSql("b")})"
+  /** THE exact-cosine score: the [[dot]] cosine of vectors `a` and `b`
+    * with norms `an` and `bn`, rounded to 6 dp before any ranking.
+    */
+  private def cosine(a: Column, an: Column, b: Column, bn: Column): Column =
+    round(dot(a, b) / (an * bn), 6)
 
-  private val vecsSql =
-    "(SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings)"
+  /** THE rank of every Similarity window: `df` ranked within each `part`
+    * group by (`score` DESC, `id` ASC) into column `as` — the search
+    * ranks, the pre-score shortlists and the argmax-cosine assignments.
+    */
+  private def ranked(df: DataFrame, part: Seq[String], score: Column, id: String,
+      as: String = "rank"): DataFrame =
+    df.withColumn(as, row_number().over(
+      Window.partitionBy(part.map(col): _*).orderBy(score.desc, col(id).asc)))
+
+  /** [[ranked]] cut to each group's best `keep` rows, the rank dropped. */
+  private def best(df: DataFrame, part: Seq[String], score: Column, id: String,
+      keep: Int): DataFrame =
+    ranked(df, part, score, id, "rk").where(col("rk") <= keep).drop("rk")
+
+  /** THE float fold of every oracle, [[dot]]'s mirror: Σ term(i) for
+    * i = 1..len(`x`), added left to right — from 0.0 when `zero`, the
+    * start of the sign-plane loop.
+    */
+  private def foldSql(x: String, term: String => String, zero: Boolean = false): String = {
+    val terms = s"[${term("i")} for i in generate_series(1, len($x))]"
+    s"list_reduce(${if (zero) s"list_prepend(0.0, $terms)" else terms}, (x, y) -> x + y)"
+  }
+
+  private def dotSql(x: String, y: String): String = foldSql(x, i => s"$x[$i] * $y[$i]")
+
+  /** [[cosine]]'s mirror. */
+  private def cosSql(x: String, xn: String, y: String, yn: String): String =
+    s"round(${dotSql(x, y)} / ($xn * $yn), 6)"
+
+  /** THE vectors CTE of every oracle: vn(vec_id, …, v, nrm) keeps the
+    * embeddings' other columns, casts each element to DOUBLE as [[vecs]]
+    * does and adds the [[dot]] norm; `unit` divides each element by the
+    * norm ([[unitVecs]]) and sets nrm to 1.
+    */
+  private def vecsCtesSql(unit: Boolean = false): String = {
+    val normed = s"""SELECT *, sqrt(${dotSql("v", "v")}) AS nrm FROM (
+       |    SELECT * EXCLUDE (embedding), [x::DOUBLE for x in embedding] AS v
+       |    FROM embeddings) e""".stripMargin
+    if (!unit) s"vn AS MATERIALIZED (\n  $normed)"
+    else s"""vn AS MATERIALIZED (
+       |  SELECT * EXCLUDE (v, nrm), [v[i] / nrm for i in generate_series(1, len(v))] AS v,
+       |    1.0::DOUBLE AS nrm
+       |  FROM ($normed) r)""".stripMargin
+  }
+
+  /** THE ranked window of every oracle, [[ranked]]'s mirror: `sel` FROM
+    * `from`, ranked within each `part` group by (`score` DESC, `id` ASC)
+    * — names of `sel`'s columns — as INT `rank`, keeping the rows ranked
+    * ≤ `keep` (every row when `keep` is empty).
+    */
+  private def rankedSql(sel: String, from: String, part: String, score: String, id: String,
+      keep: String = ""): String = {
+    val by = (if (part.isEmpty) "" else s"PARTITION BY $part ") + s"ORDER BY $score DESC, $id ASC"
+    s"""SELECT * FROM (
+       |  SELECT *, CAST(row_number() OVER ($by) AS INT) AS rank
+       |  FROM (SELECT $sel FROM $from) s) z""".stripMargin +
+      (if (keep.isEmpty) "" else s"\nWHERE rank <= $keep")
+  }
 
   /** Brute-force broadcast twin of [[cosineDedupBlocked]] — kept as the
     * oracle-shaped baseline (SimilaritySpec asserts the two plans agree);
@@ -134,7 +192,7 @@ object Similarity {
     v.repartition(s.sparkContext.defaultParallelism)
       .as("a").join(broadcast(v.as("b")), $"a.vec_id" < $"b.vec_id")
       .select($"a.vec_id".as("id_a"), $"b.vec_id".as("id_b"),
-        round(dot($"a.v", $"b.v") / ($"a.nrm" * $"b.nrm"), 6).as("cos"))
+        cosine($"a.v", $"a.nrm", $"b.v", $"b.nrm").as("cos"))
       .where($"cos" >= 0.4)
       .orderBy($"id_a", $"id_b")
   }
@@ -200,42 +258,91 @@ object Similarity {
       .orderBy($"id_a", $"id_b")
   }
 
-  val cosineDedupSql: String =
-    s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b, round($cosineSql, 6) AS cos
-       |FROM $vecsSql a, $vecsSql b
-       |WHERE a.vec_id < b.vec_id AND round($cosineSql, 6) >= 0.4
-       |ORDER BY id_a, id_b""".stripMargin
+  /** The exact τ = 0.4 pair sweep over vn: [[cosineDedupSql]]'s body
+    * and [[lshRouteRecallSql]]'s truth.
+    */
+  private def cosPairsSql: String =
+    s"""SELECT * FROM (
+       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${cosSql("a.v", "a.nrm", "b.v", "b.nrm")} AS cos
+       |  FROM vn a JOIN vn b ON a.vec_id < b.vec_id) p
+       |WHERE cos >= 0.4""".stripMargin
+
+  lazy val cosineDedupSql: String =
+    s"WITH ${vecsCtesSql()}\n$cosPairsSql\nORDER BY id_a, id_b"
+
+  /** THE ranked search behind every Similarity search path. `cand` routes
+    * each query to its candidates — (q_id, neighbor_id, …) rows from all
+    * vectors, the probed IVF lists, the LSH probe buckets or the PQ /
+    * IVF-PQ code scan. `pre` (score, keep) optionally shortlists each
+    * query's best `keep` by a cheap pre-score (signature Hamming, ADC);
+    * `score` turns the survivors into (q_id, neighbor_id, …, `by`) rows —
+    * the exact cosine, or the ADC sum `cand` already carries — ranked
+    * (`by` DESC, neighbor_id ASC) as `rank`. Returns every scored
+    * candidate: the top k is rank ≤ k and the recall scoreboard's touched
+    * volume the row count. Oracle mirror: [[SearchSql]].
+    */
+  private[graft] def search(cand: DataFrame, by: String, pre: Option[(Column, Int)] = None,
+      score: DataFrame => DataFrame = identity): DataFrame = {
+    val short = pre.fold(cand) { case (p, keep) => best(cand, Seq("q_id"), p, "neighbor_id", keep) }
+    ranked(score(short), Seq("q_id"), col(by), "neighbor_id")
+  }
+
+  /** A [[search]] frame's top 5 in (q_id, rank) order. */
+  private def top5(df: DataFrame): DataFrame =
+    df.where(col("rank") <= 5).orderBy(col("q_id"), col("rank"))
+
+  /** THE search oracle, [[search]]'s mirror, after the [[vecsCtesSql]]
+    * vectors: `route` defines cand(q_id, neighbor_id, …); `pre` (score,
+    * keep) shortlists each query's best `keep` as `short`; the survivors,
+    * scored by `score` — the exact cosine fetched from vn, or a column
+    * cand carries — are ranked as `ranked`. [[top]] returns `cols` of the
+    * top 5; [[count]] counts the `touched` relation.
+    */
+  private case class SearchSql(route: String, cols: String, score: String = "cos",
+      pre: Option[(String, Int)] = None, unit: Boolean = false, touched: String = "ranked") {
+    def sql(out: String): String = {
+      val short = pre.fold("SELECT * FROM cand") { case (p, keep) =>
+        s"SELECT * EXCLUDE (rank) FROM (${rankedSql("*", "cand", "q_id", p, "neighbor_id", s"$keep")})"
+      }
+      val scored = if (score != "cos") "short" else
+        s"""(SELECT c.*, ${cosSql("q.v", "q.nrm", "n.v", "n.nrm")} AS cos
+           |  FROM short c JOIN vn q ON q.vec_id = c.q_id
+           |  JOIN vn n ON n.vec_id = c.neighbor_id) x""".stripMargin
+      s"""WITH ${vecsCtesSql(unit)},
+         |$route,
+         |short AS ($short),
+         |ranked AS (${rankedSql("*", scored, "q_id", score, "neighbor_id")})
+         |$out""".stripMargin
+    }
+    def top: String = sql(s"SELECT $cols, rank FROM ranked WHERE rank <= 5 ORDER BY q_id, rank")
+    def count: String = sql(s"SELECT CAST(count(*) AS BIGINT) AS n FROM $touched")
+  }
+
+  /** Brute-force routing: every other vector is a candidate of each of
+    * `v`'s first `nq` vectors (broadcast, their columns prefixed q_),
+    * scored by exact cosine; `carry` columns ride along.
+    */
+  private def bruteRanked(v: DataFrame, nq: Int, carry: Column*): DataFrame = {
+    val q = v.where(col("vec_id") < nq).select(v.columns.map(c => col(c).as(s"q_$c")): _*)
+    search(v.join(broadcast(q), col("vec_id") =!= col("q_vec_id"))
+      .select(Seq(col("q_vec_id").as("q_id"), col("vec_id").as("neighbor_id")) ++ carry :+
+        cosine(col("q_v"), col("q_nrm"), col("v"), col("nrm")).as("cos"): _*), "cos")
+  }
+
+  private def bruteSql(nq: Int): SearchSql = SearchSql(
+    s"""cand AS (
+       |  SELECT q.vec_id AS q_id, n.vec_id AS neighbor_id
+       |  FROM vn q JOIN vn n ON q.vec_id < $nq AND n.vec_id <> q.vec_id)""".stripMargin,
+    "q_id, neighbor_id, cos")
 
   /** Brute-force cosine top-5 neighbors for the first 10 query vectors —
     * the ANN correctness baseline. Queries are broadcast; ranking is on
     * the rounded cosine with vec_id tiebreak.
     */
-  def annCosineTopK(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val v = vecs(s, dir)
-    val q = v.where($"vec_id" < 10)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-    val scoredN = v.join(broadcast(q), $"vec_id" =!= $"q_id")
-      .select($"q_id", $"vec_id".as("neighbor_id"),
-        round(dot($"qv", $"v") / ($"qnrm" * $"nrm"), 6).as("cos"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"neighbor_id".asc)
-    scoredN.withColumn("rank", row_number().over(w))
-      .where($"rank" <= 5)
-      .orderBy($"q_id", $"rank")
-  }
+  def annCosineTopK(s: SparkSession, dir: String): DataFrame =
+    top5(bruteRanked(vecs(s, dir), 10))
 
-  val annCosineTopKSql: String =
-    s"""SELECT q_id, neighbor_id, cos, rank FROM (
-       |  SELECT q_id, neighbor_id, cos,
-       |    CAST(row_number() OVER (PARTITION BY q_id
-       |      ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM (
-       |    SELECT a.vec_id AS q_id, b.vec_id AS neighbor_id,
-       |      round($cosineSql, 6) AS cos
-       |    FROM $vecsSql a, $vecsSql b
-       |    WHERE a.vec_id < 10 AND b.vec_id <> a.vec_id) sc) r
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+  lazy val annCosineTopKSql: String = bruteSql(10).top
 
   /** LSH as a SEARCH path: the standard MULTI-TABLE, MULTI-PROBE query
     * over the same banded 256-bit sign index the dedup route builds
@@ -254,55 +361,32 @@ object Similarity {
     * 16-bit-bucket probe only ever looked functional because the
     * degenerate raw-LCG planes collapsed the keyspace.
     */
-  private[graft] def lshTopK(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    lshRanked(s, dir).where($"rank" <= 5).orderBy($"q_id", $"rank")
-  }
+  private[graft] def lshTopK(s: SparkSession, dir: String): DataFrame =
+    top5(lshRanked(s, dir))
 
-  /** The full ranked candidate frame behind [[lshTopK]] — every deduped
-    * multi-probe candidate with its exact-cosine rank, BEFORE the top-5
-    * cut, so the recall scoreboard reads hits (rank ≤ 5 ∩ truth) AND the
-    * touched-candidate volume (row count) from one pass.
+  /** The [[search]] frame behind [[lshTopK]]. Routing: each probe key
+    * carries its query's signature words into the [[bandPairs]] bucket
+    * join, so every deduped collision arrives with its full 256-bit
+    * Hamming distance — the pre-score that keeps each query's best
+    * [[AnnShortlist]] (r20). Only the shortlist pays the vector fetch
+    * and exact cosine: at corpus scale THAT join's 512-byte payloads are
+    * the cost center (the r19 route lesson), and the shortlist caps it at
+    * a constant per query.
     */
   private def lshRanked(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val v = vecs(s, dir)
     val sigs = cachedSigs(s, dir)
-    val bands = bandsFrom(s, sigs).select($"vec_id", $"band", $"bits")
     val probes = queryProbes(s, v.where($"vec_id" < 10))
-    val cand = broadcast(probes).join(bands, Seq("band", "bits"))
-      .where($"vec_id" =!= $"q_id")
-      .select($"q_id", $"vec_id".as("neighbor_id")).distinct()
-    // STAGE 1 (r20) — signature-Hamming shortlist: rank every bucket
-    // candidate by its full 256-bit Hamming distance to the query (a
-    // 32-byte xor/popcount per pair on the already-memoized signature
-    // frame) and keep the best AnnShortlist per query. Only the
-    // shortlist pays stage 2's vector fetch — at corpus scale THAT
-    // join's 512-byte payloads are the cost center (the r19 route
-    // lesson), and the shortlist caps it at a constant per query.
-    val qsig = sigs.where($"vec_id" < 10).select(($"vec_id".as("q_id") +:
-      (0 until SignWords).map(w => col(s"s$w").as(s"q$w"))): _*)
-    val csig = sigs.select(($"vec_id".as("neighbor_id") +:
-      (0 until SignWords).map(w => col(s"s$w").as(s"c$w"))): _*)
-    val hamming = (0 until SignWords)
-      .map(w => bit_count(col(s"q$w").bitwiseXOR(col(s"c$w"))))
-      .reduce(_ + _)
-    val wH = Window.partitionBy($"q_id").orderBy($"h".asc, $"neighbor_id".asc)
-    val short = cand.join(broadcast(qsig), "q_id").join(csig, "neighbor_id")
-      .select($"q_id", $"neighbor_id", hamming.as("h"))
-      .withColumn("hrk", row_number().over(wH))
-      .where($"hrk" <= AnnShortlist)
-      .select($"q_id", $"neighbor_id")
-    // STAGE 2 — exact cosine rerank over the shortlist only
+      .withColumnRenamed("q_id", "vec_id").join(sigs, "vec_id")
+    val cand = bandPairs(broadcast(probes), bandsFrom(s, sigs))
+      .where($"id_a" =!= $"id_b")
+      .select($"id_a".as("q_id"), $"id_b".as("neighbor_id"), $"h").distinct()
     val q = v.where($"vec_id" < 10)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"neighbor_id".asc)
-    short.join(broadcast(q), "q_id")
+    search(cand, "cos", Some((-$"h", AnnShortlist)), _.join(broadcast(q), "q_id")
       .join(v.select($"vec_id".as("neighbor_id"), $"v", $"nrm"), "neighbor_id")
-      .select($"q_id", $"neighbor_id",
-        round(dot($"qv", $"v") / ($"qnrm" * $"nrm"), 6).as("cos"))
-      .withColumn("rank", row_number().over(w))
+      .select($"q_id", $"neighbor_id", cosine($"qv", $"qnrm", $"v", $"nrm").as("cos")))
   }
 
   /** The banded sign index over the corpus, derived from the
@@ -424,17 +508,13 @@ object Similarity {
     * oracle, the LSH search-path oracle feeding the recall scoreboard,
     * and the dedup-route oracle — the [[fmix64]] HUGEINT mirror
     * ([[signPlanesCtesSql]]) plus the engine's exact left-to-right
-    * plane dots and 8-bit band keys.
+    * plane dots and 8-bit band keys. Reads vn ([[vecsCtesSql]]).
     */
   private lazy val signBandsCtesSql: String =
     s"""$signPlanesCtesSql,
-       |v AS (SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings),
        |dots AS (
-       |  SELECT vec_id, p,
-       |    list_reduce(list_prepend(0.0,
-       |      [plane[i] * v[i] for i in generate_series(1, len(v))]),
-       |      (x, y) -> x + y) AS dot
-       |  FROM v, planes),
+       |  SELECT vec_id, p, ${foldSql("v", i => s"plane[$i] * v[$i]", zero = true)} AS dot
+       |  FROM vn, planes),
        |bands AS (
        |  SELECT vec_id, p // $SignBandBits AS band,
        |    CAST(sum(CASE WHEN dot > 0 THEN (1::BIGINT << (p % $SignBandBits)) ELSE 0 END)
@@ -445,18 +525,15 @@ object Similarity {
     * query band, the exact bucket plus one 1-bit flip per of the
     * [[ProbeFlips]] lowest-|margin| planes (each flipped from the
     * EXACT key, as the engine does) — the margin is the `dots` CTE's
-    * plane dot (bit-identical to the engine's fold), and the rank
-    * window's (|dot| ASC, p ASC) order equals the primitive loop's
-    * repeated argmin with its used-bit mask.
+    * plane dot (bit-identical to the engine's fold), and ranking by
+    * −|dot| DESC, p ASC (|dot| ascending, ties to the lower plane)
+    * equals the primitive loop's repeated argmin with its used-bit mask.
     */
   private lazy val probesCtesSql: String =
     s"""qflip AS (
-       |  SELECT vec_id, band, minp FROM (
-       |    SELECT vec_id, p // $SignBandBits AS band, p AS minp,
-       |      row_number() OVER (PARTITION BY vec_id, p // $SignBandBits
-       |        ORDER BY abs(dot) ASC, p ASC) AS rn
-       |    FROM dots WHERE vec_id < 10) z
-       |  WHERE rn <= $ProbeFlips),
+       |  SELECT vec_id, band, minp FROM (${rankedSql(
+         s"vec_id, p // $SignBandBits AS band, p AS minp, -abs(dot) AS margin",
+         "dots WHERE vec_id < 10", "vec_id, band", "margin", "minp", s"$ProbeFlips")})),
        |probes AS (
        |  SELECT vec_id AS q_id, band, bits FROM bands WHERE vec_id < 10
        |  UNION ALL
@@ -465,8 +542,9 @@ object Similarity {
        |  FROM bands b JOIN qflip f
        |    ON b.vec_id = f.vec_id AND b.band = f.band)""".stripMargin
 
-  val annLshSql: String =
-    s"""WITH $signBandsCtesSql,
+  lazy val annLshSql: String =
+    s"""WITH ${vecsCtesSql()},
+      |$signBandsCtesSql,
       |$probesCtesSql,
       |agg AS (
       |  SELECT band, bits, count(*) AS n_vecs,
@@ -481,67 +559,30 @@ object Similarity {
       |FROM agg a LEFT JOIN pc USING (band, bits)
       |ORDER BY a.band, a.bits""".stripMargin
 
-  /** Oracle twin of [[lshTopK]]: union of the multi-probe buckets
-    * (exact + directed flip, [[probesCtesSql]]), exact-cosine rerank,
-    * top-5 per query.
+  /** [[bandPairs]]'s mirror: each (id_a, id_b) row of `pairs` with its
+    * full-signature Hamming distance h — the 32 bands partition the 256
+    * bits, so the sum of band-wise bit_count(xor) IS the distance.
     */
-  /** The probe plan's deduped candidate CTE — shared by the search
-    * oracle ([[lshTopKSql]]) and the scoreboard's candidate-volume
-    * count ([[lshCandCountSql]]).
-    */
-  private lazy val lshSearchCandCteSql: String =
-    s"""cand0 AS (
-      |  SELECT DISTINCT p.q_id, a.vec_id AS neighbor_id
-      |  FROM probes p JOIN bands a ON p.band = a.band AND p.bits = a.bits
-      |  WHERE a.vec_id <> p.q_id),
-      |-- full-signature Hamming per candidate pair: the 32 bands
-      |-- partition the 256 bits, so the sum of band-wise bit_count(xor)
-      |-- IS the signature Hamming distance (the route prefilter's
-      |-- argument, reused for the ANN shortlist ranking)
-      |hams AS (
-      |  SELECT c.q_id, c.neighbor_id,
-      |    SUM(bit_count(xor(qb.bits, ab.bits))) AS h
-      |  FROM cand0 c
-      |  JOIN bands qb ON qb.vec_id = c.q_id
-      |  JOIN bands ab ON ab.vec_id = c.neighbor_id AND ab.band = qb.band
-      |  GROUP BY c.q_id, c.neighbor_id),
-      |cand AS (
-      |  SELECT q_id, neighbor_id FROM (
-      |    SELECT q_id, neighbor_id,
-      |      row_number() OVER (PARTITION BY q_id
-      |        ORDER BY h ASC, neighbor_id ASC) AS hrk
-      |    FROM hams) z
-      |  WHERE hrk <= $AnnShortlist)""".stripMargin
+  private def hammingSql(pairs: String): String =
+    s"""SELECT c.id_a, c.id_b, sum(bit_count(xor(ba.bits, bb.bits))) AS h
+       |  FROM ($pairs) c
+       |  JOIN bands ba ON ba.vec_id = c.id_a
+       |  JOIN bands bb ON bb.vec_id = c.id_b AND bb.band = ba.band
+       |  GROUP BY c.id_a, c.id_b""".stripMargin
 
-  /** n_candidates of the lsh scoreboard row, re-derived: distinct
-    * multi-probe bucket collision pairs entering the exact rerank.
+  /** [[lshRanked]]'s route: the deduped multi-probe bucket collisions
+    * (exact + directed flip, [[probesCtesSql]]) with their Hamming
+    * pre-score.
     */
-  private lazy val lshCandCountSql: String =
-    s"""WITH $signBandsCtesSql,
-      |$probesCtesSql,
-      |$lshSearchCandCteSql
-      |SELECT CAST(count(*) AS BIGINT) AS n FROM cand""".stripMargin
-
-  private lazy val lshTopKSql: String =
-    s"""WITH $signBandsCtesSql,
-      |$probesCtesSql,
-      |$lshSearchCandCteSql,
-      |vn AS (
-      |  SELECT vec_id, v,
-      |    sqrt(list_reduce([v[i] * v[i] for i in generate_series(1, len(v))],
-      |      (x, y) -> x + y)) AS nrm
-      |  FROM v)
-      |SELECT q_id, neighbor_id, cos, rank FROM (
-      |  SELECT c.q_id, c.neighbor_id,
-      |    round(list_reduce([q.v[i] * a.v[i] for i in generate_series(1, len(q.v))],
-      |      (x, y) -> x + y) / (q.nrm * a.nrm), 6) AS cos,
-      |    CAST(row_number() OVER (PARTITION BY c.q_id ORDER BY
-      |      round(list_reduce([q.v[i] * a.v[i] for i in generate_series(1, len(q.v))],
-      |        (x, y) -> x + y) / (q.nrm * a.nrm), 6) DESC, c.neighbor_id ASC)
-      |      AS INT) AS rank
-      |  FROM cand c JOIN vn q ON c.q_id = q.vec_id
-      |    JOIN vn a ON c.neighbor_id = a.vec_id) z
-      |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+  private lazy val lshSearchSql: SearchSql = SearchSql(
+    s"""$signBandsCtesSql,
+       |$probesCtesSql,
+       |cand AS (
+       |  SELECT id_a AS q_id, id_b AS neighbor_id, h FROM (${hammingSql(
+         """SELECT DISTINCT p.q_id AS id_a, a.vec_id AS id_b
+           |  FROM probes p JOIN bands a ON p.band = a.band AND p.bits = a.bits
+           |  WHERE a.vec_id <> p.q_id""".stripMargin)}) hp)""".stripMargin,
+    "q_id, neighbor_id, cos", pre = Some(("-h", AnnShortlist)))
 
   /** IVF-style ANN — the inverted-file scale path: a deterministic
     * coarse quantizer (centroids = the first 8 vectors; in production a
@@ -552,7 +593,7 @@ object Similarity {
     * only shuffle is the final per-query top-k window.
     */
   def annIvf(s: SparkSession, dir: String): DataFrame =
-    ivfSearch(s, vecs(s, dir), fixedCents(s, dir))
+    top5(ivfRanked(s, vecs(s, dir), fixedCents(s, dir)))
 
   /** The deterministic fixed-centroid codebook ([[annIvf]]'s quantizer):
     * the first 8 vectors, shared with the recall scoreboard's ranked
@@ -564,48 +605,22 @@ object Similarity {
       .select($"vec_id".as("cent_id"), $"v".as("cv"), $"nrm".as("cnrm"))
   }
 
-  /** The IVF search shape shared by the fixed-centroid oracle twin and
-    * the k-means variant: assign every vector to its max-cosine centroid
-    * list, probe each query's 2 nearest lists, top-5 within the probed
-    * lists. Centroids and probes broadcast; the only shuffle is the final
-    * per-query top-k window.
-    */
-  private def ivfSearch(s: SparkSession, v: DataFrame, cents: DataFrame): DataFrame = {
-    import s.implicits._
-    ivfRanked(s, v, cents).where($"rank" <= 5).orderBy($"q_id", $"rank")
-  }
-
-  /** [[ivfSearch]] without the top-5 cut: every (query, probed-list
-    * vector) pair exact-scored and ranked — the frame the recall
-    * scoreboard counts for the touched-candidate volume.
+  /** The IVF [[search]] shared by the fixed-centroid and the k-means
+    * variants. Routing: every vector sits in its max-cosine centroid's
+    * list and each query probes its 2 nearest lists ([[assignTo]]); the
+    * probed lists' vectors are the candidates, exact-scored. Centroids
+    * and probes broadcast; the only shuffle is the per-query rank window.
     */
   private def ivfRanked(s: SparkSession, v: DataFrame, cents: DataFrame): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)
-    val assign = v.crossJoin(broadcast(cents))
-      .select($"vec_id", $"v", $"nrm", $"cent_id",
-        round(dot($"v", $"cv") / ($"nrm" * $"cnrm"), 6).as("ccos"))
-      .withColumn("crk", row_number().over(wAssign))
-      .where($"crk" === 1)
-      .select($"vec_id", $"v", $"nrm", $"cent_id")
-    val wProbe = Window.partitionBy($"q_id").orderBy($"pcos".desc, $"cent_id".asc)
-    val probes = v.where($"vec_id" < 10)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-      .crossJoin(broadcast(cents))
-      .select($"q_id", $"qv", $"qnrm", $"cent_id",
-        round(dot($"qv", $"cv") / ($"qnrm" * $"cnrm"), 6).as("pcos"))
-      .withColumn("prk", row_number().over(wProbe))
-      .where($"prk" <= 2)
-      .select($"q_id", $"qv", $"qnrm", $"cent_id")
-    val wTop = Window.partitionBy($"q_id").orderBy($"cos".desc, $"neighbor_id".asc)
+    val probes = assignTo(v.where($"vec_id" < 10), cents, keep = 2)
+      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"), $"cent_id")
     // probes = queries × nprobe rows — always the small side; hint it so
     // the list scan stays a map-side broadcast join at any corpus size
-    broadcast(probes).join(assign, "cent_id")
+    search(broadcast(probes).join(assignTo(v, cents), "cent_id")
       .where($"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id".as("neighbor_id"),
-        round(dot($"qv", $"v") / ($"qnrm" * $"nrm"), 6).as("cos"))
-      .withColumn("rank", row_number().over(wTop))
+        cosine($"qv", $"qnrm", $"v", $"nrm").as("cos")), "cos")
   }
 
   /** IVF with a REAL coarse quantizer — the production scale path: a
@@ -621,7 +636,7 @@ object Similarity {
     // the fit is session-memoized (the ml/ fitted-model precedent): a
     // session running several registered queries — the recall
     // scoreboard plus this query — pays the k-means training once
-    ivfSearch(s, vecs(s, dir), cachedCoarseCents(s, dir, 16))
+    top5(ivfRanked(s, vecs(s, dir), cachedCoarseCents(s, dir, 16)))
 
   /** The fit itself, uncached — the determinism spec drives THIS entry
     * twice so memoization can't mask a nondeterministic training run
@@ -630,7 +645,7 @@ object Similarity {
     */
   private[graft] def annIvfKmeansUncached(s: SparkSession, dir: String): DataFrame = {
     val v = vecs(s, dir)
-    ivfSearch(s, v, coarseCentFrame(s, trainCoarse(s, v, 16)))
+    top5(ivfRanked(s, v, coarseCentFrame(s, trainCoarse(s, v, 16))))
   }
 
   /** The MLlib twin of the deterministic k=16 fit — the seeded KMeans
@@ -639,80 +654,33 @@ object Similarity {
     * must clear the same recall floor over the same search).
     */
   private[graft] def annIvfKmeansMllib(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val v = vecs(s, dir)
-    ivfSearch(s, v, fitCentroids(s, v, 16))
+    top5(ivfRanked(s, v, fitCentroids(s, v, 16)))
   }
 
-  private def dotESql(x: String, y: String) =
-    s"list_reduce([$x[i] * $y[i] for i in generate_series(1, len($x))], (x, y) -> x + y)"
-  private def cosESql(x: String, xn: String, y: String, yn: String) =
-    s"round(${dotESql(x, y)} / ($xn * $yn), 6)"
-
-  /** The [[ivfSearch]] oracle parameterized over the centroid CTE chain
-    * (which must end in cents(cent_id, cv, cnrm)) — one search SQL for
-    * the fixed-centroid q_ann_ivf and the trained q_ann_ivf_kmeans.
+  /** [[ivfRanked]]'s route over the centroid CTE chain `centsCtes`
+    * (ending in cents(cent_id, cv, cnrm)): lists and probes by
+    * [[assignSql]], the probed lists' vectors the candidates.
     */
-  /** The [[ivfSearch]] CTE prefix (corpus → assignment → probes),
-    * shared by the search oracle and the candidate-volume count.
-    */
-  private def ivfCtesFrom(centsCtes: String): String = {
-    def dotE(x: String, y: String) = dotESql(x, y)
-    def cosE(x: String, xn: String, y: String, yn: String) = cosESql(x, xn, y, yn)
-    s"""vv AS (SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings),
-       |vn AS (SELECT vec_id, v, sqrt(${dotE("v", "v")}) AS nrm FROM vv),
-       |$centsCtes,
-       |assign AS (
-       |  SELECT vec_id, v, nrm, cent_id FROM (
-       |    SELECT a.vec_id, a.v, a.nrm, c.cent_id,
-       |      CAST(row_number() OVER (PARTITION BY a.vec_id
-       |        ORDER BY ${cosE("a.v", "a.nrm", "c.cv", "c.cnrm")} DESC, c.cent_id ASC)
-       |        AS INT) AS crk
-       |    FROM vn a CROSS JOIN cents c) z
-       |  WHERE crk = 1),
-       |probes AS (
-       |  SELECT q_id, qv, qnrm, cent_id FROM (
-       |    SELECT q.vec_id AS q_id, q.v AS qv, q.nrm AS qnrm, c.cent_id,
-       |      CAST(row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${cosE("q.v", "q.nrm", "c.cv", "c.cnrm")} DESC, c.cent_id ASC)
-       |        AS INT) AS prk
-       |    FROM vn q CROSS JOIN cents c WHERE q.vec_id < 10) z
-       |  WHERE prk <= 2)""".stripMargin
-  }
+  private def ivfSql(centsCtes: String): SearchSql = SearchSql(
+    s"""$centsCtes,
+       |assign AS (${assignSql("vn t CROSS JOIN cents c", 1)}),
+       |probes AS (${assignSql("vn t CROSS JOIN cents c WHERE t.vec_id < 10", 2)}),
+       |cand AS (
+       |  SELECT p.vec_id AS q_id, a.vec_id AS neighbor_id
+       |  FROM probes p JOIN assign a USING (cent_id) WHERE a.vec_id <> p.vec_id)""".stripMargin,
+    "q_id, neighbor_id, cos")
 
-  private def ivfSearchSqlFrom(centsCtes: String): String = {
-    def cosE(x: String, xn: String, y: String, yn: String) = cosESql(x, xn, y, yn)
-    s"""WITH ${ivfCtesFrom(centsCtes)}
-       |SELECT q_id, neighbor_id, cos, rank FROM (
-       |  SELECT p.q_id, a.vec_id AS neighbor_id,
-       |    ${cosE("p.qv", "p.qnrm", "a.v", "a.nrm")} AS cos,
-       |    CAST(row_number() OVER (PARTITION BY p.q_id
-       |      ORDER BY ${cosE("p.qv", "p.qnrm", "a.v", "a.nrm")} DESC, a.vec_id ASC)
-       |      AS INT) AS rank
-       |  FROM probes p JOIN assign a USING (cent_id)
-       |  WHERE a.vec_id <> p.q_id) z
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-  }
+  private val fixedCentsSql =
+    "cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM vn WHERE vec_id < 8)"
 
-  /** n_candidates of an IVF scoreboard row, re-derived: (query, vector)
-    * pairs inside the probed lists, excluding self — the full-precision
-    * scan volume the inverted file bounds to ~nprobe/nlist of the
-    * corpus.
-    */
-  private def ivfCandCountSqlFrom(centsCtes: String): String =
-    s"""WITH ${ivfCtesFrom(centsCtes)}
-       |SELECT CAST(count(*) AS BIGINT) AS n
-       |FROM probes p JOIN assign a USING (cent_id)
-       |WHERE a.vec_id <> p.q_id""".stripMargin
-
-  val annIvfSql: String = ivfSearchSqlFrom(
-    "cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM vn WHERE vec_id < 8)")
+  lazy val annIvfSql: String = ivfSql(fixedCentsSql).top
 
   /** ORACLE for the trained-quantizer IVF: the same search SQL over the
     * centroids DuckDB re-derives by unrolling the deterministic Lloyd
     * rounds ([[coarseCtesSql]], k = 16).
     */
-  def annIvfKmeansSql: String = ivfSearchSqlFrom(coarseCtesSql("SELECT 16 AS k"))
+  def annIvfKmeansSql: String = ivfSql(coarseCtesSql("SELECT 16 AS k")).top
 
   /** k-NN label agreement — the standard embedding-space label-noise /
     * mislabel diagnostic a training-data pipeline runs over labeled
@@ -725,18 +693,8 @@ object Similarity {
     */
   def labelKnn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val labels = Tables.embeddings(s, dir).select($"vec_id", $"label")
-    val v = vecs(s, dir).join(labels, "vec_id")
-    val q = v.where($"vec_id" < 50)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"),
-        $"label".as("q_label"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"neighbor_id".asc)
-    v.join(broadcast(q), $"vec_id" =!= $"q_id")
-      .select($"q_id", $"q_label", $"vec_id".as("neighbor_id"),
-        $"label".as("n_label"),
-        round(dot($"qv", $"v") / ($"qnrm" * $"nrm"), 6).as("cos"))
-      .withColumn("rank", row_number().over(w))
+    bruteRanked(vecs(s, dir).join(labels, "vec_id"), 50, $"q_label", $"label".as("n_label"))
       .where($"rank" <= 5)
       .groupBy($"q_id")
       .agg(first($"q_label").as("label"),
@@ -746,31 +704,13 @@ object Similarity {
       .orderBy($"q_id")
   }
 
-  val labelKnnSql: String =
-    s"""WITH vv AS (
-       |  SELECT vec_id, [x::DOUBLE for x in embedding] AS v, label
-       |  FROM embeddings),
-       |vn AS (
-       |  SELECT vec_id, v,
-       |    sqrt(list_reduce([v[i] * v[i] for i in generate_series(1, len(v))],
-       |      (x, y) -> x + y)) AS nrm, label
-       |  FROM vv),
-       |nb AS (
-       |  SELECT q_id, q_label, n_label, rank FROM (
-       |    SELECT a.vec_id AS q_id, a.label AS q_label, b.label AS n_label,
-       |      CAST(row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |        round(list_reduce(
-       |          [a.v[i] * b.v[i] for i in generate_series(1, len(a.v))],
-       |          (x, y) -> x + y) / (a.nrm * b.nrm), 6) DESC,
-       |        b.vec_id ASC) AS INT) AS rank
-       |    FROM vn a JOIN vn b ON a.vec_id < 50 AND b.vec_id <> a.vec_id) z
-       |  WHERE rank <= 5)
-       |SELECT q_id, any_value(q_label) AS label,
-       |  CAST(sum(CASE WHEN n_label = q_label THEN 1 ELSE 0 END) AS INT)
-       |    AS n_same,
-       |  CAST(sum(CASE WHEN n_label = q_label THEN 1 ELSE 0 END) AS DOUBLE) / 5
-       |    AS agree_frac
-       |FROM nb GROUP BY q_id ORDER BY q_id""".stripMargin
+  lazy val labelKnnSql: String = bruteSql(50).sql(
+    """SELECT r.q_id, any_value(q.label) AS label,
+      |  CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS INT) AS n_same,
+      |  CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS DOUBLE) / 5
+      |    AS agree_frac
+      |FROM ranked r JOIN vn q ON q.vec_id = r.q_id JOIN vn n ON n.vec_id = r.neighbor_id
+      |WHERE r.rank <= 5 GROUP BY r.q_id ORDER BY r.q_id""".stripMargin)
 
   /** Product-quantization ANN with asymmetric distance computation —
     * the MEMORY-side scale path the IVF/LSH family lacks: each vector
@@ -793,47 +733,47 @@ object Similarity {
     * a query predicate — factored so the spec can drive it with planted
     * near-duplicate vectors.
     */
-  private[graft] def pqTopK(s: SparkSession, vn: DataFrame, qPred: Column): DataFrame = {
-    import s.implicits._
-    pqRanked(s, vn, qPred).where($"rank" <= 5).orderBy($"q_id", $"rank")
-  }
+  private[graft] def pqTopK(s: SparkSession, vn: DataFrame, qPred: Column): DataFrame =
+    top5(pqRanked(s, vn, qPred))
 
-  /** [[pqTopK]] without the top-5 cut: every ADC-scored (query, vector)
-    * pair ranked — for PQ the touched volume is the WHOLE corpus
+  /** `df`'s vector column `vec` cut into its [[PqM]] subvectors: one
+    * (vec_id, m, sv) row per subspace.
+    */
+  private def subspaces(df: DataFrame, vec: String): DataFrame =
+    df.select(col("vec_id"), explode(array((0 until PqM).map { m =>
+      struct(lit(m).as("m"), slice(col(vec), m * PqD + 1, PqD).as("sv"))
+    }: _*)).as("ms")).select(col("vec_id"), col("ms.m").as("m"), col("ms.sv").as("sv"))
+
+  /** [[subspaces]]' mirror over relation `rel`. */
+  private def subsSql(rel: String, vec: String): String =
+    s"""SELECT vec_id, m, [$vec[m * $PqD + i] for i in generate_series(1, $PqD)] AS sv
+       |  FROM $rel, (SELECT unnest(generate_series(0, ${PqM - 1})) AS m) ms""".stripMargin
+
+  /** The PQ [[search]] — for PQ the touched volume is the WHOLE corpus
     * (nq·(n−1) pairs, that is the method's honesty: it scans everything
     * but reads 8 code bytes per vector instead of 64 floats), and the
-    * recall scoreboard prices exactly that.
+    * recall scoreboard prices exactly that. Routing and score are one
+    * step: the code scan sums each candidate's per-subspace LUT dots.
     */
   private def pqRanked(s: SparkSession, vn: DataFrame, qPred: Column): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    def subspaces(vecCol: Column): Column = explode(array((0 until PqM).map { m =>
-      struct(lit(m).as("m"), slice(vecCol, m * PqD + 1, PqD).as("sv"))
-    }: _*))
-    val subs = vn.select($"vec_id", subspaces($"vn").as("ms"))
-      .select($"vec_id", $"ms.m".as("m"), $"ms.sv".as("sv"))
+    val subs = subspaces(vn, "vn")
     val cb = subs.where($"vec_id" < PqK)
       .select($"m", $"vec_id".cast("int").as("j"), $"sv".as("c"))
     // encode: the [[nearest]] codeword per (vector, subspace)
     val enc = nearest(s, subs.select($"m".as("key"), $"vec_id", $"sv".as("v")),
         cb.as[(Int, Int, Seq[Double])].collect().toSeq)
       .select($"vec_id", $"key".as("m"), $"j".as("code"))
-    // ADC lookup table: query × subspace × codeword dots (tiny: nq·M·K)
-    val lut = vn.where(qPred)
-      .select($"vec_id".as("q_id"), subspaces($"vn").as("ms"))
-      .select($"q_id", $"ms.m".as("m"), $"ms.sv".as("qs"))
+    // ADC lookup table: query × subspace × codeword dots (tiny: nq·M·K),
+    // its keys renamed apart from enc's
+    val lut = subspaces(vn.where(qPred), "vn")
       .join(broadcast(cb), "m")
-      .select($"q_id", $"m", $"j", dot($"qs", $"c").as("pdot"))
-    val wTop = Window.partitionBy($"q_id").orderBy($"approx_cos".desc, $"neighbor_id".asc)
-    // disambiguated lut keys: both sides carry an `m` after the join
-    val lutR = lut.withColumnRenamed("m", "lm").withColumnRenamed("j", "lj")
-    enc.join(broadcast(lutR), $"m" === $"lm" && $"code" === $"lj")
+      .select($"vec_id".as("q_id"), $"m".as("lm"), $"j".as("lj"), dot($"sv", $"c").as("pdot"))
+    search(enc.join(broadcast(lut), $"m" === $"lm" && $"code" === $"lj")
       .where($"vec_id" =!= $"q_id")
       .groupBy($"q_id", $"vec_id")
-      .agg(round(graft.functions.FloatFold.orderedSum($"m", $"pdot"), 6)
-        .as("approx_cos"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .withColumn("rank", row_number().over(wTop))
+      .agg(round(FloatFold.orderedSum($"m", $"pdot"), 6).as("approx_cos"))
+      .withColumnRenamed("vec_id", "neighbor_id"), "approx_cos")
   }
 
   /** Registered PQ query: unit-normalized embeddings (ADC dot = approx
@@ -851,54 +791,24 @@ object Similarity {
       .select($"vec_id", transform($"v", x => x / $"nrm").as("vn"))
   }
 
-  /** The [[annPq]] oracle's CTE prefix through the ADC-scored pairs —
-    * shared by the search oracle and the scoreboard's candidate count.
-    */
-  private lazy val pqCtesSql: String = {
-    def dotE(terms: String) = s"list_reduce([$terms], (x, y) -> x + y)"
-    s"""vv AS (SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings),
-       |vn AS (
-       |  SELECT vec_id,
-       |    [x / sqrt(${dotE("v[i] * v[i] for i in generate_series(1, len(v))")})
-       |     for x in v] AS vn
-       |  FROM vv),
-       |ms AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS m),
-       |subs AS (
-       |  SELECT vec_id, m,
-       |    [vn[m * ${PqD} + i] for i in generate_series(1, ${PqD})] AS sv
-       |  FROM vn, ms),
-       |cb AS (
-       |  SELECT m, CAST(vec_id AS INT) AS j, sv AS c
-       |  FROM subs WHERE vec_id < ${PqK}),
+  /** [[pqRanked]]'s route: codebook, encoding, LUT and the ADC scan. */
+  private lazy val pqSql: SearchSql = SearchSql(
+    s"""subs AS (${subsSql("vn", "v")}),
+       |cb AS (SELECT m, CAST(vec_id AS INT) AS j, sv AS c FROM subs WHERE vec_id < $PqK),
        |enc AS (
        |  SELECT vec_id, m, j AS code FROM (${nearestSql("subs", "cb", Seq("m"), v = "sv")})),
        |lut AS (
-       |  SELECT s.vec_id AS q_id, s.m, c.j,
-       |    ${dotE("s.sv[i] * c.c[i] for i in generate_series(1, " + PqD + ")")} AS pdot
+       |  SELECT s.vec_id AS q_id, s.m, c.j, ${dotSql("s.sv", "c.c")} AS pdot
        |  FROM subs s JOIN cb c USING (m) WHERE s.vec_id < 10),
-       |adc AS (
+       |cand AS (
        |  SELECT l.q_id, e.vec_id AS neighbor_id,
-       |    round(${graft.functions.FloatFold.orderedSumSql("pdot", "e.m")}, 6) AS approx_cos
+       |    round(${FloatFold.orderedSumSql("pdot", "e.m")}, 6) AS approx_cos
        |  FROM enc e JOIN lut l ON e.m = l.m AND e.code = l.j
        |  WHERE e.vec_id <> l.q_id
-       |  GROUP BY 1, 2)""".stripMargin
-  }
+       |  GROUP BY 1, 2)""".stripMargin,
+    "q_id, neighbor_id, approx_cos", score = "approx_cos", unit = true)
 
-  val annPqSql: String =
-    s"""WITH $pqCtesSql
-       |SELECT q_id, neighbor_id, approx_cos, rank FROM (
-       |  SELECT q_id, neighbor_id, approx_cos,
-       |    CAST(row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_cos DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM adc) z
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-
-  /** n_candidates of the pq scoreboard row, re-derived: the ADC scan
-    * scores every non-self vector for every query — nq·(n−1) pairs.
-    */
-  private lazy val pqCandCountSql: String =
-    s"""WITH $pqCtesSql
-       |SELECT CAST(count(*) AS BIGINT) AS n FROM adc""".stripMargin
+  lazy val annPqSql: String = pqSql.top
 
   /** IVF-PQ — the composed 100 TB ANN architecture the PQ scaladoc
     * declares: the seeded k-means coarse quantizer ([[annIvfKmeans]]
@@ -927,9 +837,9 @@ object Similarity {
     */
   private[graft] def ivfPqTopK(s: SparkSession, vnIn: DataFrame,
       qPred: Column): DataFrame =
-    ivfPqFrames(s, vnIn, qPred)._1
+    top5(ivfPqFrames(s, vnIn, qPred)._1)
 
-  /** [[ivfPqTopK]] plus its ADC candidate stage: returns (top-5 frame,
+  /** The IVF-PQ [[search]] and its touched volume: returns (ranked frame,
     * ADC-scored (q_id, neighbor_id) pairs). The second frame's row count
     * is the method's touched-candidate volume — the compressed scan of
     * the probed lists, BEFORE the shortlist cut — priced by
@@ -940,12 +850,11 @@ object Similarity {
   private def ivfPqFrames(s: SparkSession, vnIn: DataFrame,
       qPred: Column): (DataFrame, DataFrame) = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val vn = vnIn.select($"vec_id", $"vn")
+    val vn = vnIn.select($"vec_id", $"vn".as("v"))
     // coarse quantizer: the DETERMINISTIC Lloyd trainer on the unit
     // sphere (min-L2 on unit vectors ⇔ max cosine) — SQL-reproducible
     // like every other stage of this index since round 15
-    val coarse = trainCoarse(s, vn.select($"vec_id", $"vn".as("v")), IvfPqNList)
+    val coarse = trainCoarse(s, vn, IvfPqNList)
     val cents = broadcast(coarseCentFrame(s, coarse).select($"cent_id", $"cv"))
     // assign each vector to its nearest list; carry the RESIDUAL
     // localCheckpoint (eager) truncates the lineage: the Lloyd loop,
@@ -953,23 +862,19 @@ object Similarity {
     // instead of re-deriving the quantizer DAG per job; the
     // materialized partitions are reclaimed by the ContextCleaner when
     // this frame goes out of scope
-    val assign = nearest(s, oneKey(vn.select($"vec_id", $"vn".as("v"))), coarse)
+    val assign = nearest(s, oneKey(vn), coarse)
       .select($"vec_id", $"j".as("cent_id"), $"v".as("vn"))
       .join(cents, "cent_id")
       .select($"vec_id", $"cent_id",
         zip_with($"vn", $"cv", (x, y) => x - y).as("r"))
       .localCheckpoint()
-    def subspaces(vecCol: Column): Column = explode(array((0 until PqM).map { m =>
-      struct(lit(m).as("m"), slice(vecCol, m * PqD + 1, PqD).as("sv"))
-    }: _*))
     // train shared residual codebooks, one Lloyd key per subspace, on a
     // DETERMINISTIC ¼ sample (codebook quality needs a bounded training
     // set, not the corpus — the standard points-per-centroid cap
     // practice; at 100 TB the sampling predicate is what keeps
     // index-build cost flat), then encode EVERY vector's residual to M
     // one-byte codes
-    val rsubs = assign.select($"vec_id", subspaces($"r").as("ms"))
-      .select($"ms.m".as("key"), $"vec_id", $"ms.sv".as("v"))
+    val rsubs = subspaces(assign, "r").select($"m".as("key"), $"vec_id", $"sv".as("v"))
     val (codebook, _) = lloyd(s, rsubs.where(pmod($"vec_id", lit(4)) === 0),
       (0 until PqM).map(_ -> PqK).toMap, IvfPqIters)
     val cb = broadcast(codebook.toDF("m", "j", "c"))
@@ -977,44 +882,29 @@ object Similarity {
       .select($"vec_id", $"key".as("m"), $"j".as("code"))
       .join(assign.select($"vec_id", $"cent_id"), "vec_id")
     // probes: each query's nprobe nearest lists, with the q·c base term
-    val wProbe = Window.partitionBy($"q_id").orderBy($"qc".desc, $"cent_id".asc)
-    val q = vn.where(qPred).select($"vec_id".as("q_id"), $"vn".as("qv"))
-    val probes = q.crossJoin(cents)
-      .select($"q_id", $"qv", $"cent_id", round(dot($"qv", $"cv"), 6).as("qc"))
-      .withColumn("prk", row_number().over(wProbe))
-      .where($"prk" <= IvfPqNProbe)
-      .select($"q_id", $"cent_id", $"qc")
+    // (un-normalised: both sides are unit-sphere points)
+    val q = vn.where(qPred)
+    val probes = assignTo(q, cents, IvfPqNProbe, score = round(dot($"v", $"cv"), 6))
+      .select($"vec_id".as("q_id"), $"cent_id", $"ccos".as("qc"))
     // ADC lookup table: query subvector × residual codeword dots
-    val lut = q.select($"q_id".as("lq"), subspaces($"qv").as("ms"))
-      .select($"lq", $"ms.m".as("lm"), $"ms.sv".as("qs"))
-      .join(cb, $"lm" === $"m")
-      .select($"lq", $"lm", $"j".as("lj"), dot($"qs", $"c").as("pdot"))
+    val lut = subspaces(q, "v").join(cb, "m")
+      .select($"vec_id".as("lq"), $"m".as("lm"), $"j".as("lj"), dot($"sv", $"c").as("pdot"))
     // pruned + compressed scan: probed lists only, scored via LUT
     val adc = enc.join(broadcast(probes), "cent_id")
       .where($"vec_id" =!= $"q_id")
       .join(broadcast(lut), $"q_id" === $"lq" && $"m" === $"lm" &&
         $"code" === $"lj")
       .groupBy($"q_id", $"vec_id")
-      .agg(round(max($"qc") +
-        graft.functions.FloatFold.orderedSum($"m", $"pdot"), 6).as("approx_cos"))
+      .agg(round(max($"qc") + FloatFold.orderedSum($"m", $"pdot"), 6).as("approx_cos"))
       .withColumnRenamed("vec_id", "neighbor_id")
-    val wShort = Window.partitionBy($"q_id")
-      .orderBy($"approx_cos".desc, $"neighbor_id".asc)
-    val shortlist = adc.withColumn("srk", row_number().over(wShort))
-      .where($"srk" <= IvfPqShortlist)
-      .select($"q_id", $"neighbor_id", $"approx_cos")
-    // refine: exact scores for shortlist rows only — full floats are
+    // refine: exact scores for the ADC shortlist only — full floats are
     // read for nq·shortlist vectors, not the probed lists
-    val wTop = Window.partitionBy($"q_id").orderBy($"cos".desc, $"neighbor_id".asc)
-    val topk = broadcast(shortlist)
-      .join(vn.select($"vec_id".as("neighbor_id"), $"vn".as("nv")), "neighbor_id")
-      .join(broadcast(q.withColumnRenamed("q_id", "jq")), $"q_id" === $"jq")
-      .select($"q_id", $"neighbor_id", $"approx_cos",
-        round(dot($"qv", $"nv"), 6).as("cos"))
-      .withColumn("rank", row_number().over(wTop))
-      .where($"rank" <= 5)
-      .orderBy($"q_id", $"rank")
-    (topk, adc.select($"q_id", $"neighbor_id"))
+    val refine = (short: DataFrame) => broadcast(short)
+      .join(vn.select($"vec_id".as("neighbor_id"), $"v".as("nv")), "neighbor_id")
+      .join(broadcast(q.select($"vec_id".as("jq"), $"v".as("qv"))), $"q_id" === $"jq")
+      .select($"q_id", $"neighbor_id", $"approx_cos", round(dot($"qv", $"nv"), 6).as("cos"))
+    (search(adc, "cos", Some(($"approx_cos", IvfPqShortlist)), refine),
+      adc.select($"q_id", $"neighbor_id"))
   }
 
   /** Registered IVF-PQ query: unit-normalized embeddings, first 10
@@ -1025,9 +915,9 @@ object Similarity {
     * tightened quantization error.
     */
   def annIvfPq(s: SparkSession, dir: String): DataFrame =
-    annIvfPqBoth(s, dir)._1
+    top5(annIvfPqBoth(s, dir)._1)
 
-  /** The memoized (top-5, ADC candidate pairs) pair behind [[annIvfPq]]
+  /** The memoized (ranked, ADC candidate pairs) pair behind [[annIvfPq]]
     * and [[annRecallTrained]]: the coarse-quantizer fit + Lloyd codebook
     * training + the checkpointed assignment all live in the pair's
     * construction — memoized per session so the registered query and
@@ -1042,110 +932,52 @@ object Similarity {
   private[graft] def annIvfPqUncached(s: SparkSession, dir: String): DataFrame =
     ivfPqTopK(s, unitVecs(s, dir), col("vec_id") < 10)
 
-  /** ORACLE for the composed IVF-PQ index — since round 15 EVERY stage
-    * is deterministic, so DuckDB re-derives the whole architecture:
-    * the unrolled coarse Lloyd chain on the unit sphere, min-L2 list
+  /** [[ivfPqFrames]]' route — since round 15 EVERY stage is
+    * deterministic, so DuckDB re-derives the whole architecture: the
+    * unrolled coarse Lloyd chain on the unit sphere, min-L2 list
     * assignment + residuals, the unrolled residual codebook training on
-    * the ¼ sample, full-corpus encoding, probes with the q·c base term,
-    * the broadcast-LUT ADC fold, the 20-candidate shortlist, and the
-    * exact refine.
+    * the ¼ sample, full-corpus encoding, probes with the q·c base term
+    * and the broadcast-LUT ADC fold; the ADC pre-score shortlist and the
+    * exact refine are [[SearchSql]]'s, and the touched volume is the ADC
+    * scan.
     */
-  /** The [[annIvfPqSql]] chain's CTE prefix through the pruned ADC scan
-    * — shared by the search oracle and the trained scoreboard's
-    * candidate-volume count ([[ivfPqCandCountSql]]).
-    */
-  private def ivfPqCtesSql: String = {
-    s"""vv AS (SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings),
-       |vr AS (SELECT vec_id, v, sqrt(${dotESql("v", "v")}) AS nrm FROM vv),
-       |vn AS MATERIALIZED (
-       |  SELECT vec_id, [v[i] / nrm for i in generate_series(1, len(v))] AS v,
-       |    1.0 AS nrm
-       |  FROM vr),
-       |${coarseCtesSql(s"SELECT $IvfPqNList AS k")},
+  private def ivfPqSql: SearchSql = SearchSql(
+    s"""${coarseCtesSql(s"SELECT $IvfPqNList AS k")},
        |asg AS MATERIALIZED (
        |  SELECT vec_id, v, cent_id FROM (${nearestSql("vn", "cents", c = "cv", j = "cent_id")})),
        |res AS MATERIALIZED (
        |  SELECT a.vec_id, a.cent_id,
        |    [a.v[i] - c.cv[i] for i in generate_series(1, len(a.v))] AS r
        |  FROM asg a JOIN cents c USING (cent_id)),
-       |ms AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS m),
-       |rsubs AS MATERIALIZED (
-       |  SELECT vec_id, m, [r[m * $PqD + i] for i in generate_series(1, $PqD)] AS sv
-       |  FROM res, ms),
+       |rsubs AS MATERIALIZED (${subsSql("res", "r")}),
        |samp AS MATERIALIZED (SELECT m, vec_id, sv AS v FROM rsubs WHERE vec_id % 4 = 0),
        |pc0 AS MATERIALIZED (${lowestSql("samp", Seq("m"), PqK.toString)}),
        |${lloydCtesSql("p", Seq("m"), "samp", "pc0", PqD, IvfPqIters)},
        |enc AS MATERIALIZED (
-       |  SELECT vec_id, m, j AS code
-       |  FROM (${nearestSql("rsubs", s"pc$IvfPqIters", Seq("m"), v = "sv")})),
-       |encc AS (
-       |  SELECT e.vec_id, e.m, e.code, a.cent_id
-       |  FROM enc e JOIN asg a USING (vec_id)),
-       |qs AS MATERIALIZED (SELECT vec_id AS q_id, v AS qv FROM vn WHERE vec_id < 10),
-       |probes AS (
-       |  SELECT q_id, cent_id, qc FROM (
-       |    SELECT q.q_id, c.cent_id, round(${dotESql("q.qv", "c.cv")}, 6) AS qc,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY round(${dotESql("q.qv", "c.cv")}, 6) DESC,
-       |          c.cent_id ASC) AS rk
-       |    FROM qs q CROSS JOIN cents c) z
-       |  WHERE rk <= $IvfPqNProbe),
-       |qsubs AS (
-       |  SELECT q_id, m, [qv[m * $PqD + i] for i in generate_series(1, $PqD)] AS sv
-       |  FROM qs, ms),
+       |  SELECT e.vec_id, e.m, e.j AS code, a.cent_id
+       |  FROM (${nearestSql("rsubs", s"pc$IvfPqIters", Seq("m"), v = "sv")}) e
+       |  JOIN asg a USING (vec_id)),
+       |probes AS (${assignSql("vn t CROSS JOIN cents c WHERE t.vec_id < 10", IvfPqNProbe,
+         score = s"round(${dotSql("t.v", "c.cv")}, 6)")}),
        |lut AS (
-       |  SELECT s.q_id, s.m, c.j, ${dotESql("s.sv", "c.c")} AS pdot
-       |  FROM qsubs s JOIN pc$IvfPqIters c USING (m)),
-       |adc AS (
-       |  SELECT p.q_id, e.vec_id AS neighbor_id,
-       |    round(max(p.qc) +
-       |      ${graft.functions.FloatFold.orderedSumSql("l.pdot", "e.m")}, 6)
-       |      AS approx_cos
-       |  FROM encc e JOIN probes p USING (cent_id)
-       |  JOIN lut l ON l.q_id = p.q_id AND l.m = e.m AND l.j = e.code
-       |  WHERE e.vec_id <> p.q_id
-       |  GROUP BY p.q_id, e.vec_id)""".stripMargin
-  }
+       |  SELECT s.vec_id AS q_id, s.m, c.j, ${dotSql("s.sv", "c.c")} AS pdot
+       |  FROM (${subsSql("vn", "v")} WHERE vec_id < 10) s JOIN pc$IvfPqIters c USING (m)),
+       |cand AS (
+       |  SELECT p.vec_id AS q_id, e.vec_id AS neighbor_id,
+       |    round(max(p.ccos) + ${FloatFold.orderedSumSql("l.pdot", "e.m")}, 6) AS approx_cos
+       |  FROM enc e JOIN probes p USING (cent_id)
+       |  JOIN lut l ON l.q_id = p.vec_id AND l.m = e.m AND l.j = e.code
+       |  WHERE e.vec_id <> p.vec_id
+       |  GROUP BY p.vec_id, e.vec_id)""".stripMargin,
+    "q_id, neighbor_id, approx_cos, cos", pre = Some(("approx_cos", IvfPqShortlist)),
+    unit = true, touched = "cand")
 
-  def annIvfPqSql: String =
-    s"""WITH ${ivfPqCtesSql},
-       |short AS (
-       |  SELECT q_id, neighbor_id, approx_cos FROM (
-       |    SELECT adc.*, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_cos DESC, neighbor_id ASC) AS rk
-       |    FROM adc) z
-       |  WHERE rk <= $IvfPqShortlist)
-       |SELECT q_id, neighbor_id, approx_cos, cos, rank FROM (
-       |  SELECT s.q_id, s.neighbor_id, s.approx_cos,
-       |    round(${dotESql("q.qv", "n.v")}, 6) AS cos,
-       |    CAST(row_number() OVER (PARTITION BY s.q_id
-       |      ORDER BY round(${dotESql("q.qv", "n.v")}, 6) DESC,
-       |        s.neighbor_id ASC) AS INT) AS rank
-       |  FROM short s JOIN qs q USING (q_id) JOIN vn n ON n.vec_id = s.neighbor_id) z
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+  def annIvfPqSql: String = ivfPqSql.top
 
-  /** n_candidates of the ivf_pq scoreboard row, re-derived: ADC-scored
-    * (query, vector) pairs within the probed lists, pre-shortlist.
+  /** ORACLE for the residual-PQ recall row, [[recallSql]] over the
+    * IVF-PQ search.
     */
-  private def ivfPqCandCountSql: String =
-    s"""WITH ${ivfPqCtesSql}
-       |SELECT CAST(count(*) AS BIGINT) AS n FROM adc""".stripMargin
-
-  /** ORACLE for the residual-PQ recall row: the IVF-PQ chain's top-k
-    * intersected with the brute-force top-5, same shape as
-    * [[annRecallSql]].
-    */
-  def annRecallTrainedSql: String =
-    s"""WITH brute AS (SELECT q_id, neighbor_id FROM ($annCosineTopKSql)),
-      |pqv AS (SELECT q_id, neighbor_id FROM ($annIvfPqSql)),
-      |nt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM brute),
-      |hits AS (
-      |  SELECT 'ivf_pq' AS method, count(*) AS hits
-      |  FROM pqv JOIN brute USING (q_id, neighbor_id))
-      |SELECT method, CAST(hits AS BIGINT) AS hits, n_truth,
-      |  round(CAST(hits AS DOUBLE) / n_truth, 4) AS recall_at_5,
-      |  CAST((SELECT n FROM ($ivfPqCandCountSql) t) AS BIGINT) AS n_candidates
-      |FROM hits CROSS JOIN nt ORDER BY method""".stripMargin
+  def annRecallTrainedSql: String = recallSql(Seq("ivf_pq" -> ivfPqSql))
 
   /** τ floor of the LSH route: at τ ≥ 0.7 (θ ≤ 45.6°, per-plane sign
     * agreement p = 1 − θ/π ≈ 0.747) a 32-band × 8-bit sign-LSH candidate
@@ -1360,16 +1192,21 @@ object Similarity {
     */
   private val HammingMax = 92
 
-  /** The LSH route's verified candidate frame — the 3-stage cascade:
-    * banded sign-LSH bucket collisions (coarse), Hamming prefilter on
-    * the full 256-bit signatures (fine, [[HammingMax]]), exact rounded
-    * cosine (verify) — before any τ filter; one source for
-    * [[lshVerified]] and the registered [[cosineDedupLshTop]].
-    * Band k takes bits [8k, 8k+8) of the packed signature: word k/8,
-    * shift 8·(k mod 8) — the bands partition the 256 bits, which is
-    * what lets the oracle reconstruct the full Hamming distance as a
-    * sum of per-band bit_count(xor).
+  /** THE band-pair join of the sign index: rows of `left` and `right`
+    * (vec_id, s0..s3, band, bits — [[bandsFrom]]'s shape) colliding in a
+    * (band, bits) bucket, as (id_a, id_b, h) with h the full 256-bit
+    * signature Hamming distance. One source for the ANN probe
+    * ([[lshRanked]]), the dedup route ([[lshVerifiedCandidates]]) and
+    * [[diagBandCollisions]]; oracle mirror [[hammingSql]].
     */
+  private def bandPairs(left: DataFrame, right: DataFrame): DataFrame = {
+    def side(df: DataFrame, id: String, w: String) = df.select((col("band") +: col("bits") +:
+      col("vec_id").as(id) +: (0 until SignWords).map(i => col(s"s$i").as(s"$w$i"))): _*)
+    side(left, "id_a", "a").join(side(right, "id_b", "b"), Seq("band", "bits"))
+      .select(col("id_a"), col("id_b"), (0 until SignWords)
+        .map(i => bit_count(col(s"a$i").bitwiseXOR(col(s"b$i")))).reduce(_ + _).as("h"))
+  }
+
   /** DiagLsh stage hooks (throwaway diagnostics, not registered). */
   private[graft] def diagVecs(s: SparkSession, dir: String): DataFrame =
     vecs(s, dir)
@@ -1378,40 +1215,29 @@ object Similarity {
   private[graft] def diagBandCollisions(s: SparkSession, dir: String): (Long, Long) = {
     import s.implicits._
     val bands = signBands(s, vecs(s, dir))
-    val left = bands.select(($"band" +: $"bits" +: $"vec_id".as("id_a") +:
-      (0 until SignWords).map(w => col(s"s$w").as(s"a$w"))): _*)
-    val right = bands.select(($"band" +: $"bits" +: $"vec_id".as("id_b") +:
-      (0 until SignWords).map(w => col(s"s$w").as(s"b$w"))): _*)
-    val hamming = (0 until SignWords)
-      .map(w => bit_count(col(s"a$w").bitwiseXOR(col(s"b$w"))))
-      .reduce(_ + _)
-    val r = left.join(right, Seq("band", "bits"))
-      .where($"id_a" < $"id_b")
+    val r = bandPairs(bands, bands).where($"id_a" < $"id_b")
       .select(count(lit(1)).as("emits"),
-        sum(when(hamming <= HammingMax, 1L).otherwise(0L)).as("passed"))
+        sum(when($"h" <= HammingMax, 1L).otherwise(0L)).as("passed"))
       .head()
     (r.getLong(0), r.getLong(1))
   }
 
+  /** The LSH route's verified candidate frame — the 3-stage cascade:
+    * banded sign-LSH bucket collisions (coarse, [[bandPairs]]), Hamming
+    * prefilter on the full 256-bit signatures (fine, [[HammingMax]]),
+    * exact rounded cosine (verify) — before any τ filter; one source for
+    * [[lshVerified]] and the registered [[cosineDedupLshTop]].
+    */
   private[graft] def lshVerifiedCandidates(s: SparkSession, vin: DataFrame): DataFrame = {
     import s.implicits._
-    val sigCols = (0 until SignWords).map(w => col(s"s$w"))
     val bands = signBands(s, vin)
-    val left = bands.select(($"band" +: $"bits" +: $"vec_id".as("id_a") +:
-      (0 until SignWords).map(w => col(s"s$w").as(s"a$w"))): _*)
-    val right = bands.select(($"band" +: $"bits" +: $"vec_id".as("id_b") +:
-      (0 until SignWords).map(w => col(s"s$w").as(s"b$w"))): _*)
-    val hamming = (0 until SignWords)
-      .map(w => bit_count(col(s"a$w").bitwiseXOR(col(s"b$w"))))
-      .reduce(_ + _)
-    val cand = left.join(right, Seq("band", "bits"))
-      .where($"id_a" < $"id_b" && hamming <= HammingMax)
+    val cand = bandPairs(bands, bands)
+      .where($"id_a" < $"id_b" && $"h" <= HammingMax)
       .select($"id_a", $"id_b").distinct()
     val va = vin.select($"vec_id".as("id_a"), $"v".as("va"), $"nrm".as("na"))
     val vb = vin.select($"vec_id".as("id_b"), $"v".as("vb"), $"nrm".as("nb"))
     cand.join(va, "id_a").join(vb, "id_b")
-      .select($"id_a", $"id_b",
-        round(dot($"va", $"vb") / ($"na" * $"nb"), 6).as("cos"))
+      .select($"id_a", $"id_b", cosine($"va", $"na", $"vb", $"nb").as("cos"))
   }
 
   /** The REGISTERED q_embed_cosine_dedup_lsh — the 100 TB cosine-dedup
@@ -1471,52 +1297,35 @@ object Similarity {
        |  FROM z5 GROUP BY p)""".stripMargin
   }
 
-  /** Oracle twin of [[cosineDedupLshTop]]: the 256 [[fmix64]]
-    * hyperplanes re-derived in exact HUGEINT ([[signPlanesCtesSql]]),
-    * 8-bit band keys from the plane signs, bucket-join
-    * candidates, the engine's [[HammingMax]] prefilter mirrored as a
-    * per-pair sum of band-wise bit_count(xor) — the bands partition the
-    * 256 signature bits, so the sum IS the full Hamming distance; the
-    * engine gates before its candidate distinct and the oracle after,
-    * which is equivalent because the predicate is a pure per-pair
-    * function — then exact left-to-right-fold cosine verify, top-20
-    * with the τ-gate boolean. [[HammingMax]] is interpolated, not
-    * hardcoded, so tuning the engine constant cannot silently diverge
-    * from the oracle.
-    */
-  /** The route's candidate-stage CTE chain — band-bucket collisions
-    * (cand0) through the Hamming prefilter (cand) — shared by the
-    * registered shortlist oracle ([[cosineDedupLshSql]]) and the route
-    * recall scoreboard ([[lshRouteRecallSql]]).
+  /** The route's candidate-stage CTE chain after vn — band-bucket
+    * collisions through the Hamming prefilter ([[hammingSql]]) as cand —
+    * shared by the registered shortlist oracle ([[cosineDedupLshSql]])
+    * and the route recall scoreboard ([[lshRouteRecallSql]]). The engine
+    * gates before its candidate distinct and the oracle after, which is
+    * equivalent because the predicate is a pure per-pair function;
+    * [[HammingMax]] is interpolated, not hardcoded, so tuning the engine
+    * constant cannot silently diverge from the oracle.
     */
   private lazy val lshCandCtesSql: String =
     s"""$signBandsCtesSql,
-       |cand0 AS (
-       |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-       |  FROM bands x JOIN bands y ON x.band = y.band AND x.bits = y.bits
-       |  WHERE x.vec_id < y.vec_id),
        |cand AS MATERIALIZED (
-       |  -- the engine's Hamming prefilter on the full 256-bit signature:
-       |  -- the 32 bands partition the 256 bits, so the pair's Hamming
-       |  -- distance is the sum over bands of bit_count(xor(bits))
-       |  SELECT c.id_a, c.id_b
-       |  FROM cand0 c
-       |  JOIN bands ba ON ba.vec_id = c.id_a
-       |  JOIN bands bb ON bb.vec_id = c.id_b AND bb.band = ba.band
-       |  GROUP BY c.id_a, c.id_b
-       |  HAVING sum(bit_count(xor(ba.bits, bb.bits))) <= $HammingMax)""".stripMargin
+       |  SELECT id_a, id_b FROM (${hammingSql(
+         """SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
+           |  FROM bands x JOIN bands y ON x.band = y.band AND x.bits = y.bits
+           |  WHERE x.vec_id < y.vec_id""".stripMargin)}) hp
+       |  WHERE h <= $HammingMax)""".stripMargin
 
-  val cosineDedupLshSql: String =
-    s"""WITH $lshCandCtesSql,
-       |vn AS (
-       |  SELECT vec_id, v,
-       |    sqrt(list_reduce([v[i] * v[i] for i in generate_series(1, len(v))],
-       |      (x, y) -> x + y)) AS nrm
-       |  FROM v),
+  /** Oracle twin of [[cosineDedupLshTop]]: the 256 [[fmix64]]
+    * hyperplanes re-derived in exact HUGEINT ([[signPlanesCtesSql]]),
+    * 8-bit band keys from the plane signs, the bucket-join candidates
+    * through the Hamming prefilter ([[lshCandCtesSql]]), then exact
+    * left-to-right-fold cosine verify, top-20 with the τ-gate boolean.
+    */
+  lazy val cosineDedupLshSql: String =
+    s"""WITH ${vecsCtesSql()},
+       |$lshCandCtesSql,
        |scored AS (
-       |  SELECT c.id_a, c.id_b,
-       |    round(list_reduce([a.v[i] * b.v[i] for i in generate_series(1, len(a.v))],
-       |      (x, y) -> x + y) / (a.nrm * b.nrm), 6) AS cos
+       |  SELECT c.id_a, c.id_b, ${cosSql("a.v", "a.nrm", "b.v", "b.nrm")} AS cos
        |  FROM cand c JOIN vn a ON c.id_a = a.vec_id JOIN vn b ON c.id_b = b.vec_id)
        |SELECT id_a, id_b, cos, cos >= 0.7 AS pass_tau
        |FROM scored ORDER BY cos DESC, id_a, id_b LIMIT 20""".stripMargin
@@ -1549,13 +1358,14 @@ object Similarity {
   }
 
   /** Oracle twin of [[lshRouteRecall]]: the blocked-sweep truth
-    * ([[cosineDedupSql]] as a derived table) LEFT JOINed against the
-    * route's candidate chain ([[lshCandCtesSql]]), banded and counted
-    * with the same floor/round arithmetic.
+    * ([[cosPairsSql]]) LEFT JOINed against the route's candidate chain
+    * ([[lshCandCtesSql]]), banded and counted with the same floor/round
+    * arithmetic.
     */
   lazy val lshRouteRecallSql: String =
-    s"""WITH $lshCandCtesSql,
-       |truth AS (SELECT id_a, id_b, cos FROM ($cosineDedupSql) t)
+    s"""WITH ${vecsCtesSql()},
+       |$lshCandCtesSql,
+       |truth AS ($cosPairsSql)
        |SELECT CAST(floor(t.cos * 20) / 20 AS DOUBLE) AS cos_band,
        |  CAST(count(*) AS BIGINT) AS n_true,
        |  CAST(count(c.id_a) AS BIGINT) AS n_caught,
@@ -1566,53 +1376,39 @@ object Similarity {
 
   /** The ANN recall scoreboard — measured recall@5 against the
     * brute-force truth: ONE persisted brute-force frame (50 rows) and
-    * one bounded semi-join per method. recall@5 = |returned ∩ true
-    * top-5| / (queries × 5), the standard ANN benchmark statistic; a
-    * method returning fewer than 5 candidates for a query (LSH with a
-    * thin bucket) is priced honestly. Each row also carries
-    * `n_candidates` — the method's touched-candidate volume (r19:
-    * distinct probe-bucket pairs for lsh, probed-list pairs for the IVF
-    * family, the full nq·(n−1) compressed scan for pq) — because recall
-    * alone cannot rank an index: 0.8 recall touching n/8 beats 0.86
-    * touching everything. This is the query a 100 TB deployment runs on
-    * a sample before picking its index: the scoreboard is bounded no
-    * matter the corpus. Split across two
-    * registered queries by oracle strength: THIS one covers the
-    * DuckDB-reproducible methods — lsh / ivf / pq AND (since the
-    * coarse quantizer went deterministic) the trained ivf_kmeans —
-    * hash-checked end-to-end ([[annRecallSql]]); [[annRecallTrained]]
-    * covers ivf_pq, whose residual codebooks still train through
-    * order-dependent float means. SimilaritySpec pins the floor each
-    * method must clear on this corpus across both halves.
+    * one bounded join per method. recall@5 = |returned ∩ true top-5| /
+    * (queries × 5), the standard ANN benchmark statistic; a method
+    * returning fewer than 5 candidates for a query (LSH with a thin
+    * bucket) is priced honestly. Each row also carries `n_candidates` —
+    * the method's touched-candidate volume (r19: the Hamming-shortlisted
+    * probe-bucket pairs for lsh, probed-list pairs for the IVF family,
+    * the full nq·(n−1) compressed scan for pq) — because recall alone
+    * cannot rank an index: 0.8 recall touching n/8 beats 0.86 touching
+    * everything. This is the query a 100 TB deployment runs on a sample
+    * before picking its index: the scoreboard is bounded no matter the
+    * corpus. Split across two registered queries so this four-method
+    * board stays cheap to re-derive: THIS one covers lsh / ivf / pq and
+    * the trained ivf_kmeans, [[annRecallTrained]] the residual-PQ
+    * ivf_pq; both are hash-checked end-to-end ([[recallSql]]).
+    * SimilaritySpec pins the floor each method must clear on this corpus
+    * across both halves.
     */
   def annRecall(s: SparkSession, dir: String): DataFrame =
     recallScoreboard(s, dir, Seq(
-      "lsh" -> lshRanked(s, dir),
-      "ivf" -> ivfRanked(s, vecs(s, dir), fixedCents(s, dir)),
-      "ivf_kmeans" -> ivfRanked(s, vecs(s, dir), cachedCoarseCents(s, dir, 16)),
-      "pq" -> pqRanked(s, unitVecs(s, dir), col("vec_id") < 10)))
+      ("lsh", lshRanked(s, dir), None),
+      ("ivf", ivfRanked(s, vecs(s, dir), fixedCents(s, dir)), None),
+      ("ivf_kmeans", ivfRanked(s, vecs(s, dir), cachedCoarseCents(s, dir, 16)), None),
+      ("pq", pqRanked(s, unitVecs(s, dir), col("vec_id") < 10), None)))
 
-  /** The residual-PQ half of the scoreboard, split out when its
-    * training was not yet SQL-reproducible and kept separate so the
-    * four-method board stays cheap to re-derive; same brute-force truth
+  /** The residual-PQ half of the scoreboard; same brute-force truth
     * frame and recall/volume algebra as [[annRecall]]. Its
     * `n_candidates` is the ADC-scored pair count (the compressed scan of
     * the probed lists, pre-shortlist) — the volume column that makes
     * ivf_pq comparable to the other rows.
     */
   def annRecallTrained(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val brute = bruteTruth(s, dir)
-    val nTruth = brute.count()
-    val (topk, adcPairs) = annIvfPqBoth(s, dir)
-    topk.select($"q_id", $"neighbor_id")
-      .join(broadcast(brute), Seq("q_id", "neighbor_id"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-      .crossJoin(adcPairs.agg(count(lit(1)).as("n_candidates")))
-      .select(lit("ivf_pq").as("method"), $"hits",
-        lit(nTruth).as("n_truth"),
-        round($"hits" / nTruth.toDouble, 4).as("recall_at_5"),
-        $"n_candidates")
+    val (ranked, adcPairs) = annIvfPqBoth(s, dir)
+    recallScoreboard(s, dir, Seq(("ivf_pq", ranked, Some(adcPairs))))
   }
 
   /** The brute-force truth frame, persisted once per (session, dir) —
@@ -1627,70 +1423,67 @@ object Similarity {
       b
     }
 
-  /** One board row per method from its FULL ranked candidate frame
-    * (rank over every scored candidate, pre-top-5): hits = |rank ≤ 5 ∩
-    * brute-force truth| and n_candidates = the frame's row count — the
-    * method's touched-candidate volume, read from the same single pass.
-    * Recall alone cannot rank an index (0.8 recall touching n/8 beats
-    * 0.86 touching the whole corpus); the volume column is what a
-    * deployment weighs it against.
+  /** One board row per method from its [[search]] frame (every scored
+    * candidate, pre-top-5): hits = |rank ≤ 5 ∩ brute-force truth| and
+    * n_candidates = the frame's row count — the method's touched volume,
+    * read from the same single pass — unless the method names its
+    * touched frame (ivf_pq's ADC scan, before its shortlist). Recall
+    * alone cannot rank an index (0.8 recall touching n/8 beats 0.86
+    * touching the whole corpus); the volume column is what a deployment
+    * weighs it against.
     */
   private def recallScoreboard(s: SparkSession, dir: String,
-      methods: Seq[(String, DataFrame)]): DataFrame = {
+      methods: Seq[(String, DataFrame, Option[DataFrame])]): DataFrame = {
     import s.implicits._
     val brute = bruteTruth(s, dir)
     val nTruth = brute.count() // = queries × 5 (persisted — cheap)
     val bruteHit = broadcast(brute.withColumn("hit", lit(1)))
-    methods.map { case (name, ranked) =>
-      ranked.select($"q_id", $"neighbor_id", $"rank")
+    val hits = count(when($"rank" <= 5, $"hit")).as("hits")
+    methods.map { case (name, ranked, touched) =>
+      val scored = ranked.select($"q_id", $"neighbor_id", $"rank")
         .join(bruteHit, Seq("q_id", "neighbor_id"), "left")
-        .agg(count(when($"rank" <= 5, $"hit")).as("hits"),
-          count(lit(1)).as("n_candidates"))
-        .select(lit(name).as("method"), $"hits",
+      touched.fold(scored.agg(hits, count(lit(1)).as("n_candidates"))) { t =>
+        scored.agg(hits).crossJoin(t.agg(count(lit(1)).as("n_candidates")))
+      }.select(lit(name).as("method"), $"hits",
           lit(nTruth).as("n_truth"),
           round($"hits" / nTruth.toDouble, 4).as("recall_at_5"),
           $"n_candidates")
     }.reduce(_.unionByName(_)).orderBy($"method")
   }
 
-  /** Oracle for the deterministic-quantizer scoreboard: each method's
-    * top-k reproduced by its own oracle chain (the registered q_ann_lsh /
-    * q_ann_ivf / q_ann_pq twins), intersected with the brute-force top-5
-    * in SQL.
+  /** [[recallScoreboard]]'s mirror: each method's [[SearchSql]] top 5
+    * intersected with the brute-force top 5, and its touched count.
     */
-  def annRecallSql: String =
-    s"""WITH brute AS (SELECT q_id, neighbor_id FROM ($annCosineTopKSql)),
-      |lshr AS (SELECT q_id, neighbor_id FROM ($lshTopKSql)),
-      |ivfr AS (SELECT q_id, neighbor_id FROM ($annIvfSql)),
-      |ivfk AS (SELECT q_id, neighbor_id FROM ($annIvfKmeansSql)),
-      |pqr AS (SELECT q_id, neighbor_id FROM ($annPqSql)),
+  private def recallSql(methods: Seq[(String, SearchSql)]): String = {
+    def each(row: ((String, SearchSql), Int) => String, sep: String) =
+      methods.zipWithIndex.map(row.tupled).mkString(sep)
+    val union = "\n  UNION ALL\n  "
+    s"""WITH brute AS (SELECT q_id, neighbor_id FROM ($annCosineTopKSql) b),
+      |${each({ case ((_, q), i) =>
+        s"r$i AS (SELECT q_id, neighbor_id FROM (${q.top}) t)" }, ",\n")},
       |nt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM brute),
       |hits AS (
-      |  SELECT 'ivf' AS method, count(*) AS hits
-      |  FROM ivfr JOIN brute USING (q_id, neighbor_id)
-      |  UNION ALL
-      |  SELECT 'ivf_kmeans', count(*) FROM ivfk JOIN brute USING (q_id, neighbor_id)
-      |  UNION ALL
-      |  SELECT 'lsh', count(*) FROM lshr JOIN brute USING (q_id, neighbor_id)
-      |  UNION ALL
-      |  SELECT 'pq', count(*) FROM pqr JOIN brute USING (q_id, neighbor_id)),
+      |  ${each({ case ((name, _), i) =>
+        s"SELECT '$name' AS method, count(*) AS hits FROM r$i JOIN brute USING (q_id, neighbor_id)" }, union)}),
       |cands AS (
-      |  SELECT 'ivf' AS method,
-      |    (SELECT n FROM (${ivfCandCountSqlFrom(
-             "cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM vn WHERE vec_id < 8)")}) t)
-      |    AS n_candidates
-      |  UNION ALL
-      |  SELECT 'ivf_kmeans',
-      |    (SELECT n FROM (${ivfCandCountSqlFrom(coarseCtesSql("SELECT 16 AS k"))}) t)
-      |  UNION ALL
-      |  SELECT 'lsh', (SELECT n FROM ($lshCandCountSql) t)
-      |  UNION ALL
-      |  SELECT 'pq', (SELECT n FROM ($pqCandCountSql) t))
+      |  ${each({ case ((name, q), _) =>
+        s"SELECT '$name' AS method, (SELECT n FROM (${q.count}) t) AS n_candidates" }, union)})
       |SELECT method, CAST(hits AS BIGINT) AS hits, n_truth,
       |  round(CAST(hits AS DOUBLE) / n_truth, 4) AS recall_at_5,
       |  CAST(n_candidates AS BIGINT) AS n_candidates
       |FROM hits JOIN cands USING (method) CROSS JOIN nt
       |ORDER BY method""".stripMargin
+  }
+
+  /** Oracle for the four-method scoreboard: each method's search oracle
+    * (the [[lshTopK]] route and the registered q_ann_ivf /
+    * q_ann_ivf_kmeans / q_ann_pq routes) through [[recallSql]].
+    */
+  def annRecallSql: String = recallSql(Seq(
+    "ivf" -> ivfSql(fixedCentsSql),
+    "ivf_kmeans" -> ivfSql(coarseCtesSql("SELECT 16 AS k")),
+    "lsh" -> lshSearchSql,
+    "pq" -> pqSql))
 
   /** Norm-decorated view of an arbitrary (vec_id, v: array<double>)
     * frame — lets specs drive the router with planted vectors.
@@ -1791,7 +1584,6 @@ object Similarity {
   private[graft] def lloyd(s: SparkSession, rows: DataFrame, kPerKey: Map[Int, Int],
       iters: Int): (Codebook, Double) = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
     val half = expr("(abs(s) * 2 + n) div (n * 2)") // |s|/n, half away from 0
     // the loop re-reads its input once per round plus the init — persist
@@ -1862,8 +1654,7 @@ object Similarity {
 
   /** The L2² of two lists as [[nearest]]'s scaled integer (micro-units). */
   private def l2MicroSql(x: String, y: String): String =
-    s"round(list_reduce([($x[i] - $y[i]) * ($x[i] - $y[i]) " +
-      s"for i in generate_series(1, len($x))], (a, b) -> a + b) * 1000000)"
+    s"round(${foldSql(x, i => s"($x[$i] - $y[$i]) * ($x[$i] - $y[$i])")} * 1000000)"
 
   /** THE argmin-L2² CTE body, [[nearest]]'s oracle mirror: each row of
     * `rows` (alias t: keys…, vec_id, `v`) against the centroids of
@@ -1875,12 +1666,9 @@ object Similarity {
       v: String = "v", c: String = "c", j: String = "j"): String = {
     val from = if (keys.isEmpty) s"$rows t CROSS JOIN $cents c"
       else s"$rows t JOIN $cents c ON " + keys.map(k => s"t.$k = c.$k").mkString(" AND ")
-    s"""SELECT * EXCLUDE (rk) FROM (
-       |  SELECT t.*, c.$j, row_number() OVER (
-       |    PARTITION BY ${(keys :+ "vec_id").map("t." + _).mkString(", ")}
-       |    ORDER BY ${l2MicroSql(s"t.$v", s"c.$c")} ASC, c.$j ASC) AS rk
-       |  FROM $from) z
-       |WHERE rk = 1""".stripMargin
+    s"SELECT * EXCLUDE (nd2, rank) FROM (" + rankedSql(
+      s"t.*, c.$j, -${l2MicroSql(s"t.$v", s"c.$c")} AS nd2", from,
+      (keys :+ "vec_id").mkString(", "), "nd2", j, "1") + ")"
   }
 
   /** [[lloyd]]'s init as SQL: each key's `k` (a SQL scalar) lowest
@@ -1888,10 +1676,9 @@ object Similarity {
     */
   private def lowestSql(input: String, keys: Seq[String], k: String): String = {
     val ks = keys.map(_ + ", ").mkString
-    val part = if (keys.isEmpty) "" else keys.mkString("PARTITION BY ", ", ", " ")
-    s"""SELECT ${ks}CAST(rn - 1 AS INT) AS j, v AS c FROM (
-       |  SELECT ${ks}v, row_number() OVER (${part}ORDER BY vec_id) AS rn FROM $input) z
-       |WHERE rn <= ($k)""".stripMargin
+    s"SELECT ${ks}CAST(rank - 1 AS INT) AS j, v AS c FROM (" +
+      rankedSql(s"${ks}vec_id, -vec_id AS nid, v", input, keys.mkString(", "), "nid",
+        "vec_id", s"($k)") + ")"
   }
 
   /** THE unrolled [[lloyd]] in DuckDB, the one generator behind every
@@ -1936,7 +1723,7 @@ object Similarity {
        |c0 AS MATERIALIZED (${lowestSql("vn", Nil, "SELECT k FROM kk")}),
        |${lloydCtesSql("", Nil, "vn", "c0", EmbedDim, CoarseIters)},
        |cents AS MATERIALIZED (
-       |  SELECT j AS cent_id, c AS cv, sqrt(${dotESql("c", "c")}) AS cnrm
+       |  SELECT j AS cent_id, c AS cv, sqrt(${dotSql("c", "c")}) AS cnrm
        |  FROM c$CoarseIters)""".stripMargin
 
   /** DuckDB re-derivation of [[hierAssignKeyed]] at one k: kk0 pins the
@@ -1945,7 +1732,7 @@ object Similarity {
     * same argmin-L2, d0 inits each branch's k2 lowest vec_ids, the
     * branch-keyed [[lloydCtesSql]] rounds end in hc<rounds>; cents2
     * flattens to cent_id = b·k2 + j and hasg is the two-level CONSUMER
-    * assignment (argmax cosine within the branch, the winning ccos
+    * assignment ([[assignSql]] within the branch, the winning ccos
     * kept). Assumes vn(vec_id, v, nrm) is defined by the enclosing WITH;
     * `kSql` must select the grounded k FROM vn.
     */
@@ -1962,17 +1749,9 @@ object Similarity {
        |${lloydCtesSql("h", Seq("b"), "basg", "d0", EmbedDim, CoarseIters)},
        |cents2 AS MATERIALIZED (
        |  SELECT d.b, CAST(d.b * kk2.k2 + d.j AS INT) AS cent_id, d.c AS cv,
-       |    sqrt(${dotESql("d.c", "d.c")}) AS cnrm
+       |    sqrt(${dotSql("d.c", "d.c")}) AS cnrm
        |  FROM hc$CoarseIters d CROSS JOIN kk2),
-       |hasg AS MATERIALIZED (
-       |  SELECT vec_id, v, nrm, cent_id, ccos FROM (
-       |    SELECT t.vec_id, t.v, t.nrm, c.cent_id,
-       |      ${cosESql("t.v", "t.nrm", "c.cv", "c.cnrm")} AS ccos,
-       |      row_number() OVER (PARTITION BY t.vec_id
-       |        ORDER BY ${cosESql("t.v", "t.nrm", "c.cv", "c.cnrm")} DESC,
-       |          c.cent_id ASC) AS rk
-       |    FROM basg t JOIN cents2 c ON t.b = c.b) z
-       |  WHERE rk = 1)""".stripMargin
+       |hasg AS MATERIALIZED (${assignSql("basg t JOIN cents2 c ON t.b = c.b", 1, "t.v, t.nrm, ")})""".stripMargin
 
   /** The corpus-grounded k as a SQL scalar — [[semDedupK]]'s
     * max(2, ceil(n/target)) re-stated over vn. A `def`: it reads vals
@@ -1988,32 +1767,39 @@ object Similarity {
     */
   val SemDedupTau = 0.4
 
+  /** THE argmax-cosine assignment: each `v` row (vec_id, v, nrm, …)
+    * against the broadcast centroids `cents` (cent_id, cv, cnrm, …) —
+    * all of them, or those sharing its `on` keys — keeping its best
+    * `keep` by (`score` DESC, cent_id ASC) as `v`'s columns plus cent_id
+    * and ccos, the winning score. One source for the IVF lists and
+    * probes, IVF-PQ's probes (its un-normalised q·c score), SemDeDup's
+    * partition and level 2 of [[hierAssignKeyed]]. Mirror: [[assignSql]].
+    */
+  private def assignTo(v: DataFrame, cents: DataFrame, keep: Int = 1, on: Seq[String] = Nil,
+      score: Column = cosine(col("v"), col("nrm"), col("cv"), col("cnrm"))): DataFrame = {
+    val pairs = if (on.isEmpty) v.crossJoin(broadcast(cents)) else v.join(broadcast(cents), on)
+    best(pairs.select(v.columns.map(col) :+ col("cent_id") :+ score.as("ccos"): _*),
+      on :+ "vec_id", col("ccos"), "cent_id", keep)
+  }
+
+  /** [[assignTo]]'s mirror: each `from` row (alias t: vec_id, v, nrm)
+    * against its centroids (alias c: cent_id, cv, cnrm), its best `keep`
+    * by (`score` DESC, cent_id ASC) as (vec_id, `carry`…, cent_id, ccos).
+    */
+  private def assignSql(from: String, keep: Int, carry: String = "",
+      score: String = cosSql("t.v", "t.nrm", "c.cv", "c.cnrm")): String =
+    s"SELECT * EXCLUDE (rank) FROM (" + rankedSql(s"t.vec_id, ${carry}c.cent_id, $score AS ccos",
+      from, "vec_id", "ccos", "cent_id", s"$keep") + ")"
+
   /** The SemDeDup cluster-then-prune sweep on any (vec_id, v, nrm)
     * frame with given centroids — factored so the spec can drive
     * planted vectors and prove pair equality with the exact sweep
     * restricted to clusters. Returns one row per vector:
     * (vec_id, cluster_id, kept).
     */
-  /** Argmax-cosine cluster assignment (the ivfSearch shape: centroid
-    * side broadcast, rounded cosine + cent_id tiebreak) — one source
-    * for SemDeDup's partition and the cluster-map report; keeps the
-    * winning cosine as `ccos`.
-    */
-  private def assignToCentroids(v: DataFrame, cents: DataFrame): DataFrame = {
-    import v.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)
-    v.crossJoin(broadcast(cents))
-      .select($"vec_id", $"v", $"nrm", $"cent_id",
-        round(dot($"v", $"cv") / ($"nrm" * $"cnrm"), 6).as("ccos"))
-      .withColumn("crk", row_number().over(wAssign))
-      .where($"crk" === 1)
-      .select($"vec_id", $"v", $"nrm", $"cent_id", $"ccos")
-  }
-
   private[graft] def semDedupOn(s: SparkSession, v: DataFrame,
       cents: DataFrame, tau: Double): DataFrame =
-    pruneAssigned(s, assignToCentroids(v, cents)
+    pruneAssigned(s, assignTo(v, cents)
       .select(col("vec_id"), col("v"), col("nrm"), col("cent_id")), tau)
 
   /** The within-cluster prune on any (vec_id, v, nrm, cent_id)
@@ -2032,7 +1818,7 @@ object Similarity {
     val b = assign.select($"cent_id", $"vec_id".as("id_y"), $"v".as("vy"), $"nrm".as("ny"))
     val dups = a.join(b, "cent_id")
       .where($"id_x" < $"id_y")
-      .where(round(dot($"vx", $"vy") / ($"nx" * $"ny"), 6) >= tau)
+      .where(cosine($"vx", $"nx", $"vy", $"ny") >= tau)
       .select($"id_y").distinct()
     assign.join(dups.withColumnRenamed("id_y", "vec_id"), Seq("vec_id"), "left_anti")
       .select($"vec_id", $"cent_id".as("cluster_id"), lit(true).as("kept"))
@@ -2102,7 +1888,6 @@ object Similarity {
     */
   private def hierAssignKeyed(s: SparkSession, rows: DataFrame, kOf: Map[Int, Int]): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val dims = kOf.map { case (key, k) => key -> hierDims(k) }
     val (cents1, _) = lloyd(s, rows, dims.map { case (key, (k1, _)) => key -> k1 }, CoarseIters)
     // the level-2 Lloyd key of branch b under key is key·stride + b
@@ -2116,14 +1901,10 @@ object Similarity {
         (key, (key % stride) * dims(key / stride)._2 + j, c) }
       .toDF("key", "cent_id", "cv")
       .withColumn("cnrm", sqrt(arrayDot($"cv", $"cv")))
-    val w = Window.partitionBy($"key", $"vec_id").orderBy($"ccos".desc, $"cent_id".asc)
-    branched.withColumn("nrm", sqrt(arrayDot($"v", $"v")))
-      .join(broadcast(cents2), "key")
-      .select($"key1".as("key"), $"vec_id", $"v", $"nrm", $"cent_id",
-        round(dot($"v", $"cv") / ($"nrm" * $"cnrm"), 6).as("ccos"))
-      .withColumn("crk", row_number().over(w))
-      .where($"crk" === 1)
-      .select($"key", $"vec_id", $"v", $"nrm", $"cent_id", $"ccos")
+    // level 2 keyed by branch: a vector's (branch key, vec_id) group is
+    // its (key, vec_id) group, each vector lying in one branch per key
+    assignTo(branched.withColumn("nrm", sqrt(arrayDot($"v", $"v"))), cents2, on = Seq("key"))
+      .select($"key1".as("key"), $"vec_id", $"v", $"nrm", $"cent_id", $"ccos")
   }
 
   /** Embedding-space CORPUS MAP — the cluster-level cartography report
@@ -2145,7 +1926,6 @@ object Similarity {
     */
   def embedClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.FloatFold.orderedSum
     val v = vecs(s, dir)
     val k = semDedupK(v.count())
     val labels = Tables.embeddings(s, dir).select($"vec_id", $"label")
@@ -2164,7 +1944,7 @@ object Similarity {
       .select($"cent_id", $"m.label".as("top_label"), (-$"m.nln").as("top_label_n"))
     assign.groupBy($"cent_id")
       .agg(count(lit(1)).as("n_vecs"),
-        round(orderedSum($"vec_id", $"ccos") / count(lit(1)), 6).as("cohesion"))
+        round(FloatFold.orderedSum($"vec_id", $"ccos") / count(lit(1)), 6).as("cohesion"))
       .join(labelCounts, "cent_id")
       .select($"cent_id".as("cluster_id"), $"n_vecs", $"cohesion",
         $"top_label", $"top_label_n")
@@ -2177,30 +1957,21 @@ object Similarity {
     * (count desc, label asc) ordering.
     */
   def embedClustersSql: String =
-    s"""WITH vv AS (SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings),
-       |vn AS MATERIALIZED (
-       |  SELECT vec_id, v, sqrt(${dotESql("v", "v")}) AS nrm FROM vv),
+    s"""WITH ${vecsCtesSql()},
        |${hierCtesSql(semDedupKSql)},
        |asg AS (SELECT vec_id, cent_id, ccos FROM hasg),
        |coh AS (
        |  SELECT cent_id, CAST(count(*) AS BIGINT) AS n_vecs,
-       |    round(${graft.functions.FloatFold.orderedSumSql("ccos", "vec_id")}
+       |    round(${FloatFold.orderedSumSql("ccos", "vec_id")}
        |      / count(*), 6) AS cohesion
        |  FROM asg GROUP BY cent_id),
        |lab AS (
        |  SELECT a.cent_id, e.label, count(*) AS ln
        |  FROM asg a JOIN embeddings e USING (vec_id)
        |  GROUP BY a.cent_id, e.label),
-       |top AS (
-       |  SELECT cent_id, label AS top_label, CAST(ln AS BIGINT) AS top_label_n
-       |  FROM (
-       |    SELECT cent_id, label, ln,
-       |      row_number() OVER (PARTITION BY cent_id
-       |        ORDER BY ln DESC, label ASC) AS rk
-       |    FROM lab) z
-       |  WHERE rk = 1)
+       |top AS (${rankedSql("cent_id, label AS top_label, ln", "lab", "cent_id", "ln", "top_label", "1")})
        |SELECT c.cent_id AS cluster_id, c.n_vecs, c.cohesion,
-       |  t.top_label, t.top_label_n
+       |  t.top_label, CAST(t.ln AS BIGINT) AS top_label_n
        |FROM coh c JOIN top t USING (cent_id)
        |ORDER BY cluster_id""".stripMargin
 
@@ -2256,14 +2027,12 @@ object Similarity {
     * [[pruneAssigned]] algebra verbatim.
     */
   def semDedupSql: String =
-    s"""WITH vv AS (SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings),
-       |vn AS MATERIALIZED (
-       |  SELECT vec_id, v, sqrt(${dotESql("v", "v")}) AS nrm FROM vv),
+    s"""WITH ${vecsCtesSql()},
        |${hierCtesSql(semDedupKSql)},
        |dups AS (
        |  SELECT DISTINCT b.vec_id AS vid
        |  FROM hasg a JOIN hasg b ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-       |  WHERE ${cosESql("a.v", "a.nrm", "b.v", "b.nrm")} >= $SemDedupTau)
+       |  WHERE ${cosSql("a.v", "a.nrm", "b.v", "b.nrm")} >= $SemDedupTau)
        |SELECT t.vec_id, t.cent_id AS cluster_id, (d.vid IS NULL) AS kept
        |FROM hasg t LEFT JOIN dups d ON t.vec_id = d.vid
        |ORDER BY t.vec_id""".stripMargin
@@ -2332,9 +2101,7 @@ object Similarity {
       s"greatest(2, CAST(ceil(count(*) / $SemDedupTargetClusterSize.0) AS INT))"
     def inst(kOfStar: String => String): String = {
       val kSel = s"SELECT ${kOfStar(kStar)} AS k FROM vn"
-      s"""(WITH vv AS (SELECT vec_id, [x::DOUBLE for x in embedding] AS v FROM embeddings),
-         |vn AS MATERIALIZED (
-         |  SELECT vec_id, v, sqrt(${dotESql("v", "v")}) AS nrm FROM vv),
+      s"""(WITH ${vecsCtesSql()},
          |${hierCtesSql(kSel)},
          |sizes AS (SELECT cent_id, count(*) AS c FROM hasg GROUP BY cent_id),
          |nn AS (SELECT count(*) AS n FROM vn),
@@ -2409,15 +2176,12 @@ object Similarity {
       .orderBy($"vec_id")
   }
 
-  val embedNormOutliersSql: String =
-    s"""WITH base AS (
-       |  SELECT vec_id, ${normSql("t")} AS nrm
-       |  FROM (SELECT vec_id, [x::DOUBLE for x in embedding] AS v
-       |        FROM embeddings) t),
+  lazy val embedNormOutliersSql: String =
+    s"""WITH ${vecsCtesSql()},
        |ints AS (
        |  SELECT vec_id, nrm,
        |    CAST(CAST(round(nrm * 1000000) AS BIGINT) AS HUGEINT) AS ni
-       |  FROM base),
+       |  FROM vn),
        |stats AS (
        |  SELECT CAST(count(*) AS HUGEINT) AS n, sum(ni) AS sv,
        |    sum(ni * ni) AS svv

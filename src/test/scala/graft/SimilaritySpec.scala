@@ -170,6 +170,35 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a == b && a.nonEmpty)
   }
 
+  test("PQ, IVF-PQ and the ranked-search builder return the same rows at 1 and 7 partitions") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    def dotOf(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
+    val vn = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select($"vec_id", transform($"embedding", _.cast("double")).as("v"))
+      .select($"vec_id", transform($"v", x => x / sqrt(dotOf($"v", $"v"))).as("vn"))
+    // the builder on its own: every vector a candidate of the 10 queries,
+    // shortlisted to 20 by a first-subspace pre-score, ranked by the dot
+    def built(in: DataFrame): DataFrame = {
+      val q = in.where($"vec_id" < 10).select($"vec_id".as("q_id"), $"vn".as("qv"))
+      Similarity.search(in.join(broadcast(q), $"vec_id" =!= $"q_id")
+        .select($"q_id", $"vec_id".as("neighbor_id"),
+          round(dotOf(slice($"qv", 1, 8), slice($"vn", 1, 8)), 6).as("pre"),
+          round(dotOf($"qv", $"vn"), 6).as("cos")), "cos", Some(($"pre", 20)))
+        .orderBy($"q_id", $"rank")
+    }
+    Seq[(String, DataFrame => DataFrame)](
+      "pqTopK" -> (Similarity.pqTopK(spark, _, $"vec_id" < 10)),
+      "ivfPqTopK" -> (Similarity.ivfPqTopK(spark, _, $"vec_id" < 10)),
+      "search" -> built).foreach { case (name, f) =>
+      val one = f(vn.repartition(1)).collect().toSeq
+      val seven = f(vn.repartition(7)).collect().toSeq
+      assert(one.nonEmpty && one == seven, s"$name differs between 1 and 7 partitions")
+    }
+  }
+
   test("Lloyd training tightens the PQ codebook against the deterministic init") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{transform => atransform, _}

@@ -5,9 +5,12 @@ compare row sets (columns sorted by name, rows sorted, values hashed).
 
 Usage: python3 tools/selfcheck.py [sfdir] [outdir] [--no-run] [names...]
 
-Named queries restrict both the Verify dump and the comparison.
+Named queries restrict both the Verify dump and the comparison. Each
+OK/FAIL line carries the engine output's row count and the SHA-1 of its
+normalised rows, so two dumps (say, before and after a refactor) can be
+diffed line for line.
 """
-import json, os, subprocess, sys, math
+import hashlib, json, os, subprocess, sys, math
 import duckdb
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -55,6 +58,10 @@ def norm(rows, cols):
     out.sort()
     return out
 
+def tag(rows):
+    """Row count and SHA-1 of normalised rows, for a line-for-line dump diff."""
+    return f"{len(rows)} rows sha1 {hashlib.sha1(chr(10).join(rows).encode()).hexdigest()}"
+
 fail = 0
 skipped = 0
 names = only if only else sorted(oracle.keys())
@@ -75,16 +82,17 @@ for name in names:
         print(f"FAIL {name}: {str(e)[:200]}")
         fail += 1
         continue
+    a = norm(spark_rows, spark_cols)
     if sorted(spark_cols) != sorted(duck_cols):
-        print(f"FAIL {name}: columns spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
+        print(f"FAIL {name} ({tag(a)}): columns spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
         fail += 1
         continue
-    a, b = norm(spark_rows, spark_cols), norm(duck_rows, duck_cols)
+    b = norm(duck_rows, duck_cols)
     if a == b:
-        print(f"OK   {name} ({len(a)} rows)")
+        print(f"OK   {name} ({tag(a)})")
     else:
         fail += 1
-        print(f"FAIL {name}: spark {len(a)} rows vs duck {len(b)} rows")
+        print(f"FAIL {name} ({tag(a)}): spark {len(a)} rows vs duck {len(b)} rows")
         sa, sb = set(a), set(b)
         for x in list(sa - sb)[:3]: print(f"  spark-only: {x[:160]}")
         for x in list(sb - sa)[:3]: print(f"  duck-only:  {x[:160]}")
