@@ -6,7 +6,11 @@ import org.apache.spark.sql.SparkSession
   * for separating plan regressions from machine noise (each rep prints
   * its own wall time; variance across reps on identical plans = noise).
   * Every rep starts from [[BenchIntegrity.coldReset]], so a rep after
-  * the first times the query, not its `SessionCache` memos.
+  * the first times the query, not its `SessionCache` memos. The host
+  * load gate ([[BenchIntegrity.gate]]) runs once before the first rep
+  * and prints its JSON; each rep's `TIMING` line carries the 1-minute
+  * loadavg at its start, so a rep timed on a loaded host is visible as
+  * one.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -20,12 +24,14 @@ object BenchOne {
     val known = SparkEntry.all.map(_.name).toSet
     require((wanted -- known).isEmpty,
       s"unknown queries: ${(wanted -- known).mkString(", ")}")
+    println(s"GATE ${BenchIntegrity.gate("BenchOne").json("{}")}")
     SparkEntry.all.filter(q => wanted(q.name)).foreach { q =>
       (1 to reps).foreach { r =>
         BenchIntegrity.coldReset(spark)
+        val load = BenchIntegrity.loadavg()
         val t0 = System.nanoTime()
         q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        println(f"TIMING ${q.name} rep$r ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        println(f"TIMING ${q.name} rep$r ${(System.nanoTime() - t0) / 1e9}%.2f s loadavg=$load%.2f")
       }
     }
     spark.stop()

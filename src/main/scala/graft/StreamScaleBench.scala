@@ -7,8 +7,11 @@ package graft
   * sessionization) over the base corpus and the 10× ScaleData events
   * (same 3-chunk arrival shape, 10× volume per micro-batch) and records
   * wall time NEXT TO the state-store posture: max keyed-state rows and
-  * bytes any micro-batch held ([[graft.streaming.StreamQueries
-  * .lastDriveStats]], read from the query progress ring).
+  * bytes any micro-batch held, and the drive's micro-batch phase times
+  * summed over its batches ([[graft.streaming.StreamQueries
+  * .lastDriveStats]], read from the query progress ring). A head whose
+  * run recorded no drive fails the bench rather than print the previous
+  * drive's numbers.
   *
   * The claim under test: state is WATERMARK-bounded by construction —
   * the join horizon, dedup key horizon, and open-session set are all
@@ -62,15 +65,20 @@ object StreamScaleBench {
       .write.format("noop").mode("overwrite").save()
 
     def drive(name: String, dir: String): String = {
+      val before = graft.streaming.StreamQueries.lastDriveStats.get().seq
       val t0 = System.nanoTime()
       byName(name).fn(spark, dir).write.format("noop").mode("overwrite").save()
       val t = (System.nanoTime() - t0) / 1e9
       val st = graft.streaming.StreamQueries.lastDriveStats.get()
+      // stats left over from an earlier drive would be misattributed
+      require(st.seq != before, s"$name on $dir recorded no stream drive")
+      val phases = st.phasesMs.map { case (k, v) => s"$k=$v" }.mkString(" ")
       println(f"STREAMSCALE $name $dir $t%.2f s state_rows=${st.maxStateRows} " +
-        f"state_mb=${st.maxStateBytes / 1e6}%.1f batches=${st.batches}")
+        f"state_mb=${st.maxStateBytes / 1e6}%.1f batches=${st.batches} $phases")
       s"""{"sec":${f(t)},"batches":${st.batches},""" +
         s""""max_state_rows":${st.maxStateRows},""" +
-        s""""max_state_bytes":${st.maxStateBytes}}"""
+        s""""max_state_bytes":${st.maxStateBytes},""" +
+        s""""phases_ms":${st.phasesMs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")}}"""
     }
 
     // store posture after a drive: data files and rows per managed

@@ -20,16 +20,20 @@ object EventsStream {
 
   /** RAM-backed checkpoint directory for one stream drive. A stateful
     * query commits per-partition state-store delta files plus offset/
-    * commit logs EVERY micro-batch; with the default temp location that
-    * is fsync-heavy small-file IO on the root disk. The drives here
-    * feed from an in-process MemoryStream — already non-recoverable
-    * across JVMs — so a RAM-disk checkpoint changes the durability of
-    * nothing the harness could replay anyway (VERDICT r21 #4). A
-    * production deployment keeps its checkpoint on durable storage and
-    * sets SPARK_GRAFT_STREAM_CKPT (or simply does not run this
-    * harness); falls back to java.io.tmpdir when /dev/shm is absent.
-    * Drives take it through [[withCheckpoint]], which deletes it on
-    * every exit path.
+    * commit logs EVERY micro-batch, each one a small temp-file write
+    * and rename. The measured cost of those commits was not the IO:
+    * through Hadoop's local filesystem without native IO, every create
+    * and rename forked a `chmod` or `readlink` process, which is why
+    * [[StreamQueries.drive]] runs them through the in-JVM
+    * [[LocalCheckpointFileManager]]. The directory is always local, the
+    * one kind of path that manager accepts. The drives here feed from
+    * an in-process MemoryStream — already non-recoverable across JVMs —
+    * so a RAM-disk checkpoint changes the durability of nothing the
+    * harness could replay anyway (VERDICT r21 #4). A production
+    * deployment keeps its checkpoint on durable storage and sets
+    * SPARK_GRAFT_STREAM_CKPT (or simply does not run this harness);
+    * falls back to java.io.tmpdir when /dev/shm is absent. Drives take
+    * it through [[withCheckpoint]], which deletes it on every exit path.
     */
   private def ramCheckpoint(tag: String): java.io.File = {
     val dir = new java.io.File(checkpointRoot,

@@ -34,78 +34,116 @@ object StreamQueries {
     * partition count while sf0.1 micro-batch volumes (thousands of
     * rows) need only a few. State-store count is a property of the
     * CLUSTER a production stream runs on, not of the corpus — the
-    * batch engine keeps its 32; only the stream drives narrow. Hash
-    * partitioning by key means the override cannot change results,
-    * only where state lives. 4, picked by the round-18
-    * measured sweep over {4, 8, 32} (SURVEY §8j): q_stream_click_attrib
-    * 25.7 → 5.6 s (two sources ⇒ two state stores per partition per
-    * micro-batch, so it pays the per-partition fixed cost twice),
-    * q_stream_dedup_exact 6.5 → 2.7 s, q_stream_neardup 3.7 → 2.2 s,
-    * with no drive slower at 4 than at 8.
+    * batch engine keeps the session's core-count setting; only the
+    * stream drives narrow. Hash partitioning by key means the override
+    * cannot change results, only where state lives. 4, picked by the
+    * round-18 measured sweep over {4, 8, 32} (SURVEY §8j):
+    * q_stream_click_attrib 25.7 → 5.6 s (two sources ⇒ two state
+    * stores per partition per micro-batch, so it pays the per-partition
+    * fixed cost twice), q_stream_dedup_exact 6.5 → 2.7 s,
+    * q_stream_neardup 3.7 → 2.2 s, with no drive slower at 4 than at 8.
     */
   private val StreamShuffleParts = "4"
 
-  /** Pin `spark.sql.shuffle.partitions` to [[StreamShuffleParts]] for
-    * the duration of one stream drive (the value is latched when the
-    * streaming query STARTS), restoring the session's batch setting
-    * after — oracle SQL and batch twins still run at the session's 32.
+  /** The session conf naming the class Spark instantiates for every
+    * checkpoint file operation of a streaming query (offset and commit
+    * logs, state-store files, their checksums).
     */
-  private def withStreamParts[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, StreamShuffleParts)
-    try body finally s.conf.set(key, prev)
+  private[graft] val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** The one stream-drive scope every registered stream head runs in.
+    *
+    * For the duration of the drive it pins `spark.sql.shuffle.partitions`
+    * to [[StreamShuffleParts]] and the checkpoint file manager to
+    * [[LocalCheckpointFileManager]] (both latch when the query starts;
+    * oracle SQL and batch twins keep the session's settings), and makes
+    * a fresh local checkpoint directory ([[EventsStream.withCheckpoint]]).
+    * `start` receives that directory and starts the query; each `feeds`
+    * entry then pushes one arrival batch into the query's sources and
+    * the drive waits for it with `processAllAvailable`. However the
+    * drive ends — a failing `start`, feed or batch — it records the
+    * drive's [[DriveStats]] (when a query was started), stops the
+    * query, drops the checkpoint directory and restores both confs.
+    */
+  private[graft] def drive(s: SparkSession, tag: String)(start: String => StreamingQuery)(
+      feeds: Seq[() => Unit]): Unit =
+    withConfs(s, "spark.sql.shuffle.partitions" -> StreamShuffleParts,
+        CheckpointManagerKey -> classOf[LocalCheckpointFileManager].getName) {
+      EventsStream.withCheckpoint(tag) { ckpt =>
+        val q = start(ckpt.getAbsolutePath)
+        try feeds.foreach { feed => feed(); q.processAllAvailable() }
+        finally try recordDrive(tag, q) finally q.stop()
+      }
+    }
+
+  /** Set session confs for the body, then restore each to its previous
+    * value, or unset it when it had none.
+    */
+  private def withConfs[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
   }
 
   /** Run one streaming plan to completion over pre-chunked arrivals:
     * fresh MemoryStream, one micro-batch per chunk (each addData call
     * is one source block, so a chunk arrives as ONE ordered input
     * partition — what makes first-arrival stateful dedup deterministic
-    * in the feed order), memory sink, stop, return the sink table.
+    * in the feed order), memory sink, return the sink table.
     */
   private[graft] def runStream[A: Encoder](s: SparkSession, chunks: Seq[Seq[A]],
       build: Dataset[A] => DataFrame, sink: String,
-      mode: OutputMode = OutputMode.Append): DataFrame = withStreamParts(s) {
+      mode: OutputMode = OutputMode.Append): DataFrame = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val mem = MemoryStream[A]
-    // RAM-backed checkpoint (EventsStream.ramCheckpoint): the per-batch
-    // state-store/offset-log commits are small-file IO the MemoryStream
-    // harness cannot replay anyway; deleted however the drive ends
-    EventsStream.withCheckpoint(sink) { ckpt =>
-      val q = build(mem.toDS()).writeStream.format("memory")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
+    drive(s, sink) { ckpt =>
+      build(mem.toDS()).writeStream.format("memory")
+        .option("checkpointLocation", ckpt)
         .queryName(sink).outputMode(mode).start()
-      try chunks.foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-      finally { recordDrive(sink, q); q.stop() }
-    }
+    }(chunks.map(c => () => mem.addData(c: _*)))
     s.table(sink)
   }
 
-  /** State-store evidence for the scale bench (r19 ask #5): the max
-    * keyed-state row count / bytes any micro-batch held — the number
-    * that must stay WATERMARK-bounded (cluster-sized), not corpus-sized,
-    * as volume grows. Read from the query's progress ring before stop()
-    * (recentProgress keeps far more entries than the 3-5 batches a
-    * drive runs).
+  /** Phases of `StreamingQueryProgress.durationMs` a drive sums over
+    * its micro-batches, in [[DriveStats.phasesMs]].
+    */
+  private val Phases = Seq("triggerExecution", "addBatch", "walCommit",
+    "queryPlanning", "getBatch", "latestOffset", "commitOffsets")
+
+  private val driveSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Record one drive's posture from the query's progress ring before
+    * stop() (recentProgress keeps far more entries than the 3-5
+    * batches a drive runs): the batch count, the max keyed-state row
+    * count / bytes any micro-batch held — the number that must stay
+    * WATERMARK-bounded (cluster-sized), not corpus-sized, as volume
+    * grows (r19 ask #5) — and the per-phase time summed over the
+    * batches.
     */
   private def recordDrive(sink: String, q: StreamingQuery): Unit = {
-    val stateOps = q.recentProgress.flatMap(p =>
-      Option(p.stateOperators).toSeq.flatten)
-    lastDriveStats.set(DriveStats(sink, q.recentProgress.length,
+    val progress = q.recentProgress
+    val stateOps = progress.flatMap(p => Option(p.stateOperators).toSeq.flatten)
+    val phases = Phases.map { k =>
+      k -> progress.iterator.map(p => Option(p.durationMs.get(k)).fold(0L)(_.longValue)).sum
+    }
+    lastDriveStats.set(DriveStats(driveSeq.incrementAndGet(), sink, progress.length,
       if (stateOps.isEmpty) 0L else stateOps.map(_.numRowsTotal).max,
-      if (stateOps.isEmpty) 0L else stateOps.map(_.memoryUsedBytes).max))
+      if (stateOps.isEmpty) 0L else stateOps.map(_.memoryUsedBytes).max,
+      phases))
   }
 
-  /** Snapshot of the most recent [[runStream]] drive's state-store
-    * posture, for StreamScaleBench — batch count plus the per-batch
-    * maxima of keyed-state rows and bytes across all stateful
-    * operators in the plan.
+  /** Snapshot of the most recent [[drive]], for StreamScaleBench: a
+    * sequence number that advances once per recorded drive, the batch
+    * count, the per-batch maxima of keyed-state rows and bytes across
+    * all stateful operators in the plan, and the summed [[Phases]]
+    * in ms.
     */
-  private[graft] final case class DriveStats(sink: String, batches: Int,
-      maxStateRows: Long, maxStateBytes: Long)
+  private[graft] final case class DriveStats(seq: Long, sink: String, batches: Int,
+      maxStateRows: Long, maxStateBytes: Long, phasesMs: Seq[(String, Long)])
   private[graft] val lastDriveStats =
     new java.util.concurrent.atomic.AtomicReference[DriveStats](
-      DriveStats("", 0, 0L, 0L))
+      DriveStats(0L, "", 0, 0L, 0L, Phases.map(_ -> 0L)))
 
   /** The events table as time-ordered arrival batches: three chunks cut
     * at ts boundaries (equal-ts rows never split across chunks — the
@@ -276,17 +314,11 @@ object StreamQueries {
       .select($"user_id", $"ts").as[(Long, java.sql.Timestamp)]
       .collect().sortBy(_._2.getTime)
     val half = evs.length / 2
-    withStreamParts(s) {
-      val mem = MemoryStream[(Long, java.sql.Timestamp)]
-      EventsStream.withCheckpoint(tbl) { ckpt =>
-        val q = EventsStream.sketchStoreStream(s, mem.toDF().toDF("user_id", "ts"),
-          tbl, Some(ckpt.getAbsolutePath))
-        try {
-          mem.addData(evs.take(half).toIndexedSeq: _*); q.processAllAvailable()
-          mem.addData(evs.drop(half).toIndexedSeq: _*); q.processAllAvailable()
-        } finally q.stop()
-      }
-    }
+    val mem = MemoryStream[(Long, java.sql.Timestamp)]
+    drive(s, tbl) { ckpt =>
+      EventsStream.sketchStoreStream(s, mem.toDF().toDF("user_id", "ts"), tbl, Some(ckpt))
+    }(Seq(evs.take(half), evs.drop(half))
+      .map(c => () => mem.addData(c.toIndexedSeq: _*)))
     val streamed = Corpus.rollingEstFromSketches(s.table(tbl))
       .select($"day", $"est_users".as("streamed_est"))
     val du = EventOps.events(s, dir)
@@ -641,23 +673,16 @@ object StreamQueries {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val chunks = eventChunks(s, dir)
-    withStreamParts(s) {
-      val clicks = MemoryStream[Event]
-      val purchases = MemoryStream[Event]
-      EventsStream.withCheckpoint("graft_stream_click_attrib") { ckpt =>
-        val q = EventsStream.clickPurchaseJoin(
-            clicks.toDF().where($"event_type" === "click"),
-            purchases.toDF().where($"event_type" === "purchase"))
-          .writeStream.format("memory").queryName("graft_stream_click_attrib")
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .outputMode(OutputMode.Append).start()
-        try chunks.foreach { c =>
-          clicks.addData(c: _*)
-          purchases.addData(c: _*)
-          q.processAllAvailable()
-        } finally { recordDrive("graft_stream_click_attrib", q); q.stop() }
-      }
-    }
+    val clicks = MemoryStream[Event]
+    val purchases = MemoryStream[Event]
+    drive(s, "graft_stream_click_attrib") { ckpt =>
+      EventsStream.clickPurchaseJoin(
+          clicks.toDF().where($"event_type" === "click"),
+          purchases.toDF().where($"event_type" === "purchase"))
+        .writeStream.format("memory").queryName("graft_stream_click_attrib")
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append).start()
+    }(chunks.map(c => () => { clicks.addData(c: _*); purchases.addData(c: _*) }))
     s.table("graft_stream_click_attrib")
       .select($"user_id", $"click_id", $"purchase_id",
         $"click_ts", $"purchase_ts")
@@ -710,18 +735,12 @@ object StreamQueries {
     val delta = docs.where($"doc_id" % 4 === 3)
       .as[(Long, String)].collect().sortBy(_._1)
     val half = delta.length / 2
-    withStreamParts(s) {
-      val mem = MemoryStream[(Long, String)]
-      EventsStream.withCheckpoint(labT) { ckpt =>
-        val q = EventsStream.clusterMaintainStream(s,
-          mem.toDF().toDF("doc_id", "text"), sigT, labT,
-          checkpointDir = Some(ckpt.getAbsolutePath))
-        try {
-          mem.addData(delta.take(half).toIndexedSeq: _*); q.processAllAvailable()
-          mem.addData(delta.drop(half).toIndexedSeq: _*); q.processAllAvailable()
-        } finally { recordDrive(labT, q); q.stop() }
-      }
-    }
+    val mem = MemoryStream[(Long, String)]
+    drive(s, labT) { ckpt =>
+      EventsStream.clusterMaintainStream(s, mem.toDF().toDF("doc_id", "text"), sigT, labT,
+        checkpointDir = Some(ckpt))
+    }(Seq(delta.take(half), delta.drop(half))
+      .map(c => () => mem.addData(c.toIndexedSeq: _*)))
     s.table(labT).select($"doc_id", $"cluster_id").orderBy($"doc_id")
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import graft.streaming.EventsStream
 import graft.streaming.EventsStream.{Event, SessionAgg}
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -414,5 +416,64 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         ds => ds.groupBy($"value").count(), sink)
     }
     assert(leftovers.isEmpty, s"checkpoint leaked: $leftovers")
+  }
+
+  test("a stream drive forks no process that touches its checkpoint directory") {
+    import scala.jdk.CollectionConverters._
+    val prefix = s"graft_ckpt_${ProcessHandle.current().pid()}_graft_stream_dedup_exact_"
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val jfr = Files.createTempFile("graft_drive", ".jfr")
+    val starts = try {
+      graft.streaming.StreamQueries.streamDedupExact(spark, "/root/testdata/sf0.001")
+        .write.format("noop").mode("overwrite").save()
+      // a fork the recording must see, so an empty result means "none
+      // forked", not "nothing recorded"
+      new ProcessBuilder("true").start().waitFor()
+      rec.stop()
+      rec.dump(jfr)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(e => String.valueOf(e.getString("command"))).toSeq
+    } finally { rec.close(); Files.deleteIfExists(jfr) }
+    assert(starts.exists(_.split(' ').head.endsWith("true")),
+      s"the recording saw no fork at all: $starts")
+    val touching = starts.filter(_.contains(prefix))
+    if (touching.nonEmpty)
+      fail(s"${touching.size} forks named the checkpoint, e.g. ${touching.take(3).mkString("; ")}")
+  }
+
+  test("a drive whose feed throws drops its checkpoint and restores both confs") {
+    import graft.streaming.StreamQueries
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val tag = "graft_spec_failing_feed"
+    val prefix = s"graft_ckpt_${ProcessHandle.current().pid()}_${tag}_"
+    def leftovers = Option(new java.io.File(EventsStream.checkpointRoot).list())
+      .toSeq.flatten.filter(_.startsWith(prefix))
+    val partsKey = "spark.sql.shuffle.partitions"
+    val parts = spark.conf.get(partsKey)
+    val manager = spark.conf.getOption(StreamQueries.CheckpointManagerKey)
+    val mem = MemoryStream[Long]
+    var during = Option.empty[(String, Option[String])]
+    val e = intercept[IllegalStateException] {
+      StreamQueries.drive(spark, tag) { ckpt =>
+        during = Some(spark.conf.get(partsKey) ->
+          spark.conf.getOption(StreamQueries.CheckpointManagerKey))
+        mem.toDF().writeStream.format("memory").queryName(tag)
+          .option("checkpointLocation", ckpt).start()
+      }(Seq(() => mem.addData(1L, 2L),
+        () => throw new IllegalStateException("second feed failed")))
+    }
+    assert(e.getMessage == "second feed failed")
+    assert(during == Some("4" -> Some(classOf[graft.streaming.LocalCheckpointFileManager].getName)))
+    // the first feed ran through the engine before the second failed
+    assert(spark.table(tag).as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    assert(spark.streams.active.isEmpty)
+    assert(StreamQueries.lastDriveStats.get().sink == tag)
+    assert(leftovers.isEmpty, s"checkpoint leaked: $leftovers")
+    assert(spark.conf.get(partsKey) == parts)
+    assert(spark.conf.getOption(StreamQueries.CheckpointManagerKey) == manager)
   }
 }
