@@ -23,8 +23,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * library that filesystem forks an OS process for two calls a stream
   * makes on every micro-batch: each temp-file create sets permissions
   * (`chmod`), and each temp-file rename reads the link status
-  * (`readlink`). One `q_stream_dedup_exact` drive forked about 640 of
-  * them. This manager forks none.
+  * (`readlink`). On a 4-core Linux host without native IO, one
+  * `q_stream_dedup_exact` drive of the end-to-end benchmark forked
+  * about 640 of them. This manager forks none.
   *
   * Contract (the one `HDFSMetadataLog` and the state stores rely on):
   *  - `createAtomic` writes a sibling temp file; its bytes become
