@@ -5,13 +5,26 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions for text semantics Spark's built-ins can't
-  * express. All have `doGenCode` so they stay inside whole-stage codegen
-  * (the generated code calls the static evaluators below — same pattern
-  * Spark uses for its own string expressions).
+  * express, and for per-document kernels whose declarative form would be
+  * interpreted lambdas or an explode → shuffle → aggregate plan. All have
+  * `doGenCode` so they stay inside whole-stage codegen (the generated
+  * code calls the static evaluators below — same pattern Spark uses for
+  * its own string expressions):
+  *
+  *  - text: [[TokenizeWs]], [[StripAccents]], [[StemDutch]],
+  *    [[DamerauLevenshtein]];
+  *  - vectors: [[ArrayDot]];
+  *  - sketches: [[WordNGrams]] (word n-grams and shingles), [[Hash60]]
+  *    (the engines' shared 60-bit md5 hash), [[MinHashSig]] (the
+  *    16-hash MinHash signature) and [[SimHash]] (the 60-bit SimHash
+  *    fingerprint).
   */
 object GraftExpressions {
   def stripAccents(c: Column): Column =
@@ -25,6 +38,14 @@ object GraftExpressions {
     GraftBridge.column(ArrayDot(GraftBridge.expression(a), GraftBridge.expression(b)))
   def tokenizeWs(c: Column): Column =
     GraftBridge.column(TokenizeWs(GraftBridge.expression(c)))
+  def wordNGrams(toks: Column, lo: Int, hi: Int, distinct: Boolean): Column =
+    GraftBridge.column(WordNGrams(GraftBridge.expression(toks), lo, hi, distinct))
+  def hash60(c: Column): Column =
+    GraftBridge.column(Hash60(GraftBridge.expression(c)))
+  def minhashSig(shingles: Column): Column =
+    GraftBridge.column(MinHashSig(GraftBridge.expression(shingles)))
+  def simHash(toks: Column): Column =
+    GraftBridge.column(SimHash(GraftBridge.expression(toks)))
 }
 
 /** Whitespace tokenization fused into one codegen'd expression — the
@@ -237,4 +258,237 @@ case class ArrayDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ArrayDot =
     copy(left = newLeft, right = newRight)
+}
+
+/** Word n-grams of a token array: for n = lo..hi in turn, every window of
+  * n consecutive tokens joined by single spaces, in token order — the
+  * values of `filter(transform(toks, (_, i) => when(i + n <= size(toks),
+  * array_join(slice(toks, i + 1, n), " "))), _.isNotNull)` per n,
+  * concatenated, with `array_distinct` applied when `distinct` (the first
+  * occurrence is kept). Null tokens are skipped inside a window as
+  * `array_join` skips them. One compiled pass with no per-element lambda
+  * dispatch: the shingle builder of the dedup family (3..3, distinct) and
+  * the 1-3-gram featurizer of the classifiers and text queries.
+  */
+case class WordNGrams(child: Expression, lo: Int, hi: Int, distinct: Boolean)
+    extends UnaryExpression {
+  require(1 <= lo && lo <= hi, s"n-gram range $lo..$hi")
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<string> argument, got ${other.catalogString}")
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    WordNGrams.grams(input.asInstanceOf[ArrayData], lo, hi, distinct)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.WordNGrams.grams($c, $lo, $hi, $distinct)")
+  override protected def withNewChildInternal(newChild: Expression): WordNGrams =
+    copy(child = newChild)
+}
+
+object WordNGrams {
+  def grams(toks: ArrayData, lo: Int, hi: Int, distinct: Boolean): ArrayData = {
+    val n = toks.numElements()
+    val words = new Array[UTF8String](n)
+    var i = 0
+    while (i < n) {
+      if (!toks.isNullAt(i)) words(i) = toks.getUTF8String(i)
+      i += 1
+    }
+    val out = new java.util.ArrayList[AnyRef]()
+    val seen = if (distinct) new java.util.HashSet[UTF8String]() else null
+    var k = lo
+    while (k <= hi) {
+      i = 0
+      while (i + k <= n) {
+        val g = join(words, i, k)
+        if (seen == null || seen.add(g)) out.add(g)
+        i += 1
+      }
+      k += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  /** `array_join(words[from, from + k), " ")`: nulls skipped. */
+  private def join(words: Array[UTF8String], from: Int, k: Int): UTF8String = {
+    var len = -1
+    var j = from
+    while (j < from + k) {
+      if (words(j) != null) len += words(j).numBytes + 1
+      j += 1
+    }
+    val bytes = new Array[Byte](math.max(len, 0))
+    var pos = 0
+    var first = true
+    j = from
+    while (j < from + k) {
+      val w = words(j)
+      if (w != null) {
+        if (first) first = false
+        else { bytes(pos) = ' '; pos += 1 }
+        w.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET + pos)
+        pos += w.numBytes
+      }
+      j += 1
+    }
+    UTF8String.fromBytes(bytes)
+  }
+}
+
+/** The 60-bit hash both engines compute: the first 15 hex digits of
+  * md5 over the string's UTF-8 bytes, read as an unsigned integer — the
+  * value of `conv(substring(md5(s), 1, 15), 16, 10)` cast to bigint, and
+  * of the oracle's `('0x' || substr(md5(s), 1, 15))::BIGINT`, without
+  * the hex string and the base conversion in between.
+  */
+case class Hash60(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
+
+  override protected def nullSafeEval(input: Any): Any =
+    Hash60.of(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Hash60.of($c)")
+  override protected def withNewChildInternal(newChild: Expression): Hash60 =
+    copy(child = newChild)
+}
+
+object Hash60 {
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  def of(s: UTF8String): Long = {
+    val d = md5.get().digest(s.getBytes)
+    var hi = 0L
+    var i = 0
+    while (i < 8) { hi = (hi << 8) | (d(i) & 0xffL); i += 1 }
+    hi >>> 4
+  }
+}
+
+/** The 16-hash MinHash signature of a shingle array: for each hash
+  * h_i(x) = (a_i·x + b_i) mod P over x = hash60(shingle) mod P, the
+  * minimum over the array's shingles — per document, the values the
+  * grouped form `min((a_i·x + b_i) % P) GROUP BY doc_id, i` over exploded
+  * shingle rows computes. Null for an array without shingles (the
+  * grouped form has no row for such a document). The hash parameters
+  * live here so the batch, incremental and streaming signatures and the
+  * oracle SQL (`Dedup.hashParams`) read one definition.
+  */
+case class MinHashSig(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<string> argument, got ${other.catalogString}")
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    MinHashSig.sig(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.MinHashSig.sig($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
+    copy(child = newChild)
+}
+
+object MinHashSig {
+  /** The 2³¹−1 prime field of the hash family. */
+  val P: Long = 2147483647L
+  val NumHashes = 16
+  val A: Array[Long] = Array.tabulate(NumHashes)(i => ((i + 1) * 2654435761L) % P)
+  val B: Array[Long] = Array.tabulate(NumHashes)(i => ((i + 1) * 2654921567L) % P)
+
+  def sig(shingles: ArrayData): ArrayData = {
+    val mins = Array.fill(NumHashes)(Long.MaxValue)
+    var any = false
+    var i = 0
+    while (i < shingles.numElements()) {
+      if (!shingles.isNullAt(i)) {
+        any = true
+        val x = Hash60.of(shingles.getUTF8String(i)) % P
+        var h = 0
+        while (h < NumHashes) {
+          // a, x < 2³¹ and b < 2³¹: the product and sum stay below 2⁶³
+          val v = (A(h) * x + B(h)) % P
+          if (v < mins(h)) mins(h) = v
+          h += 1
+        }
+      }
+      i += 1
+    }
+    if (any) UnsafeArrayData.fromPrimitiveArray(mins) else null
+  }
+}
+
+/** The tf-weighted 60-bit SimHash fingerprint of a token array: bit j is
+  * set when Σ_tokens (2·bit_j(hash60(token)) − 1) > 0, summed over every
+  * occurrence (so a token weighs its term frequency) — the value of the
+  * grouped form that counts (doc, token) rows, sums tf·(±1) per bit and
+  * ORs the positive bits. Null for an array without tokens (the grouped
+  * form has no row for such a document); null tokens are skipped.
+  */
+case class SimHash(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<string> argument, got ${other.catalogString}")
+  }
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val toks = input.asInstanceOf[ArrayData]
+    if (SimHash.hasTokens(toks)) SimHash.fingerprint(toks) else null
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.isNull} = !graft.functions.SimHash.hasTokens($c);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.SimHash.fingerprint($c);""".stripMargin)
+  override protected def withNewChildInternal(newChild: Expression): SimHash =
+    copy(child = newChild)
+}
+
+object SimHash {
+  val Bits = 60
+
+  def hasTokens(toks: ArrayData): Boolean = {
+    var i = 0
+    while (i < toks.numElements()) {
+      if (!toks.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
+  def fingerprint(toks: ArrayData): Long = {
+    val w = new Array[Long](Bits)
+    var i = 0
+    while (i < toks.numElements()) {
+      if (!toks.isNullAt(i)) {
+        val x = Hash60.of(toks.getUTF8String(i))
+        var j = 0
+        while (j < Bits) {
+          w(j) += ((x >>> j) & 1L) * 2 - 1
+          j += 1
+        }
+      }
+      i += 1
+    }
+    var fp = 0L
+    var j = 0
+    while (j < Bits) {
+      if (w(j) > 0) fp |= 1L << j
+      j += 1
+    }
+    fp
+  }
 }

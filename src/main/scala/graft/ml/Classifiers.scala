@@ -1,7 +1,7 @@
 package graft.ml
 
 import graft.{GraftQuery, SessionCache, Tables}
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{GraftExpressions, TextFunctions => TF}
 import org.apache.spark.ml.{Estimator, Pipeline, PipelineStage, Transformer}
 import org.apache.spark.ml.classification._
 import org.apache.spark.ml.feature.{HashingTF, IDF}
@@ -35,14 +35,8 @@ object Classifiers {
     // predictions. The fit cost dominates this family anyway.
     Tables.documents(s, dir)
       .select($"doc_id", ($"lang" === "en").cast("double").as("label"),
-        TF.tokens($"text").as("toks"))
-      .select($"doc_id", $"label",
-        flatten(array((1 to 3).map { n =>
-          filter(
-            transform($"toks", (_, i) =>
-              when(i + n <= size($"toks"), array_join(slice($"toks", i + 1, lit(n)), " "))),
-            g => g.isNotNull)
-        }: _*)).as("grams"))
+        GraftExpressions.wordNGrams(TF.tokens($"text"), 1, 3, distinct = false)
+          .as("grams"))
   }
 
   /** TF-IDF featurizer shared by every model (HashingTF keeps the

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{GraftExpressions => GE, MinHashSig, TextFunctions => TF}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,14 +11,21 @@ import org.apache.spark.sql.functions._
   * Candidate generation never goes all-pairs: exact dedup is one hash
   * aggregation; jaccard candidates come from an inverted shingle join;
   * MinHash-LSH candidates from band-bucket equality. Token/shingle hashes
-  * are 60-bit integers derived from md5 hex so the DuckDB oracle computes
-  * the identical values.
+  * are the top 60 bits of md5 (the [[graft.functions.Hash60]] kernel),
+  * which the DuckDB oracle computes as the first 15 hex digits of md5.
+  * Shingles, MinHash signatures and SimHash fingerprints are per-document
+  * kernels ([[graft.functions.WordNGrams]], [[MinHashSig]],
+  * [[graft.functions.SimHash]]) evaluated in one projection: no plan
+  * here explodes a document into shingle or token rows only to group
+  * them back by doc_id.
   */
 object Dedup {
 
-  /** 60-bit integer hash from the md5 hex prefix — stable across engines. */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
+  /** 60-bit integer hash from the md5 hex prefix — stable across engines:
+    * `conv(substring(md5(c), 1, 15), 16, 10)` as bigint, computed from
+    * the digest bytes.
+    */
+  def hash60(c: Column): Column = GE.hash60(c)
 
   def hash60Sql(inner: String): String =
     s"('0x' || substr(md5($inner), 1, 15))::BIGINT"
@@ -41,48 +48,44 @@ object Dedup {
     // kernel (Tables.fanOut is a no-op whenever the scan already
     // parallelizes)
     Tables.fanOut(docs, docs("doc_id"))
-      .select($"doc_id", TF.tokens($"text").as("toks"))
-      .select($"doc_id", shingleArrFromToks($"toks").as("arr"))
+      .select($"doc_id", shingleArrFromToks(TF.tokens($"text")).as("arr"))
   }
 
-  /** The distinct word 3-gram array from a MATERIALIZED tokens column
-    * (callers project toks in a prior select — higher-order functions
-    * are CodegenFallback, so an inlined tokens expression would
-    * re-tokenize per reference). One source for the batch builder and
-    * the row-local streaming signature.
+  /** The distinct word 3-gram array of a tokens column, first
+    * occurrences in token order. One source for the batch builder and
+    * the row-local streaming signature; a compiled kernel, so the tokens
+    * expression may be passed inline.
     */
   private[graft] def shingleArrFromToks(toks: Column): Column =
-    array_distinct(
-      filter(
-        transform(toks, (_, i) =>
-          when(i + 3 <= size(toks), array_join(slice(toks, i + 1, lit(3)), " "))),
-        g => g.isNotNull))
+    GE.wordNGrams(toks, 3, 3, distinct = true)
 
-  /** ROW-LOCAL 16-hash MinHash signature from a materialized
-    * shingle-hash array — the same VALUES as [[minhashWide]]'s grouped
-    * mins (min over exploded rows ≡ array_min over the same per-doc
-    * hash list), computed with zero cross-row aggregation so it
-    * composes with Structured Streaming's stateless stages (a streaming
-    * groupBy would be a stateful operator). Callers materialize the
-    * hash array (`transform(arr, s => hash60(s) % P)`) in a prior
-    * projection — it is referenced once per hash function — and filter
-    * empty shingle arrays first (array_min of an empty array is null;
-    * the batch path simply emits no rows for sub-3-token docs).
+  /** A document's 16-hash MinHash signature from its text (null when it
+    * has no shingles) — row-local, so the batch, incremental and
+    * streaming paths all sign a document with this one kernel and no
+    * cross-row aggregation (a streaming groupBy would be a stateful
+    * operator).
     */
-  private[graft] def rowSignature(xarr: Column): Column =
-    array(hashParams.map { case (_, a, b) =>
-      array_min(transform(xarr, x => (lit(a) * x + lit(b)) % P))
-    }: _*)
+  private[graft] def signatureOf(text: Column): Column =
+    GE.minhashSig(shingleArrFromToks(TF.tokens(text)))
 
-  /** The 4 LSH band structs (band, band_key) of a signature array —
-    * identical key strings to [[signatureBands]].
+  /** The LSH band structs (band, band_key) of a signature array, `rows`
+    * minhashes per band, band_key their decimal values joined by "-".
+    * Null for a null signature, so an explode of it emits no band rows
+    * for a document without shingles.
     */
-  private[graft] def bandStructsOf(sig: Column): Column =
-    array((0 until NumHashes / BandSize).map { k =>
+  private[graft] def bandStructsOf(sig: Column, rows: Int = BandSize): Column =
+    when(sig.isNotNull, array((0 until NumHashes / rows).map { k =>
       struct(lit(k).as("band"),
-        concat_ws("-", (0 until BandSize).map(j =>
-          element_at(sig, k * BandSize + j + 1)): _*).as("band_key"))
-    }: _*)
+        concat_ws("-", (0 until rows).map(j => sig.getItem(k * rows + j)): _*)
+          .as("band_key"))
+    }: _*))
+
+  /** MinHash agreement of two signatures: the share of the 16 positions
+    * where they are equal.
+    */
+  private[graft] def agreement(a: Column, b: Column): Column =
+    (0 until NumHashes).map(i => (a.getItem(i) === b.getItem(i)).cast("int"))
+      .reduce(_ + _).cast("double") / NumHashes
 
   /** Distinct word 3-gram shingles per doc, exploded. */
   private[operators] def shingles(s: SparkSession, dir: String): DataFrame =
@@ -268,51 +271,28 @@ object Dedup {
        |ORDER BY id_a, id_b""".stripMargin
 
   /** MinHash-LSH parameters: 16 hashes h_i(x) = (a_i·(x mod p) + b_i) mod p
-    * over the 2³¹−1 prime field, banded 4×4.
+    * over the 2³¹−1 prime field ([[MinHashSig]] holds them), banded 4×4.
     */
-  val P: Long = 2147483647L
-  val NumHashes = 16
+  val P: Long = MinHashSig.P
+  val NumHashes: Int = MinHashSig.NumHashes
   val BandSize = 4
-  val hashParams: Seq[(Int, Long, Long)] = (0 until NumHashes).map { i =>
-    (i, ((i + 1) * 2654435761L) % P, ((i + 1) * 2654921567L) % P)
-  }
-
-  /** Wide MinHash signature frame (doc_id, mh0..mh15) of any exploded
-    * (doc_id, shingle) frame: all 16 hashes as one wide projection + one
-    * wide min-aggregation — shuffle volume is docs × 16 columns, not
-    * docs × shingles × 16 rows. Shared by the batch LSH pairs and the
-    * incremental signature store.
-    */
-  private[graft] def minhashWide(sh0: DataFrame): DataFrame = {
-    import sh0.sparkSession.implicits._
-    val sh = sh0.select($"doc_id", (hash60($"shingle") % P).as("x"))
-    val withH = sh.select(($"doc_id" +: hashParams.map { case (i, a, b) =>
-      ((lit(a) * $"x" + lit(b)) % P).as(s"h$i")
-    }): _*)
-    withH.groupBy($"doc_id")
-      .agg(min(col("h0")).as("mh0"),
-        hashParams.tail.map { case (i, _, _) => min(col(s"h$i")).as(s"mh$i") }: _*)
-  }
+  val hashParams: Seq[(Int, Long, Long)] =
+    (0 until NumHashes).map(i => (i, MinHashSig.A(i), MinHashSig.B(i)))
 
   /** Banded signature rows (doc_id, band, band_key, sig) of any
     * (doc_id, text) frame — the unit the incremental dedup store
-    * persists and delta batches compute. band_key concatenates the
-    * band's 4 minhashes (identical keys to [[minhashLsh]]'s
-    * collect_list path); sig carries the full 16-hash signature so a
-    * band-key match can verify minhash agreement WITHOUT a second
-    * lookup join. The band rows are a bounded 4-per-doc generator on
-    * the wide frame — no extra shuffle.
+    * persists, delta batches compute and the batch LSH self-joins.
+    * band_key concatenates the band's 4 minhashes; sig carries the full
+    * 16-hash signature so a band-key match can verify minhash agreement
+    * WITHOUT a second lookup join. One projection and a bounded
+    * 4-per-doc generator — no shuffle; documents without shingles emit
+    * no rows.
     */
   private[graft] def signatureBands(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val nBands = NumHashes / BandSize
-    minhashWide(shinglesOf(docs)).select($"doc_id",
-        array(hashParams.map { case (i, _, _) => col(s"mh$i") }: _*).as("sig"),
-        explode(array((0 until nBands).map { k =>
-          struct(lit(k).as("band"),
-            concat_ws("-", (0 until BandSize).map(j =>
-              col(s"mh${k * BandSize + j}")): _*).as("band_key"))
-        }: _*)).as("bk"))
+    Tables.fanOut(docs, docs("doc_id"))
+      .select($"doc_id", signatureOf($"text").as("sig"))
+      .select($"doc_id", explode(bandStructsOf($"sig")).as("bk"), $"sig")
       .select($"doc_id", $"bk.band", $"bk.band_key", $"sig")
   }
 
@@ -328,39 +308,24 @@ object Dedup {
 
   /** The unsorted (id_a, id_b, est_jaccard) estimate frame — one source
     * for the registered pair query, the sketch-accuracy scoreboard and
-    * the edit-distance verify. Deliberately NOT SessionCache-persisted:
-    * the frame is cheap to rebuild (~2 s at sf0.1) and each consumer's
-    * own downstream joins dominate its cost, so eager materialization
-    * buys little — the consumers recompute the narrow lineage instead,
-    * the jaccardPrefix second-pass convention.
+    * the edit-distance verify. One band self-join: each band row carries
+    * its document's signature, so the agreement is computed on the
+    * joined row and the distinct collapses a pair colliding in several
+    * bands (its estimate is the same on every such row). Deliberately NOT
+    * SessionCache-persisted: the frame is one scan, one projection and
+    * one shuffled self-join, and each consumer's own downstream joins
+    * dominate its cost — the consumers recompute the narrow lineage
+    * instead, the jaccardPrefix second-pass convention.
     */
   private[graft] def minhashEst(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val wide = minhashWide(shinglesOf(Tables.documents(s, dir)))
-    val sigs = wide.select($"doc_id",
-        explode(array(hashParams.map { case (i, _, _) =>
-          struct(lit(i).as("i"), col(s"mh$i").as("mh"))
-        }: _*)).as("st"))
-      .select($"doc_id", $"st.i".as("i"), $"st.mh".as("mh"))
-    val bands = sigs
-      .withColumn("band", ($"i" / BandSize).cast("int"))
-      .groupBy($"doc_id", $"band")
-      .agg(array_join(transform(array_sort(collect_list(struct($"i", $"mh"))),
-        x => x("mh")), "-").as("band_key"))
-    val cand = bands.as("a").join(bands.as("b"),
+    val bands = signatureBands(Tables.documents(s, dir))
+    bands.as("a").join(bands.as("b"),
         $"a.band" === $"b.band" && $"a.band_key" === $"b.band_key" &&
           $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b")).distinct()
-    // candidate-first join order: cand is tiny, so each side of the
-    // signature lookup is a broadcast-able semijoin instead of the
-    // quadratic sigs-on-i self-join Catalyst would otherwise pick
-    val agree = cand
-      .join(sigs.as("x"), $"id_a" === $"x.doc_id")
-      .join(sigs.as("y"), $"id_b" === $"y.doc_id" && $"x.i" === $"y.i")
-      .groupBy($"id_a", $"id_b")
-      .agg((sum(($"x.mh" === $"y.mh").cast("int")).cast("double") / NumHashes)
-        .as("est_jaccard"))
-    agree
+      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"),
+        agreement($"a.sig", $"b.sig").as("est_jaccard"))
+      .distinct()
   }
 
   /** Shared oracle CTE chain ending in `est(id_a, id_b, est_jaccard)` —
@@ -456,25 +421,18 @@ object Dedup {
   /** 64-bit SimHash fingerprints over tf-weighted token hashes (60 bits
     * used). Near-dup candidates at scale come from 15-bit chunk equality
     * (pigeonhole on hamming ≤ 3) — see DedupSpec; the oracle checks the
-    * fingerprints themselves.
+    * fingerprints themselves. One projection of the SimHash kernel; the
+    * only shuffle is the output sort.
     */
   def simhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tf = Tables.fanOut(Tables.documents(s, dir), col("doc_id"))
-      .select($"doc_id", explode(TF.tokens($"text")).as("token"))
-      .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-      .select($"doc_id", $"tf", hash60($"token").as("x"))
-    // all 60 bit-counters in ONE hash aggregation (wide buffers), not a
-    // 60x row explosion through two aggs: shuffle volume is docs x 60
-    // columns instead of docs x tokens x 60 rows
-    def bitSign(j: Int): Column =
-      (call_function("shiftright", $"x", lit(j)).bitwiseAND(lit(1L)) * 2 - 1)
-    val wide = tf.groupBy($"doc_id")
-      .agg(sum($"tf" * bitSign(0)).as("w0"),
-        (1 until 60).map(j => sum($"tf" * bitSign(j)).as(s"w$j")): _*)
-    wide.select($"doc_id",
-        (0 until 60).map(j => when(col(s"w$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
+    Tables.fanOut(Tables.documents(s, dir), col("doc_id"))
+      // a document without tokens has no fingerprint: text with no
+      // non-whitespace character is exactly that case, and testing the
+      // text (not the kernel's null) keeps the pushed-down filter from
+      // evaluating the kernel a second time per row
+      .where($"text".rlike("\\S"))
+      .select($"doc_id", GE.simHash(TF.tokens($"text")).as("simhash"))
       .orderBy($"doc_id")
   }
 
@@ -610,21 +568,19 @@ object Dedup {
     * The registered 4×4 banding has s* ≈ 0.707 — the τ ≥ 0.7 floor
     * where Similarity.cosineDedupRouted switches from quadratic sweeps
     * to candidate joins is this curve's knee, not folklore. ONE corpus
-    * pass: every factoring's band keys are emitted from one signature
-    * scan (31 structs per doc) and one groupBy counts all buckets.
+    * pass: one signature per doc, every factoring's band keys emitted
+    * from it (31 band rows per doc) and one groupBy counts all buckets.
     */
   def lshPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val factorings = Seq((1, 16), (2, 8), (4, 4), (8, 2), (16, 1))
-    val sigs = minhashWide(shingles(s, dir))
-    val allBands = sigs.select(explode(array(factorings.flatMap { case (b, r) =>
-        (0 until b).map { k =>
-          struct(lit(b).as("bands"), lit(k).as("band"),
-            concat_ws("-", (0 until r).map(j => col(s"mh${k * r + j}")): _*)
-              .as("band_key"))
-        }
-      }: _*)).as("bk"))
-      .select($"bk.bands", $"bk.band", $"bk.band_key")
+    val sigs = Tables.fanOut(Tables.documents(s, dir), col("doc_id"))
+      .select(signatureOf($"text").as("sig"))
+    val allBands = sigs.select(explode(array(factorings.map { case (b, r) =>
+        struct(lit(b).as("bands"), bandStructsOf($"sig", r).as("bks"))
+      }: _*)).as("f"))
+      .select($"f.bands".as("bands"), explode($"f.bks").as("bk"))
+      .select($"bands", $"bk.band", $"bk.band_key")
     val cand = allBands.groupBy($"bands", $"band", $"band_key")
       .agg(count(lit(1)).as("n"))
       .groupBy($"bands")

@@ -169,9 +169,7 @@ object IncrementalDedup {
       .where($"id_a" < $"id_b")
       .dropDuplicates("id_a", "id_b")
       .select($"id_a", $"id_b",
-        (aggregate(zip_with($"siga", $"sigb", (x, y) => (x === y).cast("int")),
-          lit(0), (acc, x) => acc + x).cast("double") / Dedup.NumHashes)
-          .as("est_jaccard"))
+        Dedup.agreement($"siga", $"sigb").as("est_jaccard"))
   }
 
   /** Materialize (or replace) the cluster-label store — (doc_id,
@@ -271,9 +269,7 @@ object IncrementalDedup {
       .select($"delta_id", $"store_id", $"dsig", $"ssig")
       .dropDuplicates("delta_id", "store_id")
       .select($"delta_id", $"store_id",
-        (aggregate(zip_with($"dsig", $"ssig", (a, b) => (a === b).cast("int")),
-          lit(0), (acc, x) => acc + x).cast("double") / Dedup.NumHashes)
-          .as("est_jaccard"))
+        Dedup.agreement($"dsig", $"ssig").as("est_jaccard"))
       .orderBy($"delta_id", $"store_id")
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{GraftExpressions, TextFunctions => TF}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1068,15 +1068,11 @@ object TextAnalysis {
     val toks = Tables.fanOut(Tables.documents(s, dir), col("doc_id"))
       .select($"source", TF.tokens($"text").as("toks"))
     val grams = toks.select($"source",
-      explode(flatten(array((1 to 3).map { n =>
-        filter(
-          transform($"toks", (_, i) =>
-            when(i + n <= size($"toks"),
-              struct(lit(n).as("n"),
-                array_join(slice($"toks", i + 1, lit(n)), " ").as("gram")))),
-          g => g.isNotNull)
-      }: _*))).as("g"))
-      .select($"source", $"g.n", $"g.gram")
+      explode(array((1 to 3).map { n =>
+        struct(lit(n).as("n"),
+          GraftExpressions.wordNGrams($"toks", n, n, distinct = false).as("grams"))
+      }: _*)).as("g"))
+      .select($"source", $"g.n", explode($"g.grams").as("gram"))
     grams.groupBy($"source", $"n")
       .agg(count(lit(1)).as("n_total"), countDistinct($"gram").as("n_distinct"))
       .select($"source", $"n", $"n_total", $"n_distinct",

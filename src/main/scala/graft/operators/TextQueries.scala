@@ -104,22 +104,14 @@ object TextQueries {
        |GROUP BY token ORDER BY token""".stripMargin
 
   /** Word 1-3-gram generation + counts (reference TfidfVectorizer
-    * ngram_range=(1,3)). Unigrams/bigrams/trigrams are produced from one
-    * pass over the token array via transform+slide, then exploded.
+    * ngram_range=(1,3)). Unigrams/bigrams/trigrams come from one
+    * WordNGrams kernel pass over the token array, then are exploded.
     */
   def ngrams(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = Tables.fanOut(Tables.documents(s, dir), col("doc_id"))
-      .select($"doc_id", TF.tokens($"text").as("toks"))
-    val grams = toks.select(
-      explode(flatten(array((1 to 3).map { n =>
-        // n-grams: join each window of n consecutive tokens
-        filter(
-          transform($"toks", (_, i) =>
-            when(i + n <= size($"toks"),
-              array_join(slice($"toks", i + 1, lit(n)), " "))),
-          g => g.isNotNull)
-      }: _*))).as("gram"))
+    val grams = Tables.fanOut(Tables.documents(s, dir), col("doc_id"))
+      .select(explode(GraftExpressions.wordNGrams(TF.tokens($"text"), 1, 3,
+        distinct = false)).as("gram"))
     grams.groupBy($"gram").agg(count(lit(1)).as("cnt")).orderBy($"gram")
   }
 

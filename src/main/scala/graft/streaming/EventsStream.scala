@@ -274,30 +274,24 @@ object EventsStream {
   /** Stream-static incremental near-dup — the CONTINUOUS form of
     * IncrementalDedup.deltaAgainstStore: each arriving doc checks
     * against the HISTORICAL corpus's bucketed MinHash signature store.
-    * The stream side computes its banded signature ROW-LOCALLY
-    * (Dedup.rowSignature — array folds over the doc's own shingles, no
-    * cross-row aggregation, so the whole signature stage is stateless),
-    * the band-key join is stream-STATIC (no join state; the store scan
-    * is the same bucket-aligned read the batch delta join uses), and
-    * minhash agreement verifies from the signatures both sides carry.
-    * Only the final candidate dedup (a pair can collide in several
-    * bands) holds state, bounded by the watermark horizon. Output: one
-    * (doc_id, ts, store_id, est_jaccard) row per matched historical
-    * near-dup; docs with no match produce no rows.
+    * The stream side signs each doc ROW-LOCALLY with the batch path's
+    * kernel (Dedup.signatureOf — no cross-row aggregation, so the whole
+    * signature stage is stateless), the band-key join is stream-STATIC
+    * (no join state; the store scan is the same bucket-aligned read the
+    * batch delta join uses), and minhash agreement verifies from the
+    * signatures both sides carry. Only the final candidate dedup (a pair
+    * can collide in several bands) holds state, bounded by the watermark
+    * horizon. Output: one (doc_id, ts, store_id, est_jaccard) row per
+    * matched historical near-dup; docs with no match produce no rows.
     */
   def incrementalDedupStream(s: SparkSession, docs: DataFrame,
       table: String): DataFrame = {
-    import graft.functions.{TextFunctions => TF}
     import graft.operators.Dedup
+    // sub-3-token docs have a null signature and so no band rows — the
+    // batch path emits no signature rows for them either
     val sig = docs
       .withWatermark("ts", "2 hours")
-      .withColumn("toks", TF.tokens(col("text")))
-      .withColumn("arr", Dedup.shingleArrFromToks(col("toks")))
-      // sub-3-token docs have no shingles — the batch path emits no
-      // signature rows for them either
-      .where(size(col("arr")) > 0)
-      .withColumn("xarr", transform(col("arr"), x => Dedup.hash60(x) % Dedup.P))
-      .withColumn("sig", Dedup.rowSignature(col("xarr")))
+      .select(col("doc_id"), col("ts"), Dedup.signatureOf(col("text")).as("sig"))
       .select(col("doc_id"), col("ts"), col("sig"),
         explode(Dedup.bandStructsOf(col("sig"))).as("bk"))
       .select(col("doc_id"), col("ts"), col("sig"),
@@ -306,9 +300,7 @@ object EventsStream {
       col("doc_id").as("store_id"), col("sig").as("ssig"))
     sig.join(store, Seq("band", "band_key"))
       .select(col("doc_id"), col("ts"), col("store_id"),
-        (aggregate(zip_with(col("sig"), col("ssig"),
-          (a, b) => (a === b).cast("int")), lit(0), (acc, x) => acc + x)
-          .cast("double") / Dedup.NumHashes).as("est_jaccard"))
+        Dedup.agreement(col("sig"), col("ssig")).as("est_jaccard"))
       .dropDuplicatesWithinWatermark("doc_id", "store_id")
   }
 

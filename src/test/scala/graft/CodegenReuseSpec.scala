@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * default codegen cache holds (100 entries in 4 segments), so at that
   * size the repeat pass evicts and recompiles most of them. With the
   * cache sized by [[GraftSession]] and every generated source stable
-  * across executions, the repeat compiles nothing.
+  * across executions, the repeat compiles nothing. The dedup ops check
+  * the same for the sketch kernels' generated code.
   */
 class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -24,10 +25,12 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
     "q_stem_dutch", "q_stopword_filter", "q_typo_correct", "q_tfidf",
     "q_chi2_features", "q_word_match", "q_roc_curve", "q_f1_sweep")
 
+  private val dedupOps = Seq("q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash")
+
   /** Classes compiled by one pass over `ops`, each materialized into the
     * noop sink after the cold reset every bench pass starts with.
     */
-  private def pass(): Long = {
+  private def pass(ops: Seq[String]): Long = {
     BenchIntegrity.coldReset(spark)
     val before = GraftBridge.codegenCompiles
     ops.foreach(q =>
@@ -36,8 +39,14 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a warm repeat of the text, TF-IDF and ROC ops compiles no new classes") {
-    pass()
-    val again = pass()
+    pass(ops)
+    val again = pass(ops)
+    assert(again == 0, s"the repeat pass recompiled $again generated classes")
+  }
+
+  test("a warm repeat of the exact, MinHash and SimHash dedup ops compiles no new classes") {
+    pass(dedupOps)
+    val again = pass(dedupOps)
     assert(again == 0, s"the repeat pass recompiled $again generated classes")
   }
 }

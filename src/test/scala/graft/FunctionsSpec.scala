@@ -1,9 +1,18 @@
 package graft
 
-import graft.functions.{DamerauLevenshtein, DutchStemmer, StripAccents}
+import graft.functions.{DamerauLevenshtein, DutchStemmer, StripAccents, GraftExpressions => GE}
+import graft.operators.Dedup
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class FunctionsSpec extends AnyFunSuite {
+class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  lazy val spark: SparkSession = GraftSession.builder("local[2]", 2).getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
 
   test("OSA Damerau-Levenshtein distances") {
     assert(DamerauLevenshtein.osa("", "") == 0)
@@ -44,5 +53,125 @@ class FunctionsSpec extends AnyFunSuite {
   test("stemText preserves token structure") {
     assert(DutchStemmer.stemText("lichamen beelden") == "licham beeld")
     assert(DutchStemmer.stemText("") == "")
+  }
+
+  // ---- sketch kernels against the declarative forms they replace ----
+
+  /** Token arrays at the kernels' edges: empty, 1-3 tokens, repeated
+    * shingles, multi-byte UTF-8, the empty string, a null token and a
+    * null array.
+    */
+  private val tokenCases: Seq[Seq[String]] = Seq(
+    Seq(), Seq("a"), Seq("a", "b"), Seq("a", "b", "c"),
+    Seq("a", "b", "c", "a", "b", "c", "a", "b", "c"),
+    Seq("héllo", "wörld", "日本語", "🙂", "héllo", "wörld", "日本語"),
+    Seq(""), Seq("", "x", "", "x", ""), Seq("a", null, "b", "c"), null)
+
+  /** (id, toks) from an RDD, so the projection runs in the executor
+    * (a local relation would be folded on the driver, interpreted).
+    */
+  private def tokenFrame: DataFrame = spark.createDataFrame(
+    spark.sparkContext.parallelize(
+      tokenCases.zipWithIndex.map { case (t, i) => Row(i, t) }, 2),
+    StructType(Seq(StructField("id", IntegerType),
+      StructField("toks", ArrayType(StringType, containsNull = true)))))
+
+  /** Runs `body` under whole-stage codegen with codegen-only projections,
+    * then fully interpreted.
+    */
+  private def inBothModes(body: => Unit): Unit = Seq(
+    "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")).foreach { case (mode, confs) =>
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      withClue(s"[$mode] ")(body)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Rows where the kernel column and its reference differ. */
+  private def mismatches(df: DataFrame, kernel: Column, reference: Column): Seq[Row] =
+    df.select(col("id"), kernel.as("k"), reference.as("r")).collect().toSeq
+      .filter(r => r.get(1) != r.get(2))
+
+  private def hashRef(c: Column): Column =
+    conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
+
+  /** The per-n transform/slice/array_join form of word n-grams. */
+  private def ngramsRef(toks: Column, n: Int): Column =
+    filter(
+      transform(toks, (_, i) =>
+        when(i + n <= size(toks), array_join(slice(toks, i + 1, lit(n)), " "))),
+      g => g.isNotNull)
+
+  test("WordNGrams equals the transform/slice/array_join form") {
+    val t = col("toks")
+    inBothModes {
+      val df = tokenFrame
+      assert(mismatches(df, GE.wordNGrams(t, 3, 3, distinct = true),
+        array_distinct(ngramsRef(t, 3))).isEmpty)
+      assert(mismatches(df, GE.wordNGrams(t, 1, 3, distinct = false),
+        flatten(array((1 to 3).map(ngramsRef(t, _)): _*))).isEmpty)
+      assert(mismatches(df, GE.wordNGrams(t, 2, 2, distinct = false),
+        ngramsRef(t, 2)).isEmpty)
+      val first = df.where(col("id") === 4)
+        .select(GE.wordNGrams(t, 3, 3, distinct = true)).head().getSeq[String](0)
+      assert(first == Seq("a b c", "b c a", "c a b"), "distinct keeps first occurrences")
+    }
+  }
+
+  test("Hash60 equals the md5 hex-prefix conv chain") {
+    val rnd = new scala.util.Random(60)
+    val alphabet = "abcxyz 09-é日🙂"
+    val strings = Seq("", null, "a", "héllo wörld") ++ (0 until 300).map(_ =>
+      Seq.fill(rnd.nextInt(24))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(strings.zipWithIndex.map { case (v, i) => Row(i, v) }, 2),
+      StructType(Seq(StructField("id", IntegerType), StructField("s", StringType))))
+    inBothModes {
+      assert(mismatches(df, Dedup.hash60(col("s")), hashRef(col("s"))).isEmpty)
+    }
+  }
+
+  test("MinHashSig equals the per-hash array_min form and is null without shingles") {
+    val sh = array_distinct(ngramsRef(col("toks"), 3))
+    val reference = when(size(sh) > 0, array(Dedup.hashParams.map { case (_, a, b) =>
+      array_min(transform(sh, s => (lit(a) * (hashRef(s) % Dedup.P) + lit(b)) % Dedup.P))
+    }: _*))
+    inBothModes {
+      val df = tokenFrame
+      assert(mismatches(df, GE.minhashSig(sh), reference).isEmpty)
+      val nulls = df.where(GE.minhashSig(sh).isNull).select(col("id"))
+        .collect().map(_.getInt(0)).toSet
+      assert(nulls == Set(0, 1, 2, 6, 9), "short, empty and null arrays have no signature")
+    }
+  }
+
+  test("SimHash equals the grouped tf-weighted bit-count form") {
+    import spark.implicits._
+    def bitSign(j: Int): Column =
+      shiftright($"x", j).bitwiseAND(lit(1L)) * 2 - 1
+    inBothModes {
+      val df = tokenFrame
+      val tf = df.select($"id", explode($"toks").as("token"))
+        .groupBy($"id", $"token").agg(count(lit(1)).as("tf"))
+        .select($"id", $"tf", hashRef($"token").as("x"))
+      val w = (0 until 60).map(j => sum($"tf" * bitSign(j)).as(s"w$j"))
+      val grouped = tf.groupBy($"id").agg(w.head, w.tail: _*)
+        .select($"id", (0 until 60).map(j =>
+          when(col(s"w$j") > 0, lit(1L << j)).otherwise(lit(0L))).reduce(_ + _).as("fp"))
+      val reference = df.select($"id").join(grouped, Seq("id"), "left")
+        .as[(Int, Option[Long])].collect().toMap
+      val kernel = df.select($"id", GE.simHash($"toks"))
+        .as[(Int, Option[Long])].collect().toMap
+      assert(kernel == reference)
+      assert(kernel.collect { case (i, None) => i }.toSet == Set(0, 9),
+        "empty and null arrays have no fingerprint")
+    }
   }
 }

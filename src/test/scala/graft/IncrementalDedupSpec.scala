@@ -76,29 +76,41 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql(s"DROP TABLE IF EXISTS $winTable")
   }
 
-  test("row-local signature bands equal the batch builder's values") {
+  test("row-local signature bands equal the grouped-min reference") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.{TextFunctions => TF}
     val docs = Tables.documents(spark, dir)
-    // the streaming (row-local) construction, run in batch on the same
-    // frame: array folds must reproduce the grouped-min signatures and
-    // band keys exactly
-    val rowLocal = docs
-      .withColumn("toks", TF.tokens($"text"))
-      .withColumn("arr", Dedup.shingleArrFromToks($"toks"))
-      .where(size($"arr") > 0)
-      .withColumn("xarr", transform($"arr", x => Dedup.hash60(x) % Dedup.P))
-      .withColumn("sig", Dedup.rowSignature($"xarr"))
-      .select($"doc_id", explode(Dedup.bandStructsOf($"sig")).as("bk"), $"sig")
+    // the declarative construction the signature kernels replaced, kept
+    // here as the reference: higher-order-function shingles, the md5 hex
+    // hash chain, a per-shingle row explode and one wide min-aggregation
+    // by doc_id, band keys joined from the grouped mins
+    val toks = TF.tokens($"text")
+    val shingles = array_distinct(filter(
+      transform(toks, (_, i) =>
+        when(i + 3 <= size(toks), array_join(slice(toks, i + 1, lit(3)), " "))),
+      g => g.isNotNull))
+    val x = docs.select($"doc_id", explode(shingles).as("shingle"))
+      .select($"doc_id", (conv(substring(md5($"shingle".cast("binary")), 1, 15), 16, 10)
+        .cast("long") % Dedup.P).as("x"))
+    val mins = Dedup.hashParams.map { case (i, a, b) =>
+      min((lit(a) * $"x" + lit(b)) % Dedup.P).as(s"mh$i") }
+    val grouped = x.groupBy($"doc_id").agg(mins.head, mins.tail: _*)
+      .select($"doc_id",
+        array(Dedup.hashParams.map { case (i, _, _) => col(s"mh$i") }: _*).as("sig"),
+        explode(array((0 until Dedup.NumHashes / Dedup.BandSize).map { k =>
+          struct(lit(k).as("band"), concat_ws("-", (0 until Dedup.BandSize).map(j =>
+            col(s"mh${k * Dedup.BandSize + j}")): _*).as("band_key"))
+        }: _*)).as("bk"))
       .select($"doc_id", $"bk.band", $"bk.band_key", $"sig")
       .collect().map(r => (r.getLong(0), r.getInt(1)) ->
         (r.getString(2), r.getSeq[Long](3))).toMap
-    val batch = Dedup.signatureBands(docs)
+    // the kernel path every batch, incremental and streaming caller uses
+    val kernel = Dedup.signatureBands(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1)) ->
         (r.getString(2), r.getSeq[Long](3))).toMap
-    assert(batch.nonEmpty && rowLocal == batch,
-      s"${rowLocal.size} row-local vs ${batch.size} batch band rows")
+    assert(grouped.nonEmpty && kernel == grouped,
+      s"${kernel.size} kernel vs ${grouped.size} grouped-min band rows")
   }
 
   test("absorbed delta is visible to the next day's delta, still bucket-aligned") {

@@ -362,4 +362,50 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bad.isEmpty,
       s"${bad.size} non-equi join(s) in the two-level assignment plan")
   }
+
+  test("simhash plan is one projection: no shuffle below the output sort") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // AQE's starting plan: every exchange placed, nothing executed
+    val plan = SparkEntry.queries("q_dedup_simhash")(spark, dir)
+      .queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1 &&
+      exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning],
+      s"${exchanges.size} exchange(s) — the fingerprint must be one projection " +
+        s"under the output sort's range shuffle:\n$plan")
+    assert(plan.collectFirst { case s: SortExec if s.global => s.child }
+      .exists(_.isInstanceOf[ShuffleExchangeLike]), s"no global output sort:\n$plan")
+    val exploded = plan.collect {
+      case a: BaseAggregateExec => a: org.apache.spark.sql.execution.SparkPlan
+      case g: GenerateExec => g
+    }
+    assert(exploded.isEmpty,
+      s"${exploded.size} token explode/aggregation node(s) back in the SimHash plan")
+  }
+
+  test("minhash plan: one band self-join, no doc_id aggregation, no join on the hash index") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val plan = SparkEntry.queries("q_dedup_minhash")(spark, dir)
+      .queryExecution.optimizedPlan
+    def names(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.references.map(_.name).toSet
+    val byDoc = plan.collect {
+      case a: Aggregate if a.groupingExpressions.exists(names(_).contains("doc_id")) => a
+    }
+    assert(byDoc.isEmpty, s"${byDoc.size} aggregation(s) keyed on doc_id — the " +
+      "signature must be computed per document, not regrouped from shingle rows")
+    val joins = plan.collect { case j: Join => j }
+    val onI = joins.filter(_.condition.exists(names(_).contains("i")))
+    assert(onI.isEmpty, s"${onI.size} join(s) on the hash index i — the agreement " +
+      "must come from the signatures the band rows carry")
+    assert(joins.size == 1 && joins.head.condition.exists(names(_).contains("band_key")),
+      s"expected the one band-key self-join, got ${joins.size} join(s)")
+  }
 }
