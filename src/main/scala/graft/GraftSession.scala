@@ -4,14 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared session construction for the graft mains and tests: local
   * master, shuffle parallelism sized to the worker threads, AQE with
-  * skew-join handling, UTC session time, and the legacy nanosAsLong
-  * flag the events table needs (see Tables.events) — set once here at
-  * construction instead of leaking from a table loader.
+  * skew-join handling, UTC session time, the legacy nanosAsLong flag
+  * the events table needs (see Tables.events) — set once here at
+  * construction instead of leaking from a table loader — and
+  * [[GraftExtensions]] (graft's SQL functions and planner rules).
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -5,9 +5,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,7 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * its own string expressions):
   *
   *  - text: [[TokenizeWs]], [[StripAccents]], [[StemDutch]],
-  *    [[DamerauLevenshtein]];
+  *    [[DamerauLevenshtein]], [[NearestWord]] (typo correction's
+  *    nearest vocabulary word);
   *  - vectors: [[ArrayDot]];
   *  - sketches: [[WordNGrams]] (word n-grams and shingles), [[Hash60]]
   *    (the engines' shared 60-bit md5 hash), [[MinHashSig]] (the
@@ -46,6 +48,9 @@ object GraftExpressions {
     GraftBridge.column(MinHashSig(GraftBridge.expression(shingles)))
   def simHash(toks: Column): Column =
     GraftBridge.column(SimHash(GraftBridge.expression(toks)))
+  def nearestWord(word: Column, vocab: Column): Column =
+    GraftBridge.column(
+      NearestWord(GraftBridge.expression(word), GraftBridge.expression(vocab)))
 }
 
 /** Whitespace tokenization fused into one codegen'd expression — the
@@ -490,5 +495,76 @@ object SimHash {
       j += 1
     }
     fp
+  }
+}
+
+/** The nearest vocabulary word to `word`: the struct (v, dist) of the
+  * entry of `vocab` with the smallest normalized edit distance
+  * dist = levenshtein(word, v) / max(length(word), length(v)) — Spark's
+  * `levenshtein` and `length`, both over code points, divided as a
+  * double — with ties going to the lowest `v`. That is row 1 of
+  * `row_number() OVER (PARTITION BY word ORDER BY dist, v)` over the
+  * cross join of the word with the vocabulary, computed per row without
+  * the join's pair rows, its shuffle or its window sort. Null for an
+  * empty vocabulary (the join has no row then); null entries are
+  * skipped.
+  *
+  * Exact, with pruning: the length gap |la − lb| / max(la, lb) bounds
+  * an entry's distance from below, so an entry whose bound is already
+  * above the best distance so far is skipped without aligning it.
+  */
+case class NearestWord(word: Expression, vocab: Expression) extends BinaryExpression {
+  override def left: Expression = word
+  override def right: Expression = vocab
+  override def dataType: DataType = NearestWord.Type
+  override def nullable: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = (word.dataType, vocab.dataType) match {
+    case (StringType, ArrayType(StringType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (w, v) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires string and array<string> arguments, got " +
+        s"${w.catalogString}, ${v.catalogString}")
+  }
+
+  override protected def nullSafeEval(w: Any, v: Any): Any =
+    NearestWord.nearest(w.asInstanceOf[UTF8String], v.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (w, v) =>
+      s"""${ev.value} = graft.functions.NearestWord.nearest($w, $v);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NearestWord =
+    copy(word = newLeft, vocab = newRight)
+}
+
+object NearestWord {
+  val Type: StructType = StructType(Seq(
+    StructField("v", StringType, nullable = false),
+    StructField("dist", DoubleType, nullable = false)))
+
+  def nearest(word: UTF8String, vocab: ArrayData): InternalRow = {
+    val la = word.numChars()
+    var bestV: UTF8String = null
+    var bestDist = Double.PositiveInfinity
+    var i = 0
+    while (i < vocab.numElements()) {
+      if (!vocab.isNullAt(i)) {
+        val v = vocab.getUTF8String(i)
+        val lb = v.numChars()
+        val longer = math.max(la, lb)
+        // d >= |la - lb|, so this bounds the entry's distance from below;
+        // at an equal bound only a lower v can still win the tie
+        val bound = if (longer == 0) 0.0 else math.abs(la - lb).toDouble / longer
+        if (bound < bestDist || (bound == bestDist && v.binaryCompare(bestV) < 0)) {
+          val dist = if (longer == 0) 0.0 else word.levenshteinDistance(v).toDouble / longer
+          if (dist < bestDist || (dist == bestDist && v.binaryCompare(bestV) < 0)) {
+            bestV = v
+            bestDist = dist
+          }
+        }
+      }
+      i += 1
+    }
+    if (bestV == null) null
+    else new GenericInternalRow(Array[Any](bestV.copy(), bestDist))
   }
 }

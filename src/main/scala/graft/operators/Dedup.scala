@@ -319,7 +319,11 @@ object Dedup {
     */
   private[graft] def minhashEst(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    // both join sides read this one shuffle (hashed on the join keys, so
+    // a sort-merge join adds no exchange and a broadcast builds from the
+    // reused stage); without it each side scanned and signed the corpus
     val bands = signatureBands(Tables.documents(s, dir))
+      .repartition($"band", $"band_key")
     bands.as("a").join(bands.as("b"),
         $"a.band" === $"b.band" && $"a.band_key" === $"b.band_key" &&
           $"a.doc_id" < $"b.doc_id")

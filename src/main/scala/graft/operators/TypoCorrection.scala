@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{GraftExpressions => GE, TextFunctions => TF}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Vocabulary typo correction (reference: TypoCorrection,
@@ -11,13 +10,18 @@ import org.apache.spark.sql.functions._
   * nearest vocabulary word when the normalized edit distance is within
   * 0.20 (the reference's thresh), else stay unchanged.
   *
-  * Distributed shape: the vocabulary (high-frequency tokens) is
-  * broadcast; only *distinct* OOV words do the distance scan — exactly
-  * the reference's d_fix memoization, expressed as a dedup before the
-  * join instead of a driver-side dict. The oracle-checked distance is
-  * plain Levenshtein (shared by both engines); the reference's
-  * Damerau/OSA variant is available as the custom Catalyst expression
-  * graft.functions.DamerauLevenshtein (differs only on transpositions).
+  * Distributed shape: one scan counts the corpus's words. The
+  * vocabulary (words seen at least [[MinVocabCount]] times) is
+  * collected into a one-row array and broadcast; each distinct OOV word
+  * (the rest of the same counts — the reference's d_fix memoization,
+  * since a word is looked up once however often it occurs) then finds
+  * its nearest vocabulary word with the row-local
+  * [[graft.functions.NearestWord]] kernel. There is no OOV × vocabulary
+  * pair frame, no window over it and no anti-join. The oracle-checked
+  * distance is plain Levenshtein (shared by both engines); the
+  * reference's Damerau/OSA variant is available as the custom Catalyst
+  * expression graft.functions.DamerauLevenshtein (differs only on
+  * transpositions).
   *
   * The corpus itself is typo-free, so the query plants three typos on a
   * fixed five-doc subset (doc_id < 5 — below the vocabulary frequency
@@ -33,24 +37,24 @@ object TypoCorrection {
     import s.implicits._
     // fan-out DROPPED (r22 A/B: typo_correct warm 0.48 → 0.38 s,
     // typo_dictionary 0.43 → 0.40 s without — the vocabulary count is
-    // one light pass; the Levenshtein sweep runs on the OOV frame
-    // downstream of the agg, which the fan-out never reached anyway)
+    // one light pass, and the nearest-word kernel runs on the OOV rows
+    // downstream of the aggregate, which a fan-out never reaches)
     val words = Tables.documents(s, dir)
       .select(explode(TF.tokens(concat($"text",
         when($"doc_id" < 5, lit(plantedTypos)).otherwise(lit(""))))).as("word"))
       .groupBy($"word").agg(count(lit(1)).as("cnt"))
-    val vocab = words.where($"cnt" >= MinVocabCount).select($"word".as("v"))
-    val oov = words.join(vocab, $"word" === $"v", "left_anti").select($"word")
-    val scoredPairs = oov.crossJoin(broadcast(vocab))
-      .select($"word", $"v",
-        (levenshtein($"word", $"v").cast("double") /
-          greatest(length($"word"), length($"v"))).as("dist"))
-    val w = Window.partitionBy($"word").orderBy($"dist".asc, $"v".asc)
-    scoredPairs.withColumn("rk", row_number().over(w))
-      .where($"rk" === 1)
+    // an empty vocabulary leaves no row to join, as the pair frame had
+    // none; filtering the kernel's null instead would be pushed below
+    // its projection and evaluate the kernel twice per word
+    val vocab = words.where($"cnt" >= MinVocabCount)
+      .agg(collect_list($"word").as("vocab"))
+      .where(size($"vocab") > 0)
+    words.where($"cnt" < MinVocabCount)
+      .crossJoin(broadcast(vocab))
+      .select($"word", GE.nearestWord($"word", $"vocab").as("nw"))
       .select($"word",
-        when($"dist" <= Thresh, $"v").otherwise($"word").as("correction"),
-        $"dist")
+        when($"nw.dist" <= Thresh, $"nw.v").otherwise($"word").as("correction"),
+        $"nw.dist".as("dist"))
       .orderBy($"word")
   }
 

@@ -27,10 +27,17 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dedupOps = Seq("q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash")
 
+  /** The typo correction and the five text-normalization heads, whose
+    * output sorts plan as a single-partition exchange plus a local sort
+    * (graft.plans.SmallSort) and whose typo step runs the nearest-word
+    * kernel. */
+  private val textHeads = Seq("q_typo_correct", "q_merge_entries", "q_clean_artefacts",
+    "q_simple_clean", "q_stem_dutch", "q_stopword_filter")
+
   /** Classes compiled by one pass over `ops`, each materialized into the
     * noop sink after the cold reset every bench pass starts with.
     */
-  private def pass(ops: Seq[String]): Long = {
+  private def pass(ops: Seq[String], dir: String = dir): Long = {
     BenchIntegrity.coldReset(spark)
     val before = GraftBridge.codegenCompiles
     ops.foreach(q =>
@@ -47,6 +54,15 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a warm repeat of the exact, MinHash and SimHash dedup ops compiles no new classes") {
     pass(dedupOps)
     val again = pass(dedupOps)
+    assert(again == 0, s"the repeat pass recompiled $again generated classes")
+  }
+
+  test("a warm repeat of the typo and text-normalization heads on the fan-out snapshot compiles no new classes") {
+    // sf0.1's one-file documents snapshot is where Tables.fanOut fires
+    // at local[4], so the kernels run under a fan-out exchange there
+    val fanOutDir = "/root/testdata/sf0.1"
+    pass(textHeads, fanOutDir)
+    val again = pass(textHeads, fanOutDir)
     assert(again == 0, s"the repeat pass recompiled $again generated classes")
   }
 }

@@ -6,9 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = GraftSession.builder("local[2]", 2)
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
+  // GraftSession.builder installs GraftExtensions itself
+  lazy val spark: SparkSession = GraftSession.builder("local[2]", 2).getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 

@@ -174,4 +174,55 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         "empty and null arrays have no fingerprint")
     }
   }
+
+  test("NearestWord equals the cross-join row_number form") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(39)
+    def draw(alphabet: String, maxLen: Int): String =
+      Seq.fill(1 + rnd.nextInt(maxLen))(alphabet(rnd.nextInt(alphabet.length))).mkString
+    // a two-letter alphabet makes equal-distance ties common; the
+    // multi-byte one puts 2-, 3- and 4-byte code points in both sides
+    val vocabs: Seq[(String, Seq[String])] = Seq(
+      "random" -> Seq.fill(80)(draw("abcdefgh", 9)).distinct,
+      "ties" -> Seq.fill(40)(draw("ab", 6)).distinct,
+      "utf8" -> Seq.fill(40)(draw("aé日🙂b", 6)).distinct,
+      "fixed" -> Seq("abd", "xbc", "abe", "abc"),
+      "empty" -> Seq.empty)
+    val rows = vocabs.zipWithIndex.flatMap { case ((kind, vocab), k) =>
+      val alphabet = kind match {
+        case "ties" => "ab"
+        case "utf8" => "aé日🙂b"
+        case _ => "abcdefgh"
+      }
+      // vocabulary entries themselves are among the words: distance 0
+      val words = (Seq.fill(60)(draw(alphabet, 9)) ++ vocab.take(5) ++ Seq("abc", "abx")).distinct
+      words.zipWithIndex.map { case (w, i) => Row(k * 1000 + i, w, vocab) }
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("id", IntegerType), StructField("word", StringType),
+        StructField("vocab", ArrayType(StringType, containsNull = false)))))
+    val idOf = rows.map(r => (r.getInt(0) / 1000, r.getString(1)) -> r.getInt(0)).toMap
+    val byRank = org.apache.spark.sql.expressions.Window.partitionBy($"id")
+      .orderBy($"dist".asc, $"v".asc)
+    inBothModes {
+      val reference = df.select($"id", $"word", explode($"vocab").as("v"))
+        .select($"id", $"v",
+          (levenshtein($"word", $"v").cast("double") /
+            greatest(length($"word"), length($"v"))).as("dist"))
+        .withColumn("rk", row_number().over(byRank))
+        .where($"rk" === 1)
+        .as[(Int, String, Double, Int)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      val kernel = df.select($"id", GE.nearestWord($"word", $"vocab").as("nw"))
+        .select($"id", $"nw.v", $"nw.dist")
+        .as[(Int, Option[String], Option[Double])].collect()
+      val found = kernel.collect { case (i, Some(v), Some(d)) => i -> (v, d) }.toMap
+      assert(found == reference)
+      assert(kernel.collect { case (i, None, _) => i / 1000 }.toSet == Set(4),
+        "only the empty vocabulary has no nearest word")
+      assert(found(idOf(3 -> "abc")) == ("abc", 0.0),
+        "a word equal to an entry is its own nearest word")
+      assert(found(idOf(3 -> "abx")) == ("abc", 1.0 / 3),
+        "equal distances go to the lowest entry")
+    }
+  }
 }

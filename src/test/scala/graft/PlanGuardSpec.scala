@@ -363,31 +363,95 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"${bad.size} non-equi join(s) in the two-level assignment plan")
   }
 
-  test("simhash plan is one projection: no shuffle below the output sort") {
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.{GenerateExec, SortExec}
+  /** AQE's starting plan of `df`: every exchange placed, nothing executed. */
+  private def initialPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    // AQE's starting plan: every exchange placed, nothing executed
-    val plan = SparkEntry.queries("q_dedup_simhash")(spark, dir)
-      .queryExecution.executedPlan match {
+    df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
-    assert(exchanges.size == 1 &&
-      exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning],
+  }
+
+  private def exchangesOf(plan: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    plan.collect { case e: ShuffleExchangeLike => e }
+  }
+
+  test("simhash plan is one projection: no shuffle below the output sort") {
+    import org.apache.spark.sql.execution.{GenerateExec, SortExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val plan = initialPlan(SparkEntry.queries("q_dedup_simhash")(spark, dir))
+    // at test size the output sort is the small-sort rule's
+    // single-partition exchange plus a local sort; above the bound it is a
+    // range exchange plus a global sort — either way, the only exchange
+    val exchanges = exchangesOf(plan)
+    assert(exchanges.size == 1,
       s"${exchanges.size} exchange(s) — the fingerprint must be one projection " +
-        s"under the output sort's range shuffle:\n$plan")
-    assert(plan.collectFirst { case s: SortExec if s.global => s.child }
-      .exists(_.isInstanceOf[ShuffleExchangeLike]), s"no global output sort:\n$plan")
+        s"under the output sort's shuffle:\n$plan")
+    assert(plan.collectFirst { case s: SortExec => s.child }
+      .exists(_.isInstanceOf[ShuffleExchangeLike]), s"no output sort:\n$plan")
     val exploded = plan.collect {
       case a: BaseAggregateExec => a: org.apache.spark.sql.execution.SparkPlan
       case g: GenerateExec => g
     }
     assert(exploded.isEmpty,
       s"${exploded.size} token explode/aggregation node(s) back in the SimHash plan")
+  }
+
+  test("small-sort rule: a sort over a small input skips the range exchange, a larger one keeps it") {
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.SortExec
+    val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    def sortPlan = initialPlan(SparkEntry.queries("q_dedup_simhash")(spark, dir))
+    // the sf0.001 documents file (64 KB) is under the default 1 MB bound
+    val small = sortPlan
+    assert(exchangesOf(small).map(_.outputPartitioning) == Seq(SinglePartition),
+      s"expected one single-partition exchange:\n$small")
+    assert(small.collect { case s: SortExec => s.global } == Seq(false),
+      s"expected one local sort:\n$small")
+    // above the bound, the sort keeps its range exchange and global sort
+    val prev = spark.conf.get(minSize)
+    val large = try {
+      spark.conf.set(minSize, "16k")
+      sortPlan
+    } finally spark.conf.set(minSize, prev)
+    val largeParts = exchangesOf(large).map(_.outputPartitioning)
+    assert(largeParts.size == 1 && largeParts.head.isInstanceOf[RangePartitioning],
+      s"expected one range exchange:\n$large")
+    assert(large.collect { case s: SortExec => s.global } == Seq(true),
+      s"expected one global sort:\n$large")
+  }
+
+  test("small-sort rule: orderBy.limit still plans TakeOrderedAndProject") {
+    import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+    val df = Tables.documents(spark, dir).orderBy("doc_id").select("doc_id").limit(5)
+    val plan = initialPlan(df)
+    assert(plan.collect { case t: TakeOrderedAndProjectExec => t }.size == 1,
+      s"no TakeOrderedAndProject:\n$plan")
+    assert(plan.collect { case s: SortExec => s }.isEmpty, s"a sort below the limit:\n$plan")
+  }
+
+  test("small-sort rule: q_stem_dutch keeps its fan-out hash exchange under the single-partition sort") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.SortExec
+    // the sf0.1 snapshot (580 KB, one file) is where Tables.fanOut fires
+    // at local[4], and it is still under the 1 MB bound
+    val plan = initialPlan(SparkEntry.queries("q_stem_dutch")(spark, "/root/testdata/sf0.1"))
+    val parts = exchangesOf(plan).map(_.outputPartitioning)
+    assert(parts.size == 2 && parts.head == SinglePartition &&
+      parts(1).isInstanceOf[HashPartitioning] && parts(1).numPartitions == 4,
+      s"expected the single-partition exchange over the 4-way fan-out:\n$plan")
+    assert(plan.collect { case s: SortExec => s.global } == Seq(false),
+      s"expected one local sort:\n$plan")
+  }
+
+  test("small-sort rule leaves a streaming plan untouched") {
+    val stream = spark.readStream.format("rate").load()
+      .groupBy("value").count().orderBy("value")
+    val plan = stream.queryExecution.analyzed
+    assert(plan.isStreaming)
+    assert(graft.plans.SmallSort(plan) eq plan)
   }
 
   test("minhash plan: one band self-join, no doc_id aggregation, no join on the hash index") {
