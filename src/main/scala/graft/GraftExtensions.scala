@@ -30,16 +30,15 @@ import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
   * with qualityScore / langId / the piiRedact fold).
   *
   * It also installs the planner side: the [[graft.plans.TopKStrategy]]
-  * strategy and the [[graft.plans.SmallSort]] rule, in both the
-  * optimizer and AQE's runtime optimizer. [[GraftSession.builder]]
-  * applies this extension, so every graft session plans the same way.
+  * strategy and the [[graft.plans.SmallSort]] optimizer rule.
+  * [[GraftSession.builder]] applies this extension, so every graft
+  * session plans the same way.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     ext.injectOptimizerRule(_ => graft.plans.SmallSort)
-    ext.injectRuntimeOptimizerRule(_ => graft.plans.SmallSort)
   }
 }
 

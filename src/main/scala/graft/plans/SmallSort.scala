@@ -13,18 +13,24 @@ import org.apache.spark.sql.internal.SQLConf
   * bounds. When that input is no larger than AQE's
   * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB by
   * default) the coalescer then reads the range shuffle as ONE partition
-  * anyway, so the sampler buys nothing. For such a sort this rule writes
+  * anyway, so the sampler buys nothing. For a sort whose input leaves
+  * are that small (the size test below) this rule writes
   * `Sort(global = false, Repartition(1, child))`: the same rows in the
   * same order, in one partition, with the child run once.
   *
   * Size test: the summed bytes of the distinct leaf relations under the
-  * sort — file scans, cached relations and, in the AQE runtime
-  * optimizer, materialized query stages (their runtime shuffle bytes).
-  * Spark's own plan estimate is not used: it multiplies sizes across a
-  * cross join, and a broadcast 1-row scalar would push a small input
-  * over the bound. A leaf without a size (an RDD-backed relation)
-  * reports Spark's default size, far above the bound, so the rule
-  * declines.
+  * sort — file scans (their file sizes) and cached relations (their
+  * in-memory size once materialized, the plan's estimate before). The
+  * test is on the sort's input LEAVES, not on the rows that reach the
+  * sort: where the child grows its rows (explode, n-grams, joins) the
+  * sort's shuffle can be several times the leaf bytes, and for such a
+  * sort above the bound AQE would have kept more than one range
+  * partition while this rule sorts in one task (README, "Small global
+  * sorts", lists the measured heads). Spark's own plan estimate is not
+  * used: it multiplies sizes across a cross join, and a broadcast 1-row
+  * scalar would push a small input over the bound. A leaf without a
+  * size (an RDD-backed relation) reports Spark's default size, far
+  * above the bound, so the rule declines.
   *
   * Where it does not fire:
   *  - a sort under `Limit`, `Offset` or `Tail` (optionally through a
@@ -34,8 +40,10 @@ import org.apache.spark.sql.internal.SQLConf
   *  - the child itself is untouched, so a fan-out exchange below the
   *    sort (`Tables.fanOut`) keeps its parallel kernel stage.
   *
-  * Installed by [[graft.GraftExtensions]] into both the optimizer and
-  * AQE's runtime optimizer; it adds no option.
+  * Installed by [[graft.GraftExtensions]] into the optimizer only; it
+  * adds no option. It is not a runtime (AQE) rule: once AQE has
+  * materialized the sort's own range stage, rewriting the sort there
+  * would only add a second exchange above it.
   */
 object SmallSort extends Rule[LogicalPlan] {
 
