@@ -30,7 +30,8 @@ import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
   * with qualityScore / langId / the piiRedact fold).
   *
   * It also installs the planner side: the [[graft.plans.TopKStrategy]]
-  * strategy and the [[graft.plans.SmallSort]] optimizer rule.
+  * strategy and the [[graft.plans.SmallSort]] AQE query-stage
+  * preparation rule.
   * [[GraftSession.builder]] applies this extension, so every graft
   * session plans the same way.
   */
@@ -38,7 +39,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.SmallSort)
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSort)
   }
 }
 

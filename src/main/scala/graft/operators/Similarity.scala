@@ -120,6 +120,18 @@ object Similarity {
   private def cosine(a: Column, an: Column, b: Column, bn: Column): Column =
     round(dot(a, b) / (an * bn), 6)
 
+  /** [[cosine]] `>= tau` with the rounding paid by candidates only: the
+    * unrounded cosine must first reach `tau` − 1e-6. Spark's `round`
+    * builds a `BigDecimal` from the double's decimal string, and a value
+    * below τ − 5·10⁻⁷ rounds below τ, so the pre-test drops no row the
+    * rounded test keeps. A NaN cosine passes both tests, as it passes
+    * the rounded test alone.
+    */
+  private[graft] def cosineAtLeast(a: Column, an: Column, b: Column, bn: Column, tau: Double): Column = {
+    val raw = dot(a, b) / (an * bn)
+    raw >= tau - 1e-6 && round(raw, 6) >= tau
+  }
+
   /** THE rank of every Similarity window: `df` ranked within each `part`
     * group by (`score` DESC, `id` ASC) into column `as` — the search
     * ranks, the pre-score shortlists and the argmax-cosine assignments.
@@ -191,9 +203,9 @@ object Similarity {
     // the broadcast nested-loop join's whole pair sweep runs as ONE task
     v.repartition(s.sparkContext.defaultParallelism)
       .as("a").join(broadcast(v.as("b")), $"a.vec_id" < $"b.vec_id")
+      .where(cosineAtLeast($"a.v", $"a.nrm", $"b.v", $"b.nrm", 0.4))
       .select($"a.vec_id".as("id_a"), $"b.vec_id".as("id_b"),
         cosine($"a.v", $"a.nrm", $"b.v", $"b.nrm").as("cos"))
-      .where($"cos" >= 0.4)
       .orderBy($"id_a", $"id_b")
   }
 
@@ -230,31 +242,33 @@ object Similarity {
 
   /** The blocked exact pair sweep on any (vec_id, v, nrm) frame at
     * threshold `tau` — the low-τ leg of [[cosineDedupRouted]].
+    *
+    * Each vector computes its own block-pair keys in its row: a vector of
+    * block i is the low side of the pairs (i, i..B−1) and the high side
+    * of (0..i, i), so the sweep needs no block-pair relation and no
+    * broadcast job to join one in. Pairs are kept by [[cosineAtLeast]],
+    * so only the candidates near τ pay the rounding.
     */
   private[graft] def blockedPairs(s: SparkSession, vin: DataFrame, tau: Double): DataFrame = {
     import s.implicits._
     // pmod, not %: Spark's % keeps the sign, and a negative id's block
-    // would match no block-pair row — its pairs would silently vanish
+    // would pair with no block — its pairs would silently vanish
     val v = vin.withColumn("blk", pmod($"vec_id", lit(PairBlocks)).cast("int"))
-    val blockPairs = s.createDataFrame(
-      for { i <- 0 until PairBlocks; j <- i until PairBlocks } yield (i, j))
-      .toDF("ba", "bb")
-    // each side replicated to its block-pair rows (a tiny broadcast join),
-    // then ONE shuffle equi-join on the composite (ba, bb) key — 36 even
-    // keys, so parallelism is the block-pair count, not the block count
-    val a = blockPairs.join(
-      v.select($"blk".as("ba"), $"vec_id".as("id_x"), $"v".as("vx"), $"nrm".as("nx")), "ba")
-    val b = blockPairs.join(
-      v.select($"blk".as("bb"), $"vec_id".as("id_y"), $"v".as("vy"), $"nrm".as("ny")), "bb")
+    // each side replicated to its block-pair keys, then ONE shuffle
+    // equi-join on the composite (ba, bb) key — 36 even keys, so
+    // parallelism is the block-pair count, not the block count
+    val a = v.select($"blk".as("ba"), explode(sequence($"blk", lit(PairBlocks - 1))).as("bb"),
+      $"vec_id".as("id_x"), $"v".as("vx"), $"nrm".as("nx"))
+    val b = v.select(explode(sequence(lit(0), $"blk")).as("ba"), $"blk".as("bb"),
+      $"vec_id".as("id_y"), $"v".as("vy"), $"nrm".as("ny"))
     // hash the b side of each block pair: left to AQE, the build side
     // of the runtime broadcast conversion follows whichever shuffle
     // finished first, so the join's generated code changed between runs
     a.join(b.hint("shuffle_hash"), Seq("ba", "bb"))
-      .where($"ba" =!= $"bb" || $"id_x" < $"id_y")
+      .where(($"ba" =!= $"bb" || $"id_x" < $"id_y") && cosineAtLeast($"vx", $"nx", $"vy", $"ny", tau))
       .select(least($"id_x", $"id_y").as("id_a"),
         greatest($"id_x", $"id_y").as("id_b"),
-        round(dot($"vx", $"vy") / ($"nx" * $"ny"), 6).as("cos"))
-      .where($"cos" >= tau)
+        cosine($"vx", $"nx", $"vy", $"ny").as("cos"))
       .orderBy($"id_a", $"id_b")
   }
 
@@ -1818,7 +1832,7 @@ object Similarity {
     val b = assign.select($"cent_id", $"vec_id".as("id_y"), $"v".as("vy"), $"nrm".as("ny"))
     val dups = a.join(b, "cent_id")
       .where($"id_x" < $"id_y")
-      .where(cosine($"vx", $"nx", $"vy", $"ny") >= tau)
+      .where(cosineAtLeast($"vx", $"nx", $"vy", $"ny", tau))
       .select($"id_y").distinct()
     assign.join(dups.withColumnRenamed("id_y", "vec_id"), Seq("vec_id"), "left_anti")
       .select($"vec_id", $"cent_id".as("cluster_id"), lit(true).as("kept"))

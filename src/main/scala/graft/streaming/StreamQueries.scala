@@ -51,28 +51,46 @@ object StreamQueries {
     */
   private[graft] val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** The session conf that lets a stateful query run a micro-batch with
+    * no new data, only to evict state past the watermark.
+    */
+  private[graft] val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
   /** The one stream-drive scope every registered stream head runs in.
     *
     * For the duration of the drive it pins `spark.sql.shuffle.partitions`
-    * to [[StreamShuffleParts]] and the checkpoint file manager to
-    * [[LocalCheckpointFileManager]] (both latch when the query starts;
-    * oracle SQL and batch twins keep the session's settings), and makes
-    * a fresh local checkpoint directory ([[EventsStream.withCheckpoint]]).
-    * `start` receives that directory and starts the query; each `feeds`
-    * entry then pushes one arrival batch into the query's sources and
-    * the drive waits for it with `processAllAvailable`. However the
-    * drive ends — a failing `start`, feed or batch — it records the
-    * drive's [[DriveStats]] (when a query was started), stops the
-    * query, drops the checkpoint directory and restores both confs.
+    * to [[StreamShuffleParts]], the checkpoint file manager to
+    * [[LocalCheckpointFileManager]] and [[NoDataBatchesKey]] to false
+    * (all three latch when the query starts; oracle SQL and batch twins
+    * keep the session's settings), and makes a fresh local checkpoint
+    * directory ([[EventsStream.withCheckpoint]]). `start` receives that
+    * directory and starts the query; each `feeds` entry then pushes one
+    * arrival batch into the query's sources and the drive waits for it
+    * with `processAllAvailable`.
+    *
+    * So a drive runs exactly one micro-batch per feed. Spark would
+    * otherwise follow every data batch whose watermark moved with a
+    * no-data batch that only evicts state; a feed is finite and nothing
+    * reads the state after its last batch, so those batches were paid
+    * for and discarded. Eviction still happens, at the start of the next
+    * data batch. The heads whose output waits on the watermark (windowed
+    * aggregates, sessions) push two far-future sentinel batches: the
+    * first moves the watermark, the second evicts and emits.
+    *
+    * However the drive ends — a failing `start`, feed or batch — it
+    * records the drive's [[DriveStats]] (when a query was started),
+    * stops the query, drops the checkpoint directory and restores the
+    * three confs.
     */
   private[graft] def drive(s: SparkSession, tag: String)(start: String => StreamingQuery)(
       feeds: Seq[() => Unit]): Unit =
     withConfs(s, "spark.sql.shuffle.partitions" -> StreamShuffleParts,
-        CheckpointManagerKey -> classOf[LocalCheckpointFileManager].getName) {
+        CheckpointManagerKey -> classOf[LocalCheckpointFileManager].getName,
+        NoDataBatchesKey -> "false") {
       EventsStream.withCheckpoint(tag) { ckpt =>
         val q = start(ckpt.getAbsolutePath)
         try feeds.foreach { feed => feed(); q.processAllAvailable() }
-        finally try recordDrive(tag, q) finally q.stop()
+        finally try recordDrive(tag, q, feeds.size) finally q.stop()
       }
     }
 
@@ -119,31 +137,35 @@ object StreamQueries {
     * count / bytes any micro-batch held — the number that must stay
     * WATERMARK-bounded (cluster-sized), not corpus-sized, as volume
     * grows (r19 ask #5) — and the per-phase time summed over the
-    * batches.
+    * batches. A trigger that found no data (the stream thread can poll
+    * once before the first feed arrives) also reports a progress
+    * entry; it has no `addBatch` phase and is not counted as a batch.
     */
-  private def recordDrive(sink: String, q: StreamingQuery): Unit = {
+  private def recordDrive(sink: String, q: StreamingQuery, feeds: Int): Unit = {
     val progress = q.recentProgress
     val stateOps = progress.flatMap(p => Option(p.stateOperators).toSeq.flatten)
     val phases = Phases.map { k =>
       k -> progress.iterator.map(p => Option(p.durationMs.get(k)).fold(0L)(_.longValue)).sum
     }
-    lastDriveStats.set(DriveStats(driveSeq.incrementAndGet(), sink, progress.length,
+    val batches = progress.count(_.durationMs.containsKey("addBatch"))
+    lastDriveStats.set(DriveStats(driveSeq.incrementAndGet(), sink, feeds, batches,
       if (stateOps.isEmpty) 0L else stateOps.map(_.numRowsTotal).max,
       if (stateOps.isEmpty) 0L else stateOps.map(_.memoryUsedBytes).max,
       phases))
   }
 
   /** Snapshot of the most recent [[drive]], for StreamScaleBench: a
-    * sequence number that advances once per recorded drive, the batch
-    * count, the per-batch maxima of keyed-state rows and bytes across
-    * all stateful operators in the plan, and the summed [[Phases]]
-    * in ms.
+    * sequence number that advances once per recorded drive, the feed
+    * count, the batch count (equal to the feed count once every feed
+    * has run), the per-batch maxima of keyed-state rows and bytes
+    * across all stateful operators in the plan, and the summed
+    * [[Phases]] in ms.
     */
-  private[graft] final case class DriveStats(seq: Long, sink: String, batches: Int,
+  private[graft] final case class DriveStats(seq: Long, sink: String, feeds: Int, batches: Int,
       maxStateRows: Long, maxStateBytes: Long, phasesMs: Seq[(String, Long)])
   private[graft] val lastDriveStats =
     new java.util.concurrent.atomic.AtomicReference[DriveStats](
-      DriveStats(0L, "", 0, 0L, 0L, Phases.map(_ -> 0L)))
+      DriveStats(0L, "", 0, 0, 0L, 0L, Phases.map(_ -> 0L)))
 
   /** The events table as time-ordered arrival batches: three chunks cut
     * at ts boundaries (equal-ts rows never split across chunks — the

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * size the repeat pass evicts and recompiles most of them. With the
   * cache sized by [[GraftSession]] and every generated source stable
   * across executions, the repeat compiles nothing. The dedup ops check
-  * the same for the sketch kernels' generated code.
+  * the same for the sketch kernels, the pair sweep and a stream drive.
   */
 class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -25,10 +25,13 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
     "q_stem_dutch", "q_stopword_filter", "q_typo_correct", "q_tfidf",
     "q_chi2_features", "q_word_match", "q_roc_curve", "q_f1_sweep")
 
-  private val dedupOps = Seq("q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash")
+  /** The `corpus_dedup` benchmark pass: the three dedup sketches, the
+    * exact cosine pair sweep and one stream drive. */
+  private val dedupOps = Seq("q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash",
+    "q_embed_cosine_dedup", "q_stream_dedup_exact")
 
   /** The typo correction and the five text-normalization heads, whose
-    * output sorts plan as a single-partition exchange plus a local sort
+    * output sorts plan over a single-partition exchange
     * (graft.plans.SmallSort) and whose typo step runs the nearest-word
     * kernel. */
   private val textHeads = Seq("q_typo_correct", "q_merge_entries", "q_clean_artefacts",
@@ -51,7 +54,7 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(again == 0, s"the repeat pass recompiled $again generated classes")
   }
 
-  test("a warm repeat of the exact, MinHash and SimHash dedup ops compiles no new classes") {
+  test("a warm repeat of the dedup sketches, the cosine sweep and a stream drive compiles no new classes") {
     pass(dedupOps)
     val again = pass(dedupOps)
     assert(again == 0, s"the repeat pass recompiled $again generated classes")

@@ -363,7 +363,8 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"${bad.size} non-equi join(s) in the two-level assignment plan")
   }
 
-  /** AQE's starting plan of `df`: every exchange placed, nothing executed. */
+  /** AQE's current plan of `df`: before `df` runs, its starting plan
+    * (every exchange placed, nothing executed); after, its final plan. */
   private def initialPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     df.queryExecution.executedPlan match {
@@ -372,9 +373,11 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Every shuffle exchange of `plan`, inside materialized stages too. */
   private def exchangesOf(plan: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    plan.collect { case e: ShuffleExchangeLike => e }
+    new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeLike => e }
   }
 
   test("simhash plan is one projection: no shuffle below the output sort") {
@@ -399,23 +402,50 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"${exploded.size} token explode/aggregation node(s) back in the SimHash plan")
   }
 
+  private val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  /** `body` with AQE's minPartitionSize lowered to 16k, so the sf0.001
+    * inputs are above the small-sort bound. */
+  private def aboveBound[T](body: => T): T = {
+    val prev = spark.conf.get(minSize)
+    try {
+      spark.conf.set(minSize, "16k")
+      body
+    } finally spark.conf.set(minSize, prev)
+  }
+
+  /** AQE's final plan of `df`, after running it through its own
+    * query execution (`collect`; a writer would plan a new one). */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan = {
+    df.collect()
+    initialPlan(df)
+  }
+
+  /** The sort's one exchange is single-partition with the sort's own
+    * ENSURE_REQUIREMENTS origin, not a user repartition. */
+  private def assertSingleSortExchange(plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    assert(plan.collect { case s: SortExec => s.global } == Seq(true),
+      s"expected one global sort:\n$plan")
+    assert(plan.collectFirst { case s: SortExec => s.child }.exists {
+      case ShuffleExchangeExec(SinglePartition, _, ENSURE_REQUIREMENTS, _) => true
+      case _ => false
+    }, s"expected the sort over one ENSURE_REQUIREMENTS single-partition exchange:\n$plan")
+  }
+
   test("small-sort rule: a sort over a small input skips the range exchange, a larger one keeps it") {
     import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
     import org.apache.spark.sql.execution.SortExec
-    val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     def sortPlan = initialPlan(SparkEntry.queries("q_dedup_simhash")(spark, dir))
     // the sf0.001 documents file (64 KB) is under the default 1 MB bound
     val small = sortPlan
     assert(exchangesOf(small).map(_.outputPartitioning) == Seq(SinglePartition),
       s"expected one single-partition exchange:\n$small")
-    assert(small.collect { case s: SortExec => s.global } == Seq(false),
-      s"expected one local sort:\n$small")
+    assertSingleSortExchange(small)
     // above the bound, the sort keeps its range exchange and global sort
-    val prev = spark.conf.get(minSize)
-    val large = try {
-      spark.conf.set(minSize, "16k")
-      sortPlan
-    } finally spark.conf.set(minSize, prev)
+    val large = aboveBound(sortPlan)
     val largeParts = exchangesOf(large).map(_.outputPartitioning)
     assert(largeParts.size == 1 && largeParts.head.isInstanceOf[RangePartitioning],
       s"expected one range exchange:\n$large")
@@ -442,16 +472,53 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(parts.size == 2 && parts.head == SinglePartition &&
       parts(1).isInstanceOf[HashPartitioning] && parts(1).numPartitions == 4,
       s"expected the single-partition exchange over the 4-way fan-out:\n$plan")
-    assert(plan.collect { case s: SortExec => s.global } == Seq(false),
-      s"expected one local sort:\n$plan")
+    assertSingleSortExchange(plan)
+  }
+
+  test("small-sort rule: a small sorted aggregate runs one exchange, with partial aggregation below it") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def partialBelow(e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike) =
+      e.child.exists {
+        case a: BaseAggregateExec => a.requiredChildDistributionExpressions.isEmpty
+        case _ => false
+      }
+    for (q <- Seq("q_dedup_exact", "q_merge_entries")) {
+      def df = SparkEntry.queries(q)(spark, dir)
+      // the first plan and the plan AQE ran agree
+      for (plan <- Seq(initialPlan(df), finalPlan(df))) {
+        val exchanges = exchangesOf(plan)
+        assert(exchanges.size == 1 && exchanges.head.outputPartitioning == SinglePartition &&
+          partialBelow(exchanges.head),
+          s"$q: expected one single-partition exchange over a partial aggregate:\n$plan")
+      }
+      // above the bound: the aggregate's hash exchange and the sort's range exchange
+      for (plan <- aboveBound(Seq(initialPlan(df), finalPlan(df)))) {
+        val parts = exchangesOf(plan).map(_.outputPartitioning)
+        assert(parts.size == 2 && parts.exists(_.isInstanceOf[RangePartitioning]) &&
+          parts.exists(_.isInstanceOf[HashPartitioning]),
+          s"$q: expected a hash and a range exchange above the bound:\n$plan")
+      }
+    }
   }
 
   test("small-sort rule leaves a streaming plan untouched") {
-    val stream = spark.readStream.format("rate").load()
-      .groupBy("value").count().orderBy("value")
-    val plan = stream.queryExecution.analyzed
-    assert(plan.isStreaming)
-    assert(graft.plans.SmallSort(plan) eq plan)
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    // AQE does not plan micro-batches, so the sort keeps its range exchange
+    val mem = MemoryStream[Long]
+    val q = mem.toDF().groupBy("value").count().orderBy("value")
+      .writeStream.format("memory").queryName("graft_small_sort_stream")
+      .outputMode("complete").start()
+    try {
+      mem.addData(3L, 1L, 2L, 1L)
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(exchangesOf(plan).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+        s"expected the stream's range exchange:\n$plan")
+    } finally q.stop()
   }
 
   test("minhash plan: one band self-join, no doc_id aggregation, no join on the hash index") {

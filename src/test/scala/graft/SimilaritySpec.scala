@@ -277,6 +277,53 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(blocked.nonEmpty && blocked == brute)
   }
 
+  test("cosineAtLeast keeps exactly the rows of the rounded cosine filter") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, round}
+    import graft.functions.GraftExpressions.arrayDot
+    def norm(v: Seq[Double]) = math.sqrt(v.map(x => x * x).sum)
+    val rnd = new scala.util.Random(20181030L)
+    // 8-dim gaussian pairs: cosines spread over about ±0.8
+    val random = (0 until 4000).map { i =>
+      val (a, b) = (Seq.fill(8)(rnd.nextGaussian()), Seq.fill(8)(rnd.nextGaussian()))
+      (i.toLong, a, norm(a), b, norm(b))
+    }
+    // a = [1], b = [c] with unit norms given: the unrounded cosine is c
+    // itself, placed a few ulps around each rounding and pre-test boundary
+    def ulps(x: Double): Seq[Double] =
+      Iterator.iterate(x)(math.nextDown).slice(1, 5).toSeq ++
+        Iterator.iterate(x)(math.nextUp).take(5).toSeq
+    val taus = Seq(0.4, Similarity.TauLshFloor)
+    val constructed = taus.flatMap(t => Seq(t - 5e-7, t - 1e-6, t).flatMap(ulps)).zipWithIndex
+      .map { case (c, i) => (100000L + i, Seq(1.0), 1.0, Seq(c), 1.0) }
+    val nanId = 200000L
+    val withNaN = (nanId, Seq(Double.NaN, 1.0), Double.NaN, Seq(1.0, 1.0), math.sqrt(2.0))
+    val pairs = (random ++ constructed :+ withNaN).toDF("id", "a", "an", "b", "bn")
+    // a zero vector: the unrounded cosine is 0 / 0
+    val zero = Seq((300000L, Seq(0.0, 0.0), 0.0, Seq(1.0, 0.0), 1.0)).toDF("id", "a", "an", "b", "bn")
+    def kept(df: org.apache.spark.sql.DataFrame, tau: Double, helper: Boolean): Set[Long] = {
+      val keep =
+        if (helper) Similarity.cosineAtLeast(col("a"), col("an"), col("b"), col("bn"), tau)
+        else round(arrayDot(col("a"), col("b")) / (col("an") * col("bn")), 6) >= tau
+      df.where(keep).select("id").as[Long].collect().toSet
+    }
+    val wsKey = "spark.sql.codegen.wholeStage"
+    val prev = spark.conf.get(wsKey)
+    try for (ws <- Seq("true", "false"); tau <- taus) {
+      spark.conf.set(wsKey, ws)
+      val rounded = kept(pairs, tau, helper = false)
+      assert(kept(pairs, tau, helper = true) == rounded, s"codegen $ws, tau $tau")
+      // the boundary rows at this tau split: 0.3999995 rounds up to 0.4,
+      // the 4 ulps below it and everything near tau − 1e-6 round down
+      val edgeKept = rounded.count(id => id >= 100000L && id < 200000L)
+      assert(edgeKept > 0 && edgeKept < constructed.size, s"codegen $ws, tau $tau: $edgeKept")
+      assert(rounded.contains(nanId) && rounded.count(_ < 100000L) > 0)
+      val zeroRounded = scala.util.Try(kept(zero, tau, helper = false))
+      val zeroHelper = scala.util.Try(kept(zero, tau, helper = true))
+      assert(zeroRounded.toOption == zeroHelper.toOption, s"$zeroRounded vs $zeroHelper")
+    } finally spark.conf.set(wsKey, prev)
+  }
+
   /** Planted router corpus: 60 seeded random 64-dim vectors (pairwise
     * cos ≈ N(0, 1/64) — nowhere near any τ the router serves) plus 5
     * near-duplicates of the first 5 (tiny seeded perturbation → cos

@@ -444,7 +444,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       fail(s"${touching.size} forks named the checkpoint, e.g. ${touching.take(3).mkString("; ")}")
   }
 
-  test("a drive whose feed throws drops its checkpoint and restores both confs") {
+  test("a drive whose feed throws drops its checkpoint and restores its confs") {
     import graft.streaming.StreamQueries
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -455,19 +455,22 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val partsKey = "spark.sql.shuffle.partitions"
     val parts = spark.conf.get(partsKey)
     val manager = spark.conf.getOption(StreamQueries.CheckpointManagerKey)
+    val noData = spark.conf.getOption(StreamQueries.NoDataBatchesKey)
     val mem = MemoryStream[Long]
-    var during = Option.empty[(String, Option[String])]
+    var during = Option.empty[(String, Option[String], Option[String])]
     val e = intercept[IllegalStateException] {
       StreamQueries.drive(spark, tag) { ckpt =>
-        during = Some(spark.conf.get(partsKey) ->
-          spark.conf.getOption(StreamQueries.CheckpointManagerKey))
+        during = Some((spark.conf.get(partsKey),
+          spark.conf.getOption(StreamQueries.CheckpointManagerKey),
+          spark.conf.getOption(StreamQueries.NoDataBatchesKey)))
         mem.toDF().writeStream.format("memory").queryName(tag)
           .option("checkpointLocation", ckpt).start()
       }(Seq(() => mem.addData(1L, 2L),
         () => throw new IllegalStateException("second feed failed")))
     }
     assert(e.getMessage == "second feed failed")
-    assert(during == Some("4" -> Some(classOf[graft.streaming.LocalCheckpointFileManager].getName)))
+    assert(during == Some(("4", Some(classOf[graft.streaming.LocalCheckpointFileManager].getName),
+      Some("false"))))
     // the first feed ran through the engine before the second failed
     assert(spark.table(tag).as[Long].collect().sorted.toSeq == Seq(1L, 2L))
     assert(spark.streams.active.isEmpty)
@@ -475,5 +478,44 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(leftovers.isEmpty, s"checkpoint leaked: $leftovers")
     assert(spark.conf.get(partsKey) == parts)
     assert(spark.conf.getOption(StreamQueries.CheckpointManagerKey) == manager)
+    assert(spark.conf.getOption(StreamQueries.NoDataBatchesKey) == noData)
+  }
+
+  /** Row count and SHA-1 of the sorted row strings of every registered
+    * stream head at sf0.001 on this spec's `local[2]` session, as the
+    * drive produced them with Spark's no-data micro-batches on (a
+    * state-eviction batch after every data batch that moved the
+    * watermark). */
+  private val headDigests: Map[String, (Int, String)] = Map(
+    "q_stream_sessionize" -> (946, "9a525cd30a0b15258f090a2f8a01de7307b25bca"),
+    "q_stream_window_live" -> (868, "62829ab733100d9502cd62e88c6d16d4477ce351"),
+    "q_stream_curate" -> (280, "dfedf991a7ce46a30db48d6b1e57560a62a27f0c"),
+    "q_stream_sketch_store" -> (30, "0ba6cb52893a7796bf4bd986bd16720abc4bcf02"),
+    "q_stream_anomaly" -> (18, "1f1f2bdf9b0f1f92e574a8d42606a1927371e16b"),
+    "q_stream_cms" -> (123, "bd7558f0897327475e54d27d9fb69d7210d3a92a"),
+    "q_stream_incremental" -> (11, "963db7babbe5aac95e9c8782f47c8ed994a6f34a"),
+    "q_stream_winnow_match" -> (66, "4c930a5b53a594336f4da2c987a8d5a808274c7e"),
+    "q_stream_mixture_apply" -> (500, "52732793a64e1aebc2571d2e4b178e51a0464d35"),
+    "q_stream_bpe_encode" -> (500, "23d7b0ced3c19abdfcff6e52354208e46d7baa55"),
+    "q_stream_dedup_exact" -> (1000, "681e23c2cbf56947c94fd52b3971a051b1b1f99b"),
+    "q_stream_neardup" -> (438, "b83db0b0aeb78716c74c6739cb18d3d4a1b3091b"),
+    "q_stream_click_attrib" -> (2, "f216144dd9f793d5bc1b84c161834368aa059166"),
+    "q_stream_clusters" -> (54, "6b90808e50238245adda8bb036e30d35d3dff212"))
+
+  test("every registered stream head runs one micro-batch per feed, with unchanged rows") {
+    import graft.streaming.StreamQueries
+    val dir = "/root/testdata/sf0.001"
+    for (q <- StreamQueries.queries) {
+      val before = StreamQueries.lastDriveStats.get().seq
+      val rows = q.fn(spark, dir).collect().map(_.toString).sorted
+      val st = StreamQueries.lastDriveStats.get()
+      assert(st.seq != before && st.sink.nonEmpty, s"${q.name} recorded no drive")
+      assert(st.feeds > 0 && st.batches == st.feeds,
+        s"${q.name}: ${st.batches} micro-batches for ${st.feeds} feeds")
+      val sha = java.security.MessageDigest.getInstance("SHA-1")
+        .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+      assert(headDigests.get(q.name).contains(rows.length -> sha),
+        s"${q.name}: ${rows.length} rows, sha1 $sha")
+    }
   }
 }
