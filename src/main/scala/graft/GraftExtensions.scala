@@ -43,11 +43,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** The function catalog itself lives on the companion so it can ALSO be
-  * registered imperatively into an already-built session
-  * ([[GraftExtensions.registerInto]]) — the path the REGISTERED
-  * q_sql_surface query uses, since the driver's Verify/Bench sessions
-  * are constructed without the extensions conf.
+/** The function catalog, as the `injectFunction` triples [[GraftExtensions]]
+  * installs into every session [[GraftSession.builder]] builds.
   */
 object GraftExtensions {
 
@@ -129,13 +126,4 @@ object GraftExtensions {
       info("lang_id",
         "lang_id(str) - argmax stopword-profile density language code"),
       (args: Seq[Expression]) => template(langIdTemplate, args.head)))
-
-  /** Register the catalog into an existing session's function registry
-    * — idempotent (registerFunction overwrites), so registered queries
-    * can call it unconditionally.
-    */
-  def registerInto(s: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (id, fi, builder) =>
-      s.sessionState.functionRegistry.registerFunction(id, fi, builder)
-    }
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * master, shuffle parallelism sized to the worker threads, AQE with
   * skew-join handling, UTC session time, the legacy nanosAsLong flag
   * the events table needs (see Tables.events) — set once here at
-  * construction instead of leaking from a table loader — and
-  * [[GraftExtensions]] (graft's SQL functions and planner rules).
+  * construction instead of leaking from a table loader — the
+  * fork-free local filesystem [[NioLocalFileSystem]] under every write,
+  * and [[GraftExtensions]] (graft's SQL functions and planner rules).
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -46,6 +47,14 @@ object GraftSession {
       // classes. graft adds no session artifacts, so nothing is shared
       // that isolation would keep apart.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // every local write, batch or stream, goes through one `file:`
+      // filesystem that sets permissions in the JVM instead of forking
+      // `chmod` (see NioLocalFileSystem); Spark's FileSystem-based
+      // checkpoint manager commits through it with java.io renames,
+      // where the default FileContext one forks `readlink` per rename
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   /** Size of Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`,
     * default 100). The notebook flow runs many different queries in one

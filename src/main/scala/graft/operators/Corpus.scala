@@ -32,31 +32,33 @@ object Corpus {
     val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
       .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
       .persist()
-    var labels = edges.select($"src".as("doc_id")).distinct()
-      .select($"doc_id", $"doc_id".as("cluster_id"))
-      .localCheckpoint(true)
-    var converged = false
-    var round = 0
-    while (!converged && round < 20) {
-      val msgs = labels.join(edges, $"doc_id" === $"src")
-        .select($"dst".as("doc_id"), $"cluster_id")
-      // lazy checkpoint: the convergence probe below materializes it, so
-      // each round is one job, not two, while still truncating lineage
-      val next = labels.unionByName(msgs)
-        .groupBy($"doc_id").agg(min($"cluster_id").as("cluster_id"))
-        .localCheckpoint(false)
-      converged = next.join(labels.withColumnRenamed("cluster_id", "prev"), "doc_id")
-        .where($"cluster_id" =!= $"prev").isEmpty
-      labels = next
-      round += 1
-    }
-    edges.unpersist(blocking = false)
+    // a failing round must not leave the edge frame pinned
+    val (labels, converged, rounds) = try {
+      @annotation.tailrec
+      def propagate(labels: DataFrame, round: Int): (DataFrame, Boolean, Int) =
+        if (round == 20) (labels, false, round)
+        else {
+          val msgs = labels.join(edges, $"doc_id" === $"src")
+            .select($"dst".as("doc_id"), $"cluster_id")
+          // lazy checkpoint: the convergence probe below materializes it, so
+          // each round is one job, not two, while still truncating lineage
+          val next = labels.unionByName(msgs)
+            .groupBy($"doc_id").agg(min($"cluster_id").as("cluster_id"))
+            .localCheckpoint(false)
+          val converged = next.join(labels.withColumnRenamed("cluster_id", "prev"), "doc_id")
+            .where($"cluster_id" =!= $"prev").isEmpty
+          if (converged) (next, true, round + 1) else propagate(next, round + 1)
+        }
+      propagate(edges.select($"src".as("doc_id")).distinct()
+        .select($"doc_id", $"doc_id".as("cluster_id"))
+        .localCheckpoint(true), 0)
+    } finally edges.unpersist(blocking = false)
     // a silent early exit would return non-minimal labels that diverge
     // from the fixpoint (and the oracle); fail loudly instead — a corpus
     // with components deeper than this wants the large-star/small-star
     // O(log n) contraction, not more rounds
     require(converged,
-      s"dedupClusters did not converge within $round rounds — component " +
+      s"dedupClusters did not converge within $rounds rounds — component " +
         "diameter exceeds the bound; switch to star-contraction")
     labels.orderBy($"doc_id")
   }

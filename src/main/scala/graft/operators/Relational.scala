@@ -138,21 +138,20 @@ object Relational {
     * per-group sketch instead of buffering the group's values, so the
     * same matrix costs O(groups × sketch) memory at any corpus size.
     * GK internals differ across engines, so the REGISTERED shape is
-    * [[percentilesApproxGated]] (envelope boolean); this raw frame is
-    * the spec surface (RelationalSpec/MiscSpec bound the relative error
-    * against the exact operator at ≤1% per cell).
+    * [[percentilesApproxGated]] (envelope boolean); this raw frame over
+    * a given lineitem layout is the spec surface (MiscSpec bounds the
+    * relative error against the exact operator at ≤1% per cell, at
+    * several partitionings).
     */
-  def percentilesApprox(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.lineitem(s, dir)
-      .groupBy($"l_returnflag")
+  def percentilesApprox(lineitem: DataFrame): DataFrame =
+    lineitem
+      .groupBy(col("l_returnflag"))
       .agg(
         expr("percentile_approx(l_quantity, 0.5, 10000)").as("qty_p50"),
         expr("percentile_approx(l_quantity, 0.95, 10000)").as("qty_p95"),
         expr("percentile_approx(l_extendedprice, 0.5, 10000)").as("price_p50"),
         expr("percentile_approx(l_extendedprice, 0.95, 10000)").as("price_p95"))
-      .orderBy($"l_returnflag")
-  }
+      .orderBy(col("l_returnflag"))
 
   /** The REGISTERED q_percentiles_approx shape — hash-checked since
     * round 17 by the gated-boolean convention (the q_stream_sketch_store
@@ -172,7 +171,7 @@ object Relational {
     // shift with partitioning, but the REGISTERED columns are the exact
     // percentiles plus the 1%-envelope boolean, and the sketch's 1e-4
     // error bound holds under any merge topology — the boolean cannot
-    // flip (RelationalSpec bounds the per-cell error)
+    // flip (MiscSpec bounds the per-cell error)
     Tables.fanOutWide(Tables.lineitem(s, dir), col("l_orderkey"))
       .groupBy($"l_returnflag")
       .agg(

@@ -1196,7 +1196,7 @@ object Similarity {
     * the consequence — 3.8·10⁷ of 2.7·10⁸ band emits surviving into
     * the verify fetch, whose per-pair 64-double payload turned the
     * two id-joins into a ~20 GB shuffle (~60 of the route's 66 s;
-    * DiagLsh decomposition, §8l). At 4σ the certified floor recall
+    * per-stage decomposition, §8l). At 4σ the certified floor recall
     * drops by 6·10⁻⁵ while the quadratic term's constant shrinks
     * ~400×: the verify volume is now dup-driven, not bulk-driven,
     * which is the only posture that survives 100 TB. The filter runs
@@ -1210,8 +1210,8 @@ object Similarity {
     * (vec_id, s0..s3, band, bits — [[bandsFrom]]'s shape) colliding in a
     * (band, bits) bucket, as (id_a, id_b, h) with h the full 256-bit
     * signature Hamming distance. One source for the ANN probe
-    * ([[lshRanked]]), the dedup route ([[lshVerifiedCandidates]]) and
-    * [[diagBandCollisions]]; oracle mirror [[hammingSql]].
+    * ([[lshRanked]]) and the dedup route ([[lshVerifiedCandidates]]);
+    * oracle mirror [[hammingSql]].
     */
   private def bandPairs(left: DataFrame, right: DataFrame): DataFrame = {
     def side(df: DataFrame, id: String, w: String) = df.select((col("band") +: col("bits") +:
@@ -1219,21 +1219,6 @@ object Similarity {
     side(left, "id_a", "a").join(side(right, "id_b", "b"), Seq("band", "bits"))
       .select(col("id_a"), col("id_b"), (0 until SignWords)
         .map(i => bit_count(col(s"a$i").bitwiseXOR(col(s"b$i")))).reduce(_ + _).as("h"))
-  }
-
-  /** DiagLsh stage hooks (throwaway diagnostics, not registered). */
-  private[graft] def diagVecs(s: SparkSession, dir: String): DataFrame =
-    vecs(s, dir)
-  private[graft] def diagSignatures(s: SparkSession, dir: String): DataFrame =
-    signSignatures(s, vecs(s, dir))
-  private[graft] def diagBandCollisions(s: SparkSession, dir: String): (Long, Long) = {
-    import s.implicits._
-    val bands = signBands(s, vecs(s, dir))
-    val r = bandPairs(bands, bands).where($"id_a" < $"id_b")
-      .select(count(lit(1)).as("emits"),
-        sum(when($"h" <= HammingMax, 1L).otherwise(0L)).as("passed"))
-      .head()
-    (r.getLong(0), r.getLong(1))
   }
 
   /** The LSH route's verified candidate frame — the 3-stage cascade:

@@ -150,11 +150,10 @@ object SourceQueries {
     * convention, so the rules fire) — and the ORACLE re-derives every
     * column in DuckDB, so the SQL-registered expressions are
     * hash-checked end-to-end, not just spec-compared to their batch
-    * twins. Functions register imperatively (idempotent) because the
-    * driver's session is built without the extensions conf.
+    * twins. The functions come from the session itself:
+    * [[graft.GraftSession.builder]] installs the extensions.
     */
   def sqlSurface(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.registerInto(s)
     Tables.documents(s, dir).createOrReplaceTempView("graft_docs_sql")
     s.sql(s"""
       SELECT doc_id,

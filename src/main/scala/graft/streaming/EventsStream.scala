@@ -21,12 +21,10 @@ object EventsStream {
   /** RAM-backed checkpoint directory for one stream drive. A stateful
     * query commits per-partition state-store delta files plus offset/
     * commit logs EVERY micro-batch, each one a small temp-file write
-    * and rename. The measured cost of those commits was not the IO:
-    * through Hadoop's local filesystem without native IO, every create
-    * and rename forked a `chmod` or `readlink` process, which is why
-    * [[StreamQueries.drive]] runs them through the in-JVM
-    * [[LocalCheckpointFileManager]]. The directory is always local, the
-    * one kind of path that manager accepts. The drives here feed from
+    * and rename through Spark's FileSystem-based manager over
+    * [[graft.NioLocalFileSystem]], which forks no process for either
+    * (Hadoop's own local filesystem forks `chmod` without native IO,
+    * and Spark's default manager `readlink`). The drives here feed from
     * an in-process MemoryStream — already non-recoverable across JVMs —
     * so a RAM-disk checkpoint changes the durability of nothing the
     * harness could replay anyway (VERDICT r21 #4). A production

@@ -45,12 +45,6 @@ object StreamQueries {
     */
   private val StreamShuffleParts = "4"
 
-  /** The session conf naming the class Spark instantiates for every
-    * checkpoint file operation of a streaming query (offset and commit
-    * logs, state-store files, their checksums).
-    */
-  private[graft] val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
-
   /** The session conf that lets a stateful query run a micro-batch with
     * no new data, only to evict state past the watermark.
     */
@@ -59,14 +53,15 @@ object StreamQueries {
   /** The one stream-drive scope every registered stream head runs in.
     *
     * For the duration of the drive it pins `spark.sql.shuffle.partitions`
-    * to [[StreamShuffleParts]], the checkpoint file manager to
-    * [[LocalCheckpointFileManager]] and [[NoDataBatchesKey]] to false
-    * (all three latch when the query starts; oracle SQL and batch twins
-    * keep the session's settings), and makes a fresh local checkpoint
-    * directory ([[EventsStream.withCheckpoint]]). `start` receives that
-    * directory and starts the query; each `feeds` entry then pushes one
-    * arrival batch into the query's sources and the drive waits for it
-    * with `processAllAvailable`.
+    * to [[StreamShuffleParts]] and [[NoDataBatchesKey]] to false (both
+    * latch when the query starts; oracle SQL and batch twins keep the
+    * session's settings), and makes a fresh local checkpoint directory
+    * ([[EventsStream.withCheckpoint]]). The checkpoint IO needs no pin:
+    * every graft session commits it through Spark's FileSystem-based
+    * manager over [[graft.NioLocalFileSystem]], which forks no process.
+    * `start` receives that directory and starts the query; each `feeds`
+    * entry then pushes one arrival batch into the query's sources and
+    * the drive waits for it with `processAllAvailable`.
     *
     * So a drive runs exactly one micro-batch per feed. Spark would
     * otherwise follow every data batch whose watermark moved with a
@@ -80,12 +75,11 @@ object StreamQueries {
     * However the drive ends — a failing `start`, feed or batch — it
     * records the drive's [[DriveStats]] (when a query was started),
     * stops the query, drops the checkpoint directory and restores the
-    * three confs.
+    * two confs.
     */
   private[graft] def drive(s: SparkSession, tag: String)(start: String => StreamingQuery)(
       feeds: Seq[() => Unit]): Unit =
     withConfs(s, "spark.sql.shuffle.partitions" -> StreamShuffleParts,
-        CheckpointManagerKey -> classOf[LocalCheckpointFileManager].getName,
         NoDataBatchesKey -> "false") {
       EventsStream.withCheckpoint(tag) { ckpt =>
         val q = start(ckpt.getAbsolutePath)

@@ -115,13 +115,21 @@ class MiscSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("approx percentiles sit within 1% of the exact operator per cell") {
     val exact = graft.operators.Relational.percentiles(spark, dir).collect()
       .map(r => r.getString(0) -> (1 to 4).map(r.getDouble)).toMap
-    val approx = graft.operators.Relational.percentilesApprox(spark, dir)
-      .collect().map(r => r.getString(0) -> (1 to 4).map(r.getDouble)).toMap
-    assert(exact.keySet == approx.keySet && exact.nonEmpty)
-    exact.foreach { case (flag, es) =>
-      es.zip(approx(flag)).foreach { case (e, a) =>
-        assert(math.abs(a - e) <= 0.01 * math.abs(e),
-          s"$flag: approx $a vs exact $e")
+    assert(exact.nonEmpty)
+    val lineitem = Tables.lineitem(spark, dir)
+    // the GK sketches merge differently per layout: as read, and
+    // hash-spread to one and to seven partitions
+    val layouts = Seq("as read" -> lineitem) ++ Seq(1, 7).map(n =>
+      s"$n partitions" -> lineitem.repartition(n, col("l_orderkey")))
+    for ((layout, li) <- layouts) {
+      val approx = graft.operators.Relational.percentilesApprox(li)
+        .collect().map(r => r.getString(0) -> (1 to 4).map(r.getDouble)).toMap
+      assert(exact.keySet == approx.keySet, layout)
+      exact.foreach { case (flag, es) =>
+        es.zip(approx(flag)).foreach { case (e, a) =>
+          assert(math.abs(a - e) <= 0.01 * math.abs(e),
+            s"$layout, $flag: approx $a vs exact $e")
+        }
       }
     }
   }
