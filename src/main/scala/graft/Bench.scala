@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import BenchIntegrity.fmt
 
 /** Scoreboard benchmark. One JSON line: per-query MEDIAN-of-3 wall
   * times (noise immunity — a single loaded-host outlier can fabricate a
@@ -28,47 +29,23 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = BenchIntegrity.sfDir
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // integrity gate BEFORE the session spins up executors: wait out a
-    // loaded host (bounded), else tag the artifact .loaded (ask r19#1)
+    // loaded host (bounded), else tag the artifact .loaded
     val gate = BenchIntegrity.gate("bench")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // absorb JVM/session warm-up (codegen, parquet reader JIT) so it
-    // doesn't land on the first query
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    // host-load marker: a FIXED cpu-bound smoke query (data-independent
-    // sum over a range) timed after warm-up — its wall time varies only
-    // with host contention, so across rounds it calibrates whether a
-    // run's numbers were taken on a loaded box (the r12-r15 artifact-
-    // drift lesson: without a marker, noise and regression read alike)
-    def smoke(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200L * 1000 * 1000).selectExpr("sum(id * 3 + 1)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val smokeStart = smoke()
-    def loadavg(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-    val loadStart = loadavg()
+    val spark = BenchIntegrity.session()
+    val start = BenchIntegrity.warmUp(spark, sfDir)
 
     val failed = scala.collection.mutable.ListBuffer[String]()
-    def time(q: GraftQuery): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch {
+    def time(q: GraftQuery): Option[Double] =
+      try Some(BenchIntegrity.time(spark, q, sfDir))
+      catch {
         case e: Throwable =>
           failed += q.name
           System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
           None
       }
-    }
 
     // pass 1: everything, cold, registry order (comparable across rounds).
     // PREPEND per pass — head of each list is the latest sample, LAST
@@ -83,17 +60,15 @@ object Bench {
       again.foreach(q => time(q).foreach(t => samples(q.name) ::= t))
     }
 
-    // single-shot cross-check (ask r19#1): a one-cold-rep line has no
-    // in-run median to defend it, so compare it against the prior
-    // round's committed artifact; a >2× deviation (either direction,
-    // >1 s absolute) gets ONE cold re-measure after a SessionCache
-    // cold-reset, and the committed value is the min of the two cold
-    // samples. Bounded: at most 8 re-measures per run. This is the
-    // machinery that would have caught the r18 q_dedup_clusters 8.5 s
-    // phantom (true idle-host cold time ~6.4 s) before it was committed.
-    val repoDir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO",
-      sys.props.getOrElse("user.dir", ".")))
-    val prior = BenchIntegrity.priorQueries(repoDir, sfDir)
+    // single-shot cross-check: a one-cold-rep line has no in-run median
+    // to defend it, so compare it against the prior round's committed
+    // artifact; a >2× deviation (either direction, >1 s absolute) gets
+    // ONE cold re-measure after a SessionCache cold-reset, and the
+    // committed value is the min of the two cold samples. Bounded: at
+    // most 8 re-measures per run. This is the machinery that would have
+    // caught the r18 q_dedup_clusters 8.5 s phantom (true idle-host
+    // cold time ~6.4 s) before it was committed.
+    val prior = BenchIntegrity.priorQueries(BenchIntegrity.repoDir, sfDir)
     val remeasured = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     SparkEntry.all.filter(q => q.singleShot && samples(q.name).size == 1)
       .foreach { q =>
@@ -110,22 +85,30 @@ object Bench {
           }
         }
       }
+    BenchIntegrity.finish(spark, "bench_full",
+      body(sfDir, reps, samples, failed.toSeq), gate, start, remeasured)
+    spark.stop()
+  }
 
+  /** The board's own JSON fields (no braces) from each query's samples,
+    * latest first and pass-1 cold last; `failed` names the queries that
+    * threw in some pass.
+    */
+  def body(sfDir: String, reps: Int, samples: collection.Map[String, List[Double]],
+      failed: Seq[String]): String = {
     def median(xs: List[Double]): Double = {
       val s = xs.sorted
       s(s.size / 2) // odd rep counts; best-of-center for even
     }
-    // 3-decimal timings keep the line compact enough that a tail-capture
-    // of the run log still contains the complete JSON
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    def names(ns: Iterable[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val meds = samples.collect { case (k, xs) if xs.nonEmpty => k -> median(xs) }
-    val qs = meds.map { case (k, v) => s"\"" + k + "\":" + f(v) }
+    val qs = meds.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     // pass-1 cold time for every multi-rep query (for single-shot ones
     // the median IS the cold time): cold-vs-cold is the cross-round
     // anchor — warm medians benefit from OS page cache and JIT
     val colds = samples.collect { case (k, xs) if xs.size > 1 =>
-      s"\"" + k + "\":" + f(xs.last)
+      s"\"" + k + "\":" + fmt(xs.last)
     }.mkString("{", ",", "}")
     // spread (max-min over reps) only where it is material (>25% of the
     // median AND >0.5 s absolute — sub-second queries jitter relatively
@@ -134,14 +117,13 @@ object Bench {
     val spread = samples.collect {
       case (k, xs) if xs.size > 1 && (xs.max - xs.min) > 0.25 * median(xs) &&
           (xs.max - xs.min) > 0.5 =>
-        s"\"" + k + "\":" + f(xs.max - xs.min)
+        s"\"" + k + "\":" + fmt(xs.max - xs.min)
     }.mkString("{", ",", "}")
     val total = meds.values.sum
     // the one-cold-rep names ride the line so their numbers are
     // self-describing as single-shot (load-sensitive) without reading
     // this source
-    val oneShot = SparkEntry.all.filter(_.singleShot).map("\"" + _.name + "\"")
-      .mkString("[", ",", "]")
+    val oneShot = names(SparkEntry.all.filter(_.singleShot).map(_.name))
     // per-query sample count: the reader's direct answer to "is this a
     // median or one cold shot?" (and a lower-than-reps count flags a
     // query that failed some passes)
@@ -150,13 +132,10 @@ object Bench {
     }.mkString("{", ",", "}")
     // failed names ride the JSON line: a swallowed exception otherwise
     // reads as a suspiciously fast query instead of a broken one
-    val errs = failed.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // end-of-run load marker + noisy-run self-identification: queries
-    // whose rep spread exceeds the median itself were measured under
-    // contention — name them so a reader (or the judge) separates noise
-    // from regression without re-running
-    val smokeEnd = smoke()
-    val loadEnd = loadavg()
+    val errs = names(failed.distinct)
+    // noisy-run self-identification: queries whose rep spread exceeds
+    // the median itself were measured under contention — name them so
+    // a reader separates noise from regression without re-running
     val noisy = samples.collect {
       case (k, xs) if xs.size > 1 && (xs.max - xs.min) > median(xs) &&
           (xs.max - xs.min) > 1.0 => k
@@ -165,31 +144,6 @@ object Bench {
       s"[bench] WARNING: rep spread exceeded the median on ${noisy.size} " +
         s"queries (${noisy.mkString(", ")}) — host was loaded; treat " +
         "their medians as upper bounds")
-    val noisyJson = noisy.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val host = s"""{"smoke_sec":[${f(smokeStart)},${f(smokeEnd)}],"loadavg":[${f(loadStart)},${f(loadEnd)}]}"""
-    val integrity = gate.json(BenchIntegrity.remeasuredJson(remeasured))
-    val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","reps":$reps,"queries":$qs,"n_reps":$nreps,"cold":$colds,"spread":$spread,"single_shot":$oneShot,"errors":$errs,"noisy":$noisyJson,"host":$host,"integrity":$integrity,"sf":"$sfDir"}"""
-    println(line)
-    // ALSO persist the complete line as a machine-readable artifact: the
-    // driver's BENCH_r<N>.json captures only a truncated stdout tail, so
-    // per-query medians would otherwise be invisible to a reader. Round
-    // number = 1 + the highest committed BENCH_r<N>.json (this run IS
-    // that round's bench); best-effort — a bench must never fail on a
-    // repo-layout surprise. Repo root comes from SPARK_GRAFT_REPO or the
-    // launch directory, not a hardcoded path, so the artifact lands next
-    // to the checkout wherever it lives.
-    try {
-      val rounds = Option(repoDir.list()).toSeq.flatten
-        .flatMap { n => "^BENCH_r0*([0-9]+)\\.json$".r.findFirstMatchIn(n).map(_.group(1).toInt) }
-      val next = if (rounds.isEmpty) 0 else rounds.max + 1
-      // a run that never saw an idle host commits under a .loaded tag —
-      // the filename itself says the numbers are contention-suspect
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(repoDir.getPath,
-          s"bench_full_r$next${gate.tag}.json"), line + "\n")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] full-artifact write failed: ${e.getMessage}")
-    }
-    spark.stop()
+    s""""metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qs,"n_reps":$nreps,"cold":$colds,"spread":$spread,"single_shot":$oneShot,"errors":$errs,"noisy":${names(noisy)},"sf":"$sfDir""""
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for headline queries — the scale
   * audit: verify pushed filters, pruned scans, broadcast joins, and
   * whole-stage-codegen coverage (SURVEY §5).
@@ -16,11 +14,9 @@ object PlanAudit {
         "q_span_dedup", "q_model_compare", "q_dedup_ngram_jaccard",
         "q_ml_roc_curve", "q_ml_mean_roc", "q_ann_pq", "q_embed_label_knn",
         "q_percentiles_by_source")
-    // default 4 (historic captures); SPARK_GRAFT_CPUS overrides so
-    // core-count-dependent plan decisions (fan-out probes) can be
-    // captured at the bench's own parallelism
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    // the timing mains' session, so core-count-dependent plan decisions
+    // (fan-out probes) are captured at the boards' own parallelism
+    val spark = BenchIntegrity.session()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.all.filter(q => names(q.name)).foreach { q =>
       println(s"\n================ ${q.name} ================")

@@ -1,5 +1,7 @@
 package graft
 
+import BenchIntegrity.fmt
+
 /** Scale evidence for the STREAMING family (r19 judge ask #5): the
   * batch engine has three measured rungs, but every q_stream_* drive
   * was only ever timed at sf0.1 — this main drives the three stateful
@@ -20,7 +22,8 @@ package graft
   * keys) but NEVER corpus-shaped (state must not retain what the
   * watermark has expired). A superlinear wall step or state growing
   * faster than the live-key count would falsify it. Emits
-  * bench_stream_r<N>.json with the Bench integrity/host fields.
+  * bench_stream_r<N>.json with the Bench integrity/host fields. The
+  * 10× corpus is `<ScaleData.root>/sf1`, built first when missing.
   */
 object StreamScaleBench {
 
@@ -49,33 +52,28 @@ object StreamScaleBench {
     "q_stream_clusters" -> Seq("graft_stream_clu_sigs", "graft_stream_clu_labels"))
 
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_BASE", "/root/testdata/sf0.1")
-    val scaled = sys.env.getOrElse("SPARK_GRAFT_SCALED",
-      "/root/repo/scaledata/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val base = BenchIntegrity.sfDir
+    val root = ScaleData.root
+    val scaled = s"$root/sf1"
+    val spark = BenchIntegrity.session()
+    ScaleData.ensure(spark, base, root)
     val gate = BenchIntegrity.gate("streamscalebench")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    val start = BenchIntegrity.warmUp(spark, base)
     val byName = SparkEntry.all.map(q => q.name -> q).toMap
     // untimed warmup on the cheapest stream drive: settle codegen and
     // the state-store machinery before anything is measured
-    byName("q_stream_dedup_exact").fn(spark, base)
-      .write.format("noop").mode("overwrite").save()
+    BenchIntegrity.time(spark, byName("q_stream_dedup_exact"), base)
 
     def drive(name: String, dir: String): String = {
       val before = graft.streaming.StreamQueries.lastDriveStats.get().seq
-      val t0 = System.nanoTime()
-      byName(name).fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
+      val t = BenchIntegrity.time(spark, byName(name), dir)
       val st = graft.streaming.StreamQueries.lastDriveStats.get()
       // stats left over from an earlier drive would be misattributed
       require(st.seq != before, s"$name on $dir recorded no stream drive")
       val phases = st.phasesMs.map { case (k, v) => s"$k=$v" }.mkString(" ")
       println(f"STREAMSCALE $name $dir $t%.2f s state_rows=${st.maxStateRows} " +
         f"state_mb=${st.maxStateBytes / 1e6}%.1f batches=${st.batches} $phases")
-      s"""{"sec":${f(t)},"batches":${st.batches},""" +
+      s"""{"sec":${fmt(t)},"batches":${st.batches},""" +
         s""""max_state_rows":${st.maxStateRows},""" +
         s""""max_state_bytes":${st.maxStateBytes},""" +
         s""""phases_ms":${st.phasesMs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")}}"""
@@ -120,21 +118,9 @@ object StreamScaleBench {
       s""""$n":{"base":$b,"sf1":$s1}"""
     }
     val rows = (classicRows ++ storeRows).mkString("{", ",", "}")
-    val integrity = gate.json("{}")
-    val line = s"""{"metric":"stream_scale","factor":10,"base":"$base","scaled":"$scaled","queries":$rows,"integrity":$integrity}"""
-    println(line)
-    try {
-      val repo = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO",
-        sys.props.getOrElse("user.dir", ".")))
-      val rounds = Option(repo.list()).toSeq.flatten
-        .flatMap { n => "^BENCH_r0*([0-9]+)\\.json$".r.findFirstMatchIn(n).map(_.group(1).toInt) }
-      val next = if (rounds.isEmpty) 0 else rounds.max + 1
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(repo.getPath,
-          s"bench_stream_r$next${gate.tag}.json"), line + "\n")
-    } catch { case e: Throwable =>
-      System.err.println(s"[streamscale] artifact write failed: ${e.getMessage}")
-    }
+    BenchIntegrity.finish(spark, "bench_stream",
+      s""""metric":"stream_scale","factor":10,"base":"$base","scaled":"$scaled","queries":$rows""",
+      gate, start, Map.empty)
     spark.stop()
   }
 }

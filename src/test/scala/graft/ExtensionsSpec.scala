@@ -67,10 +67,14 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("EHR csv source reads the reference sample shape") {
+    // fixture in the reference sample's shape: `;`-separated with a
+    // header, 120 records, quoted texts with embedded newlines
     val df = graft.sources.EhrCsv.readEhr(spark,
-      "/root/reference/sample_data/dummydata.csv")
+      getClass.getResource("/ehr_sample.csv").getPath)
     assert(df.columns.toSeq == Seq("PATNR", "annotation", "text"))
     assert(df.count() > 100)
     assert(df.filter(df("annotation")).count() > 0)
+    // a quoted newline stays inside its record instead of splitting it
+    assert(df.filter(df("text").contains("\n")).count() == 12)
   }
 }
