@@ -31,14 +31,14 @@ import org.apache.spark.sql.SparkSession
   *     self-identifies: `integrity.status = "loaded"` and the artifact
   *     FILENAME carries a `.loaded` tag.
   *  2. RE-MEASURE — a sample that deviates >2× ([[outlier]]) from the
-  *     prior committed artifact's value for the same quantity is
-  *     re-taken once, after a [[coldReset]], before it lands (Bench:
-  *     single-shot lines vs [[priorQueries]]; ScaleBench: every
-  *     (head, corpus) sample vs [[priorLadders]]). The committed value
-  *     is the MIN of the two samples (the right statistic under
-  *     one-sided contention noise), and both samples ride the
-  *     artifact's `integrity.remeasured` map so the correction is
-  *     auditable.
+  *     value of the same quantity in the prior committed artifact of
+  *     the same `host.cores` is re-taken once, after a [[coldReset]],
+  *     before it lands (Bench: single-shot lines vs [[priorQueries]];
+  *     ScaleBench: every (head, corpus) sample vs [[priorLadders]]).
+  *     The committed value is the MIN of the two samples (the right
+  *     statistic under one-sided contention noise), and both samples
+  *     ride the artifact's `integrity.remeasured` map so the correction
+  *     is auditable.
   */
 object BenchIntegrity {
 
@@ -207,27 +207,32 @@ object BenchIntegrity {
   def outlier(a: Double, b: Double): Boolean =
     math.abs(a - b) > 1.0 && (a > 2 * b || b > 2 * a)
 
-  /** The highest-numbered `<prefix>_r<N>[.loaded].json` in `repo`,
-    * parsed (jackson is already on the Spark classpath).
+  /** The highest-numbered `<prefix>_r<N>[.loaded].json` in `repo` whose
+    * `host.cores` is `cores`, parsed (jackson is already on the Spark
+    * classpath). An artifact of another core count, or of an unknown
+    * one (written before artifacts recorded it), is no estimate of this
+    * run: fan-out verdicts and task parallelism differ between them.
     */
-  private def latest(repo: java.io.File, prefix: String)
+  private def latest(repo: java.io.File, prefix: String, cores: Int)
       : Option[com.fasterxml.jackson.databind.JsonNode] = {
     val pat = s"^${prefix}_r0*([0-9]+)(\\.loaded)?\\.json$$".r
-    val cands = Option(repo.list()).toSeq.flatten
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Option(repo.list()).toSeq.flatten
       .flatMap(n => pat.findFirstMatchIn(n).map(m => (m.group(1).toInt, n)))
-    if (cands.isEmpty) None
-    else Some(new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new java.io.File(repo, cands.maxBy(_._1)._2)))
+      .sortBy(-_._1).iterator
+      .map { case (_, n) => mapper.readTree(new java.io.File(repo, n)) }
+      .find(t => t.path("host").path("cores").asInt(-1) == cores)
   }
 
   /** Prior committed per-query medians, for the Bench single-shot
-    * cross-check, from the latest `bench_full` artifact. Empty on any
-    * parse/read problem — the check degrades, the bench never fails on
-    * it.
+    * cross-check, from the latest `bench_full` artifact taken at
+    * `cores`. Empty on any parse/read problem — the check degrades, the
+    * bench never fails on it.
     */
-  def priorQueries(repoDir: java.io.File, sfDir: String): Map[String, Double] =
+  def priorQueries(repoDir: java.io.File, sfDir: String,
+      cores: Int = BenchIntegrity.cores()): Map[String, Double] =
     try {
-      latest(repoDir, "bench_full").map { tree =>
+      latest(repoDir, "bench_full", cores).map { tree =>
         val qs = tree.get("queries")
         // only a SAME-SCALE prior is a valid estimate: comparing an
         // sf0.001 run against an sf0.1 artifact would flag every line
@@ -242,28 +247,31 @@ object BenchIntegrity {
       }.getOrElse(Map.empty)
     } catch { case _: Throwable => Map.empty }
 
-  /** Drop a session's SessionCache memos and unpersist everything the
-    * context has cached, so a re-measure is a true cold sample instead
-    * of a memo read.
+  /** Drop a session's SessionCache memos and their pins, then clear
+    * the catalog's cache, so a re-measure is a true cold sample instead
+    * of a memo read. `clearCache` releases persisted frames only: the
+    * blocks of a `localCheckpoint` are not in the catalog's cache, and
+    * the ContextCleaner releases them once their frames are unreachable.
     */
   def coldReset(s: SparkSession): Unit = {
     SessionCache.evictSession(s)
     s.catalog.clearCache()
   }
 
-  /** Prior round's scale points from the latest `bench_sf1` artifact,
-    * keyed (ladder, query, "t<factor>"): the ScaleBench re-measure rule
-    * and its `ladder_flags` annotation read them. A `queries` row
-    * reads as ladder "queries" with base = t1 and sf1 = t10. An
-    * in-JVM re-measure cannot clear JVM-state pressure (the r19
+  /** Prior round's scale points from the latest `bench_sf1` artifact
+    * taken at `cores`, keyed (ladder, query, "t<factor>"): the
+    * ScaleBench re-measure rule and its `ladder_flags` annotation read
+    * them. A `queries` row reads as ladder "queries" with base = t1
+    * and sf1 = t10. An in-JVM re-measure cannot clear JVM-state pressure (the r19
     * exhibit: a t30 measured 80-93 s min-of-2 in a pressured JVM
     * against 30-37 s on a fresh one), so a point whose min still
     * deviates is ANNOTATED rather than corrected. Empty on any
     * read/parse problem.
     */
-  def priorLadders(repoDir: java.io.File): Map[(String, String, String), Double] =
+  def priorLadders(repoDir: java.io.File,
+      cores: Int = BenchIntegrity.cores()): Map[(String, String, String), Double] =
     try {
-      latest(repoDir, "bench_sf1").map { tree =>
+      latest(repoDir, "bench_sf1", cores).map { tree =>
         val b = Map.newBuilder[(String, String, String), Double]
         def each(node: String)(add: (String, String, Double) => Unit): Unit =
           Option(tree.get(node)).foreach { l =>

@@ -1,13 +1,13 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped memoization for expensive derived state (fitted
-  * models, persisted cluster-label frames): a pipeline that runs several
+  * models, pinned cluster-label frames): a pipeline that runs several
   * registered queries in one session must pay each model fit / graph
   * contraction once, not once per query. Keys embed the data directory,
   * so a fresh session or another scale factor recomputes.
@@ -20,6 +20,12 @@ import org.apache.spark.sql.SparkSession
   *  - values are computed OUTSIDE the map's bin locks (computeIfAbsent
   *    only installs a memo cell; the computation runs under that cell's
   *    own lock), so one slow model fit can't block unrelated keys.
+  *
+  * A memo that is a frame is pinned through [[pin]]: the one owner of
+  * every frame that lives as long as the session. A pin is
+  * materialized before its memo returns, so every consumer plans over
+  * the same in-memory leaf whichever query ran first, and
+  * [[evictSession]] releases it.
   *
   * Data under a directory is assumed immutable for the session's
   * lifetime (true for the immutable parquet snapshots this engine
@@ -42,6 +48,7 @@ object SessionCache {
 
   private val cache = new ConcurrentHashMap[(SparkSession, String), Cell]()
   private val hooked = ConcurrentHashMap.newKeySet[SparkContext]()
+  private val pins = new ConcurrentHashMap[SparkSession, ConcurrentLinkedQueue[DataFrame]]()
 
   def getOrCompute[T <: AnyRef](s: SparkSession, key: String)(f: => T): T = {
     val sc = s.sparkContext
@@ -57,6 +64,7 @@ object SessionCache {
           hooked.remove(sc)
           val it = cache.keySet().iterator()
           while (it.hasNext) if (it.next()._1.sparkContext eq sc) it.remove()
+          pins.keySet().removeIf(_.sparkContext eq sc)
         }
       }) catch {
         case _: IllegalStateException => // stopped between check and hook
@@ -71,16 +79,26 @@ object SessionCache {
     v.asInstanceOf[T]
   }
 
-  /** Drop every entry owned by `s` (bench cold-reset: a single-shot
-    * re-measure must pay the fit again, not read the memo). Values are
-    * NOT unpersisted here — callers that need executor memory back run
-    * `catalog.clearCache()` after (BenchIntegrity.coldReset), which
-    * unpersists without forcing this map's un-computed lazy cells.
+  /** Pin a frame for the life of its session: persist it, materialize
+    * it, and record it so [[evictSession]] unpersists it. Call it inside
+    * a [[getOrCompute]] computation, on the frame the memo returns.
+    */
+  def pin(df: DataFrame): DataFrame = {
+    val p = df.persist()
+    pins.computeIfAbsent(df.sparkSession, _ => new ConcurrentLinkedQueue[DataFrame]()).add(p)
+    p.count()
+    p
+  }
+
+  /** Drop every entry owned by `s` and unpersist its [[pin]]s (bench
+    * cold-reset: a single-shot re-measure must pay the fit again, not
+    * read the memo).
     */
   private[graft] def evictSession(s: SparkSession): Int = {
     var n = 0
     val it = cache.keySet().iterator()
     while (it.hasNext) if (it.next()._1 eq s) { it.remove(); n += 1 }
+    Option(pins.remove(s)).foreach(_.forEach(_.unpersist(blocking = false)))
     n
   }
 

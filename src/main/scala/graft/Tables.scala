@@ -171,6 +171,21 @@ object Tables {
     df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
+  /** Pin `df` for the length of `body`: persist it, materialize it, run
+    * `body` on the pinned frame, and unpersist it on every exit path.
+    * The one owner of a frame that one scope reads several times (a
+    * Lloyd loop's input, a fit's train half, a micro-batch's bands).
+    * A lazy plan that `body` returns stays correct, but it reads `df`'s
+    * lineage again, not the pin.
+    */
+  def pinned[T](df: DataFrame)(body: DataFrame => T): T = {
+    val p = df.persist()
+    try {
+      p.count()
+      body(p)
+    } finally p.unpersist(blocking = false)
+  }
+
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame = load(s, d, "customer")

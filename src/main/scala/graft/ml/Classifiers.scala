@@ -85,31 +85,28 @@ object Classifiers {
       fm.transform(test).select($"doc_id", $"label", $"features"))
   }
 
-  /** Fit one estimator on a persisted copy of the featurized train set.
-    * Persisting here is the hot-path fix for iterative trainers
+  /** Fit one estimator on a pinned copy of the featurized train set.
+    * Pinning here is the hot-path fix for iterative trainers
     * (MLP/SVM/GBT): without it every optimizer pass re-runs the whole
     * scan → tokenize → n-gram → hash → IDF lineage.
     */
-  def fitOn(name: String, train: DataFrame): Transformer = {
-    val cached = train.persist()
-    try estimators.toMap.apply(name).fit(cached).asInstanceOf[Transformer]
-    finally cached.unpersist(blocking = false)
-  }
+  def fitOn(name: String, train: DataFrame): Transformer =
+    Tables.pinned(train)(estimators.toMap.apply(name).fit(_).asInstanceOf[Transformer])
 
-  /** Memoized featurized (train, test) halves, persisted per
+  /** Memoized featurized (train, test) halves, pinned per
     * (session, dir): the seven model queries plus the score-evaluation
     * family (ModelEval) and the importance/tree exports all consume the
     * same two frames, so a pipeline session pays the tokenize → n-gram →
     * hash → IDF lineage once. The frames are one row per doc with a
     * 1024-dim sparse vector — far below corpus size, a bounded pin.
-    * Persisting a FIXED frame also keeps the seeded tree learners
+    * Pinning a FIXED frame also keeps the seeded tree learners
     * byte-stable across queries (their bootstrap draws are seeded per
     * partition, so they are deterministic for a fixed input layout).
     */
   def featurized(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     SessionCache.getOrCompute(s, s"ml.featurized:$dir") {
       val (train, test) = featurize(s, dir)
-      (train.persist(), test.persist())
+      (SessionCache.pin(train), SessionCache.pin(test))
     }
 
   /** Memoized fitted model per (session, dir, name) — the reference

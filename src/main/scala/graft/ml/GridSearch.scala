@@ -77,57 +77,40 @@ object GridSearch {
   private[ml] def gridAucs(s: SparkSession, dir: String): DataFrame =
     SessionCache.getOrCompute(s, s"ml.gridSearch:$dir") {
       import s.implicits._
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
       val (train, test) = Classifiers.featurized(s, dir)
-      // materialize the shared persisted train half once before the
-      // concurrent fits race to it (the foldTalliesFor discipline)
-      train.count()
       // fit each grid point of each estimator; tag its hold-out scores
       // with the sweep coordinates so ONE downstream aggregation serves
       // the whole multi-estimator surface. The Σ|grid| fits are
-      // independent Spark jobs — overlap a FEW (3, the measured
-      // foldTalliesFor width: enough to back-fill each fit's straggler
-      // tail, not enough to fight the single-threaded DAG scheduler).
-      // Future.traverse preserves input order, so the union tree is
-      // byte-identical to the sequential build.
+      // independent Spark jobs on the FitPool, whose results keep input
+      // order, so the union tree is byte-identical to the sequential
+      // build.
       val points = sweeps.flatMap(sw => sw.points.map { case (p1, p2) => (sw, p1, p2) })
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      val ec = ExecutionContext.fromExecutorService(pool)
-      val scored = (try Await.result(Future.traverse(points) { case (sw, p1, p2) =>
-        Future {
-          val m = sw.fit(train, p1, p2)
-          m.transform(test).select(
-            lit(sw.estimator).as("estimator"),
-            lit(sw.p1Name).as("p1_name"), lit(sw.p2Name).as("p2_name"),
-            lit(p1).as("p1"), lit(p2).as("p2"),
-            $"label".cast("int").as("y"),
-            Classifiers.scoreExpr(sw.estimator).as("score"))
-        }(ec)
-      }(implicitly, ec), Duration.Inf)
-      catch { case e: Throwable =>
-        // a failed fit rethrows here — cancel the queued/in-flight grid
-        // fits too, or they keep running as stray background Spark jobs
-        // racing any retried build (ADVICE r21)
-        pool.shutdownNow(); throw e }
-      finally pool.shutdown()).reduce(_.unionByName(_))
+      val scored = FitPool.traverse(points) { case (sw, p1, p2) =>
+        sw.fit(train, p1, p2).transform(test).select(
+          lit(sw.estimator).as("estimator"),
+          lit(sw.p1Name).as("p1_name"), lit(sw.p2Name).as("p2_name"),
+          lit(p1).as("p1"), lit(p2).as("p2"),
+          $"label".cast("int").as("y"),
+          Classifiers.scoreExpr(sw.estimator).as("score"))
+      }.reduce(_.unionByName(_))
       val keys = Seq("estimator", "p1_name", "p2_name", "p1", "p2")
       val kc = keys.map(col)
       // materialize the collapsed tallies (bounded: distinct scores per
       // grid point): totals + cumTallies + the final join reference this
       // frame several times, and each copy would re-run all ten model
-      // transforms over the test half (the perplexity-buckets lesson)
+      // transforms over the test half (the perplexity-buckets lesson).
+      // A checkpoint, not a scoped pin: the sweep plan pinned below
+      // references it, so only the ContextCleaner can release it
       val tallies = scored.groupBy(kc :+ $"score": _*)
         .agg(count(lit(1)).as("c"), sum($"y").cast("long").as("cp"))
         .localCheckpoint()
       val totals = tallies.groupBy(kc: _*)
         .agg(sum($"cp").as("p"), (sum($"c") - sum($"cp")).as("n"))
-      Evaluation.cumTallies(tallies, keys)
+      SessionCache.pin(Evaluation.cumTallies(tallies, keys) // Σ|grid| rows
         .join(broadcast(totals), keys)
         .groupBy(kc: _*)
         .agg(round(Evaluation.aucNumerator /
-          Evaluation.aucDenominator(first($"p"), first($"n")), 6).as("auc_roc"))
-        .persist() // Σ|grid| rows
+          Evaluation.aucDenominator(first($"p"), first($"n")), 6).as("auc_roc")))
     }
 
   /** Registered sweep: every (estimator, grid point) with its hold-out

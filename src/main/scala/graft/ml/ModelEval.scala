@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{GraftQuery, SessionCache}
+import graft.{GraftQuery, SessionCache, Tables}
 import graft.operators.Evaluation
 import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.classification.{LogisticRegression, NaiveBayes}
@@ -39,16 +39,15 @@ object ModelEval {
 
   /** Per-(model, score) hold-out threshold tallies, memoized per
     * (session, dir): the AUC/ROC/PR trio all consume them, and the
-    * persist is bounded at any corpus size by the 6-dp score rounding
+    * pin is bounded at any corpus size by the 6-dp score rounding
     * (≤ ~10⁶ distinct-score rows per model).
     */
   private def holdoutTallies(s: SparkSession, dir: String): DataFrame =
     SessionCache.getOrCompute(s, s"ml.holdoutTallies:$dir") {
       import s.implicits._
-      scoresAll(s, dir)
+      SessionCache.pin(scoresAll(s, dir)
         .groupBy($"model", $"score")
-        .agg(count(lit(1)).as("c"), sum($"y").cast("long").as("cp"))
-        .persist()
+        .agg(count(lit(1)).as("c"), sum($"y").cast("long").as("cp")))
     }
 
   /** Per-(model, score) threshold tallies with cumulative counts and
@@ -119,7 +118,7 @@ object ModelEval {
     * no IDF leakage across the fold boundary): the reference's fitModels
     * loop per CV iteration. 20 fits, paid once per (session, dir); every
     * fold statistic (AUCs, the mean-ROC grid) derives from this one
-    * cached frame. The persist is bounded at any corpus size: scores are
+    * cached frame. The pin is bounded at any corpus size: scores are
     * rounded to 6 dp, so a (scorer, fold) group holds at most ~10⁶
     * distinct-score rows no matter how large the test folds are.
     */
@@ -136,26 +135,22 @@ object ModelEval {
       cacheKey: String): DataFrame =
     SessionCache.getOrCompute(s, cacheKey) {
       import s.implicits._
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
       import org.apache.spark.ml.feature.{HashingTF, IDF}
       // HashingTF is STATELESS, so the term-hash pass runs ONCE over the
       // corpus and every fold refits only the stage that actually
       // depends on its train half — the IDF statistics (bit-identical to
       // refitting the whole featurizer per fold, ~10 corpus hash passes
-      // cheaper). The persisted tf frame is one sparse vector per doc —
+      // cheaper). The pinned tf frame is one sparse vector per doc —
       // the Classifiers.featurized size class — and it is SHARED across
       // callers (r22): the CV pair and the grid-winner t-test each
       // rebuilt and re-materialized it per memo key before, paying the
       // tokenize+n-gram+hash pass twice per session.
       val tf: org.apache.spark.sql.DataFrame =
         SessionCache.getOrCompute(s, s"ml.cvTf:$dir") {
-          val f = new HashingTF().setInputCol("grams").setOutputCol("tf")
+          SessionCache.pin(new HashingTF().setInputCol("grams").setOutputCol("tf")
             .setNumFeatures(Classifiers.NumFeatures)
             .transform(Classifiers.prepared(s, dir))
-            .select($"doc_id", $"label", $"tf").persist()
-          f.count() // materialize once before the concurrent fits race
-          f
+            .select($"doc_id", $"label", $"tf"))
         }
       val folds = for { r <- 0 until 5; f <- 0 until 2 } yield (r, f)
       // per-fold IDF models are SHARED across callers (r19 ask #7): the
@@ -164,64 +159,40 @@ object ModelEval {
       // fitted fold featurizer is exactly the expensive-shared-artifact
       // SessionCache is for (10 corpus-sized aggregates; the models
       // themselves are one NumFeatures-length vector each, bounded
-      // driver state). Fits overlap 3-way like the fold pipelines below.
+      // driver state). Fits overlap on the FitPool like the fold
+      // pipelines below.
       val idfByFold: Map[(Int, Int), org.apache.spark.ml.feature.IDFModel] =
         SessionCache.getOrCompute(s, s"ml.foldIdf:$dir") {
-          val fitPool = java.util.concurrent.Executors.newFixedThreadPool(3)
-          val fitEc = ExecutionContext.fromExecutorService(fitPool)
-          try Await.result(Future.traverse(folds) { case (r, f) =>
-            Future {
-              val isTest = Evaluation.shuffleSplitBit($"doc_id", lit(r), 5) === f
-              // IDF fit on the fold's train half only — no leakage
-              (r, f) -> new IDF().setInputCol("tf").setOutputCol("features")
-                .fit(tf.where(!isTest))
-            }(fitEc)
-          }(implicitly, fitEc), Duration.Inf).toMap
-          catch { case e: Throwable => fitPool.shutdownNow(); throw e }
-          finally fitPool.shutdown()
+          FitPool.traverse(folds) { case (r, f) =>
+            val isTest = Evaluation.shuffleSplitBit($"doc_id", lit(r), 5) === f
+            // IDF fit on the fold's train half only — no leakage
+            (r, f) -> new IDF().setInputCol("tf").setOutputCol("features")
+              .fit(tf.where(!isTest))
+          }.toMap
         }
-      // fold pipelines are independent — overlap a FEW as concurrent
-      // Spark jobs (the CrossValidator-parallelism pattern). 3, not all
-      // 10: at sf0.1 the fits are tiny and the single-threaded DAG
-      // scheduler is the floor (measured: sequential ~19 s ≈ 3-way
-      // ~20 s, 10-way degrades to ~36 s), so wide overlap only buys
-      // contention; on a real cluster, where each fold's jobs are
-      // resource-bound rather than scheduler-bound, bounded overlap is
-      // the wall-time win.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val scored = (try Await.result(Future.traverse(folds) { case (r, f) =>
-        Future {
-          val isTest = Evaluation.shuffleSplitBit($"doc_id", lit(r), 5) === f
-          val idf = idfByFold((r, f))
-          def feat(df: org.apache.spark.sql.DataFrame) =
-            idf.transform(df).select($"doc_id", $"label", $"features")
-          val (ftrain, ftest) = (feat(tf.where(!isTest)), feat(tf.where(isTest)))
-          val cached = ftrain.persist()
-          val branches = scorers.map { case (name, est) =>
-            val m = est().fit(cached).asInstanceOf[Transformer]
+      // fold pipelines are independent — overlap a few as concurrent
+      // Spark jobs; each fold's featurized train half is pinned for its
+      // fits only
+      val scored = FitPool.traverse(folds) { case (r, f) =>
+        val isTest = Evaluation.shuffleSplitBit($"doc_id", lit(r), 5) === f
+        val idf = idfByFold((r, f))
+        def feat(df: org.apache.spark.sql.DataFrame) =
+          idf.transform(df).select($"doc_id", $"label", $"features")
+        val ftest = feat(tf.where(isTest))
+        Tables.pinned(feat(tf.where(!isTest))) { train =>
+          scorers.map { case (name, est) =>
+            val m = est().fit(train).asInstanceOf[Transformer]
             m.transform(ftest).select(
               lit(name).as("scorer"), lit(r).as("r"), lit(f).as("f"),
               $"label".cast("int").as("y"),
               Classifiers.scoreExpr(name).as("score"))
-          }
-          cached.unpersist(blocking = false)
-          branches.reduce(_.unionByName(_))
+          }.reduce(_.unionByName(_))
         }
-      }, Duration.Inf)
-      catch { case e: Throwable =>
-        // cancel queued/in-flight fold fits on the failure path (the
-        // GridSearch discipline — ADVICE r21): shutdown() alone lets
-        // them keep running behind the rethrow
-        pool.shutdownNow(); throw e }
-      finally pool.shutdown()).reduce(_.unionByName(_))
-      val tallies = scored.groupBy($"scorer", $"r", $"f", $"score")
-        .agg(count(lit(1)).as("c"), sum($"y").cast("long").as("cp"))
-        .persist()
-      // materialize the bounded tallies NOW — only the rounded-score
-      // tallies and the shared tf memo stay resident for the session
-      tallies.count()
-      tallies
+      }.reduce(_.unionByName(_))
+      // only the rounded-score tallies and the shared tf memo stay
+      // resident for the session
+      SessionCache.pin(scored.groupBy($"scorer", $"r", $"f", $"score")
+        .agg(count(lit(1)).as("c"), sum($"y").cast("long").as("cp")))
     }
 
   /** Per-(model, r, f) hold-out AUC **and AUPRC** over the refit 5×2
@@ -235,16 +206,15 @@ object ModelEval {
   private[ml] def mlFoldAucs(s: SparkSession, dir: String): DataFrame =
     SessionCache.getOrCompute(s, s"ml.cvFoldAucs:$dir") {
       import s.implicits._
-      val aucs = Evaluation.cumTallies(foldTallies(s, dir), Seq("scorer", "r", "f"))
+      // 20 rows — pinned so the t-test and the fold listing don't re-run
+      // the sweep
+      SessionCache.pin(Evaluation.cumTallies(foldTallies(s, dir), Seq("scorer", "r", "f"))
         .groupBy($"scorer", $"r", $"f")
         .agg((Evaluation.aucNumerator /
           Evaluation.aucDenominator(sum($"cp"), sum($"c" - $"cp"))).as("auc"),
           round(graft.functions.FloatFold.orderedSumOrNull($"rk",
             $"cp".cast("double") * $"cum_tp" / $"rk", $"cp" > 0) /
-            sum($"cp"), 6).as("auprc"))
-      // 20 rows — persist so the t-test and the fold listing don't re-run
-      // the sweep
-      aucs.persist()
+            sum($"cp"), 6).as("auprc")))
     }
 
   /** Mean ROC across the 5×2 folds PER FITTED MODEL (reference: plotSTD,
@@ -299,39 +269,29 @@ object ModelEval {
   def mlLearningCurve(s: SparkSession, dir: String): DataFrame =
     SessionCache.getOrCompute(s, s"ml.learningCurve:$dir") {
       import s.implicits._
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
       val (train, test) = Classifiers.featurized(s, dir)
-      train.count() // materialize before the concurrent refits race to
       val h = (($"doc_id" % 2147483648L) * 2654435761L + 54321L) % 2147483648L
       val fracs = Seq(20, 40, 60, 80, 100)
-      // independent refits → a few concurrent Spark jobs, like mlFoldAucs
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val scored = try Await.result(Future.traverse(fracs) { frac =>
-        Future {
-          // h ∈ [0, 2³¹); h·100 < frac·2³¹ keeps ≈frac% — exact nesting,
-          // all-long arithmetic (max h·100 ≈ 2³⁸, far inside int64)
-          val sub = train.where(h * 100 < lit(frac.toLong) * 2147483648L)
-          val m = new LogisticRegression().setMaxIter(10).setRegParam(1e-4)
-            .fit(sub).asInstanceOf[Transformer]
-          m.transform(test).select(lit(frac).as("frac_pct"),
-            $"label".cast("int").as("y"),
-            Classifiers.scoreExpr("logreg").as("score"))
-        }
-      }, Duration.Inf).reduce(_.unionByName(_))
-      catch { case e: Throwable => pool.shutdownNow(); throw e }
-      finally pool.shutdown()
+      // independent refits → a few concurrent Spark jobs, like the folds
+      val scored = FitPool.traverse(fracs) { frac =>
+        // h ∈ [0, 2³¹); h·100 < frac·2³¹ keeps ≈frac% — exact nesting,
+        // all-long arithmetic (max h·100 ≈ 2³⁸, far inside int64)
+        val sub = train.where(h * 100 < lit(frac.toLong) * 2147483648L)
+        val m = new LogisticRegression().setMaxIter(10).setRegParam(1e-4)
+          .fit(sub).asInstanceOf[Transformer]
+        m.transform(test).select(lit(frac).as("frac_pct"),
+          $"label".cast("int").as("y"),
+          Classifiers.scoreExpr("logreg").as("score"))
+      }.reduce(_.unionByName(_))
       val grouped = scored.groupBy($"frac_pct", $"score")
         .agg(count(lit(1)).as("c"), sum($"y").cast("long").as("cp"))
-      Evaluation.cumTallies(grouped, Seq("frac_pct"))
+      SessionCache.pin(Evaluation.cumTallies(grouped, Seq("frac_pct"))
         .groupBy($"frac_pct")
         .agg((Evaluation.aucNumerator /
           Evaluation.aucDenominator(sum($"cp"), sum($"c" - $"cp"))).as("auc"),
           round(graft.functions.FloatFold.orderedSumOrNull($"rk",
             $"cp".cast("double") * $"cum_tp" / $"rk", $"cp" > 0) /
-            sum($"cp"), 6).as("auprc"))
-        .persist()
+            sum($"cp"), 6).as("auprc")))
     }.orderBy("frac_pct")
 
   /** Calibration / reliability + Brier PER FITTED MODEL — the

@@ -54,7 +54,7 @@ object NamedFeatures {
   }
 
   /** Memoized named featurization of the even-doc_id train half:
-    * (vocabulary, persisted featurized train). All three named-weight
+    * (vocabulary, pinned featurized train). All three named-weight
     * models consume the same frame, so a session pays the vocabulary
     * fit once.
     */
@@ -64,7 +64,7 @@ object NamedFeatures {
       val (pm, train) =
         fitNamed(Classifiers.prepared(s, dir).where($"doc_id" % 2 === 0))
       val vocab = pm.stages(0).asInstanceOf[CountVectorizerModel].vocabulary
-      (vocab, train.persist())
+      (vocab, SessionCache.pin(train))
     }
 
   /** One fitted model per (session, dir, name) on the named features —

@@ -31,9 +31,10 @@ object Corpus {
       .where($"est_jaccard" >= 0.5).select($"id_a", $"id_b")
     val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
       .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
-      .persist()
-    // a failing round must not leave the edge frame pinned
-    val (labels, converged, rounds) = try {
+    // every round reads the edges; each round's labels are a checkpoint
+    // (not a scoped pin) because the next round and the returned plan
+    // read them, so only the ContextCleaner can release them
+    val (labels, converged, rounds) = Tables.pinned(edges) { edges =>
       @annotation.tailrec
       def propagate(labels: DataFrame, round: Int): (DataFrame, Boolean, Int) =
         if (round == 20) (labels, false, round)
@@ -52,7 +53,7 @@ object Corpus {
       propagate(edges.select($"src".as("doc_id")).distinct()
         .select($"doc_id", $"doc_id".as("cluster_id"))
         .localCheckpoint(true), 0)
-    } finally edges.unpersist(blocking = false)
+    }
     // a silent early exit would return non-minimal labels that diverge
     // from the fixpoint (and the oracle); fail loudly instead — a corpus
     // with components deeper than this wants the large-star/small-star
@@ -83,16 +84,16 @@ object Corpus {
     * a multi-round shuffle cascade, and BOTH q_dedup_clusters and
     * q_cluster_keep_best need its fixpoint — a pipeline that runs the
     * two in one session must pay the contraction once, not twice. Keyed
-    * by (session, dir) in [[graft.SessionCache]] (evicted when the
-    * context stops, computed outside the map's bin locks); the labels
-    * frame is tiny (≤ one row per clustered doc), so the persist is a
-    * bounded cache, never a corpus-sized pin.
+    * by (session, dir) in [[graft.SessionCache]] (released when the
+    * session is evicted, computed outside the map's bin locks); the
+    * labels frame is tiny (≤ one row per clustered doc), so the pin is
+    * bounded, never corpus-sized.
     */
   private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame =
     graft.SessionCache.getOrCompute(s, s"corpus.clusterLabels:$dir") {
       import s.implicits._
-      starContract(s, Dedup.minhashLsh(s, dir)
-        .where($"est_jaccard" >= 0.5).select($"id_a", $"id_b")).persist()
+      graft.SessionCache.pin(starContract(s, Dedup.minhashLsh(s, dir)
+        .where($"est_jaccard" >= 0.5).select($"id_a", $"id_b")))
     }
 
   /** The contraction loop itself, on any (id_a, id_b) pair frame —
@@ -101,7 +102,10 @@ object Corpus {
     */
   private[graft] def starContract(s: SparkSession, pairs: DataFrame): DataFrame = {
     import s.implicits._
-    // normalized undirected edges (l < h), self-loops dropped
+    // normalized undirected edges (l < h), self-loops dropped. Each
+    // round's edges are a checkpoint, not a scoped pin: the next round
+    // and the returned plan read them, so only the ContextCleaner can
+    // release them
     var e = pairs.select(least($"id_a", $"id_b").as("l"),
         greatest($"id_a", $"id_b").as("h"))
       .where($"l" =!= $"h").distinct()

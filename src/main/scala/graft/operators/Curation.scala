@@ -151,17 +151,17 @@ object Curation {
     * same ln inputs — bit-equal doubles), and PlanGuardSpec bounds the
     * feature plan to two corpus scans. Token-less docs have no LM rows
     * and drop at the doc_id join, as every heuristic gate already
-    * drops them. Persisted once per session: the model fit AND the
+    * drops them. Pinned once per session: the model fit AND the
     * scoring pass both read this frame (the ml.featurized precedent —
     * 8 scalar columns per doc, far smaller than the token explosions
     * that produce it).
     */
   private[graft] def gateFeatures(s: SparkSession, dir: String): DataFrame =
     SessionCache.getOrCompute(s, s"curation.gateFeatures:$dir") {
-      gateFeaturePlan(s, dir).persist()
+      SessionCache.pin(gateFeaturePlan(s, dir))
     }
 
-  /** The un-persisted feature plan — split out so PlanGuardSpec can
+  /** The unpinned feature plan — split out so PlanGuardSpec can
     * assert the two-scan shape on a fresh build (the session-cached
     * frame above collapses to an in-memory leaf once persisted).
     */

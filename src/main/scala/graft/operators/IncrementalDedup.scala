@@ -211,7 +211,9 @@ object IncrementalDedup {
     // both consume the banded rows, and the signature kernel is the
     // expensive stage — localCheckpoint materializes the delta-sized
     // frame so the two consumers don't each recompute it (guide §1.2:
-    // don't compute things twice before tuning anything else)
+    // don't compute things twice before tuning anything else). Not a
+    // scoped pin: the returned lazy plan reads it, so only the
+    // ContextCleaner can release it
     updateClustersBands(s, Dedup.signatureBands(delta).localCheckpoint(),
       sigTable, storedLabels, tau)
 

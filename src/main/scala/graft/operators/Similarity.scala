@@ -426,9 +426,7 @@ object Similarity {
     */
   private def cachedSigs(s: SparkSession, dir: String): DataFrame =
     SessionCache.getOrCompute(s, s"sim.signSigs:$dir") {
-      val f = signSignatures(s, vecs(s, dir)).persist()
-      f.count()
-      f
+      SessionCache.pin(signSignatures(s, vecs(s, dir)))
     }
 
   /** Multi-probe key set for a (small) query frame: per band the exact
@@ -873,9 +871,9 @@ object Similarity {
     // assign each vector to its nearest list; carry the RESIDUAL
     // localCheckpoint (eager) truncates the lineage: the Lloyd loop,
     // the encode pass, and the init collect all re-read the assignment
-    // instead of re-deriving the quantizer DAG per job; the
-    // materialized partitions are reclaimed by the ContextCleaner when
-    // this frame goes out of scope
+    // instead of re-deriving the quantizer DAG per job. Not a scoped
+    // pin: both returned lazy frames read it, so only the ContextCleaner
+    // can release it once they are unreachable
     val assign = nearest(s, oneKey(vn), coarse)
       .select($"vec_id", $"j".as("cent_id"), $"v".as("vn"))
       .join(cents, "cent_id")
@@ -1410,16 +1408,13 @@ object Similarity {
     recallScoreboard(s, dir, Seq(("ivf_pq", ranked, Some(adcPairs))))
   }
 
-  /** The brute-force truth frame, persisted once per (session, dir) —
+  /** The brute-force truth frame, pinned once per (session, dir) —
     * both scoreboard halves intersect against the same 50 rows.
     */
   private def bruteTruth(s: SparkSession, dir: String): DataFrame =
     SessionCache.getOrCompute(s, s"sim.bruteTop5:$dir") {
       import s.implicits._
-      val b = annCosineTopK(s, dir)
-        .select($"q_id", $"neighbor_id").persist()
-      b.count() // materialize
-      b
+      SessionCache.pin(annCosineTopK(s, dir).select($"q_id", $"neighbor_id"))
     }
 
   /** One board row per method from its [[search]] frame (every scored
@@ -1585,13 +1580,12 @@ object Similarity {
     import s.implicits._
     val dec = "decimal(38,0)"
     val half = expr("(abs(s) * 2 + n) div (n * 2)") // |s|/n, half away from 0
-    // the loop re-reads its input once per round plus the init — persist
-    // it for the loop's lifetime so the input lineage runs once (the
+    // the loop re-reads its input once per round plus the init — pin it
+    // for the loop's lifetime so the input lineage runs once (the
     // embeddings frame rebuilt dozens of times per query is WHY fan-out
-    // was toxic here; a persist removes the recompute without adding an
-    // exchange), released in the finally
-    val in = rows.select($"key", $"vec_id", $"v").persist()
-    try {
+    // was toxic here; a pin removes the recompute without adding an
+    // exchange)
+    Tables.pinned(rows.select($"key", $"vec_id", $"v")) { in =>
       // the filter reads row_number itself so the planner takes each
       // partition's top rows before the shuffle (a window group limit)
       var codebook: Codebook = in
@@ -1621,7 +1615,7 @@ object Similarity {
         }
       }
       (codebook, err)
-    } finally in.unpersist(blocking = false)
+    }
   }
 
   /** `v`'s (vec_id, v) rows as the one key 0 of a [[lloyd]] / [[nearest]] input. */
@@ -2054,8 +2048,7 @@ object Similarity {
     */
   def semDedupPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val v = vecs(s, dir).persist()
-    try {
+    Tables.pinned(vecs(s, dir)) { v =>
       val n = v.count()
       val kStar = semDedupK(n)
       val candidates = Seq(kStar / 4, kStar / 2, kStar, kStar * 2, kStar * 4)
@@ -2083,7 +2076,7 @@ object Similarity {
           (lit(n) * $"dots_per_vec").as("assign_dots"),
           ($"k" === kStar).as("chosen"))
         .orderBy($"k")
-    } finally v.unpersist(blocking = false)
+    }
   }
 
   /** ORACLE for the k planner — five instantiations of the unrolled

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, SessionCache, Tables}
 import graft.functions.{GraftExpressions, TextFunctions => TF}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -392,7 +392,9 @@ object TextAnalysis {
     // (localCheckpoint: the kernel still runs spread via the shared
     // winnowSelectedOf fan-out, and the postings frame is far smaller
     // than the text it digests). r22 A/B warm: 2.25 s (3× kernel) /
-    // 1.82 s (fan-out dropped) / 1.22 s (this shape).
+    // 1.82 s (fan-out dropped) / 1.22 s (this shape). Not a scoped pin:
+    // the lazily returned plan reads it, so only the ContextCleaner can
+    // release it.
     val postings = winnowPostingsOf(Tables.documents(s, dir)).localCheckpoint()
     val rare = postings.groupBy($"fp")
       .agg(count(lit(1)).as("df"))
@@ -601,18 +603,16 @@ object TextAnalysis {
     * twice (freq build + score pass).
     */
   private[graft] def lmModel(s: SparkSession, dir: String): DataFrame =
-    graft.SessionCache.getOrCompute(s, s"textanalysis.lmModel:$dir") {
+    SessionCache.getOrCompute(s, s"textanalysis.lmModel:$dir") {
       import s.implicits._
       val freq = Tables.fanOut(Tables.documents(s, dir), col("doc_id"))
         .select(explode(TF.tokens($"text")).as("token"))
         .groupBy($"token").agg(count(lit(1)).as("freq"))
       val tot = freq.agg(sum($"freq").cast("double").as("n_total"))
-      val lm = freq.crossJoin(broadcast(tot))
+      // consumers see an in-memory leaf, not lineage
+      SessionCache.pin(freq.crossJoin(broadcast(tot))
         .select($"token",
-          log($"freq".cast("double") / $"n_total").as("logp"))
-        .persist()
-      lm.count() // materialize: consumers see an in-memory leaf, not lineage
-      lm
+          log($"freq".cast("double") / $"n_total").as("logp")))
     }
 
   /** The per-doc (doc_id, avg_logprob, n_tokens) frame WITHOUT the
@@ -938,7 +938,7 @@ object TextAnalysis {
     * of once inside every consuming plan.
     */
   private[graft] def knModel(s: SparkSession, dir: String): DataFrame =
-    graft.SessionCache.getOrCompute(s, s"textanalysis.knModel:$dir") {
+    SessionCache.getOrCompute(s, s"textanalysis.knModel:$dir") {
       import s.implicits._
       val d = 0.75
       val c12 = bigramOccurrences(s, dir)
@@ -947,14 +947,11 @@ object TextAnalysis {
         .agg(sum($"c").as("c1"), count(lit(1)).as("n_after"))
       val pre = c12.groupBy($"w2").agg(count(lit(1)).as("n_pre"))
       val types = c12.agg(count(lit(1)).cast("double").as("bt"))
-      val scored = c12.join(left, "w1").join(pre, "w2")
+      SessionCache.pin(c12.join(left, "w1").join(pre, "w2")
         .crossJoin(broadcast(types))
         .select($"w1", $"w2",
           log(($"c" - lit(d)) / $"c1" +
-            lit(d) * $"n_after" / $"c1" * ($"n_pre" / $"bt")).as("logp"))
-        .persist()
-      scored.count() // materialize: consumers see an in-memory leaf
-      scored
+            lit(d) * $"n_after" / $"c1" * ($"n_pre" / $"bt")).as("logp")))
     }
 
   /** Shared KN oracle CTE chain ending in `agg(doc_id, avg_kn_logprob,

@@ -34,19 +34,19 @@ object JsonlCorpus {
       .option("columnNameOfCorruptRecord", "_corrupt")
       .json(path)
 
-  /** Split a quarantined read into (clean, corrupt) frames. The parsed
-    * frame is cached first: Spark refuses scans whose only referenced
-    * column is the corrupt-record column (the parser would have nothing
-    * to fail on), and the cache also means the two branches share one
-    * parse of the input. The cache belongs to the caller — call
-    * `df.unpersist()` on the input once both branches are consumed, or
-    * sweeping many shards will pin one cached copy per call.
+  /** Split a quarantined read into (clean, corrupt) frames and run
+    * `body` on them. The parsed frame is pinned for the length of
+    * `body`: Spark refuses scans whose only referenced column is the
+    * corrupt-record column (the parser would have nothing to fail on),
+    * and the pin also means the two branches share one parse of the
+    * input. The pin ends with `body`, so a sweep over many shards holds
+    * one parse at a time.
     */
-  def quarantine(df: DataFrame): (DataFrame, DataFrame) = {
-    val parsed = df.cache()
-    (parsed.where(col("_corrupt").isNull).drop("_corrupt"),
-      parsed.where(col("_corrupt").isNotNull).select(col("_corrupt")))
-  }
+  def quarantine[T](df: DataFrame)(body: (DataFrame, DataFrame) => T): T =
+    graft.Tables.pinned(df) { parsed =>
+      body(parsed.where(col("_corrupt").isNull).drop("_corrupt"),
+        parsed.where(col("_corrupt").isNotNull).select(col("_corrupt")))
+    }
 
   /** Write a corpus as deterministic JSONL shards: repartition by a hash
     * of doc_id (stable shard membership, independent of upstream

@@ -35,10 +35,8 @@ object SourceQueries {
       Tables.documents(s, dir).select($"doc_id", $"text", $"lang", $"source"),
       path, shards = 4)
     // the clean branch inline (corrupt-column NULL filter) rather than
-    // JsonlCorpus.quarantine: quarantine caches its parse for the
-    // two-branch split and hands the unpersist to the caller — a
-    // registered query re-run per bench rep must not accumulate cached
-    // copies it can never release
+    // JsonlCorpus.quarantine: quarantine's pin ends with its body, and
+    // this query returns a lazy plan that would read the parse again
     JsonlCorpus.read(s, path)
       .where($"_corrupt".isNull)
       .select($"doc_id", $"text", $"lang", $"source").orderBy($"doc_id")

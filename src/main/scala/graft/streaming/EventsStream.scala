@@ -311,10 +311,13 @@ object EventsStream {
     * NEXT batch joins against them. foreachBatch rather than a stateful
     * operator by design: the maintenance step is a multi-table
     * transaction (label overwrite + signature append) reusing the batch
-    * algebra unchanged — exactly the sink-hook use case. The label
-    * frame materializes (localCheckpoint) before the overwrite because
-    * its lineage reads the table being replaced; a production
-    * deployment makes the same cut with snapshot-versioned label tables.
+    * algebra unchanged — exactly the sink-hook use case. The new labels
+    * read the table they replace, so they land in a staging table that
+    * swaps in once written
+    * ([[graft.operators.IncrementalDedup.swapInStagedTable]], the
+    * sketch store's discipline): an in-place overwrite drops the table
+    * while its replacement is still being read, and a crash between the
+    * drop and the write would lose the label store.
     */
   def clusterMaintainStream(s: SparkSession, docs: DataFrame, sigTable: String,
       labelTable: String, tau: Double = 0.5,
@@ -322,25 +325,19 @@ object EventsStream {
     checkpointDir.foldLeft(docs.writeStream)(
       (w, d) => w.option("checkpointLocation", d))
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        import graft.operators.IncrementalDedup
         // sign the micro-batch ONCE: the label update (store match +
         // internal pairs) and the absorb all consume the same banded
         // frame — previously each re-ran the tokenize+shingle+minhash
-        // kernel over the batch (3× the signature cost per batch)
-        val bands = graft.operators.Dedup.signatureBands(batch)
-          .localCheckpoint()
-        val labels = graft.operators.IncrementalDedup
-          .updateClustersBands(s, bands, sigTable, s.table(labelTable), tau)
-          .localCheckpoint()
-        try {
-          graft.operators.IncrementalDedup.writeLabels(labels, labelTable)
-          graft.operators.IncrementalDedup.absorbDeltaBands(s, bands, sigTable)
-        } finally {
-          // release the checkpointed blocks at the end of the batch: on
-          // a long-running stream they otherwise linger until the
-          // ContextCleaner notices the frames are unreachable, stacking
-          // one batch-sized block set per micro-batch (ADVICE r21)
-          labels.unpersist(blocking = false)
-          bands.unpersist(blocking = false)
+        // kernel over the batch (3× the signature cost per batch). The
+        // pin ends with the batch, so a long-running stream does not
+        // stack one batch-sized block set per micro-batch
+        graft.Tables.pinned(graft.operators.Dedup.signatureBands(batch)) { bands =>
+          val staging = labelTable + "__staging"
+          IncrementalDedup.writeLabels(IncrementalDedup.updateClustersBands(
+            s, bands, sigTable, s.table(labelTable), tau), staging)
+          IncrementalDedup.swapInStagedTable(s, labelTable, staging)
+          IncrementalDedup.absorbDeltaBands(s, bands, sigTable)
         }
         // the absorb ran under the micro-batch's CLONED session, so the
         // outer session's cached file listing for the store is stale —

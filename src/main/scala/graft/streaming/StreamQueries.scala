@@ -491,9 +491,7 @@ object StreamQueries {
     // fingerprint pass referenced twice (postings + the cap agg) — in
     // production it is the precomputed daily artifact the stream reads,
     // so materializing it before the stream starts is the honest shape
-    val postings = sp.join(rare, "fp").persist()
-    postings.count()
-    try {
+    Tables.pinned(sp.join(rare, "fp")) { postings =>
       val delta = docs.where($"doc_id" % 4 === 3)
         .as[(Long, String)].collect().sortBy(_._1)
         .map { case (id, text) =>
@@ -506,10 +504,10 @@ object StreamQueries {
           postings),
         "graft_stream_winnow_match")
       // the memory sink holds materialized rows — the returned plan
-      // reads it, not the postings lineage, so unpersist is safe here
+      // reads it, not the postings lineage, so the pin can end here
       sink.select($"doc_id".as("delta_id"), $"store_id")
         .orderBy($"delta_id", $"store_id")
-    } finally postings.unpersist()
+    }
   }
 
   /** Oracle twin of [[streamWinnowMatch]]: postings re-derived from the
@@ -740,6 +738,8 @@ object StreamQueries {
     val labT = "graft_stream_clu_labels"
     val docs = Tables.documents(s, dir).select($"doc_id", $"text")
     val store = docs.where($"doc_id" % 4 =!= 3)
+    // the label swap's staging and aside names (a crashed swap leaves them)
+    Seq(labT + "__staging", labT + "__old").foreach(IncrementalDedup.clearTable(s, _))
     IncrementalDedup.writeStore(store, sigT)
     // banded rows read back from the just-written bucketed store: the
     // signature kernel ran once in writeStore, and the self-join on the

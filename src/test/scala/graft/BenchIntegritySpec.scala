@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the harness the timing mains share: the outlier rule the
@@ -24,18 +25,54 @@ class BenchIntegritySpec extends AnyFunSuite {
     assert(!BenchIntegrity.outlier(5.0, 5.0))
   }
 
-  test("priorQueries reads the latest committed same-SF board") {
-    val qs = BenchIntegrity.priorQueries(repo, "/root/testdata/sf0.1")
-    assert(qs.nonEmpty, "expected a committed bench_full artifact")
-    assert(qs.contains("q1_agg"))
-    assert(qs.values.forall(_ > 0))
+  /** `name` from the repo root copied into `dir` as `as`, with
+    * `host.cores` set to `cores` (None: removed).
+    */
+  private def copyWithCores(name: String, dir: java.io.File, as: String,
+      cores: Option[Int]): Unit = {
+    val m = new ObjectMapper()
+    val t = m.readTree(new java.io.File(repo, name)).asInstanceOf[ObjectNode]
+    val host = t.get("host").asInstanceOf[ObjectNode]
+    cores match {
+      case Some(n) => host.put("cores", n)
+      case None => host.remove("cores")
+    }
+    m.writeValue(new java.io.File(dir, as), t)
+  }
+
+  test("priorQueries reads a committed board only at its recorded core count") {
+    val sf = "/root/testdata/sf0.1"
+    val dir = tmp()
+    copyWithCores("bench_full_r23.json", dir, "bench_full_r23.json", None)
+    copyWithCores("bench_full_r23.json", dir, "bench_full_r24.json", Some(4))
+    copyWithCores("bench_full_r23.json", dir, "bench_full_r25.json", Some(32))
+    // equal cores: the newest board of that count, not the newest board
+    val qs = BenchIntegrity.priorQueries(dir, sf, 4)
+    assert(qs.contains("q1_agg") && qs.values.forall(_ > 0))
+    assert(BenchIntegrity.priorQueries(dir, sf, 32) == qs)
+    // different cores, and the board without host.cores: ignored
+    assert(BenchIntegrity.priorQueries(dir, sf, 8).isEmpty)
+    new java.io.File(dir, "bench_full_r24.json").delete()
+    assert(BenchIntegrity.priorQueries(dir, sf, 4).isEmpty)
     // SF mismatch must yield empty — a cross-scale compare would flag
     // every line
-    assert(BenchIntegrity.priorQueries(repo, "/root/testdata/sf0.001").isEmpty)
+    assert(BenchIntegrity.priorQueries(dir, "/root/testdata/sf0.001", 32).isEmpty)
+  }
+
+  test("priorLadders ignores a scale artifact of another or unknown core count") {
+    val dir = tmp()
+    copyWithCores("bench_sf1_r23.json", dir, "bench_sf1_r23.json", Some(4))
+    copyWithCores("bench_sf1_r23.json", dir, "bench_sf1_r24.json", None)
+    val ls = BenchIntegrity.priorLadders(dir, 4)
+    assert(ls.nonEmpty && ls == BenchIntegrity.priorLadders(repo, 4))
+    assert(BenchIntegrity.priorLadders(dir, 32).isEmpty)
+    new java.io.File(dir, "bench_sf1_r23.json").delete()
+    assert(BenchIntegrity.priorLadders(dir, 4).isEmpty)
   }
 
   test("priorLadders reads the latest committed scale artifact") {
-    val ls = BenchIntegrity.priorLadders(repo)
+    // bench_sf1_r23.json, the first to record host.cores, ran at 4
+    val ls = BenchIntegrity.priorLadders(repo, 4)
     assert(ls.nonEmpty, "expected a committed bench_sf1 artifact")
     assert(ls.keys.exists(_._1 == "deep_ladder"))
     assert(ls.keys.exists(_._1 == "quadratic_ladder"))
@@ -95,7 +132,7 @@ class BenchIntegritySpec extends AnyFunSuite {
       4, marker, marker, idle, Map.empty)
     val dir = tmp()
     assert(BenchIntegrity.writeArtifact(dir, "bench_full", idle, line).isDefined)
-    assert(BenchIntegrity.priorQueries(dir, sf) == Map("q1_agg" -> 0.3, "q_tfidf" -> 1.5))
+    assert(BenchIntegrity.priorQueries(dir, sf, 4) == Map("q1_agg" -> 0.3, "q_tfidf" -> 1.5))
     val (top, host) = keys(line)
     val (prevTop, prevHost) = committed("bench_full_r23.json")
     assert(prevTop.subsetOf(top) && prevHost.subsetOf(host) && host("cores"))
@@ -116,7 +153,7 @@ class BenchIntegritySpec extends AnyFunSuite {
       4, marker, marker, idle, Map.empty)
     val dir = tmp()
     assert(BenchIntegrity.writeArtifact(dir, "bench_sf1", idle, line).isDefined)
-    val ls = BenchIntegrity.priorLadders(dir)
+    val ls = BenchIntegrity.priorLadders(dir, 4)
     assert(ls(("queries", "q_tfidf", "t10")) == 4.0)
     assert(ls(("queries", "q1_agg", "t1")) == 0.5)
     assert(ls(("deep_ladder", "q1_agg", "t30")) == 2.0)

@@ -21,12 +21,13 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select($"doc_id", $"text", $"lang", $"source")
     JsonlCorpus.write(docs, out, shards = 4)
     val back = JsonlCorpus.read(spark, out)
-    val (clean, corrupt) = JsonlCorpus.quarantine(back)
-    assert(corrupt.count() == 0)
-    assert(clean.count() == docs.count())
+    val (nCorrupt, nClean, b) = JsonlCorpus.quarantine(back) { (clean, corrupt) =>
+      (corrupt.count(), clean.count(), clean.select($"doc_id", $"text", $"lang", $"source")
+        .as[(Long, String, String, String)].collect().toSet)
+    }
+    assert(nCorrupt == 0)
+    assert(nClean == docs.count())
     val a = docs.as[(Long, String, String, String)].collect().toSet
-    val b = clean.select($"doc_id", $"text", $"lang", $"source")
-      .as[(Long, String, String, String)].collect().toSet
     assert(a == b)
   }
 
@@ -137,8 +138,10 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
         |this line is not json
         |{"doc_id": 2, "text": "also ok", "lang": "nl", "source": "s"}
         |""".stripMargin)
-    val (clean, corrupt) = JsonlCorpus.quarantine(JsonlCorpus.read(spark, out))
-    assert(clean.count() == 2)
-    assert(corrupt.count() == 1)
+    val (nClean, nCorrupt) = JsonlCorpus.quarantine(JsonlCorpus.read(spark, out)) {
+      (clean, corrupt) => (clean.count(), corrupt.count())
+    }
+    assert(nClean == 2)
+    assert(nCorrupt == 1)
   }
 }
